@@ -414,14 +414,16 @@ def _write_manifest(
         # signal an operator needs before re-running a 10^12-doc job
         "error_classes": dict(sorted((error_classes or {}).items())),
     }
-    # tmp + atomic rename: a job killed mid-dump must never leave a
-    # torn manifest.json visible — readers either see the previous
-    # complete snapshot or the new one ( _manifest_is_stale already
-    # tolerates an unreadable file, but external consumers of the
-    # manifest should not have to)
+    # tmp + fsync + atomic rename: a job killed mid-dump, or a host
+    # crashing after the rename, must never leave a torn manifest.json
+    # visible — readers either see the previous complete snapshot or
+    # the new one ( _manifest_is_stale already tolerates an unreadable
+    # file, but external consumers of the manifest should not have to)
     tmp_path = manifest_path + ".tmp"
     with open(tmp_path, "w", encoding="utf-8") as f:
         json.dump(snapshot, f, indent=2)
+        f.flush()
+        os.fsync(f.fileno())
     os.replace(tmp_path, manifest_path)
     return {
         **snapshot["totals"],

@@ -23,6 +23,7 @@ import pandas as pd
 from pyspark.sql import DataFrame
 
 from ..schemas import RESULT_SCHEMA
+from ..session import release_zip_importers
 from ..sources import payload as payload_codec
 from . import analyzer, html_extract, span_merge
 
@@ -143,9 +144,12 @@ def _process_batch(pdf: pd.DataFrame) -> pd.DataFrame:
 
 
 def _run_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    for pdf in batches:
-        if len(pdf):
-            yield _process_batch(pdf)
+    try:
+        for pdf in batches:
+            if len(pdf):
+                yield _process_batch(pdf)
+    finally:
+        release_zip_importers()
 
 
 def extract_pages(pages_df: DataFrame, keep_failed: bool = True) -> DataFrame:

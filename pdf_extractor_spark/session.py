@@ -9,10 +9,46 @@ sized to cores, small Arrow batches because payload rows are fat).
 from __future__ import annotations
 
 import os
+import sys
+import zipimport
 
 from pyspark.sql import SparkSession
 
-DEFAULT_SHUFFLE_PARTITIONS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+
+def _host_cpus() -> str:
+    return os.environ.get("SPARK_GRAFT_CPUS") or str(len(os.sched_getaffinity(0)))
+
+
+def _host_driver_mem() -> str:
+    """A quarter of the host's MemTotal, at least 1g."""
+    with open("/proc/meminfo", encoding="ascii") as f:
+        mem_kb = next(int(line.split()[1]) for line in f if line.startswith("MemTotal:"))
+    return f"{max(1, mem_kb // (4 << 20))}g"
+
+
+DEFAULT_SHUFFLE_PARTITIONS = int(_host_cpus())
+
+
+def release_zip_importers() -> None:
+    """Drop every ``zipimporter`` from ``sys.path_importer_cache``
+    together with its archive's cached directory.
+
+    PySpark calls ``importlib.invalidate_caches()`` at the start of
+    every task (``pyspark/worker_util.py``). On CPython 3.11 that makes
+    each cached zipimporter re-read its whole archive directory at
+    once: a reused Spark 4.1 worker holds 16 of them (pyspark.zip and
+    the spark-core jar), about 0.23 s of CPU per task on a 4 vCPU x86
+    host. Calling this at the end of a stage generator leaves the next
+    task's ``invalidate_caches()`` nothing to re-read. An import that
+    does need an archive later builds a fresh importer, which reads
+    the directory then, so a rewritten archive is still seen. CPython
+    3.12 defers the re-read itself (gh-103200): delete this helper
+    once workers run Python >= 3.12.
+    """
+    for path, finder in list(sys.path_importer_cache.items()):
+        if isinstance(finder, zipimport.zipimporter):
+            del sys.path_importer_cache[path]
+            zipimport._zip_directory_cache.pop(finder.archive, None)
 
 
 def get_spark(
@@ -29,8 +65,7 @@ def get_spark(
     count — is what bounds Python-worker memory. 256 fat rows per
     batch keeps a worker under ~1 GB even for 4 MB documents.
     """
-    cores = os.environ.get("SPARK_GRAFT_CPUS", "32")
-    master = master or os.environ.get("SPARK_GRAFT_MASTER", f"local[{cores}]")
+    master = master or os.environ.get("SPARK_GRAFT_MASTER", f"local[{_host_cpus()}]")
     nshuffle = shuffle_partitions or DEFAULT_SHUFFLE_PARTITIONS
     builder = (
         SparkSession.builder.master(master)
@@ -53,7 +88,10 @@ def get_spark(
             "spark.sql.files.maxPartitionBytes",
             os.environ.get("SPARK_GRAFT_MAX_PARTITION_BYTES", str(16 * 1024 * 1024)),
         )
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g"))
+        .config(
+            "spark.driver.memory",
+            os.environ.get("SPARK_GRAFT_DRIVER_MEM") or _host_driver_mem(),
+        )
         .config("spark.ui.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
         # commit algorithm v2: task-side commit renames instead of a

@@ -177,47 +177,59 @@ def http_response_body(block: bytes) -> Optional[bytes]:
 _PAGES_SCHEMA = "url string, warc_ts timestamp, html binary, text string, lang string"
 
 
+def _warc_timestamps(raw: list) -> list:
+    """WARC-Date header values → naive UTC Timestamps, None where the
+    header is missing or unparseable. One ISO 8601 parse covers the
+    whole batch; only values it cannot read (RFC 1123 dates, years past
+    2262, garbage) go through pandas' much slower per-value format
+    guessing."""
+    import pandas as pd
+
+    parsed = pd.to_datetime(
+        pd.Series(raw, dtype=object), utc=True, errors="coerce", format="ISO8601"
+    )
+    out = []
+    for value, ts in zip(raw, parsed):
+        if ts is pd.NaT and value:
+            ts = pd.to_datetime(value, errors="coerce", utc=True)
+        # a record without WARC-Date must become a null, never a task
+        # failure (found by the streaming kill-fuzz soak)
+        out.append(None if ts is pd.NaT else ts.tz_localize(None))
+    return out
+
+
 def parse_content_batches(batches):
     """mapInPandas closure over binaryFile ``content`` batches — shared
     by the batch source below and streaming.stream_warc_pages so both
     edges parse records identically."""
     import pandas as pd
 
-    for pdf in batches:
-        rows = []
-        for content in pdf["content"]:
-            for headers, block in iter_warc_records(bytes(content)):
-                rtype = headers.get("warc-type")
-                if rtype not in ("response", "resource"):
-                    continue
-                url = headers.get("warc-target-uri")
-                if not url:
-                    continue
-                payload = http_response_body(block) if rtype == "response" else block
-                if payload is None:
-                    continue
-                # missing WARC-Date: pd.to_datetime(None, errors="coerce")
-                # returns None (not NaT) — calling .tz_localize on it
-                # killed the task for ANY record lacking the header
-                # (found by the streaming kill-fuzz soak)
-                raw_ts = headers.get("warc-date")
-                ts = (
-                    pd.to_datetime(raw_ts, errors="coerce", utc=True)
-                    if raw_ts
-                    else None
-                )
-                rows.append(
-                    {
-                        "url": url,
-                        "warc_ts": None
-                        if ts is None or ts is pd.NaT
-                        else ts.tz_localize(None),
-                        "html": payload,
-                        "text": None,
-                        "lang": None,
-                    }
-                )
-        yield pd.DataFrame(rows, columns=["url", "warc_ts", "html", "text", "lang"])
+    from ..session import release_zip_importers
+
+    try:
+        for pdf in batches:
+            urls, dates, payloads = [], [], []
+            for content in pdf["content"]:
+                for headers, block in iter_warc_records(bytes(content)):
+                    rtype = headers.get("warc-type")
+                    if rtype not in ("response", "resource"):
+                        continue
+                    url = headers.get("warc-target-uri")
+                    if not url:
+                        continue
+                    payload = http_response_body(block) if rtype == "response" else block
+                    if payload is None:
+                        continue
+                    urls.append(url)
+                    dates.append(headers.get("warc-date"))
+                    payloads.append(payload)
+            rows = [
+                {"url": u, "warc_ts": ts, "html": p, "text": None, "lang": None}
+                for u, ts, p in zip(urls, _warc_timestamps(dates), payloads)
+            ]
+            yield pd.DataFrame(rows, columns=["url", "warc_ts", "html", "text", "lang"])
+    finally:
+        release_zip_importers()
 
 
 def pages_from_warc(spark, input_dir: str, glob: str = "*.warc*"):

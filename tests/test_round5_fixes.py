@@ -14,7 +14,6 @@ from pathlib import Path
 
 from pdf_extractor_spark import io as eio
 from pdf_extractor_spark.io import filter_pending, write_result
-from pdf_extractor_spark.operators.extract import extract_pages
 
 
 def _mk(spark, urls):

@@ -6,11 +6,17 @@ so the reader must return exactly those rows."""
 from __future__ import annotations
 
 import gzip
+import warnings
+from datetime import datetime
 
+import pandas as pd
 import pytest
+from hypothesis import given, settings
+from hypothesis import strategies as st
 
 from pdf_extractor_spark import corpus
 from pdf_extractor_spark.sources.warc import (
+    _warc_timestamps,
     http_response_body,
     iter_warc_records,
     pages_from_warc,
@@ -274,3 +280,63 @@ class TestMissingHeaders:
         assert rows[0]["url"] == "https://x.example.com/nodate"
         assert rows[0]["warc_ts"] is None
         assert bytes(rows[0]["html"]) == payload
+
+
+def _per_record_ts(raw):
+    """The per-record WARC-Date parse that _warc_timestamps batches."""
+    with warnings.catch_warnings():
+        warnings.simplefilter("ignore")  # "could not infer format"
+        ts = pd.to_datetime(raw, errors="coerce", utc=True) if raw else None
+    return None if ts is None or ts is pd.NaT else ts.tz_localize(None)
+
+
+_offsets = st.integers(-14 * 60, 14 * 60).map(
+    lambda m: "%s%02d:%02d" % ("-" if m < 0 else "+", abs(m) // 60, abs(m) % 60)
+)
+_when = st.datetimes(min_value=datetime(1000, 1, 1), max_value=datetime(9999, 12, 31))
+_warc_dates = st.one_of(
+    st.none(),  # header missing
+    st.just(""),
+    _when.map(lambda d: d.strftime("%Y-%m-%dT%H:%M:%SZ")),
+    st.tuples(_when, _offsets).map(lambda t: t[0].strftime("%Y-%m-%dT%H:%M:%S") + t[1]),
+    st.tuples(_when, st.text("0123456789", min_size=1, max_size=9)).map(
+        lambda t: t[0].strftime("%Y-%m-%dT%H:%M:%S.") + t[1] + "Z"  # fractional seconds
+    ),
+    _when.map(lambda d: d.strftime("%Y-%m-%d")),  # date only
+    _when.map(lambda d: d.strftime("%a, %d %b %Y %H:%M:%S GMT")),  # RFC 1123
+    st.text(max_size=30),  # garbage
+)
+
+
+class TestWarcDateBatchParse:
+    @settings(max_examples=300, deadline=None)
+    @given(st.lists(_warc_dates, max_size=12))
+    def test_batch_parse_matches_per_record(self, raw):
+        with warnings.catch_warnings():
+            warnings.simplefilter("ignore")
+            got = _warc_timestamps(raw)
+        want = [_per_record_ts(v) for v in raw]
+        assert [type(v) for v in got] == [type(v) for v in want]
+        assert got == want
+
+    def test_named_cases(self):
+        raw = [
+            None,
+            "2024-01-02T03:04:05Z",
+            "2024-01-02T03:04:05+02:00",
+            "2024-01-02T03:04:05.123456Z",
+            "2024-01-02",
+            "2300-01-01T00:00:00Z",
+            "Tue, 15 Nov 1994 08:12:31 GMT",
+            "garbage",
+        ]
+        assert _warc_timestamps(raw) == [
+            None,
+            pd.Timestamp("2024-01-02 03:04:05"),
+            pd.Timestamp("2024-01-02 01:04:05"),
+            pd.Timestamp("2024-01-02 03:04:05.123456"),
+            pd.Timestamp("2024-01-02"),
+            None,  # past 2262: out of nanosecond range
+            pd.Timestamp("1994-11-15 08:12:31"),
+            None,
+        ]

@@ -450,7 +450,10 @@ def batch_kill_mode(trials: int, seed: int) -> int:
                 except Exception:
                     return True
                 finally:
+                    # a timer that fires after the write returned would
+                    # cancel the verification jobs below
                     timer.cancel()
+                    timer.join()
 
             if _killed_run(kill_dir):
                 kills_landed += 1
