@@ -14,8 +14,6 @@ the SQL-oracle surface.
 
 from __future__ import annotations
 
-from typing import Any
-
 
 def merge_doc_spans(pages: list[dict]) -> tuple[list[tuple], float]:
     """Fold every line's spans into merged blocks for one document.
@@ -41,11 +39,12 @@ def merge_doc_spans(pages: list[dict]) -> tuple[list[tuple], float]:
             page_width = float(page.get("width", 0.0))
         for block in page.get("blocks", []):
             for line in block:
-                # Inlined _fold_line with scalar locals (the tuple
-                # pack/unpack per span dominated the fold's cost);
-                # byte-identical semantics incl. max()'s NaN handling —
-                # max(nan, 2) is nan, so a NaN size must keep rejecting
-                # the run-continuation test exactly as before.
+                # One line's fold with scalar locals (tuple pack/unpack
+                # per span dominated the fold's cost); semantics match
+                # tests/refimpl.merge_line_spans incl. max()'s NaN
+                # handling — max(nan, 2) is nan, so a NaN size keeps
+                # rejecting the run-continuation test. The
+                # property-based suite cross-checks the two.
                 text = None
                 for sp in line:
                     txt = sp["text"]
@@ -110,59 +109,3 @@ def merge_doc_spans(pages: list[dict]) -> tuple[list[tuple], float]:
                     append((pno, text, size, font, x0, y0, x1, y1, italic))
     return out, page_width
 
-
-def _start(sp: dict[str, Any]) -> tuple:
-    bx = sp["bbox"]
-    font = sp["font"]
-    return (sp["text"], bx[0], bx[1], bx[2], bx[3], font, sp["size"], "italic" in font.lower())
-
-
-def _fold_line(line: list[dict[str, Any]], pno: int, out: list[tuple]) -> None:
-    """Readable spec form of the fold; merge_doc_spans inlines this
-    loop with scalar locals for speed (kept in lockstep — the
-    property-based suite cross-checks the two on every run)."""
-    state = None  # (text, x0, y0, x1, y1, font, size, italic)
-
-    def emit() -> None:
-        if state is not None and state[0].strip():
-            out.append(
-                (pno, state[0], state[6], state[5], state[1], state[2], state[3], state[4], state[7])
-            )
-
-    for sp in line:
-        txt = sp["text"]
-        if not txt.strip():
-            continue
-        bx = sp["bbox"]
-        if state is None:
-            state = _start(sp)
-            continue
-        text, x0, y0, x1, y1, font, size, italic = state
-        if not (
-            sp["font"] == font
-            and abs(sp["size"] - size) <= 1.0
-            and abs(bx[1] - y0) <= max(size * 0.2, 2)
-        ):
-            emit()
-            state = _start(sp)
-            continue
-        gap = bx[0] - x1
-        if gap < 0 or gap <= size * 0.3:
-            joined = text + txt
-        elif gap <= size * 1.5:
-            joined = text + " " + txt
-        else:
-            emit()
-            state = _start(sp)
-            continue
-        state = (
-            joined,
-            min(x0, bx[0]),
-            min(y0, bx[1]),
-            max(x1, bx[2]),
-            max(y1, bx[3]),
-            font,
-            size,
-            italic,
-        )
-    emit()

@@ -140,13 +140,7 @@ def stream_extract(
         # corpus
         pending = pio.filter_pending(batch_df, out_dir).dropDuplicates(["url"])
         result = extract_pages(pending, keep_failed=True)
-        # lineage="observe": counts ride the micro-batch write and the
-        # manifest merges cumulatively — a post-write rescan here would
-        # re-aggregate the ENTIRE committed table every micro-batch,
-        # i.e. O(total corpus) per trigger on a long-running stream
-        pio.write_result(
-            result, out_dir, n_buckets=n_buckets, mode="append", lineage="observe"
-        )
+        pio.write_result(result, out_dir, n_buckets=n_buckets, mode="append")
 
     writer = (
         pages_stream.writeStream.foreachBatch(commit)

@@ -136,9 +136,10 @@ def test_full_pipeline_property(doc_specs):
         assert got.get(url) == exp, url
 
 
-def _fold_via_spec(pages):
-    """Fold every line with the readable _fold_line spec form — the
-    twin merge_doc_spans inlines for speed."""
+def _fold_via_oracle(pages):
+    """Fold every line with the oracle's per-line fold, in the engine's
+    tuple shape. Text is kept as the fold produced it — before
+    make_block strips it — so whitespace handling is compared too."""
     out: list[tuple] = []
     page_width = 0.0
     for pno, page in enumerate(pages):
@@ -146,7 +147,8 @@ def _fold_via_spec(pages):
             page_width = float(page.get("width", 0.0))
         for block in page.get("blocks", []):
             for line in block:
-                span_merge._fold_line(line, pno, out)
+                for m in refimpl.merge_line_spans(line):
+                    out.append((pno, m["text"], m["size"], m["font"], *m["bbox"], m["italic"]))
     return out, page_width
 
 
@@ -179,11 +181,12 @@ def _nan_eq(a, b):
 @settings(max_examples=120, deadline=None, suppress_health_check=[HealthCheck.too_slow])
 @given(_doc_nan)
 def test_span_merge_inline_matches_spec(doc_spec):
-    """The inlined fold in merge_doc_spans ≡ the _fold_line spec form,
-    including NaN geometry/size propagation."""
+    """The inlined fold in merge_doc_spans ≡ the oracle's per-line fold
+    (refimpl.merge_line_spans), including NaN geometry/size
+    propagation."""
     pages = _materialize(doc_spec)
     inline_blocks, inline_width = span_merge.merge_doc_spans(pages)
-    spec_blocks, spec_width = _fold_via_spec(pages)
+    spec_blocks, spec_width = _fold_via_oracle(pages)
     assert inline_width == spec_width
     assert len(inline_blocks) == len(spec_blocks)
     for ib, sb in zip(inline_blocks, spec_blocks):

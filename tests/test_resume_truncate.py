@@ -18,8 +18,6 @@ import json
 import shutil
 from pathlib import Path
 
-import pytest
-
 from pdf_extractor_spark import corpus
 from pdf_extractor_spark.io import filter_pending, write_result
 from pdf_extractor_spark.operators.extract import extract_pages
@@ -33,10 +31,8 @@ def _pages(spark):
     return corpus.distributed_pages(spark, N_DOCS, seed=SEED)
 
 
-def _run_full(spark, out_dir: str, lineage: str = "auto") -> dict:
-    return write_result(
-        extract_pages(_pages(spark)), out_dir, n_buckets=N_BUCKETS, lineage=lineage
-    )
+def _run_full(spark, out_dir: str) -> dict:
+    return write_result(extract_pages(_pages(spark)), out_dir, n_buckets=N_BUCKETS)
 
 
 def _table_rows(spark, out_dir: str) -> list[str]:
@@ -65,13 +61,12 @@ def _truncate(out_dir: str, keep_buckets: int) -> None:
     shutil.rmtree(Path(out_dir, "_lineage"), ignore_errors=True)
 
 
-@pytest.mark.parametrize("lineage", ["auto", "observe"])
-def test_truncate_resume_rebuilds_byte_identical_table(spark, tmp_path, lineage):
-    full_dir = str(tmp_path / f"full_{lineage}")
-    kill_dir = str(tmp_path / f"kill_{lineage}")
+def test_truncate_resume_rebuilds_byte_identical_table(spark, tmp_path):
+    full_dir = str(tmp_path / "full")
+    kill_dir = str(tmp_path / "kill")
 
-    _run_full(spark, full_dir, lineage=lineage)
-    _run_full(spark, kill_dir, lineage=lineage)
+    _run_full(spark, full_dir)
+    _run_full(spark, kill_dir)
 
     _truncate(kill_dir, keep_buckets=10)
     committed = {r["url"] for r in spark.read.parquet(f"{kill_dir}/result").select("url").collect()}
@@ -83,16 +78,13 @@ def test_truncate_resume_rebuilds_byte_identical_table(spark, tmp_path, lineage)
     assert pending_urls.isdisjoint(committed)
     assert len(pending_urls) + len(committed) == N_DOCS
 
-    write_result(
-        extract_pages(pending), kill_dir,
-        n_buckets=N_BUCKETS, mode="append", lineage=lineage,
-    )
+    write_result(extract_pages(pending), kill_dir, n_buckets=N_BUCKETS, mode="append")
 
     # table rows identical — outline_json bytes included
     assert _table_rows(spark, kill_dir) == _table_rows(spark, full_dir)
-    # cumulative manifest identical to the uninterrupted run's (the
-    # observe path rebuilds from the snapshot when the manifest died
-    # with the job, instead of publishing resumed-rows-only counts)
+    # cumulative manifest identical to the uninterrupted run's: the
+    # append recomputes it from the committed snapshot, so a manifest
+    # that died with the job is not needed
     assert _manifest(kill_dir) == _manifest(full_dir)
     # exactly-once at url granularity
     n = spark.read.parquet(f"{kill_dir}/result").count()
@@ -103,36 +95,30 @@ def test_truncate_resume_rebuilds_byte_identical_table(spark, tmp_path, lineage)
 def test_stale_manifest_detected_and_rebuilt(spark, tmp_path):
     """Kill window the truncate test can't reach: run B's DATA commit
     succeeded but its manifest write didn't, so the manifest on disk is
-    run A's — present, readable, and WRONG. The next append must detect
-    the rows_in/committed-count mismatch and rebuild from the snapshot
-    instead of merging into the stale counts."""
+    run A's — present, readable, and WRONG. The next append recomputes
+    the manifest from the committed snapshot, so the stale counts
+    heal instead of being merged into."""
     out = str(tmp_path / "stale")
     full = str(tmp_path / "stale_full")
-    _run_full(spark, full, lineage="observe")
+    _run_full(spark, full)
 
     # run A: first half (corpus(N/2) is a prefix of corpus(N))
     half = corpus.distributed_pages(spark, N_DOCS // 2, seed=SEED)
-    write_result(extract_pages(half), out, n_buckets=N_BUCKETS, lineage="observe")
+    write_result(extract_pages(half), out, n_buckets=N_BUCKETS)
     manifest_path = Path(out, "_lineage", "manifest.json")
     run_a_manifest = manifest_path.read_text()
 
     # run B: append the rest, then simulate death-before-manifest by
     # restoring run A's manifest over run B's
     pending = filter_pending(_pages(spark), out)
-    write_result(
-        extract_pages(pending), out,
-        n_buckets=N_BUCKETS, mode="append", lineage="observe",
-    )
+    write_result(extract_pages(pending), out, n_buckets=N_BUCKETS, mode="append")
     manifest_path.write_text(run_a_manifest)
 
     # run C: nothing left to process; the empty append must still
-    # notice the stale manifest and publish cumulative truth
+    # publish cumulative truth over the stale manifest
     none_left = filter_pending(_pages(spark), out)
     assert none_left.count() == 0
-    write_result(
-        extract_pages(none_left), out,
-        n_buckets=N_BUCKETS, mode="append", lineage="observe",
-    )
+    write_result(extract_pages(none_left), out, n_buckets=N_BUCKETS, mode="append")
     assert _manifest(out) == _manifest(full)
     assert _table_rows(spark, out) == _table_rows(spark, full)
 

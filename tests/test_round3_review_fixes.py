@@ -10,23 +10,18 @@ Each test pins one fix from the review of the round-3 diff:
    crawled HTML (unclosed <a>/<option>/<aside>, stray end tags, void
    tags) can no longer leak link/drop depth and silently discard the
    rest of the document
- - io.write_result(lineage=...) decouples lineage strategy from input
-   bucketing; observe-mode counts match the rescan's on the same data
  - streaming/pipeline.py stateful ops fall back to equivalent batch
    aggregates on non-streaming frames
 """
 
 from __future__ import annotations
 
-import json
-import os
 import random
 
 import pandas as pd
 import pytest
 
 from pdf_extractor_spark import corpus
-from pdf_extractor_spark import io as pio
 from pdf_extractor_spark.operators import analyzer, extract
 from pdf_extractor_spark.operators.html_extract import extract_html
 
@@ -132,33 +127,6 @@ def test_stray_end_tags_and_void_tags_are_harmless():
     )
     res = extract_html(page.encode())
     assert "universally acknowledged" in res["main_text"]
-
-
-# -- io.write_result lineage modes ---------------------------------------
-
-
-def _manifest(out_dir: str) -> dict:
-    with open(os.path.join(out_dir, "_lineage", "manifest.json")) as f:
-        return json.load(f)
-
-
-def test_observe_lineage_matches_rescan_on_unbucketed_input(spark, tmp_path):
-    from pdf_extractor_spark.schemas import PAGES_SCHEMA
-
-    pages = spark.createDataFrame(
-        corpus.build_pages_rows(60, seed=5), schema=PAGES_SCHEMA
-    )
-    result = extract.extract_pages(pages, keep_failed=True)
-    a, b = str(tmp_path / "rescan"), str(tmp_path / "observe")
-    stats_a = pio.write_result(result, a, n_buckets=8, lineage="rescan")
-    stats_b = pio.write_result(result, b, n_buckets=8, lineage="observe")
-    for k in ("rows_in", "rows_out", "parse_failures", "payload_bytes"):
-        assert stats_a[k] == stats_b[k], k
-    ma, mb = _manifest(a), _manifest(b)
-    assert ma["partitions"] == mb["partitions"]
-    assert ma["error_classes"] == mb["error_classes"]
-    with pytest.raises(ValueError, match="lineage"):
-        pio.write_result(result, str(tmp_path / "x"), lineage="bogus")
 
 
 # -- streaming/pipeline.py batch fallbacks -------------------------------

@@ -8,10 +8,7 @@
 3. pdfparse: the (id(resources), name) font-cache key must pin a
    strong reference to the keyed dict, or a GC'd dict's reused id()
    could resolve a later resources dict to the wrong Font.
-4. io.write_result: appending into a table committed with the legacy
-   bucket-only layout must adopt that layout instead of producing
-   mixed partition depths (Spark rejects those at read time).
-5. bench ceiling probe: fail with a clear message under a non-fork
+4. bench ceiling probe: fail with a clear message under a non-fork
    multiprocessing start method (payloads are shared via fork COW).
 """
 
@@ -199,53 +196,7 @@ def test_font_cache_pins_resources_dict():
     assert wref() is not None
 
 
-# -- 4. legacy bucket-only layout append ------------------------------------
-
-
-def test_write_result_append_adopts_legacy_layout(spark, tmp_path):
-    import os
-
-    from pdf_extractor_spark import io as eio
-
-    out_dir = str(tmp_path / "out")
-    table_dir = os.path.join(out_dir, "result")
-
-    def _mk(urls):
-        return spark.createDataFrame(
-            [(u, True, 100, None, '{"title": "t"}') for u in urls],
-            "url string, parse_ok boolean, payload_bytes long, error string, outline_json string",
-        )
-
-    # legacy table: bucket-only partitioning (pre ok-partition layout)
-    legacy = eio.with_bucket(_mk([f"u{i}" for i in range(8)]), 4)
-    legacy.write.mode("overwrite").partitionBy("bucket").parquet(table_dir)
-    assert eio._committed_partition_layout(table_dir) == ["bucket"]
-
-    # append via the current writer must adopt the legacy layout...
-    eio.write_result(_mk([f"v{i}" for i in range(8)]), out_dir, n_buckets=4, mode="append")
-    assert eio._committed_partition_layout(table_dir) == ["bucket"]
-    # ...and the combined table reads back whole (no layout conflict)
-    got = eio.read_result(spark, out_dir)
-    assert got.count() == 16
-
-    # fresh tables still get the bucket/ok layout
-    out2 = str(tmp_path / "out2")
-    eio.write_result(_mk(["w1", "w2"]), out2, n_buckets=4, mode="append")
-    assert eio._committed_partition_layout(os.path.join(out2, "result")) == ["bucket", "ok"]
-
-    # non-local URIs (os.path can't stat them) go through Hadoop's
-    # FileSystem — file:// exercises that branch against the same dirs
-    assert eio._committed_partition_layout("file://" + table_dir, spark) == ["bucket"]
-    assert eio._committed_partition_layout(
-        "file://" + os.path.join(out2, "result"), spark
-    ) == ["bucket", "ok"]
-    assert (
-        eio._committed_partition_layout("file://" + str(tmp_path / "nope"), spark)
-        is None
-    )
-
-
-# -- 5. ceiling probe start-method guard -------------------------------------
+# -- 4. ceiling probe start-method guard -------------------------------------
 
 
 def test_ceiling_probe_requires_fork(monkeypatch):

@@ -9,7 +9,6 @@ truncate simulation in test_resume_truncate.py cannot create.
 from __future__ import annotations
 
 import json
-import os
 from pathlib import Path
 
 from pdf_extractor_spark import io as eio
@@ -23,59 +22,7 @@ def _mk(spark, urls):
     )
 
 
-# -- 1. layout probe vs kill debris ------------------------------------------
-
-
-def test_layout_probe_ignores_empty_debris_bucket_dirs(tmp_path, spark):
-    """A killed job leaves EMPTY bucket dirs (the committer mkdirs the
-    destination before the per-file rename). The layout probe must not
-    decide 'legacy bucket-only' from such a dir — that misclassification
-    made the resumed append write bucket-only files into a bucket/ok
-    table, after which every read failed with 'Conflicting directory
-    structures' (table bricked until manual surgery)."""
-    table = tmp_path / "result"
-    (table / "bucket=7" / "ok=1").mkdir(parents=True)
-    # plant MANY empty debris dirs so one is listed before bucket=7
-    for b in range(32):
-        if b != 7:
-            (table / f"bucket={b}").mkdir()
-    assert eio._committed_partition_layout(str(table)) == ["bucket", "ok"]
-    # hadoop-FileSystem branch (non-local URIs) must agree
-    assert eio._committed_partition_layout("file://" + str(table), spark) == [
-        "bucket",
-        "ok",
-    ]
-
-
-def test_layout_probe_all_empty_debris_is_none(tmp_path, spark):
-    """Only empty bucket dirs on disk = nothing committed: the probe
-    must answer None (fresh bucket/ok layout), not 'legacy'."""
-    table = tmp_path / "result"
-    for b in range(4):
-        (table / f"bucket={b}").mkdir(parents=True)
-    assert eio._committed_partition_layout(str(table)) is None
-    assert eio._committed_partition_layout("file://" + str(table), spark) is None
-
-
-def test_layout_probe_hidden_entries_not_legacy(tmp_path):
-    """Committer droppings inside a bucket dir (_temporary, .crc) are
-    not data files and must not be read as the legacy layout."""
-    table = tmp_path / "result"
-    (table / "bucket=0" / "_temporary").mkdir(parents=True)
-    (table / "bucket=0" / ".part-x.crc").write_bytes(b"")
-    (table / "bucket=1" / "ok=0").mkdir(parents=True)
-    assert eio._committed_partition_layout(str(table)) == ["bucket", "ok"]
-
-
-def test_layout_probe_legacy_still_detected(tmp_path, spark):
-    """Real legacy tables (files directly under bucket=N/) still probe
-    as bucket-only — including when a debris dir sits next to them."""
-    legacy = eio.with_bucket(_mk(spark, [f"u{i}" for i in range(8)]), 4)
-    table = str(tmp_path / "result")
-    legacy.write.mode("overwrite").partitionBy("bucket").parquet(table)
-    (Path(table) / "bucket=99").mkdir()  # kill debris
-    assert eio._committed_partition_layout(table) == ["bucket"]
-    assert eio._committed_partition_layout("file://" + table, spark) == ["bucket"]
+# -- 1. resume-append vs kill debris ----------------------------------------
 
 
 def test_append_with_debris_keeps_ok_layout_and_table_readable(spark, tmp_path):
@@ -88,8 +35,11 @@ def test_append_with_debris_keeps_ok_layout_and_table_readable(spark, tmp_path):
     write_result(
         _mk(spark, [f"v{i}" for i in range(8)]), out, n_buckets=4, mode="append"
     )
-    table = os.path.join(out, "result")
-    assert eio._committed_partition_layout(table) == ["bucket", "ok"]
+    table = Path(out) / "result"
+    # every data file sits under bucket=N/ok=M/, none directly under a
+    # bucket dir (mixed partition depths make Spark refuse the table)
+    assert not [p for p in table.glob("bucket=*/*") if p.is_file()]
+    assert list(table.glob("bucket=*/ok=*/*.parquet"))
     assert eio.read_result(spark, out).count() == 16
 
 
@@ -97,14 +47,35 @@ def test_append_with_debris_keeps_ok_layout_and_table_readable(spark, tmp_path):
 
 
 def test_manifest_write_is_atomic(spark, tmp_path):
-    """The manifest lands via tmp + os.replace: after any write the
-    final file is complete JSON and no .tmp residue remains (a kill
-    mid-dump leaves only the tmp, never a torn manifest.json)."""
+    """The manifest lands via tmp + atomic overwriting rename: after any
+    write the final file is complete JSON and no .tmp residue remains
+    (a kill mid-dump leaves only the tmp, never a torn manifest.json)."""
     out = str(tmp_path / "out")
     write_result(_mk(spark, ["a", "b"]), out, n_buckets=4)
     lineage = Path(out) / "_lineage"
     assert json.loads((lineage / "manifest.json").read_text())["totals"]["rows_in"] == 2
     assert not list(lineage.glob("*.tmp"))
+
+
+def test_manifest_lands_beside_table_on_file_uri(spark, tmp_path, monkeypatch):
+    """A file:// output URI puts the manifest in the table's own
+    directory (written through Hadoop's FileSystem), and nothing is
+    created relative to the current working directory — os.path calls
+    on the URI used to produce ./file:/<path>/_lineage/manifest.json."""
+    cwd = tmp_path / "cwd"
+    cwd.mkdir()
+    monkeypatch.chdir(cwd)
+    out = tmp_path / "out"
+    stats = write_result(_mk(spark, ["a", "b", "c"]), "file://" + str(out), n_buckets=4)
+    manifest = json.loads((out / "_lineage" / "manifest.json").read_text())
+    assert manifest["totals"]["rows_in"] == stats["rows_in"] == 3
+    assert eio.read_result(spark, "file://" + str(out)).count() == 3
+    # a second write replaces the manifest in place
+    write_result(_mk(spark, ["d"]), "file://" + str(out), n_buckets=4, mode="append")
+    manifest = json.loads((out / "_lineage" / "manifest.json").read_text())
+    assert manifest["totals"]["rows_in"] == 4
+    assert not list((out / "_lineage").glob("*.tmp"))
+    assert list(cwd.iterdir()) == []
 
 
 def test_resume_tolerates_torn_manifest(spark, tmp_path):

@@ -378,10 +378,6 @@ def batch_kill_mode(trials: int, seed: int) -> int:
       - the cumulative manifest equals the truth manifest
         (partitions + totals + error_classes);
       - exactly-once per url.
-
-    Found (and now pinned by tests/test_round5_fixes.py): the
-    partition-layout probe misreading empty kill-debris bucket dirs as
-    the legacy layout, bricking the table on resume-append.
     """
     import shutil
     import tempfile
@@ -414,7 +410,6 @@ def batch_kill_mode(trials: int, seed: int) -> int:
     for t in range(trials):
         rng = random.Random(seed * 104_729 + t)
         n_buckets = rng.choice([4, 8, 16])
-        lineage = rng.choice(["auto", "observe"])
         bucketed_input = rng.random() < 0.25
         base = Path(tempfile.mkdtemp(prefix="fuzz_batch_kill_"))
         truth_dir, kill_dir = str(base / "truth"), str(base / "kill")
@@ -430,7 +425,7 @@ def batch_kill_mode(trials: int, seed: int) -> int:
             tw0 = time.monotonic()
             write_result(
                 extract_pages(pages), truth_dir, n_buckets=n_buckets,
-                lineage=lineage, input_bucketed=bucketed_input,
+                input_bucketed=bucketed_input,
             )
             truth_t = time.monotonic() - tw0
 
@@ -443,7 +438,7 @@ def batch_kill_mode(trials: int, seed: int) -> int:
                 try:
                     write_result(
                         extract_pages(filter_pending(pages, out_dir)),
-                        out_dir, n_buckets=n_buckets, lineage=lineage,
+                        out_dir, n_buckets=n_buckets,
                         input_bucketed=bucketed_input, mode="append",
                     )
                     return False
@@ -492,7 +487,7 @@ def batch_kill_mode(trials: int, seed: int) -> int:
             # the final resume MUST converge from whatever state is left
             write_result(
                 extract_pages(filter_pending(pages, kill_dir)),
-                kill_dir, n_buckets=n_buckets, lineage=lineage,
+                kill_dir, n_buckets=n_buckets,
                 input_bucketed=bucketed_input, mode="append",
             )
 
@@ -501,7 +496,7 @@ def batch_kill_mode(trials: int, seed: int) -> int:
                 print(
                     f"FAIL trial {t}: resumed table diverges from truth "
                     f"({len(got)} vs {len(want)} rows; buckets={n_buckets} "
-                    f"lineage={lineage} bucketed={bucketed_input}) "
+                    f"bucketed={bucketed_input}) "
                     f"— state kept at {base}",
                     file=sys.stderr,
                 )
