@@ -35,7 +35,8 @@ from pathlib import Path
 # OpenBLAS's own thread pool (2 threads/worker x 32 workers would
 # oversubscribe and bias the 32-proc phase DOWN — unfairly flattering
 # the low ceiling).  The production pipeline is unaffected: the
-# analyzer is elementwise pandas/numpy (ufuncs are never BLAS-threaded).
+# analyzer is per-document Python over small numpy arrays (never
+# BLAS-threaded).
 os.environ.setdefault("OPENBLAS_NUM_THREADS", "1")
 os.environ.setdefault("OMP_NUM_THREADS", "1")
 os.environ.setdefault("MKL_NUM_THREADS", "1")
@@ -228,7 +229,7 @@ def _hardware_ceiling(n_low: int = 8, n_high: int = 32) -> tuple[float, float, f
     pre-synthesized in the parent and shared copy-on-write via fork.
 
     Probe v2: v1 ran only parse + merge fold and read up to 0.92 in
-    quiet windows — but the analyzer's pandas/numpy batch stage is the
+    quiet windows — but the analyzer stage is the
     most memory-bandwidth-hungry part of the job, and omitting it
     OVERSTATES what 32 co-resident processes can sustain (measured:
     full pipeline ~0.71-0.81 vs parse-only ~0.83-0.92 on this host).

@@ -1,20 +1,26 @@
-"""Vectorized (Arrow-batch) implementation of the reference's 3-pass
-heading heuristic (SURVEY.md §2.4-§2.9; reference: utils/analysis_new.py).
+"""Per-document implementation of the reference's 3-pass heading
+heuristic (SURVEY.md §2.4-§2.9; reference: utils/analysis_new.py).
 
-Design: passes 1-2 (derived columns, lag window, font histogram,
-scoring) are vectorized with pandas/numpy ACROSS every document in an
-Arrow batch at once — no per-row Python in the bulk path. Pass 3
+Design: ``analyze_batch`` takes the merged-block rows of one Arrow
+batch and analyzes each document on its own, the reference's unit of
+work. Passes 1-2 (derived columns, lag window, font histogram,
+scoring) are plain Python over the document's block tuples. Pass 3
 (title reconstruction, poster grouping, level assignment) is
-order-/path-dependent greedy logic over each document's *candidate*
-blocks (a handful of rows), executed per document over numpy arrays.
+order-/path-dependent greedy logic over numpy arrays of the same
+document. A document that raises becomes one error tuple; the other
+documents of the batch are unaffected (S4).
 
 Byte-identity notes (each rule cites the reference line):
-- text strip / isupper / istitle use pandas object-dtype ``.str`` ops,
-  which apply true Python-unicode semantics (analysis_new.py:8,30-33).
+- text strip / isupper / istitle are Python-unicode str methods
+  (analysis_new.py:8,30-33).
 - numbering patterns are anchored matches tried in priority order, so
   "I." tags as 'A.' while "IV." tags as 'I.' (analysis_new.py:35-40).
 - the modal baseline size tie-breaks by FIRST occurrence in body order,
   matching Counter.most_common's stable heap (analysis_new.py:69).
+  NaN sizes never enter the histogram; with no other size the
+  baseline is 0.0.
+- space_above is 0.0 for a document's first block and across a page
+  change (analysis_new.py:60-63).
 - cluster keys use Python round() = banker's rounding
   (analysis_new.py:341).
 - the final outline sort key replicates the first-text-match y lookup
@@ -26,24 +32,11 @@ from __future__ import annotations
 
 import re
 from collections import defaultdict
-from typing import Iterator, Optional
+from itertools import groupby
+from operator import itemgetter
+from typing import Iterator
 
 import numpy as np
-import pandas as pd
-
-BLOCK_COLS = [
-    "url",
-    "block_idx",
-    "page_num",
-    "text",
-    "font_size",
-    "font_name",
-    "x0",
-    "y0",
-    "x1",
-    "y1",
-    "page_width",
-]
 
 _NUMBERING_PATTERNS = [
     (r"\d+\.\d+\.\d+", "x.y.z."),
@@ -62,135 +55,6 @@ _NUMBERING_PATTERNS = [
 _NUMBERING_ALT = re.compile("|".join(f"({pat})" for pat, _ in _NUMBERING_PATTERNS))
 _NUMBERING_TAGS = [None] + [tag for _, tag in _NUMBERING_PATTERNS]
 _BOLD_RE = re.compile(r"bold|black|heavy|demi|semi")
-
-
-def featurize(blocks: pd.DataFrame) -> pd.DataFrame:
-    """Pass 1 + derived columns, vectorized across all documents.
-
-    Input must be ordered by (url, block_idx) — ordering is data, not
-    an accident (SURVEY.md §1.2).
-
-    The text-derived columns are computed in ONE Python pass per row
-    (str.strip / str.isupper / str.istitle are the same Python-unicode
-    methods pandas' object-dtype ``.str`` accessors dispatch to
-    elementwise, analysis_new.py:8,30-33); `match(s, 0, 20)` truncates
-    the subject at endpos=20 exactly like the previous
-    ``.str.slice(0, 20)``.
-    """
-    df = blocks.copy()
-    texts = df["text"].tolist()
-    n = len(texts)
-    stripped = [t.strip() for t in texts]
-    case = np.empty(n, dtype=object)
-    numbering = np.empty(n, dtype=object)
-    _num_match = _NUMBERING_ALT.match
-    for i, s in enumerate(stripped):
-        case[i] = "UPPER" if s.isupper() else ("Title Case" if s.istitle() else "Lower")
-        m = _num_match(s, 0, 20)
-        numbering[i] = _NUMBERING_TAGS[m.lastindex] if m is not None else None
-    df["text"] = stripped
-    df["char_count"] = np.fromiter((len(s) for s in stripped), dtype=np.int64, count=n)
-    df["is_bold"] = np.fromiter(
-        (_BOLD_RE.search(f.lower()) is not None for f in df["font_name"].tolist()),
-        dtype=bool,
-        count=n,
-    )
-    df["text_case"] = case
-    df["numbering"] = numbering
-    g = df.groupby("url", sort=False)
-    prev_page = g["page_num"].shift()
-    prev_y1 = g["y1"].shift()
-    same_page = (prev_page == df["page_num"]).fillna(False).to_numpy(dtype=bool)
-    df["space_above"] = np.where(same_page, df["y0"] - prev_y1, 0.0)
-    pw = df["page_width"]
-    df["is_centered"] = np.abs(pw / 2 - (df["x0"] + df["x1"]) / 2) < pw * 0.2
-    return df
-
-
-def doc_stats(df: pd.DataFrame) -> tuple[pd.DataFrame, dict[str, list[float]]]:
-    """Pass 2 aggregates: per-url modal baseline size + heading tiers.
-
-    Returns (baseline frame [url, baseline], {url: tiers}).
-    """
-    is_body = (df["char_count"] > 10) & (df["font_size"] >= 8)
-    has_body = is_body.groupby(df["url"], sort=False).transform("any")
-    eff = is_body | ~has_body  # per-url fallback to ALL blocks (analysis_new.py:67)
-    body = df.loc[eff, ["url", "font_size", "block_idx", "page_num"]]
-
-    hist = (
-        body.groupby(["url", "font_size"], sort=False)
-        .agg(cnt=("block_idx", "size"), first_idx=("block_idx", "min"), max_page=("page_num", "max"))
-        .reset_index()
-    )
-    # modal size, tie-break = first encountered (stable sort on first_idx)
-    ordered = hist.sort_values(
-        ["url", "cnt", "first_idx"], ascending=[True, False, True], kind="mergesort"
-    )
-    baseline = (
-        ordered.groupby("url", sort=False)
-        .head(1)[["url", "font_size"]]
-        .rename(columns={"font_size": "baseline"})
-    )
-
-    h = hist.merge(baseline, on="url")
-    tier_rows = h[
-        (h["font_size"] >= h["baseline"] * 1.15)
-        & ((h["cnt"] >= 2) | (h["font_size"] >= h["baseline"] * 1.5))
-        & (h["max_page"] > 0)
-    ]
-    raw = (
-        tier_rows.sort_values(["url", "font_size"], ascending=[True, False])
-        .groupby("url", sort=False)["font_size"]
-        .agg(list)
-    )
-
-    def trim(ts: list[float]) -> list[float]:
-        # outlier-top trim (analysis_new.py:83-86)
-        if len(ts) >= 2 and ts[0] > ts[1] * 1.3:
-            return ts[1:5]
-        return ts[:4]
-
-    tiers = {url: trim(ts) for url, ts in raw.items()}
-    return baseline, tiers
-
-
-def score(df: pd.DataFrame, baseline: pd.DataFrame, tiers: dict[str, list[float]]) -> pd.DataFrame:
-    """Pass 2 scoring chain (C1-C8), fully vectorized."""
-    out = df.merge(baseline, on="url", how="left")
-    out["baseline"] = out["baseline"].fillna(0.0)
-    tier_frame = pd.DataFrame(
-        [
-            (url, size, idx)
-            for url, ts in tiers.items()
-            for idx, size in enumerate(ts)
-        ],
-        columns=["url", "font_size", "tier_index"],
-    )
-    if len(tier_frame):
-        out = out.merge(tier_frame, on=["url", "font_size"], how="left")
-    else:
-        out["tier_index"] = np.nan
-
-    with np.errstate(divide="ignore", invalid="ignore"):
-        ratio = np.where(out["baseline"] > 0, out["font_size"] / out["baseline"], 0.0)
-    in_tier = out["tier_index"].notna().to_numpy()
-    tier_idx = out["tier_index"].fillna(0).to_numpy()
-    cc = out["char_count"].to_numpy()
-
-    s = np.select(
-        [in_tier, ratio >= 2.0, ratio >= 1.5, ratio >= 1.2, ratio >= 1.1],
-        [25 - tier_idx * 3, 20, 15, 10, 5],
-        default=0,
-    ).astype("float64")
-    s += np.where(out["is_bold"], np.where(ratio >= 1.3, 12, 8), 0)
-    s += np.where(out["numbering"].notna(), 18, 0)
-    s += np.select([out["text_case"] == "UPPER", out["text_case"] == "Title Case"], [6, 4], 0)
-    s += np.where(out["space_above"] > out["baseline"] * 1.5, 10, 0)
-    s += np.where(out["is_centered"] & (ratio >= 1.2), 8, 0)
-    s += np.select([cc < 4, cc <= 50, cc > 100], [-8, 2, -5], 0)
-    s += np.where(out["font_size"] < out["baseline"] * 0.95, -8, 0)
-    out["score"] = s
-    return out
 
 
 # ----------------------------------------------------------------------
@@ -214,45 +78,20 @@ class _Doc:
         "bold", "case", "numbering", "centered", "score", "n",
     )
 
-    def __init__(self, cols: "_BatchCols", idx):
-        # fancy-index the BATCH-level numpy arrays: extracting pandas
-        # columns per document costs ~12 __getitem__/to_numpy calls per
-        # doc (measured ~20% of the whole Arrow stage); pulling each
-        # column once per batch and slicing is pure numpy
-        self.text = cols.text[idx]
-        self.size = cols.size[idx]
-        self.page = cols.page[idx]
-        self.y = cols.y[idx]
-        self.x0 = cols.x0[idx]
-        self.x1 = cols.x1[idx]
-        self.y1 = cols.y1[idx]
-        self.bold = cols.bold[idx]
-        self.case = cols.case[idx]
-        self.numbering = cols.numbering[idx]
-        self.centered = cols.centered[idx]
-        self.score = cols.score[idx]
-        self.n = len(idx)
-
-
-class _BatchCols:
-    """All 12 _Doc columns extracted ONCE for a whole scored batch."""
-
-    __slots__ = _Doc.__slots__
-
-    def __init__(self, scored: pd.DataFrame):
-        self.text = scored["text"].to_numpy(dtype=object)
-        self.size = scored["font_size"].to_numpy(dtype=float)
-        self.page = scored["page_num"].to_numpy(dtype=int)
-        self.y = scored["y0"].to_numpy(dtype=float)
-        self.x0 = scored["x0"].to_numpy(dtype=float)
-        self.x1 = scored["x1"].to_numpy(dtype=float)
-        self.y1 = scored["y1"].to_numpy(dtype=float)
-        self.bold = scored["is_bold"].to_numpy(dtype=bool)
-        self.case = scored["text_case"].to_numpy(dtype=object)
-        self.numbering = scored["numbering"].to_numpy(dtype=object)
-        self.centered = scored["is_centered"].to_numpy(dtype=bool)
-        self.score = scored["score"].to_numpy(dtype=float)
-        self.n = len(scored)
+    def __init__(self, text, size, page, y, x0, x1, y1, bold, case, numbering, centered, score):
+        self.text = np.array(text, dtype=object)
+        self.size = np.array(size, dtype=float)
+        self.page = np.array(page, dtype=int)
+        self.y = np.array(y, dtype=float)
+        self.x0 = np.array(x0, dtype=float)
+        self.x1 = np.array(x1, dtype=float)
+        self.y1 = np.array(y1, dtype=float)
+        self.bold = np.array(bold, dtype=bool)
+        self.case = np.array(case, dtype=object)
+        self.numbering = np.array(numbering, dtype=object)
+        self.centered = np.array(centered, dtype=bool)
+        self.score = np.array(score, dtype=float)
+        self.n = len(text)
 
 
 def _candidate_indices(d: _Doc, baseline: float, poster_v1: bool) -> list[int]:
@@ -490,20 +329,115 @@ def classify_doc(d: _Doc, baseline: float, tiers: list[float]) -> tuple[str, lis
     return title, _assign_levels(d, cand, tiers, title_texts)
 
 
-def analyze_batch(blocks: pd.DataFrame) -> Iterator[tuple[str, str, list[dict]]]:
-    """Run the full 3-pass analysis for every document in a batch.
+def analyze_doc(rows: list[tuple]) -> tuple[str, list[dict]]:
+    """Passes 1-3 for one document's merged-block rows, in block order.
 
-    Yields (url, title, outline). Documents with zero blocks are
-    simply absent (the caller decides failed-row semantics, S4).
+    Passes 1-2 — derived columns, lag window, font histogram and the
+    C1-C8 scoring chain (analysis_new.py:5-120) — run here over the
+    row tuples; pass 3 is ``classify_doc``.
     """
-    if blocks.empty:
-        return
-    df = featurize(blocks)
-    baseline_df, tiers = doc_stats(df)
-    scored = score(df, baseline_df, tiers)
-    bmap = dict(zip(baseline_df["url"], baseline_df["baseline"]))
-    cols = _BatchCols(scored)
-    for url, idx in scored.groupby("url", sort=False).indices.items():
-        d = _Doc(cols, idx)
-        title, outline = classify_doc(d, bmap.get(url, 0.0), tiers.get(url, []))
-        yield url, title, outline
+    _, page, raw, size, font, x0, y0, x1, y1, width = zip(*rows)
+    n = len(raw)
+    text = [t.strip() for t in raw]
+    case = [
+        "UPPER" if s.isupper() else ("Title Case" if s.istitle() else "Lower") for s in text
+    ]
+    # `match(s, 0, 20)` truncates the subject at endpos=20 like the
+    # reference's text[:20] (analysis_new.py:35-40)
+    numbering = []
+    for s in text:
+        m = _NUMBERING_ALT.match(s, 0, 20)
+        numbering.append(_NUMBERING_TAGS[m.lastindex] if m is not None else None)
+    bold = [_BOLD_RE.search(f.lower()) is not None for f in font]
+    space = [0.0] * n
+    for i in range(1, n):
+        if page[i] == page[i - 1]:
+            space[i] = y0[i] - y1[i - 1]
+    pw = width[0]
+    centered = [abs(pw / 2 - (a + b) / 2) < pw * 0.2 for a, b in zip(x0, x1)]
+
+    # pass 2: modal body size, then heading tiers (analysis_new.py:67-86)
+    body = [i for i in range(n) if len(text[i]) > 10 and size[i] >= 8] or range(n)
+    counts: dict = {}  # insertion order = first body occurrence
+    content = set()  # sizes seen after the first page
+    for i in body:
+        s = size[i]
+        if s != s:
+            continue  # NaN
+        counts[s] = counts.get(s, 0) + 1
+        if page[i] > 0:
+            content.add(s)
+    baseline = max(counts, key=counts.get) if counts else 0.0
+    tiers = sorted(
+        (
+            s
+            for s, c in counts.items()
+            if s >= baseline * 1.15 and (c >= 2 or s >= baseline * 1.5) and s in content
+        ),
+        reverse=True,
+    )
+    # outlier-top trim (analysis_new.py:83-86)
+    tiers = tiers[1:5] if len(tiers) >= 2 and tiers[0] > tiers[1] * 1.3 else tiers[:4]
+
+    tier_rank = {s: k for k, s in enumerate(tiers)}
+    score = []
+    for i in range(n):
+        s = size[i]
+        ratio = s / baseline if baseline > 0 else 0.0
+        k = tier_rank.get(s)
+        if k is not None:
+            v = 25 - k * 3
+        elif ratio >= 2.0:
+            v = 20
+        elif ratio >= 1.5:
+            v = 15
+        elif ratio >= 1.2:
+            v = 10
+        elif ratio >= 1.1:
+            v = 5
+        else:
+            v = 0
+        if bold[i]:
+            v += 12 if ratio >= 1.3 else 8
+        if numbering[i] is not None:
+            v += 18
+        if case[i] == "UPPER":
+            v += 6
+        elif case[i] == "Title Case":
+            v += 4
+        if space[i] > baseline * 1.5:
+            v += 10
+        if centered[i] and ratio >= 1.2:
+            v += 8
+        cc = len(text[i])
+        if cc < 4:
+            v -= 8
+        elif cc <= 50:
+            v += 2
+        elif cc > 100:
+            v -= 5
+        if s < baseline * 0.95:
+            v -= 8
+        score.append(v)
+
+    d = _Doc(text, size, page, y0, x0, x1, y1, bold, case, numbering, centered, score)
+    return classify_doc(d, baseline, tiers)
+
+
+def analyze_batch(rows: list[tuple]) -> Iterator[tuple]:
+    """Run the 3-pass analysis for every document of one Arrow batch.
+
+    ``rows`` are merged blocks ``(key, page_num, text, font_size,
+    font_name, x0, y0, x1, y1, page_width)``; consecutive rows with
+    one key are one document, in block order. Yields ``(key, title,
+    outline, error)`` per document. A document that raises yields
+    ``(key, None, None, "<type>: <message>")`` and the others are
+    analyzed as if it were absent.
+    """
+    for key, doc in groupby(rows, key=itemgetter(0)):
+        try:
+            title, outline = analyze_doc(list(doc))
+        except Exception as exc:
+            yield key, None, None, f"{type(exc).__name__}: {exc}"[:500]
+        else:
+            yield key, title, outline, None

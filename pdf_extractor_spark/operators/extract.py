@@ -3,15 +3,18 @@
 Spark-first shape: ONE shuffle-free ``mapInPandas`` stage. The unit of
 parallelism is the document row; every stage of the reference's
 per-document pipeline (payload parse → span-merge fold → 3-pass
-analysis → JSON render) happens inside the same Arrow batch, so at
-cluster scale this is embarrassingly parallel — zero shuffle, zero
-driver involvement, linear scaling with executors (the property the
-north rule's ≥0.8 scaling-efficiency gate measures).
+analysis → JSON render) runs document by document inside the same
+Arrow batch, so at cluster scale this is embarrassingly parallel —
+zero shuffle, zero driver involvement, linear scaling with executors
+(the property the north rule's ≥0.8 scaling-efficiency gate measures).
+The batch's merged blocks go to the analyzer in one call, which
+analyzes each document on its own.
 
 Failed documents follow S4 semantics (extract_outline.py:116-124,
 145-147): the reference writes NO output for them; here they become
 ``parse_ok=false`` rows that sinks filter out but lineage manifests
-count (io.py).
+count (io.py). A document the analyzer raises on is such a row too,
+with the exception in ``error``; its neighbours are unaffected.
 """
 
 from __future__ import annotations
@@ -27,24 +30,9 @@ from ..session import release_zip_importers
 from ..sources import payload as payload_codec
 from . import analyzer, html_extract, span_merge
 
-# NOTE the first column is the batch ROW ORDINAL (as a string), not the
-# url: a crawler can re-ship the same url twice in one Arrow batch (the
-# streaming path dedups against the committed table, not within-batch),
-# and keying the analyzer by url would merge the two documents' blocks
-# into one group and emit a phantom failure row for the first copy.
-_BLOCK_COLUMNS = [
-    "url",
-    "block_idx",
-    "page_num",
-    "text",
-    "font_size",
-    "font_name",
-    "x0",
-    "y0",
-    "x1",
-    "y1",
-    "page_width",
-]
+
+def _outline_json(title, outline) -> str:
+    return json.dumps({"title": title, "outline": outline}, indent=2, ensure_ascii=False)
 
 
 def _process_batch(pdf: pd.DataFrame) -> pd.DataFrame:
@@ -62,8 +50,10 @@ def _process_batch(pdf: pd.DataFrame) -> pd.DataFrame:
     sizes = [0] * n
 
     # -- parse stage: payload → spandoc blocks or HTML result ----------
+    # Blocks are keyed by the batch ROW ORDINAL, not the url: a crawler
+    # can re-ship the same url twice in one Arrow batch, and each copy
+    # is its own document.
     block_rows: list[tuple] = []
-    span_doc_rows: list[int] = []
     for i in range(n):
         raw = payloads[i]
         sizes[i] = len(raw) if raw is not None else 0
@@ -75,19 +65,14 @@ def _process_batch(pdf: pd.DataFrame) -> pd.DataFrame:
                 if not merged:
                     errors[i] = "no_text_blocks"  # reference emits nothing (S4)
                     continue
-                for bidx, (pno, text, size, font, x0, y0, x1, y1, _italic) in enumerate(merged):
-                    block_rows.append((str(i), bidx, pno, text, size, font, x0, y0, x1, y1, width))
-                span_doc_rows.append(i)
+                for pno, text, size, font, x0, y0, x1, y1, _italic in merged:
+                    block_rows.append((i, pno, text, size, font, x0, y0, x1, y1, width))
             elif kind == "html":
                 res = html_extract.extract_html(bytes(raw))
                 titles[i] = res["title"]
                 outlines[i] = res["outline"]
                 main_texts[i] = res["main_text"]
-                jsons[i] = json.dumps(
-                    {"title": res["title"], "outline": res["outline"]},
-                    indent=2,
-                    ensure_ascii=False,
-                )
+                jsons[i] = _outline_json(res["title"], res["outline"])
                 oks[i] = True
             else:
                 errors[i] = f"unsupported_payload:{kind}"
@@ -95,38 +80,16 @@ def _process_batch(pdf: pd.DataFrame) -> pd.DataFrame:
             kinds[i] = kinds[i] or "unknown"
             errors[i] = f"{type(exc).__name__}: {exc}"[:500]
 
-    # -- analysis stage: vectorized across every spandoc in the batch --
+    # -- analysis stage: one call per batch, each document isolated -----
     if block_rows:
-        blocks = pd.DataFrame(block_rows, columns=_BLOCK_COLUMNS)
-
-        def _emit(key: str, title, outline) -> None:
-            i = int(key)
+        for i, title, outline, error in analyzer.analyze_batch(block_rows):
+            if error is not None:
+                errors[i] = error
+                continue
             titles[i] = title
             outlines[i] = outline
-            jsons[i] = json.dumps(
-                {"title": title, "outline": outline}, indent=2, ensure_ascii=False
-            )
+            jsons[i] = _outline_json(title, outline)
             oks[i] = True
-
-        try:
-            for key, title, outline in analyzer.analyze_batch(blocks):
-                _emit(key, title, outline)
-        except Exception:
-            # S4 isolation: one pathological document must not fail the
-            # whole Arrow batch — rerun per document so only the raising
-            # doc(s) become failure rows (rare path; the vectorized call
-            # above stays the hot path)
-            for key, sub in blocks.groupby("url", sort=False):
-                i = int(key)
-                if oks[i]:
-                    continue  # already emitted before the raise
-                try:
-                    for k2, title, outline in analyzer.analyze_batch(
-                        sub.reset_index(drop=True)
-                    ):
-                        _emit(k2, title, outline)
-                except Exception as exc:
-                    errors[i] = f"{type(exc).__name__}: {exc}"[:500]
 
     return pd.DataFrame(
         {

@@ -12,10 +12,15 @@ __spark_entry__ as rows-only queries.
 
 from __future__ import annotations
 
+import logging
+from pathlib import Path
+
 from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
 from . import relational as R
+
+_log = logging.getLogger(__name__)
 
 QUERIES: dict = {}
 ORACLES: dict = {}
@@ -1333,8 +1338,9 @@ def _outline_stats_oracle(n: int = 400, seed_base: int = 88_000) -> str | None:
     oracle that tests/test_refimpl_vs_reference.py pins byte-identical
     to the ACTUAL reference code (extract_outline.py + analysis_new.py).
     refimpl shares NO code with the distributed path under test
-    (operators/analyzer.py is vectorized pandas/numpy; refimpl is
-    stdlib row loops), so a hash match is construction-vs-execution
+    (operators/analyzer.py runs its passes over merged-block tuples and
+    numpy arrays; refimpl is stdlib loops over per-block dicts), so a
+    hash match is construction-vs-execution
     evidence for the flagship analyzer, same pattern as
     pdf_parse_stats. Returns None when tests/refimpl.py is not on disk
     (shipped-zip context) — the query then runs rows-only."""
@@ -1461,6 +1467,8 @@ def outline_stats(spark, sf_dir):
 
 _HTML_STATS_N_GEN = 151
 _HTML_STATS_SEED = 77_000
+# the committed adversarial golden corpus; absent in a shipped zip
+_HTML_GOLDEN = Path(__file__).resolve().parents[2] / "tests" / "fixtures" / "html_golden"
 
 
 def _html_digest_rows(items: list[tuple[str, dict | None]]):
@@ -1523,9 +1531,8 @@ def _html_stats_oracle() -> str | None:
     context) — the query then runs rows-only."""
     import json as _json
     import random
-    from pathlib import Path as _Path
 
-    fix = _Path(__file__).resolve().parents[2] / "tests" / "fixtures" / "html_golden"
+    fix = _HTML_GOLDEN
     if not (fix / "expected.json").exists():
         return None
     from ..operators.html_extract import extract_html
@@ -1582,12 +1589,10 @@ def html_stats(spark, sf_dir):
     Reference scope: SURVEY §2.11."""
     import pandas as pd
 
-    from pathlib import Path as _Path
-
     from .. import corpus as corpus_mod
     from ..operators.extract import extract_pages
 
-    fix = _Path(__file__).resolve().parents[2] / "tests" / "fixtures" / "html_golden"
+    fix = _HTML_GOLDEN
     fixtures = None
     if fix.exists():
         fixtures = (
@@ -1601,10 +1606,16 @@ def html_stats(spark, sf_dir):
                 F.col("content").alias("html"),
             )
         )
-    # else: shipped-zip context (tests/ not on disk) — the oracle
-    # generator returns None there too, so the query degrades to a
-    # rows-only run over the generated slice instead of crashing on a
-    # nonexistent path
+    else:
+        # shipped-zip context (tests/ not on disk): the oracle generator
+        # returns None there too, so the query degrades to a rows-only
+        # run over the generated slice instead of crashing on a
+        # nonexistent path
+        _log.warning(
+            "html_stats: golden fixtures not found at %s; running the "
+            "generated slice only, with no oracle",
+            fix,
+        )
 
     def gen(batches):
         import random

@@ -33,8 +33,18 @@ def detect_kind(payload: Optional[bytes]) -> str:
     return "unknown"
 
 
+def _reject_constant(name: str):
+    raise ValueError(f"non-finite number {name} in spandoc payload")
+
+
 def parse_spandoc(payload: bytes) -> list[dict]:
-    return json.loads(zlib.decompress(payload[len(SPANDOC_MAGIC):]).decode("utf-8"))
+    """Decode a spandoc payload. ``NaN``/``Infinity``/``-Infinity``
+    literals are not JSON and raise, so such a document becomes an S4
+    failure row rather than reaching the analyzer."""
+    return json.loads(
+        zlib.decompress(payload[len(SPANDOC_MAGIC):]).decode("utf-8"),
+        parse_constant=_reject_constant,
+    )
 
 
 def parse_pdf(payload: bytes) -> list[dict]:

@@ -1,11 +1,12 @@
-"""Differential test (no Spark): the engine's vectorized span-merge +
-analyzer (pdf_extractor_spark.operators) vs the clean-room oracle
+"""Differential test (no Spark): the engine's span-merge + analyzer
+(pdf_extractor_spark.operators) vs the clean-room oracle
 (tests/refimpl.py, itself proven byte-identical to the reference).
 
-Runs the whole Arrow-batch path — many documents vectorized in one
-pandas frame — exactly as the mapInPandas stage does, so vectorization
-bugs (dtype coercions, groupby ordering, NaN propagation) surface here
-without paying Spark startup per iteration.
+Runs the whole Arrow-batch path — many documents' merged-block rows in
+one ``analyze_batch`` call — exactly as the mapInPandas stage does, so
+batching bugs (documents bleeding into each other, dtype coercions,
+NaN propagation) surface here without paying Spark startup per
+iteration.
 """
 
 from __future__ import annotations
@@ -13,35 +14,19 @@ from __future__ import annotations
 import json
 import random
 
-import pandas as pd
 import pytest
 
 import refimpl
 from pdf_extractor_spark import corpus
 from pdf_extractor_spark.operators import analyzer, span_merge
 
-BLOCK_COLUMNS = [
-    "url",
-    "block_idx",
-    "page_num",
-    "text",
-    "font_size",
-    "font_name",
-    "x0",
-    "y0",
-    "x1",
-    "y1",
-    "page_width",
-]
-
-
-def _blocks_frame(docs: dict[str, list[dict]]) -> pd.DataFrame:
+def _block_rows(docs: dict[str, list[dict]]) -> list[tuple]:
     rows = []
     for url, pages in docs.items():
         merged, width = span_merge.merge_doc_spans(pages)
-        for bidx, (pno, text, size, font, x0, y0, x1, y1, _it) in enumerate(merged):
-            rows.append((url, bidx, pno, text, size, font, x0, y0, x1, y1, width))
-    return pd.DataFrame(rows, columns=BLOCK_COLUMNS)
+        for pno, text, size, font, x0, y0, x1, y1, _it in merged:
+            rows.append((url, pno, text, size, font, x0, y0, x1, y1, width))
+    return rows
 
 
 def test_span_merge_matches_oracle():
@@ -75,10 +60,10 @@ def test_vectorized_analyzer_matches_oracle(seed_base):
         docs[url] = pages
         expected[url] = res
 
-    frame = _blocks_frame(docs)
+    rows = _block_rows(docs)
     got = {
         url: {"title": title, "outline": outline}
-        for url, title, outline in analyzer.analyze_batch(frame)
+        for url, title, outline, _error in analyzer.analyze_batch(rows)
     }
     for url, exp in expected.items():
         if exp is None:

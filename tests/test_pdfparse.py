@@ -15,7 +15,6 @@ from __future__ import annotations
 import json
 from pathlib import Path
 
-import pandas as pd
 import pytest
 
 FIXTURES = Path("/root/reference/input")
@@ -49,19 +48,15 @@ def _extract_one(name: str):
     data = (FIXTURES / f"{name}.pdf").read_bytes()
     pages = pdfparse.extract_spans(data)
     merged, width = span_merge.merge_doc_spans(pages)
-    blocks = pd.DataFrame(
-        [
-            (name, i, p, t, s, fo, x0, y0, x1, y1, width)
-            for i, (p, t, s, fo, x0, y0, x1, y1, _it) in enumerate(merged)
-        ],
-        columns=[
-            "url", "block_idx", "page_num", "text", "font_size",
-            "font_name", "x0", "y0", "x1", "y1", "page_width",
-        ],
-    )
-    results = list(analyzer.analyze_batch(blocks))
+    rows = [
+        (name, p, t, s, fo, x0, y0, x1, y1, width)
+        for p, t, s, fo, x0, y0, x1, y1, _it in merged
+    ]
+    results = list(analyzer.analyze_batch(rows))
     assert len(results) == 1
-    return pages, results[0]
+    key, title, outline, error = results[0]
+    assert error is None, error
+    return pages, (key, title, outline)
 
 
 @pytest.mark.parametrize("name", sorted(GOLDEN_TITLES))

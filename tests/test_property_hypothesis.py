@@ -4,8 +4,8 @@ Adversarially-generated span documents — degenerate bboxes, unicode
 whitespace, numbering/poster trigger strings, size/position jitter at
 the exact rule thresholds — are pushed through BOTH the clean-room
 oracle (tests/refimpl.py, proven byte-identical to the reference) and
-the engine's vectorized path (span_merge + analyzer, the exact code
-the mapInPandas stage runs). Hypothesis shrinks any divergence to a
+the engine's path (span_merge + analyzer, the exact code the
+mapInPandas stage runs). Hypothesis shrinks any divergence to a
 minimal counterexample, covering branch combinations the seeded
 corpus never reaches.
 """
@@ -14,7 +14,6 @@ from __future__ import annotations
 
 import json
 
-import pandas as pd
 from hypothesis import HealthCheck, given, settings
 from hypothesis import strategies as st
 
@@ -108,30 +107,22 @@ def test_span_merge_property(doc_spec):
 @settings(max_examples=60, deadline=None, suppress_health_check=[HealthCheck.too_slow])
 @given(st.lists(_doc, min_size=1, max_size=4))
 def test_full_pipeline_property(doc_specs):
-    """Vectorized multi-document analysis ≡ per-document oracle, down
+    """Multi-document batch analysis ≡ per-document oracle, down
     to the rendered JSON bytes (titles, outline levels, G14 sort)."""
     docs = {f"u{i}": _materialize(spec) for i, spec in enumerate(doc_specs)}
     rows = []
     expected = {}
     for url, pages in docs.items():
         merged, width = span_merge.merge_doc_spans(pages)
-        for bidx, (pno, text, size, font, x0, y0, x1, y1, _it) in enumerate(merged):
-            rows.append((url, bidx, pno, text, size, font, x0, y0, x1, y1, width))
+        for pno, text, size, font, x0, y0, x1, y1, _it in merged:
+            rows.append((url, pno, text, size, font, x0, y0, x1, y1, width))
         oracle = refimpl.extract_document(pages)
         expected[url] = None if oracle is None else refimpl.render_json(oracle)
 
-    if rows:
-        frame = pd.DataFrame(
-            rows,
-            columns=["url", "block_idx", "page_num", "text", "font_size",
-                     "font_name", "x0", "y0", "x1", "y1", "page_width"],
-        )
-        got = {
-            url: json.dumps({"title": t, "outline": o}, indent=2, ensure_ascii=False)
-            for url, t, o in analyzer.analyze_batch(frame)
-        }
-    else:
-        got = {}
+    got = {
+        url: json.dumps({"title": t, "outline": o}, indent=2, ensure_ascii=False)
+        for url, t, o, _error in analyzer.analyze_batch(rows)
+    }
     for url, exp in expected.items():
         assert got.get(url) == exp, url
 

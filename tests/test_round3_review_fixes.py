@@ -1,11 +1,12 @@
 """Round-3 self-review fixes, second pass.
 
 Each test pins one fix from the review of the round-3 diff:
- - operators/extract.py keys the batch analyzer by ROW ORDINAL, so a
+ - operators/extract.py keys the analyzer's blocks by ROW ORDINAL, so a
    url re-shipped twice in one Arrow batch yields two independent
    result rows (url-keying merged their blocks into one document)
- - operators/extract.py isolates analyzer failures per document: one
-   pathological doc becomes one S4 failure row, not a whole-batch loss
+ - operators/analyzer.py isolates failures per document: one
+   pathological doc becomes one S4 failure row, not a whole-batch
+   loss, wherever it sits in the batch
  - operators/html_extract.py tracks an open-element stack, so dirty
    crawled HTML (unclosed <a>/<option>/<aside>, stray end tags, void
    tags) can no longer leak link/drop depth and silently discard the
@@ -46,32 +47,35 @@ def test_duplicate_url_rows_stay_independent():
     assert both["outline_json"][1] == solo2["outline_json"][0]
 
 
-def test_one_poisoned_doc_fails_alone(monkeypatch):
-    real = analyzer.analyze_batch
+@pytest.mark.parametrize(
+    "poisoned", [(0,), (1,), (2,), (0, 2)], ids=["first", "middle", "last", "two"]
+)
+def test_one_poisoned_doc_fails_alone(monkeypatch, poisoned):
+    real = analyzer.analyze_doc
 
-    def poisoned(blocks):
-        if blocks["text"].str.contains("POISON_MARKER").any():
+    def analyze_doc(rows):
+        if any("POISON_MARKER" in row[2] for row in rows):
             raise ValueError("poisoned document")
-        return real(blocks)
+        return real(rows)
 
-    monkeypatch.setattr(analyzer, "analyze_batch", poisoned)
+    urls = ["d0", "d1", "d2"]
+    payloads = [_spandoc_payload(303), _spandoc_payload(404), _spandoc_payload(606)]
+    for k in poisoned:
+        bad_pages = corpus.random_spandoc(random.Random(505 + k))
+        bad_pages[0]["blocks"][0][0][0]["text"] = "POISON_MARKER"
+        payloads[k] = corpus.spandoc_to_payload(bad_pages)
 
-    good1, good2 = _spandoc_payload(303), _spandoc_payload(404)
-    bad_pages = corpus.random_spandoc(random.Random(505))
-    bad_pages[0]["blocks"][0][0][0]["text"] = "POISON_MARKER"
-    bad = corpus.spandoc_to_payload(bad_pages)
-
-    out = extract._process_batch(
-        pd.DataFrame(
-            {"url": ["g1", "bad", "g2"], "html": [good1, bad, good2]}
-        )
-    )
-    assert out["parse_ok"].tolist() == [True, False, True]
-    assert "ValueError" in out["error"][1]
+    monkeypatch.setattr(analyzer, "analyze_doc", analyze_doc)
+    out = extract._process_batch(pd.DataFrame({"url": urls, "html": payloads}))
+    assert out["parse_ok"].tolist() == [k not in poisoned for k in range(3)]
     # the survivors' results equal their solo (unpoisoned-batch) runs
-    monkeypatch.setattr(analyzer, "analyze_batch", real)
-    solo1 = extract._process_batch(pd.DataFrame({"url": ["g1"], "html": [good1]}))
-    assert out["outline_json"][0] == solo1["outline_json"][0]
+    monkeypatch.setattr(analyzer, "analyze_doc", real)
+    for k in range(3):
+        if k in poisoned:
+            assert "ValueError" in out["error"][k]
+            continue
+        solo = extract._process_batch(pd.DataFrame({"url": [urls[k]], "html": [payloads[k]]}))
+        assert out["outline_json"][k] == solo["outline_json"][0]
 
 
 # -- html_extract.py: open-element stack ---------------------------------
