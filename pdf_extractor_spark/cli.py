@@ -15,8 +15,34 @@ from __future__ import annotations
 
 import argparse
 import json
+import shutil
 import sys
+import tempfile
 import time
+
+
+def warm_up(spark) -> None:
+    """Run a tiny copy of the full pipeline: synthesis, extraction and
+    a bucketed write with its lineage.
+
+    It pre-pays the per-JVM one-time costs a long-running production
+    executor amortizes to zero: Python worker spawn, whole-stage
+    codegen JIT, parquet/zstd writer class loading, committer set-up.
+    ``--warm-workers`` runs it before the timed section, and
+    session.py runs it to train the driver's class-data-sharing
+    archive on the classes the pipeline loads.
+    """
+    from pdf_extractor_spark import corpus, io as pio
+    from pdf_extractor_spark.operators.extract import extract_pages
+
+    n = spark.sparkContext.defaultParallelism
+    spark.range(0, 32 * n, 1, n).mapInPandas(lambda it: it, schema="id long").count()
+    warm_dir = tempfile.mkdtemp(prefix="pdfx_warm_")
+    try:
+        warm_pages = corpus.distributed_pages(spark, 256, seed=0)
+        pio.write_result(extract_pages(warm_pages, keep_failed=True), warm_dir, n_buckets=4)
+    finally:
+        shutil.rmtree(warm_dir, ignore_errors=True)
 
 
 def main(argv: list[str] | None = None) -> int:
@@ -89,22 +115,7 @@ def main(argv: list[str] | None = None) -> int:
 
     spark = get_spark("pdf_extractor_cli")
     if args.warm_workers:
-        # benchmark mode: pre-pay the per-JVM one-time costs a
-        # long-running production executor amortizes to zero — Python
-        # worker spawn, whole-stage codegen JIT, parquet/zstd writer
-        # class loading, committer setup — by running a tiny copy of
-        # the full pipeline before the timed section
-        import shutil
-        import tempfile
-
-        n = spark.sparkContext.defaultParallelism
-        spark.range(0, 32 * n, 1, n).mapInPandas(lambda it: it, schema="id long").count()
-        warm_dir = tempfile.mkdtemp(prefix="pdfx_warm_")
-        try:
-            warm_pages = corpus.distributed_pages(spark, 256, seed=0)
-            pio.write_result(extract_pages(warm_pages, keep_failed=True), warm_dir, n_buckets=4)
-        finally:
-            shutil.rmtree(warm_dir, ignore_errors=True)
+        warm_up(spark)
     t0 = time.time()
     if args.synthesize:
         # synthesized on the executors (corpus.distributed_pages) — a

@@ -57,8 +57,9 @@ def _process_batch(pdf: pd.DataFrame) -> pd.DataFrame:
     for i in range(n):
         raw = payloads[i]
         sizes[i] = len(raw) if raw is not None else 0
+        data = bytes(raw) if raw is not None else None
         try:
-            kind, pages = payload_codec.parse_payload(bytes(raw) if raw is not None else None)
+            kind, pages = payload_codec.parse_payload(data)
             kinds[i] = kind
             if kind in ("spandoc", "pdf"):
                 merged, width = span_merge.merge_doc_spans(pages)
@@ -68,7 +69,7 @@ def _process_batch(pdf: pd.DataFrame) -> pd.DataFrame:
                 for pno, text, size, font, x0, y0, x1, y1, _italic in merged:
                     block_rows.append((i, pno, text, size, font, x0, y0, x1, y1, width))
             elif kind == "html":
-                res = html_extract.extract_html(bytes(raw))
+                res = html_extract.extract_html(data)
                 titles[i] = res["title"]
                 outlines[i] = res["outline"]
                 main_texts[i] = res["main_text"]
@@ -77,7 +78,9 @@ def _process_batch(pdf: pd.DataFrame) -> pd.DataFrame:
             else:
                 errors[i] = f"unsupported_payload:{kind}"
         except Exception as exc:  # S4: swallow, record, continue
-            kinds[i] = kinds[i] or "unknown"
+            # a corrupt spandoc or %PDF raises inside parse_payload,
+            # before it returns the kind
+            kinds[i] = kinds[i] or payload_codec.detect_kind(data)
             errors[i] = f"{type(exc).__name__}: {exc}"[:500]
 
     # -- analysis stage: one call per batch, each document isolated -----

@@ -8,11 +8,21 @@ sized to cores, small Arrow batches because payload rows are fat).
 
 from __future__ import annotations
 
+import hashlib
+import logging
 import os
+import shlex
+import shutil
+import subprocess
 import sys
+import time
 import zipimport
+from pathlib import Path
 
+from pyspark import SparkContext
 from pyspark.sql import SparkSession
+
+log = logging.getLogger(__name__)
 
 
 def _host_cpus() -> str:
@@ -51,20 +61,194 @@ def release_zip_importers() -> None:
             zipimport._zip_directory_cache.pop(finder.archive, None)
 
 
-def get_spark(
-    app_name: str = "pdf_extractor_spark",
+# The driver JVM's option the class-data-sharing flag rides on. Callers
+# (bench_extract) set spark.driver.extraJavaOptions, which stays theirs.
+_JAVA_OPTS = "spark.driver.defaultJavaOptions"
+# classpath entries the launcher adds from outside $SPARK_HOME/jars:
+# the archive's key cannot see them, so their presence turns CDS off
+_CLASSPATH_VARS = ("HADOOP_CONF_DIR", "YARN_CONF_DIR", "SPARK_DIST_CLASSPATH")
+_BUILD_TIMEOUT_S = 600
+_failed_builds: set[str] = set()  # keys whose build failed in this process
+
+
+class CdsUnavailable(Exception):
+    """Why the driver cannot start on a class-data-sharing archive."""
+
+
+def cds_dir() -> Path:
+    base = os.environ.get("XDG_CACHE_HOME") or os.path.join(os.path.expanduser("~"), ".cache")
+    return Path(base, "pdf_extractor_spark", "cds")
+
+
+def _java_home() -> Path:
+    """The runtime spark-class launches: $JAVA_HOME/bin/java, else the
+    java on PATH."""
+    home = os.environ.get("JAVA_HOME")
+    java = os.path.join(home, "bin", "java") if home else shutil.which("java")
+    if not java or not os.path.isfile(java):
+        raise CdsUnavailable("no java runtime found")
+    return Path(os.path.realpath(java)).parent.parent
+
+
+def archive_key(spark_home: str | Path, java_home: str | Path) -> str:
+    """Identity of the driver JVM's runtime and classpath, read from
+    file metadata without starting a JVM (``java -version`` costs
+    ~80 ms): the runtime's ``release`` file, the realpath, size and
+    mtime of ``java`` and ``libjvm.so``, and every Spark jar's name,
+    size and mtime."""
+    h = hashlib.sha256(Path(java_home, "release").read_bytes())
+    for f in (Path(java_home, "bin", "java"), Path(java_home, "lib", "server", "libjvm.so")):
+        real = os.path.realpath(f)
+        st = os.stat(real)
+        h.update(f"{real} {st.st_size} {st.st_mtime_ns}\n".encode())
+    for jar in sorted(Path(spark_home, "jars").glob("*.jar")):
+        st = jar.stat()
+        h.update(f"{jar.name} {st.st_size} {st.st_mtime_ns}\n".encode())
+    return h.hexdigest()[:20]
+
+
+def _conf_env(spark_home: str | Path) -> dict[str, str]:
+    """The launch environment the archive can serve. The launcher puts
+    the conf dir on the classpath, and CDS refuses a non-empty
+    directory there; a conf dir of nothing but ``*.template`` files is
+    swapped for an empty one."""
+    for var in _CLASSPATH_VARS:
+        if os.environ.get(var):
+            raise CdsUnavailable(f"{var} is set")
+    conf = os.environ.get("SPARK_CONF_DIR") or os.path.join(spark_home, "conf")
+    live = sorted(n for n in os.listdir(conf) if not n.endswith(".template")) if os.path.isdir(conf) else []
+    if live:
+        raise CdsUnavailable(f"conf dir {conf} holds {live[0]}")
+    empty = cds_dir() / "conf"
+    empty.mkdir(parents=True, exist_ok=True)
+    return {"SPARK_CONF_DIR": str(empty)}
+
+
+def usable(archive: Path) -> bool:
+    """True for a published archive only: its size matches the sidecar
+    written after a build that exited 0. A truncated archive passed to
+    the JVM is a fatal error, not a fallback."""
+    try:
+        return archive.stat().st_size == int(archive.with_suffix(".size").read_text())
+    except (OSError, ValueError):
+        return False
+
+
+def _train_command(tmp: Path) -> list[str]:
+    code = "import sys; from pdf_extractor_spark.session import _train; _train(sys.argv[1])"
+    return [sys.executable, "-c", code, str(tmp)]
+
+
+def _train(tmp: str) -> None:
+    """Child process of a build: run the pipeline warm-up in a JVM that
+    dumps the classes it loaded to ``tmp`` when it exits, and exit
+    with that JVM's status."""
+    from .cli import warm_up
+
+    spark = _builder("pdf_extractor_cds_train", extra_conf={_JAVA_OPTS: f"-XX:ArchiveClassesAtExit={tmp}"}).getOrCreate()
+    spark.sparkContext.setLogLevel("WARN")
+    warm_up(spark)
+    spark.stop()
+    gateway = SparkContext._gateway
+    gateway.shutdown()
+    gateway.proc.stdin.close()  # the JVM exits at EOF on its stdin
+    sys.exit(gateway.proc.wait())
+
+
+def _pid_alive(pid: int) -> bool:
+    try:
+        os.kill(pid, 0)
+    except ProcessLookupError:
+        return False
+    except PermissionError:
+        pass
+    return True
+
+
+def _prune(keep: Path) -> None:
+    """Leave one archive in the cache: delete other keys' archives and
+    sidecars, and the ``.tmp`` files of builds whose process is gone."""
+    for f in keep.parent.iterdir():
+        if f.stem == keep.stem or f.suffix not in (".jsa", ".size", ".tmp"):
+            continue
+        if f.suffix == ".tmp":
+            pid = f.stem.rpartition(".")[2]
+            if not pid.isdigit() or _pid_alive(int(pid)):
+                continue
+        f.unlink(missing_ok=True)
+
+
+def _build(archive: Path, env: dict[str, str]) -> None:
+    """Train an archive in a child process and publish it atomically:
+    renamed into place, then its size sidecar written, only after the
+    child and its JVM exited 0."""
+    tmp = archive.with_name(f"{archive.stem}.{os.getpid()}.tmp")
+    pkg_root = str(Path(__file__).resolve().parent.parent)
+    child_env = {
+        **os.environ,
+        **env,
+        "PYTHONPATH": os.pathsep.join(filter(None, [pkg_root, os.environ.get("PYTHONPATH")])),
+    }
+    try:
+        proc = subprocess.run(
+            _train_command(tmp),
+            env=child_env,
+            stdin=subprocess.DEVNULL,
+            stdout=subprocess.PIPE,
+            stderr=subprocess.STDOUT,
+            timeout=_BUILD_TIMEOUT_S,
+        )
+        if proc.returncode != 0 or not tmp.is_file():
+            tail = proc.stdout.decode(errors="replace").strip().splitlines()[-1:]
+            raise CdsUnavailable(f"archive build exited {proc.returncode}: {' '.join(tail)}")
+        size = tmp.stat().st_size
+        os.replace(tmp, archive)
+        archive.with_suffix(".size").write_text(str(size))
+    finally:
+        tmp.unlink(missing_ok=True)
+    _prune(archive)
+
+
+def driver_cds() -> tuple[str, dict[str, str]] | None:
+    """The java options and launch environment that start the driver
+    JVM on this host's class-data-sharing archive (JEP 350), building
+    the archive on a miss. None, after one warning, when no archive can
+    serve this launch; the job then starts normally."""
+    from pyspark.find_spark_home import _find_spark_home
+
+    try:
+        spark_home = _find_spark_home()
+        env = _conf_env(spark_home)
+        key = archive_key(spark_home, _java_home())
+    except (CdsUnavailable, OSError) as exc:
+        log.warning("driver JVM starts without class-data sharing: %s", exc)
+        return None
+    archive = cds_dir() / f"{key}.jsa"
+    # the JVM logs an unusable archive to stdout, the job summary's
+    # stream; its cds warnings go to stderr instead
+    flag = f"-XX:SharedArchiveFile={shlex.quote(str(archive))} -Xlog:cds*=off -Xlog:cds*=warning:stderr"
+    if usable(archive):
+        return flag, env
+    if key in _failed_builds:
+        return None
+    t0 = time.perf_counter()
+    try:
+        _build(archive, env)
+    except (CdsUnavailable, OSError, subprocess.SubprocessError) as exc:
+        _failed_builds.add(key)
+        log.warning("driver JVM starts without class-data sharing: %s", exc)
+        return None
+    log.info("built %s (%.0f MB) in %.1f s", archive, archive.stat().st_size / 1e6, time.perf_counter() - t0)
+    return flag, env
+
+
+def _builder(
+    app_name: str,
     master: str | None = None,
     shuffle_partitions: int | None = None,
     arrow_batch_rows: int = 256,
     extra_conf: dict[str, str] | None = None,
-) -> SparkSession:
-    """Build (or fetch) a SparkSession.
-
-    arrow_batch_rows is deliberately small: a pages row can carry a
-    multi-MB binary payload, so the Arrow batch size — not the row
-    count — is what bounds Python-worker memory. 256 fat rows per
-    batch keeps a worker under ~1 GB even for 4 MB documents.
-    """
+) -> SparkSession.Builder:
     master = master or os.environ.get("SPARK_GRAFT_MASTER", f"local[{_host_cpus()}]")
     nshuffle = shuffle_partitions or DEFAULT_SHUFFLE_PARTITIONS
     builder = (
@@ -100,6 +284,67 @@ def get_spark(
     )
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)
-    spark = builder.getOrCreate()
+    return builder
+
+
+def get_spark(
+    app_name: str = "pdf_extractor_spark",
+    master: str | None = None,
+    shuffle_partitions: int | None = None,
+    arrow_batch_rows: int = 256,
+    extra_conf: dict[str, str] | None = None,
+) -> SparkSession:
+    """Build (or fetch) a SparkSession.
+
+    arrow_batch_rows is deliberately small: a pages row can carry a
+    multi-MB binary payload, so the Arrow batch size — not the row
+    count — is what bounds Python-worker memory. 256 fat rows per
+    batch keeps a worker under ~1 GB even for 4 MB documents.
+
+    When this call launches the driver JVM, it starts the JVM on the
+    host's class-data-sharing archive (driver_cds), merged ahead of
+    any spark.driver.defaultJavaOptions in ``extra_conf``. Under
+    spark-submit the JVM is already running: pass the options that
+    ``python -m pdf_extractor_spark.session`` prints instead.
+    """
+    builder = _builder(app_name, master, shuffle_partitions, arrow_batch_rows, extra_conf)
+    launch_env: dict[str, str] = {}
+    if SparkContext._gateway is None and "PYSPARK_GATEWAY_PORT" not in os.environ:
+        cds = driver_cds()
+        if cds:
+            flag, launch_env = cds
+            caller = (extra_conf or {}).get(_JAVA_OPTS)
+            builder = builder.config(_JAVA_OPTS, f"{flag} {caller}" if caller else flag)
+    saved = {k: os.environ.get(k) for k in launch_env}
+    os.environ.update(launch_env)  # for the gateway launch only
+    try:
+        spark = builder.getOrCreate()
+    finally:
+        for k, v in saved.items():
+            if v is None:
+                os.environ.pop(k, None)
+            else:
+                os.environ[k] = v
     spark.sparkContext.setLogLevel("WARN")
     return spark
+
+
+def main() -> int:
+    """Build this host's archive if needed and print the matching
+    spark-submit command prefix: under spark-submit the driver JVM
+    starts before Python runs, so ``get_spark`` cannot add the flag."""
+    from pyspark.find_spark_home import _find_spark_home
+
+    logging.basicConfig(level=logging.INFO, format="%(message)s")
+    cds = driver_cds()
+    if cds is None:
+        return 1
+    flag, env = cds
+    submit = os.path.join(_find_spark_home(), "bin", "spark-submit")
+    conf = shlex.quote(env["SPARK_CONF_DIR"])
+    print(f"SPARK_CONF_DIR={conf} {shlex.quote(submit)} --driver-java-options={shlex.quote(flag)}")
+    return 0
+
+
+if __name__ == "__main__":
+    sys.exit(main())

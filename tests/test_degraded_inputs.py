@@ -4,6 +4,8 @@
    literals in a spandoc payload, so such a document becomes one S4
    failure row instead of reaching the analyzer (where a NaN size or
    coordinate silently changed the outline)
+ - a spandoc or %PDF payload whose decode raises keeps its payload
+   kind, so lineage can tell it from an unrecognised payload
  - plans/queries.py's html_stats logs a warning when it runs without
    its golden fixtures
 """
@@ -46,6 +48,15 @@ def test_non_finite_spandoc_is_a_failure_row(field, value, literal):
     out = extract._process_batch(pd.DataFrame({"url": ["bad", "good"], "html": [bad, good]}))
     assert out["parse_ok"].tolist() == [False, True]
     assert out["error"][0].startswith("ValueError") and literal in out["error"][0]
+    assert out["payload_kind"].tolist() == ["spandoc", "spandoc"]
+
+
+def test_truncated_pdf_keeps_its_payload_kind():
+    whole = corpus.random_pdf(random.Random(5))
+    out = extract._process_batch(pd.DataFrame({"url": ["cut"], "html": [whole[: len(whole) // 2]]}))
+    assert not out["parse_ok"][0]
+    assert out["error"][0].startswith("PdfError")
+    assert out["payload_kind"][0] == "pdf"
 
 
 def test_html_stats_warns_without_fixtures(spark, tmp_path, monkeypatch, caplog):
