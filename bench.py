@@ -3,22 +3,23 @@
 
 Runs the headline queries from ``__spark_entry__.queries()`` at
 ``$SPARK_GRAFT_SF_DIR`` (default /root/testdata/sf0.1) on
-``local[$SPARK_GRAFT_CPUS]`` and prints ONE JSON line:
+``local[<CPUs>]`` (``session._host_cpus()``) and prints ONE JSON line:
 
-    {"metric": "...", "value": N, "unit": "sec",
-     "queries": {"q1": sec, ...}, "sf": ...}
+    {"metric": "headline_suite_wall_clock", "value": N, "unit": "sec",
+     "queries": {"q1": sec, ...}, "sf": ...,
+     "extra": {"docs_per_sec_flagship": N, "cores": N}}
 
 ``value`` is the total wall-clock over the headline set.  Per-query
 timings cover the full action (plan + execute + count), measured after
 a warm-up query so JVM/codegen startup is not billed to the first
-entry.  Extra context (docs/sec for the flagship extraction pipeline)
-is carried in a "extra" key — the driver only requires the four
-contract keys.
+entry.  Nothing is written to disk.
+
+The extraction job's own performance harness (end-to-end docs/s and
+MB/s, set-up time, worker RSS, table bytes and per-layer spans, under
+the bounds in ``BENCHMARK.json``) is ``bench_extract/run.py``.
 
 Usage:
-    python bench.py                 # contract mode, one JSON line
-    python bench.py --scaling       # local[8] vs local[32] protocol
-                                    # (writes BENCH/BASELINE.md)
+    python bench.py
 """
 
 from __future__ import annotations
@@ -29,17 +30,6 @@ import os
 import sys
 import time
 from pathlib import Path
-
-# Pin BLAS to one thread BEFORE numpy can be imported: the independent
-# matmul ceiling probe must measure process-level scaling, not
-# OpenBLAS's own thread pool (2 threads/worker x 32 workers would
-# oversubscribe and bias the 32-proc phase DOWN — unfairly flattering
-# the low ceiling).  The production pipeline is unaffected: the
-# analyzer is per-document Python over small numpy arrays (never
-# BLAS-threaded).
-os.environ.setdefault("OPENBLAS_NUM_THREADS", "1")
-os.environ.setdefault("OMP_NUM_THREADS", "1")
-os.environ.setdefault("MKL_NUM_THREADS", "1")
 
 _REPO = Path(__file__).resolve().parent
 if str(_REPO) not in sys.path:
@@ -70,6 +60,9 @@ HEADLINE = [
     "fingerprint_winnow",   # shuffle-free winnowing fingerprint (round 2)
 ]
 
+# stdout carries the contract line only: no console progress bars
+SPARK_CONF = {"spark.ui.showConsoleProgress": "false"}
+
 
 def _run_once(sf_dir: str, master: str, shuffle: int) -> dict:
     """Run the headline set on a fresh SparkSession; return timings."""
@@ -81,7 +74,7 @@ def _run_once(sf_dir: str, master: str, shuffle: int) -> dict:
     if active is not None:
         active.stop()
 
-    spark = get_spark("bench", master=master, shuffle_partitions=shuffle)
+    spark = get_spark("bench", master=master, shuffle_partitions=shuffle, extra_conf=SPARK_CONF)
     import __spark_entry__ as entry_mod
 
     qs = entry_mod.queries()
@@ -96,9 +89,8 @@ def _run_once(sf_dir: str, master: str, shuffle: int) -> dict:
     ).count()
 
     # Best-of-2 per query (best-of-3 when the first two disagree by
-    # >25% — i.e. a co-tenant storm hit one of them): this host shows
-    # multi-second noise spikes; min is the standard steady-state
-    # estimator for a deterministic workload.
+    # >25%, i.e. a co-tenant burst hit one of them): min is the
+    # steady-state estimator for a deterministic workload.
     timings: dict[str, float] = {}
     rows: dict[str, int] = {}
     for name in HEADLINE:
@@ -129,1177 +121,30 @@ def _run_once(sf_dir: str, master: str, shuffle: int) -> dict:
 
 
 def contract_mode() -> None:
-    sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
-    res = _run_once(sf_dir, master=f"local[{cpus}]", shuffle=cpus)
-    sf = 0.1
-    for tok in Path(sf_dir).name.split("sf")[-1:]:
-        try:
-            sf = float(tok)
-        except ValueError:
-            pass
-    # cross-round comparability: the headline set changed over rounds
-    # (r2 added pdf_payload_extract + fingerprint_winnow; r4 swapped
-    # token_count for outline_stats and folded token counting into
-    # lang_id). A subtotal derived from the CURRENT set would silently
-    # change meaning each round, so pin the comparable subtotal to the
-    # queries that exist in every round's headline with unchanged
-    # semantics (16: the round-1 set minus the retired token_count —
-    # lang_id is excluded too since r4 widened what it computes).
-    stable_set = [
-        q
-        for q in HEADLINE
-        if q
-        not in (
-            "pdf_payload_extract",
-            "fingerprint_winnow",
-            "outline_stats",
-            "lang_id",
-        )
-    ]
-    # Min-accumulating protocol (round-3 verdict #3): a single session
-    # sits inside a 3-7x co-tenant noise band, so round-over-round
-    # comparisons of one-shot numbers are unfalsifiable.  Keep the
-    # per-query MINIMUM across sessions in BENCH/headline_state.json
-    # (the same cross-epoch estimator the scaling protocol uses — the
-    # min over sessions of a deterministic job converges to its quiet-
-    # state cost).  A regression is then decidable: a query whose
-    # fresh sample exceeds its converged floor by more than the noise
-    # band, across several sessions, moved; everything else is storm.
-    state_path = _REPO / "BENCH" / "headline_state.json"
-    state: dict = {"queries": {}, "sessions": 0}
-    if state_path.exists():
-        try:
-            state = json.loads(state_path.read_text())
-        except Exception:
-            pass
-    if state.get("sf") not in (None, sf) or state.get("cores") not in (None, cpus):
-        state = {"queries": {}, "sessions": 0}
-    state["sf"], state["cores"] = sf, cpus
-    state["sessions"] = int(state.get("sessions", 0)) + 1
-    acc = state["queries"]
-    for q, t in res["queries"].items():
-        ent = acc.setdefault(q, {"min": t, "n": 0})
-        ent["min"] = round(min(float(ent["min"]), t), 4)
-        ent["n"] += 1
-    state_path.parent.mkdir(exist_ok=True)
-    state_path.write_text(json.dumps(state, indent=1))
+    from pdf_extractor_spark.session import _host_cpus
 
-    acc_current = {q: acc[q] for q in HEADLINE if q in acc}
-    # The stdout contract line must stay COMPACT and LAST: round 4's
-    # artifact truncated mid-line because the per-query accumulated-min
-    # detail (19 queries x min/n dicts) grew the line past the driver's
-    # tail capture, leaving BENCH_r04.json unparseable. The detail
-    # already lives in BENCH/headline_state.json — stdout carries only
-    # scalars derived from it.
+    sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+    cpus = int(_host_cpus())
+    res = _run_once(sf_dir, master=f"local[{cpus}]", shuffle=cpus)
+    try:
+        sf = float(Path(sf_dir).name.removeprefix("sf"))
+    except ValueError:
+        sf = None
     out = {
         "metric": "headline_suite_wall_clock",
         "value": res["total_sec"],
         "unit": "sec",
         "queries": res["queries"],
         "sf": sf,
-        "extra": {
-            "docs_per_sec_flagship": res["docs_per_sec"],
-            "cores": cpus,
-            "cross_round_stable_15q_sec": round(
-                sum(res["queries"][q] for q in stable_set), 3
-            ),
-            # accumulated quiet-state floors as SCALARS (per-query
-            # minima + sample counts: BENCH/headline_state.json)
-            "accumulated_min_total_sec": round(
-                sum(e["min"] for e in acc_current.values()), 3
-            ),
-            "accumulated_min_stable_15q_sec": round(
-                sum(acc[q]["min"] for q in stable_set if q in acc), 3
-            ),
-            "accumulated_sessions": state["sessions"],
-        },
+        "extra": {"docs_per_sec_flagship": res["docs_per_sec"], "cores": cpus},
     }
     print(json.dumps(out), flush=True)
 
 
-def _hardware_ceiling(n_low: int = 8, n_high: int = 32) -> tuple[float, float, float]:
-    """Measure this host's OWN n_low→n_high scaling ceiling with a
-    plain multiprocessing.Pool map — the reference's exact parallelism
-    model (extract_outline.py:156-158), no Spark involved — running
-    the FULL per-document pipeline the Spark compute stage runs
-    (payload parse → span-merge fold → 3-pass analyzer → JSON render),
-    in the production batch shape (extract._process_batch over
-    256-row batches, the Arrow maxRecordsPerBatch), on payloads
-    pre-synthesized in the parent and shared copy-on-write via fork.
-
-    Probe v2: v1 ran only parse + merge fold and read up to 0.92 in
-    quiet windows — but the analyzer stage is the
-    most memory-bandwidth-hungry part of the job, and omitting it
-    OVERSTATES what 32 co-resident processes can sustain (measured:
-    full pipeline ~0.71-0.81 vs parse-only ~0.83-0.92 on this host).
-    A ceiling that no full-pipeline program can reach is not a
-    ceiling; v2 is the like-for-like bound.
-
-    Virtualized hosts cap well below 1.0 (frequency boost at low core
-    occupancy + hypervisor co-tenancy + shared memory bandwidth), so
-    raw Spark efficiency must be read against this number, not
-    against a theoretical 4×.
-
-    Returns ``(ratio, lo, hi)``: the session's hi/(4*lo) ratio plus
-    the raw per-phase docs/sec throughputs, so the caller can
-    accumulate quiet-state phase maxima across sessions (the same
-    cross-epoch estimator the Spark minima rows use) instead of
-    max-accumulating the storm-inflatable ratio.
-    """
-    import multiprocessing as mp
-
-    if mp.get_start_method(allow_none=False) != "fork":
-        # workers read the module-global payload list via fork
-        # copy-on-write; under spawn (macOS/Windows default) they would
-        # see None and crash subscripting it — fail with a clear message
-        raise RuntimeError(
-            "ceiling probe requires the fork start method (payloads are "
-            "shared via copy-on-write); run on Linux or set "
-            "multiprocessing.set_start_method('fork')"
-        )
-    global _CEILING_PAYLOADS
-    if _CEILING_PAYLOADS is None:
-        # synthesize in parallel with a throwaway pool, THEN fork the
-        # measurement pools so the payload list is in COW-shared memory
-        with mp.Pool(n_high) as p:
-            chunks = p.map(_ceiling_synth_chunk, range(_CEILING_TASKS))
-        _CEILING_PAYLOADS = [pl for ch in chunks for pl in ch]
-
-    n_docs = _CEILING_TASKS * _CEILING_BATCH
-
-    def _throughput(procs: int) -> float:
-        with mp.Pool(procs) as p:
-            p.map(_ceiling_pipe_task, range(procs))  # warm (imports, caches)
-            t0 = time.time()
-            p.map(_ceiling_pipe_task, range(_CEILING_TASKS))
-            return n_docs / (time.time() - t0)
-
-    lo = max(_throughput(n_low) for _ in range(2))
-    hi = max(_throughput(n_high) for _ in range(2))
-    return hi / ((n_high / n_low) * lo), lo, hi
-
-
-_CEILING_TASKS = 240
-_CEILING_BATCH = 256  # == spark.sql.execution.arrow.maxRecordsPerBatch
-_CEILING_PAYLOADS: list | None = None
-
-
-def _ceiling_synth_chunk(task_id: int) -> list:
-    from pdf_extractor_spark import corpus as _corpus
-
-    base = task_id * _CEILING_BATCH
-    return [
-        _corpus.build_pages_row(i, seed=1234)["html"]
-        for i in range(base, base + _CEILING_BATCH)
-    ]
-
-
-def _ceiling_pipe_task(task_id: int) -> int:
-    """One pool task = one production-shaped batch through the
-    identical code path a Spark Arrow batch takes."""
-    import pandas as pd
-
-    from pdf_extractor_spark.operators import extract as _extract
-
-    lo = task_id * _CEILING_BATCH
-    pdf = pd.DataFrame(
-        {
-            "url": [f"u{i}" for i in range(lo, lo + _CEILING_BATCH)],
-            "html": _CEILING_PAYLOADS[lo : lo + _CEILING_BATCH],
-        }
-    )
-    return int(_extract._process_batch(pdf)["parse_ok"].sum())
-
-
-# --------------------------------------------------------------------------
-# Independent (NON-repo) ceiling cross-check — round-3 verdict item #2.
-#
-# The e2e scaling gate normalizes by a host ceiling measured with THIS
-# repo's own pipeline code, which a skeptic can discount as
-# self-serving.  These probes run workloads that share zero code with
-# the repo — pure numpy streaming arithmetic, single-threaded numpy
-# matmul, a pyarrow parquet-decode loop over the committed testdata
-# file, and a stdlib zlib decompress loop — under the identical
-# mp.Pool 8-vs-32 protocol.  If unrelated memory-bandwidth-bound
-# workloads measure the same ~0.7 ratio, the normalization is a
-# property of the HOST, not of the code under review; the CPU-bound
-# zlib control decomposes the ceiling (frequency scaling alone vs
-# frequency + shared memory bandwidth).
-# --------------------------------------------------------------------------
-
-_XCHECK_TASKS = 160
-_XCHECK_STREAM: tuple | None = None  # (a, b) float64 arrays, COW-shared
-_XCHECK_MATS: tuple | None = None  # (a, b) square matrices, COW-shared
-_XCHECK_ZBLOB: bytes | None = None  # zlib-compressed blob, COW-shared
-_XCHECK_PARQUET = "/root/testdata/sf0.1/lineitem.parquet"
-
-
-def _xcheck_stream_task(_task_id: int) -> float:
-    """Bandwidth-bound: elementwise FMA + sqrt + reduction over 64 MB
-    arrays (ufuncs — never BLAS-threaded)."""
-    import numpy as np
-
-    a, b = _XCHECK_STREAM
-    s = 0.0
-    for _ in range(3):
-        s += float(np.sum(a * b + np.sqrt(a)))
-    return s
-
-
-def _xcheck_matmul_task(_task_id: int) -> float:
-    """Compute-plus-cache-bound: repeated 384x384 GEMM, single BLAS
-    thread (env pinned at module import, before numpy loads)."""
-    import numpy as np
-
-    a, b = _XCHECK_MATS
-    c = a
-    for _ in range(30):
-        c = a @ b
-    return float(c[0, 0])
-
-
-def _xcheck_parquet_task(_task_id: int) -> float:
-    """Decode-bound: single-threaded pyarrow read of two double
-    columns from the committed sf0.1 lineitem file (page-cache-hot
-    after the warm pass — measures decompress+decode, the scan work a
-    Spark executor core does)."""
-    import pyarrow.parquet as pq
-
-    import pyarrow.compute as pc
-
-    s = 0.0
-    for _ in range(6):
-        t = pq.read_table(
-            _XCHECK_PARQUET,
-            columns=["l_quantity", "l_extendedprice"],
-            use_threads=False,
-        )
-        s += pc.sum(t.column("l_quantity")).as_py()
-    return s
-
-
-def _xcheck_zlib_task(_task_id: int) -> int:
-    """CPU-bound control: zlib decompress + crc32 of an 8 MB blob.
-    Scales with per-core frequency, nearly free of shared-bandwidth
-    pressure — the expected UPPER envelope among the probes."""
-    import zlib
-
-    n = 0
-    for _ in range(12):
-        raw = zlib.decompress(_XCHECK_ZBLOB)
-        n = zlib.crc32(raw)
-    return n
-
-
-_XCHECK_PROBES = {
-    "numpy_stream": _xcheck_stream_task,
-    "numpy_matmul": _xcheck_matmul_task,
-    "parquet_decode": _xcheck_parquet_task,
-    "zlib_cpu_control": _xcheck_zlib_task,
-}
-
-
-def _xcheck_synthesize() -> None:
-    global _XCHECK_STREAM, _XCHECK_MATS, _XCHECK_ZBLOB
-    import zlib
-
-    import numpy as np
-
-    rng = np.random.default_rng(20260818)
-    if _XCHECK_STREAM is None:
-        _XCHECK_STREAM = (rng.random(8_000_000), rng.random(8_000_000))
-    if _XCHECK_MATS is None:
-        _XCHECK_MATS = (rng.random((384, 384)), rng.random((384, 384)))
-    if _XCHECK_ZBLOB is None:
-        # semi-compressible: random bytes tiled — decompress does real work
-        chunk = rng.integers(0, 256, 65_536, dtype=np.uint8).tobytes()
-        _XCHECK_ZBLOB = zlib.compress(chunk * 128, level=6)
-
-
-def independent_ceiling_xcheck(n_low: int = 8, n_high: int = 32) -> dict:
-    """Run every non-repo probe at n_low and n_high procs; return
-    {probe: {"ratio": hi/(4*lo), "lo": tasks/s, "hi": tasks/s}}."""
-    import multiprocessing as mp
-
-    if mp.get_start_method(allow_none=False) != "fork":
-        raise RuntimeError("xcheck probes require fork (COW-shared payloads)")
-    _xcheck_synthesize()
-    results: dict[str, dict] = {}
-    for name, fn in _XCHECK_PROBES.items():
-        if name == "parquet_decode" and not os.path.exists(_XCHECK_PARQUET):
-            continue
-
-        def _tp(procs: int) -> float:
-            with mp.Pool(procs) as p:
-                p.map(fn, range(procs))  # warm: imports, page cache
-                t0 = time.time()
-                p.map(fn, range(_XCHECK_TASKS))
-                return _XCHECK_TASKS / (time.time() - t0)
-
-        lo = max(_tp(n_low) for _ in range(2))
-        hi = max(_tp(n_high) for _ in range(2))
-        results[name] = {
-            "ratio": round(hi / ((n_high / n_low) * lo), 3),
-            "lo": round(lo, 1),
-            "hi": round(hi, 1),
-        }
-        print(f"xcheck {name}: {results[name]}", file=sys.stderr)
-    return results
-
-
-def _xcheck_accumulate(
-    state: dict, session: dict, n_low: int = 8, n_high: int = 32
-) -> dict:
-    """Fold a session's probe readings into the cross-epoch
-    quiet-state estimator (max throughput per phase per probe — the
-    identical construction the main ceiling and the Spark minima rows
-    use) and return {probe: {"ratio", "sessions"}}.  Accumulation is
-    keyed on the (n_low, n_high) proc pair: readings from a different
-    pair start a fresh slot instead of polluting the 8→32 estimator."""
-    acc = state.setdefault("xcheck", {})
-    factor = n_high / n_low
-    for name, r in session.items():
-        ent = acc.setdefault(name, {"lo": 0.0, "hi": 0.0, "log": [], "procs": [n_low, n_high]})
-        if ent.get("procs", [8, 32]) != [n_low, n_high]:
-            ent = acc[name] = {"lo": 0.0, "hi": 0.0, "log": [], "procs": [n_low, n_high]}
-        ent["lo"] = max(ent["lo"], r["lo"])
-        ent["hi"] = max(ent["hi"], r["hi"])
-        ent["log"].append(r)
-    out = {}
-    for name, ent in acc.items():
-        pl, ph = ent.get("procs", [8, 32])
-        out[name] = {
-            "ratio": round(ent["hi"] / ((ph / pl) * ent["lo"]), 3) if ent["lo"] else None,
-            "sessions": len(ent["log"]),
-        }
-    return out
-
-
-def _build_zip() -> Path:
-    import subprocess
-
-    zip_path = _REPO / "dist" / "engine.zip"
-    zip_path.parent.mkdir(exist_ok=True)
-    if zip_path.exists():
-        zip_path.unlink()
-    subprocess.run(["zip", "-qr", str(zip_path), "pdf_extractor_spark"], cwd=_REPO, check=True)
-    return zip_path
-
-
-def _submit_once(cores: int, input_dir: str, out_dir: str, zip_path: Path) -> dict:
-    """One spark-submit run of the production CLI at local[cores]."""
-    import shutil
-    import subprocess
-
-    shutil.rmtree(out_dir, ignore_errors=True)
-    launcher = "/tmp/_bench_cli_launcher.py"
-    shutil.copy(_REPO / "pdf_extractor_spark" / "cli.py", launcher)
-    env = dict(os.environ, SPARK_GRAFT_MASTER=f"local[{cores}]", SPARK_GRAFT_CPUS=str(cores))
-    proc = subprocess.run(
-        [
-            "/opt/spark/bin/spark-submit",
-            "--master", f"local[{cores}]",
-            # --driver-memory must be on the submit line: session-level
-            # spark.driver.memory is ignored once the JVM is up, and in
-            # local mode the 1g default heap GC-thrashes under 32 tasks
-            "--driver-memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g"),
-            "--py-files", str(zip_path),
-            launcher,
-            "--input", input_dir,
-            "--output", out_dir,
-            "--input-bucketed",
-            "--warm-workers",
-        ],
-        capture_output=True, text=True, env=env, check=True,
-    )
-    line = [ln for ln in proc.stdout.splitlines() if ln.startswith("{")][-1]
-    return json.loads(line)
-
-
-# A same-invocation pair is a credible scaling observation only when
-# its low-parallelism phase ran within this factor of the accumulated
-# floor (storms overlap the longer low phase disproportionately and
-# inflate t_low/(4*t_high)). Surfaced in the emitted JSON as
-# `credible_pair_cutoff` so readers of scaling_state/BASELINE can see
-# which cutoff produced the headline pair.
-CREDIBLE_PAIR_CUTOFF = 1.5
-
-
-def _best_credible_pair(
-    invocations: list, floor_low: float, klo: str
-) -> dict | None:
-    """Max-eff same-invocation pair among CREDIBLE draws: those whose
-    low-parallelism phase ran within CREDIBLE_PAIR_CUTOFF of the
-    accumulated floor.
-
-    An unbounded max rewards storms — a t_low slowed 3x by a co-tenant
-    burst while t_high runs near floor reads eff > 1, a noise artifact
-    a scaling table must not headline. Excluded draws stay in
-    state["invocations"] for audit. When NO draw qualifies yet (early
-    accumulation), the unfiltered max still renders for context but is
-    flagged ``credible: False`` — the md writer must not print a
-    PASS/FAIL verdict for such a row."""
-    cred = [i for i in invocations if i[klo] <= CREDIBLE_PAIR_CUTOFF * floor_low]
-    best = max(cred or list(invocations), key=lambda i: i["eff"], default=None)
-    if best is not None:
-        best = dict(best)
-        best["credible"] = bool(cred)
-    return best
-
-
-def scaling_mode() -> None:
-    """north_rule scaling protocol: the identical production job
-    (spark-submit --py-files: parquet scan → extraction → bucketed
-    write + lineage) at local[8] vs local[32] on the same committed
-    input table.
-
-    Protocol details that keep the measurement honest:
-      - the corpus is materialized to parquet ONCE (untimed) — the
-        timed job has production shape: JVM columnar scan feeding one
-        Python extraction stage (not synth-on-the-fly, which chains
-        two Python stages and doubles worker count per task);
-      - output goes to tmpfs (/dev/shm) — a laptop-class local disk
-        is not the sink a 1000-executor cluster writes to;
-      - elapsed_sec is measured inside the CLI after session creation
-        (JVM startup amortizes to zero at 100 TB);
-      - levels are interleaved and min-aggregated across rounds to
-        reject hypervisor co-tenant noise;
-      - the host's own 8→32 scaling ceiling is measured with a plain
-        mp.Pool probe (the reference's parallelism model) and reported
-        alongside raw efficiency.
-    """
-    n_docs = int(os.environ.get("SPARK_GRAFT_SCALING_DOCS", "480000"))
-    rounds = int(os.environ.get("SPARK_GRAFT_SCALING_ROUNDS", "2"))
-    seed = 42
-
-    # The north rule's two-cluster-size criterion asks for N vs 4N.
-    # Default pair is 8→32 (the full host); SPARK_GRAFT_SCALING_PAIR
-    # ("2,8") runs the identical protocol at a pair where the host is
-    # NOT memory-bandwidth-saturated, so the raw (un-normalized)
-    # number is meaningful — each pair accumulates in its own state
-    # file so the long 8→32 floor history is untouched.
-    pair_env = os.environ.get("SPARK_GRAFT_SCALING_PAIR", "8,32")
-    n_low, n_high = (int(x) for x in pair_env.split(","))
-    if n_high != 4 * n_low:
-        raise SystemExit(f"SPARK_GRAFT_SCALING_PAIR must be N,4N (got {pair_env})")
-    default_pair = (n_low, n_high) == (8, 32)
-
-    # Best-observed results accumulate across invocations: this host
-    # shows multi-minute co-tenant storms (the same job varies 3-7x),
-    # so a single run is a lottery. The min across all observed rounds
-    # is the standard steady-state estimator for a deterministic job;
-    # total_rounds is reported so the protocol is transparent.
-    state_name = (
-        "scaling_state.json" if default_pair else f"scaling_state_{n_low}_{n_high}.json"
-    )
-    state_path = _REPO / "BENCH" / state_name
-    state = {"total_rounds": 0, "ceiling": 0.0, "e2e": {}, "compute": {}, "best_runs": {}}
-    if state_path.exists():
-        state = json.loads(state_path.read_text())
-    if state.get("n_docs") not in (None, n_docs) or state.get("protocol_v") not in (4, 5):
-        # v4: analyzer batch-column + shared-font-cache speedups change
-        # per-doc cost; v3: bucketed input corpus + shuffle-free write + real-PDF
-        # corpus slice — prior accumulated minima measured a different
-        # job, discard them. The independent xcheck readings survive
-        # the reset: they measure the HOST (zero repo code), so no
-        # protocol version can invalidate them.
-        state = {
-            "total_rounds": 0,
-            "ceiling": 0.0,
-            "e2e": {},
-            "compute": {},
-            "best_runs": {},
-            "xcheck": state.get("xcheck", {}),
-        }
-    if state.get("protocol_v") == 4:
-        # v5 (round 5): write_result's one-shot batch lineage moved off
-        # the 3·n_buckets-expression CollectMetrics observe (a per-row
-        # drag evaluated outside whole-stage codegen, ~3 s at 480k docs
-        # / local[32]) onto a single fused post-write pruned rescan —
-        # the e2e job got genuinely cheaper, so its v4 floors measured
-        # a DIFFERENT job and are archived (kept verbatim for audit)
-        # rather than mixed into v5 minima. The compute-stage job
-        # (scan → extract → count) and the host ceiling/xcheck probes
-        # are byte-identical across v4/v5, so their accumulated
-        # evidence carries over.
-        state["v4_archive"] = {
-            "best_runs": state.get("best_runs", {}),
-            "invocations": state.get("invocations", []),
-            "total_rounds": state.get("total_rounds", 0),
-        }
-        state["best_runs"] = {}
-        state["invocations"] = []
-        state["total_rounds"] = 0
-    state["n_docs"] = n_docs
-    state["protocol_v"] = 5
-    if state.get("ceiling_v") != 2:
-        # ceiling probe v2 (full per-document pipeline incl. analyzer)
-        # replaces the parse-only v1 probe, whose best-ever 0.917 was
-        # measured on an unrepresentatively light work mix; Spark
-        # timings are untouched (the job is identical) but the ceiling
-        # max-accumulation restarts under the new probe
-        state["ceiling"] = 0.0
-        state["ceiling_v"] = 2
-
-    e2e_only = os.environ.get("SPARK_GRAFT_SCALING_E2E_ONLY") == "1"
-    session_probe = None
-    if not e2e_only:
-        print(f"measuring host {n_low}->{n_high} ceiling (mp.Pool probe)...", file=sys.stderr)
-        session_probe, probe_lo, probe_hi = _hardware_ceiling(n_low, n_high)
-        # keep every per-session reading, not just the max, so the
-        # estimator's distribution is auditable (co-tenant windows vary)
-        state.setdefault("ceiling_probe_log", []).append(
-            {
-                "ratio": round(session_probe, 3),
-                "lo": round(probe_lo, 1),
-                "hi": round(probe_hi, 1),
-            }
-        )
-        state["ceiling"] = max(session_probe, float(state.get("ceiling", 0.0)))
-        # per-phase quiet-state throughputs, max-accumulated across
-        # sessions — the SAME cross-epoch estimator the Spark rows use
-        # (min elapsed per level == max throughput per level)
-        state["ceiling_lo"] = max(probe_lo, float(state.get("ceiling_lo", 0.0)))
-        state["ceiling_hi"] = max(probe_hi, float(state.get("ceiling_hi", 0.0)))
-        print("running independent (non-repo) ceiling probes...", file=sys.stderr)
-        xcheck_summary = _xcheck_accumulate(
-            state, independent_ceiling_xcheck(n_low, n_high), n_low, n_high
-        )
-    else:
-        # summarize previously-accumulated cross-check readings
-        xcheck_summary = _xcheck_accumulate(state, {}, n_low, n_high)
-
-    # Cross-epoch normalization ceiling. The old estimator —
-    # max-accumulated per-session RATIO — is upward-biased under
-    # co-tenant storms: a storm that slows the probe's 8-proc phase
-    # (longer wall time, more storm exposure) inflates hi/(4*lo), so
-    # taking the max across sessions selects exactly the storm-biased
-    # draws (observed: the 0.83-0.92 readings all came from sessions
-    # whose own Spark t8 ran 1.3-1.6x above its quiet minimum, while
-    # quiet sessions read 0.69-0.77). The Spark numerator rows pair
-    # cross-epoch QUIET minima, so the denominator must be the
-    # quiet-state probe ratio: max throughput per phase across
-    # sessions, then the ratio — the identical construction.
-    if state.get("ceiling_lo") and state.get("ceiling_hi"):
-        ceiling = state["ceiling_hi"] / (4 * state["ceiling_lo"])
-    else:
-        ceiling = float(state.get("ceiling", 0.0))
-    # a measured ratio >1 is cross-phase noise (the low-proc phase ran
-    # under heavier co-tenant load than the high-proc phase); a host
-    # cannot exceed perfect scaling, so clamp the normalization
-    # denominator — this only ever LOWERS normalized efficiencies
-    ceiling = min(ceiling, 1.0)
-    print(f"host ceiling (cross-epoch quiet-state): {ceiling:.3f}", file=sys.stderr)
-
-    corpus_dir = os.environ.get(
-        "SPARK_GRAFT_SCALING_CORPUS_DIR", "/dev/shm/bench_scaling_corpus"
-    )
-    zip_path = _build_zip()
-    from pdf_extractor_spark import corpus as corpus_mod
-    from pdf_extractor_spark.session import get_spark
-
-    # the (n_docs, seed) marker guards against silently timing a
-    # corpus left behind by a different-sized invocation of this mode
-    meta_path = Path(corpus_dir) / "_corpus_meta.json"
-    meta_ok = (
-        meta_path.exists()
-        and json.loads(meta_path.read_text()) == {"n_docs": n_docs, "seed": seed}
-    )
-    if not (Path(corpus_dir) / "_SUCCESS").exists() or not meta_ok:
-        # bucketed (Iceberg-ingest shape): the timed job is then
-        # shuffle-free end to end — see io.write_result(input_bucketed)
-        spark = get_spark("bench_corpus", master="local[32]")
-        corpus_mod.materialize_bucketed_corpus(spark, n_docs, corpus_dir, seed=seed)
-        spark.stop()
-        meta_path.write_text(json.dumps({"n_docs": n_docs, "seed": seed}))
-
-    # compute-stage measurement: scan → extract → count (no sink), the
-    # pipeline the north rule's throughput metric describes
-    compute_best: dict[int, float] = {int(k): v for k, v in state["compute"].items()}
-    from pyspark.sql import SparkSession
-
-    from pdf_extractor_spark.operators.extract import extract_pages
-
-    for rnd in range(0 if e2e_only else rounds):
-        for cores in (n_low, n_high):
-            act = SparkSession.getActiveSession()
-            if act:
-                act.stop()
-            sp = get_spark("bench_scale", master=f"local[{cores}]", shuffle_partitions=cores)
-            sp.range(0, 1024, 1, cores).mapInPandas(lambda it: it, schema="id long").count()
-            t0 = time.time()
-            extract_pages(sp.read.parquet(corpus_dir)).count()
-            dt = time.time() - t0
-            print(f"round{rnd} compute local[{cores}]: {dt:.2f}s", file=sys.stderr)
-            compute_best[cores] = min(compute_best.get(cores, 1e18), dt)
-            sp.stop()
-
-    best: dict[int, dict] = {int(k): v for k, v in state["best_runs"].items()}
-    inv: dict[int, float] = {}
-    for rnd in range(rounds):
-        for cores in (n_low, n_high):
-            r = _submit_once(cores, corpus_dir, f"/dev/shm/bench_out_{cores}", zip_path)
-            print(f"round{rnd} e2e local[{cores}]: {r['elapsed_sec']}s", file=sys.stderr)
-            inv[cores] = min(inv.get(cores, 1e18), r["elapsed_sec"])
-            if cores not in best or r["elapsed_sec"] < best[cores]["elapsed_sec"]:
-                best[cores] = r
-
-    # same-invocation pair: record each session's (t8, t32) so the
-    # pair distribution is auditable. NOTE (round 3): the best pair BY
-    # EFF is upward-biased — storms overlap the longer t8 phase more,
-    # inflating t8/(4·t32), so max-selection picks storm-asymmetric
-    # draws. The honest same-invocation summary is the QUIET subset
-    # (both levels within 15% of the accumulated floors), which the md
-    # writer reports as a consistency check on the cross-epoch row.
-    if n_low in inv and n_high in inv:
-        state.setdefault("invocations", []).append(
-            {
-                f"t{n_low}": inv[n_low],
-                f"t{n_high}": inv[n_high],
-                "eff": round(inv[n_low] / (4 * inv[n_high]), 3),
-                # the session's OWN probe reading (None when the probe
-                # was skipped): the same-invocation row must pair a
-                # session's Spark eff with that session's probe, not
-                # with the accumulated max at that moment
-                "ceiling": round(session_probe, 3) if session_probe else None,
-            }
-        )
-
-    state["total_rounds"] += rounds
-    state["compute"] = compute_best
-    state["best_runs"] = best
-    state_path.parent.mkdir(exist_ok=True)
-    state_path.write_text(json.dumps(state, indent=2))
-
-    results = {}
-    for cores, r in best.items():
-        results[cores] = {
-            "elapsed_sec": r["elapsed_sec"],
-            "docs_per_sec": round(n_docs / r["elapsed_sec"], 1),
-            "payload_mb_per_sec": round(r["payload_bytes"] / r["elapsed_sec"] / 1e6, 2),
-            "compute_stage_sec": round(compute_best[cores], 2),
-            "compute_docs_per_sec": round(n_docs / compute_best[cores], 1),
-            "rows_out": r["rows_out"],
-            "parse_failures": r["parse_failures"],
-        }
-    klo, khi = f"t{n_low}", f"t{n_high}"
-    eff = results[n_high]["docs_per_sec"] / (4 * results[n_low]["docs_per_sec"])
-    eff_c = compute_best[n_low] / (4 * compute_best[n_high])
-    _binv = _best_credible_pair(
-        state.get("invocations", []), best[n_low]["elapsed_sec"], klo
-    )
-    out = {
-        "protocol": (
-            f"spark-submit --py-files, local[{n_low}] vs local[{n_high}], "
-            "same committed input"
-        ),
-        "n_docs": n_docs,
-        "seed": seed,
-        "n_low": n_low,
-        "n_high": n_high,
-        "rounds": state["total_rounds"],
-        f"local{n_low}": results[n_low],
-        f"local{n_high}": results[n_high],
-        "scaling_efficiency_raw": round(eff, 3),
-        "compute_stage_efficiency_raw": round(eff_c, 3),
-        f"host_ceiling_{n_low}_to_{n_high}": round(ceiling, 3),
-        "scaling_efficiency_normalized": round(eff / ceiling, 3) if ceiling else None,
-        "compute_stage_efficiency_normalized": round(eff_c / ceiling, 3) if ceiling else None,
-        "best_invocation": _binv,
-        "n_invocations": len(state.get("invocations", [])),
-        # the round-2 verdict's empirical-consensus ask: how many
-        # independent same-invocation pairs clear 0.76 raw
-        "strong_pairs_ge_076": sum(
-            1 for i in state.get("invocations", []) if i["eff"] >= 0.76
-        ),
-        # consistency check: pairs whose BOTH levels ran within 15% of
-        # the accumulated floors are quiet-window draws; their eff
-        # distribution is the honest same-invocation estimate of the
-        # quiet-state ratio (best-pair-by-eff max-selects storm-
-        # asymmetric draws and only upper-bounds it)
-        "quiet_pair_effs": sorted(
-            i["eff"]
-            for i in state.get("invocations", [])
-            if i[klo] <= 1.15 * best[n_low]["elapsed_sec"]
-            and i[khi] <= 1.15 * best[n_high]["elapsed_sec"]
-        ),
-        # pair-neutral name: holds the LOW level's draw-vs-floor ratio
-        # (t2 for the 2,8 pair, t8 for the default 8,32 pair)
-        "best_pair_tlow_vs_floor": (
-            round(_binv[klo] / best[n_low]["elapsed_sec"], 2) if _binv else None
-        ),
-        "credible_pair_cutoff": CREDIBLE_PAIR_CUTOFF,
-        "ceiling_probe_log": state.get("ceiling_probe_log", []),
-        # non-repo workloads under the identical mp.Pool 8-vs-32
-        # protocol (cross-epoch quiet-state ratios) — if these read
-        # ~the same ceiling, the normalization is a host property,
-        # not a self-measurement artifact
-        "independent_ceiling_xcheck": xcheck_summary,
-        "target": 0.8,
-    }
-    print(json.dumps(out, indent=2))
-    if default_pair:
-        _write_scaling_md(out)
-    else:
-        _write_small_pair_md(out)
-
-
-def _write_small_pair_md(out: dict) -> None:
-    """Evidence file for a non-default N→4N pair (e.g. 2→8): the same
-    production job + protocol as BENCH/BASELINE.md, at a pair where
-    the host is not bandwidth-saturated, so the RAW number speaks."""
-    lo, hi = out["n_low"], out["n_high"]
-    rlo, rhi = out[f"local{lo}"], out[f"local{hi}"]
-    eff = out["scaling_efficiency_raw"]
-    eff_c = out["compute_stage_efficiency_raw"]
-    ceil = out[f"host_ceiling_{lo}_to_{hi}"]
-    norm = out["scaling_efficiency_normalized"]
-    norm_c = out["compute_stage_efficiency_normalized"]
-    xck = {
-        k: v
-        for k, v in (out.get("independent_ceiling_xcheck") or {}).items()
-        if v.get("ratio")
-    }
-    xrows = "\n".join(
-        f"| {name} | {r['ratio']} | {r['sessions']} |" for name, r in xck.items()
-    )
-    md = f"""# BENCH/SCALING_{lo}_{hi} — raw N→4N evidence at an unsaturated pair
-
-The 8→32 protocol (BENCH/BASELINE.md) is bandwidth-limited by the
-HOST: 32 co-resident processes of ANY full-pipeline program share one
-socket's memory bandwidth, so its raw number must be read against a
-measured host ceiling. This file runs the IDENTICAL production job
-and protocol (spark-submit --py-files, same committed {out["n_docs"]}-doc
-bucketed corpus, interleaved min-accumulated rounds, tmpfs sink) at
-local[{lo}] vs local[{hi}] — an N→4N pair small enough that the host
-can actually deliver ~4x, so the RAW efficiency is directly
-meaningful under the north rule's two-cluster-size criterion.
-
-| config | e2e elapsed (s) | e2e docs/sec | compute-stage (s) | rows out |
-|---|---|---|---|---|
-| local[{lo}] (N) | {rlo["elapsed_sec"]} | {rlo["docs_per_sec"]} | {rlo["compute_stage_sec"]} | {rlo["rows_out"]} |
-| local[{hi}] (4N) | {rhi["elapsed_sec"]} | {rhi["docs_per_sec"]} | {rhi["compute_stage_sec"]} | {rhi["rows_out"]} |
-
-| metric | raw | host ceiling ({lo}→{hi}) | normalized | verdict (raw ≥ 0.8) |
-|---|---|---|---|---|
-| compute stage | {eff_c} | {ceil} | {norm_c} | {"PASS" if eff_c >= 0.8 else "FAIL"} |
-| end-to-end job | {eff} | {ceil} | {norm} | {"PASS" if eff >= 0.8 else "FAIL"} |
-
-A ratio slightly above 1.0 is NOT super-linear scaling: the two
-levels' floors are minima over interleaved runs, so they can land in
-different co-tenant noise windows; read any value ≥ 1.0 as "≈ 1.0,
-within noise". The deterministic job itself is identical at both
-levels (same input, same rows out).
-
-Accumulated over {out["rounds"]} interleaved rounds,
-{out["n_invocations"]} same-invocation pairs (quiet-pair effs:
-{out["quiet_pair_effs"]}; best pair: {out["best_invocation"]}).
-Host mp.Pool ceiling at this pair and independent non-repo probes
-(cross-epoch quiet-state ratios):
-
-| probe | {lo}→{hi} ratio | sessions |
-|---|---|---|
-{xrows}
-
-State: BENCH/scaling_state_{lo}_{hi}.json. Floors are protocol-v5
-(round-5 write path: fused pruned-rescan lineage instead of the
-per-row CollectMetrics observe); the v4-epoch floors, which measured
-the older slower write, are archived verbatim in the state file's
-`v4_archive` — see BENCH/BASELINE.md "Reading raw vs normalized
-across protocol versions" for why minima are never mixed across
-write-path epochs.
-Reproduce: `SPARK_GRAFT_SCALING_PAIR={lo},{hi} python bench.py --scaling`.
-"""
-    (_REPO / "BENCH" / f"SCALING_{lo}_{hi}.md").write_text(md, encoding="utf-8")
-    print(f"wrote BENCH/SCALING_{lo}_{hi}.md", file=sys.stderr)
-
-
-def _write_scaling_md(out: dict) -> None:
-    bench_dir = _REPO / "BENCH"
-    bench_dir.mkdir(exist_ok=True)
-    r8, r32 = out["local8"], out["local32"]
-    eff, ceil, norm = (
-        out["scaling_efficiency_raw"],
-        out["host_ceiling_8_to_32"],
-        out["scaling_efficiency_normalized"],
-    )
-    eff_c = out["compute_stage_efficiency_raw"]
-    norm_c = out["compute_stage_efficiency_normalized"]
-    verdict = "PASS" if (eff >= 0.8 or (norm or 0) >= 0.8) else "FAIL"
-    verdict_c = "PASS" if (eff_c >= 0.8 or (norm_c or 0) >= 0.8) else "FAIL"
-    binv = out.get("best_invocation") or {}
-    binv_eff = binv.get("eff", "—")
-    bc = binv.get("ceiling")
-    binv_norm = round(binv["eff"] / bc, 3) if binv and bc else "—"
-    # a fallback (non-credible) pair — no draw within the cutoff of the
-    # floor yet — must never print PASS/FAIL: it is the exact storm
-    # artifact the credibility filter exists to exclude
-    if binv and not binv.get("credible", True):
-        binv_verdict = "— (no credible pair yet)"
-    else:
-        binv_verdict = (
-            "PASS"
-            if binv and ((binv["eff"] >= 0.8) or (bc and binv["eff"] / bc >= 0.8))
-            else ("FAIL" if binv else "—")
-        )
-    binv_note = (
-        f" ({binv.get('t8')} s / {binv.get('t32')} s, session ceiling {bc})"
-        if binv
-        else ""
-    )
-    plog = out.get("ceiling_probe_log") or []
-    ratios = [p["ratio"] if isinstance(p, dict) else p for p in plog]
-    plog_note = (
-        f"Denominator = cross-epoch quiet-state estimator: max 8-proc "
-        f"throughput and max 32-proc throughput each accumulated across "
-        f"probe sessions, then ratioed — the same construction as the "
-        f"Spark minima rows. Per-session ratio readings over "
-        f"{len(ratios)} v2 probe sessions span {min(ratios)}–{max(ratios)} "
-        f"(all kept in scaling_state.json `ceiling_probe_log`; "
-        f"phase-decomposed entries record lo/hi throughputs). The "
-        f"max-of-ratio estimator is NOT used for normalization: a "
-        f"co-tenant storm that slows the probe's 8-proc phase inflates "
-        f"the ratio, so its max selects storm-biased draws — the "
-        f"highest v2 reading on record (0.844) came from a session "
-        f"whose own Spark t8 ran 1.39× above its quiet minimum, while "
-        f"the second-highest (0.768) came from the quietest session "
-        f"observed (t8 at exactly its minimum); v1's best-ever 0.917 "
-        f"was likewise a storm-window draw."
-        if plog
-        else "No v2 probe session recorded yet in scaling_state.json."
-    )
-    xck = {
-        k: v
-        for k, v in (out.get("independent_ceiling_xcheck") or {}).items()
-        if v.get("ratio")
-    }
-    if xck:
-        xrows = "\n".join(
-            f"| {name} | {r['ratio']} | {r['sessions']} |" for name, r in xck.items()
-        )
-        bw = [r["ratio"] for n, r in xck.items() if n != "zlib_cpu_control"]
-        ctrl = xck.get("zlib_cpu_control", {}).get("ratio")
-        xcheck_note = (
-            "**Independent cross-check (zero repo code).** The same "
-            "mp.Pool 8-vs-32 protocol run on workloads that share no "
-            "code with this repo — pure numpy streaming arithmetic, "
-            "single-BLAS-thread matmul, a pyarrow parquet-decode loop "
-            "over the committed testdata file, and a stdlib zlib "
-            "decompress loop (cross-epoch quiet-state ratios, every "
-            "session reading kept in scaling_state.json `xcheck`):\n\n"
-            "| probe | 8→32 ratio | sessions |\n|---|---|---|\n"
-            + xrows
-            + (
-                (
-                    f"\n\nThe memory-traffic-bound probes read "
-                    f"{min(bw)}–{max(bw)}, "
-                    + (
-                        f"bracketing the pipeline ceiling ({ceil})"
-                        if min(bw) <= ceil <= max(bw)
-                        else f"vs the pipeline ceiling ({ceil})"
-                    )
-                    + f" — unrelated code measures the same scaling wall, "
-                    f"so the ceiling is a property of this host's shared "
-                    f"memory bandwidth and frequency scaling, not of the "
-                    f"code being graded. The CPU-bound zlib control reads "
-                    f"{ctrl}, decomposing the gap: pure per-core frequency "
-                    f"scaling costs ~{round((1 - ctrl) * 100)}% "
-                    f"and shared bandwidth the rest. A real 4×-executor "
-                    f"cluster multiplies SOCKETS, not just processes on one "
-                    f"socket, so neither penalty transfers."
-                )
-                if bw and ctrl
-                else ""
-            )
-        )
-    else:
-        xcheck_note = ""
-    n_inv = out.get("n_invocations")
-    qp = out.get("quiet_pair_effs") or []
-    if qp:
-        qmed = qp[len(qp) // 2]
-        pairs_note = (
-            f"**Same-invocation consistency check.** Of {n_inv} recorded "
-            f"pairs (all kept in scaling_state.json `invocations`, storm "
-            f"windows included), {len(qp)} ran BOTH levels within 15% of "
-            f"the accumulated floors — genuinely quiet draws. Their eff "
-            f"spans {qp[0]}–{qp[-1]} (median {qmed}), agreeing with the "
-            f"cross-epoch row: the accumulated raw number is the "
-            f"converged quiet-state ratio of this host, not an "
-            f"estimator artifact. The best-pair row above is therefore "
-            f"an UPPER BOUND, not the estimate: max-selecting over "
-            f"noisy per-invocation ratios picks storm-asymmetric draws "
-            f"(the current best pair's own t8 ran "
-            f"{out.get('best_pair_tlow_vs_floor')}× its accumulated floor "
-            f"while its t32 ran closer to floor — inflating t8/(4·t32)). "
-            f"Round 2 presented the best pair as the statistically "
-            f"consistent estimator; this quiet-pair evidence supersedes "
-            f"that claim, and the gate rests on the honest "
-            f"normalized row instead."
-        )
-    else:
-        pairs_note = ""
-    md = f"""# BENCH/BASELINE — scaling evidence (north_rule protocol)
-
-No real cluster exists in this sandbox, so the two-cluster-size
-criterion is evidenced by running the IDENTICAL production job
-(`spark-submit --py-files dist/engine.zip` → parquet scan →
-extraction → bucketed write + lineage manifest) at two parallelism
-levels on the same committed input, per BASELINE.md's sandbox
-protocol.
-
-- Input: {out["n_docs"]} synthesized pages (seed {out["seed"]}),
-  materialized ONCE (untimed) bucket-partitioned on url-hash — the
-  Iceberg `bucket(N, url)` ingest shape — so the timed job is
-  scan → extract → write with ZERO exchanges (`--input-bucketed`).
-  ~62% spandoc / ~24% HTML / ~12% real %PDF (pure-Python parser) /
-  ~2.4% corrupt payloads.
-- Output: tmpfs (a local laptop disk is not the sink a
-  1000-executor cluster writes to).
-- Timing: measured inside the job after session creation (JVM startup
-  amortizes to zero at production scale); min over {out["rounds"]}
-  interleaved rounds per level, accumulated across benchmark sessions
-  (this host shows multi-minute co-tenant storms that slow the same
-  deterministic job 3-7x; the min is the steady-state estimator, and
-  BENCH/scaling_state.json records the accumulation).
-
-| config | e2e elapsed (s) | e2e docs/sec | payload MB/sec | compute-stage (s) | compute docs/sec | rows out | parse failures |
-|---|---|---|---|---|---|---|---|
-| local[8]  (N)  | {r8["elapsed_sec"]} | {r8["docs_per_sec"]} | {r8["payload_mb_per_sec"]} | {r8["compute_stage_sec"]} | {r8["compute_docs_per_sec"]} | {r8["rows_out"]} | {r8["parse_failures"]} |
-| local[32] (4N) | {r32["elapsed_sec"]} | {r32["docs_per_sec"]} | {r32["payload_mb_per_sec"]} | {r32["compute_stage_sec"]} | {r32["compute_docs_per_sec"]} | {r32["rows_out"]} | {r32["parse_failures"]} |
-
-**Host ceiling (same machine, plain `multiprocessing.Pool` running
-the FULL per-document pipeline — parse → merge fold → 3-pass analyzer
-→ JSON render, production Arrow batch shape, payloads pre-synthesized
-and COW-shared; the reference's own parallelism model, zero Spark):
-{ceil}.**
-This virtualized host cannot deliver 4× from 8→32 vCPUs for ANY
-program (core-count-dependent frequency scaling + hypervisor
-co-tenancy + shared memory bandwidth), so raw efficiencies must be
-read against this ceiling, not against a theoretical 1.0. (Ceiling
-probe v2: the earlier parse-only probe read up to 0.92
-because it omitted the analyzer — the most bandwidth-hungry
-stage; same-work probes of the full pipeline measure 0.71-0.81.
-Historical invocations in scaling_state.json recorded v1 session
-ceilings; entries after the v2 cutover use the representative probe.)
-{plog_note}
-
-{xcheck_note}
-
-| metric | raw | normalized (÷ ceiling) | verdict (≥ 0.8) |
-|---|---|---|---|
-| extraction compute stage (scan → extract) | {eff_c} | {norm_c} | {verdict_c} |
-| end-to-end job (scan → extract → bucketed write + lineage) | {eff} | {norm} | {verdict} |
-| e2e, best same-invocation pair{binv_note} — upper bound, see below | {binv_eff} | {binv_norm} | {binv_verdict} |
-
-{pairs_note}
-
-The compute stage — the pipeline the north rule's docs/sec metric
-describes — scales at the hardware limit. The end-to-end number also
-pays a small constant per job (32-bucket file commit + lineage
-manifest, ~1-2 s regardless of cores); on a real cluster that constant
-is per-executor-committed to object storage and does not grow with
-cluster size.
-
-Why it scales: the pipeline is one shuffle-free mapInPandas stage per
-document (parse → span-merge fold → 3-pass analyzer → JSON render),
-url-hash bucketed at the write — embarrassingly parallel, no stage
-barrier except the final write commit. On a real 1000-executor
-cluster the same plan reads Iceberg splits; nothing else changes, and
-executor counts scale independent of per-host frequency effects.
-
-### Reading raw vs normalized across protocol versions
-
-Protocol v5 (round 5) re-accumulates the e2e floors from zero:
-write_result's one-shot batch lineage moved off the 96-expression
-CollectMetrics observe — a per-row drag evaluated OUTSIDE whole-stage
-codegen, measured at ~3 s over 480k docs at local[32] (interleaved-min
-decomposition: observe write 19.8 s vs the byte-identical partitionBy
-write 16.9 s) but only ~0.8 s at local[8], i.e. the removed work was
-bandwidth-bound and taxed the 4N level hardest — onto one fused
-post-write pruned rescan (~0.5 s, error-class triage in the same
-job). The v4 floors measured that older, slower write path; they are
-archived verbatim in scaling_state.json `v4_archive`
-(e2e 35.86 s / 13.06 s over 418 invocations → raw 0.686) rather than
-mixed into v5 minima, because a min over two different jobs is a
-floor of neither. The compute-stage job and every host probe are
-byte-identical across v4/v5, so those floors carry over.
-
-Protocol v3 (round-2 code before the Arrow-stage speedup) measured
-raw e2e 0.81; v4 measures the SAME pipeline after the extraction
-stage got ~2.5× faster per document — and raw efficiency DROPPED.
-That is Amdahl, not regression: faster per-doc compute shrinks the
-parallel fraction, so the host's own 8→32 ceiling (hypervisor
-co-tenancy + shared memory bandwidth — measured with the reference's
-own mp.Pool model on identical full-pipeline work) and per-job
-constants weigh more. A 4×-executor cluster of separate hosts does
-not share one socket's bandwidth, which is why the normalized column
-is the transferable number.
-
-Code epoch note (round 5, commit 1e09445): a late-round hot-path
-optimization (featurize single-pass + inlined span-merge fold, byte-
-identical output, ~37% per-core extraction throughput) made post-epoch
-invocations run a faster per-document stage. Accumulated floors mix
-epochs transparently — the min simply moves to the faster epoch as
-post-change invocations land — and the same Amdahl reading applies:
-faster compute can only shrink raw e2e efficiency, never inflate it.
-
-Reproduce: `python bench.py --scaling`
-(SPARK_GRAFT_SCALING_DOCS, default {out["n_docs"]};
-SPARK_GRAFT_SCALING_ROUNDS env-var default 2 per invocation —
-the table above accumulates {out["rounds"]} rounds across sessions).
-"""
-    small_lines = []
-    for sp in sorted(bench_dir.glob("scaling_state_*_*.json")):
-        try:
-            st = json.loads(sp.read_text())
-            lo_c, hi_c = sorted(int(k) for k in st["best_runs"])[:2]
-            t_lo = st["best_runs"][str(lo_c)]["elapsed_sec"]
-            t_hi = st["best_runs"][str(hi_c)]["elapsed_sec"]
-            raw = round(t_lo / (4 * t_hi), 3)
-            # annotate which write-path epoch the floors measured, so a
-            # mid-migration snapshot can't pass off v4 floors as v5
-            epoch = f" [protocol v{st.get('protocol_v')}]" if st.get("protocol_v") != 5 else ""
-            arch = st.get("v4_archive", {}).get("best_runs", {})
-            arch_note = ""
-            if arch:
-                a_lo = arch.get(str(lo_c), {}).get("elapsed_sec")
-                a_hi = arch.get(str(hi_c), {}).get("elapsed_sec")
-                if a_lo and a_hi:
-                    arch_note = (
-                        f"; v4-archive floors {a_lo} s / {a_hi} s → raw "
-                        f"{round(a_lo / (4 * a_hi), 3)} over "
-                        f"{len(st.get('v4_archive', {}).get('invocations', []))} invocations"
-                    )
-            small_lines.append(
-                f"- local[{lo_c}] vs local[{hi_c}]: **raw e2e {raw} "
-                f"{'PASS' if raw >= 0.8 else 'FAIL'}**{epoch} (floors {t_lo} s / "
-                f"{t_hi} s over {len(st.get('invocations', []))} "
-                f"invocations{arch_note}) — `BENCH/SCALING_{lo_c}_{hi_c}.md`"
-            )
-        except (KeyError, ValueError, IndexError):
-            continue
-    if small_lines:
-        md += (
-            "\n### Raw N→4N evidence at an unsaturated pair\n\n"
-            "The pair above saturates the HOST (32 co-resident processes "
-            "share one socket), which is why its gate reads the normalized "
-            "column. The north rule asks for N vs 4N without pinning N, "
-            "so the identical job + protocol also runs at a smaller pair "
-            "where the host can deliver ~4x, making the RAW number "
-            "directly meaningful:\n\n" + "\n".join(small_lines) + "\n"
-        )
-    (bench_dir / "BASELINE.md").write_text(md, encoding="utf-8")
-    print(f"wrote {bench_dir / 'BASELINE.md'}", file=sys.stderr)
-
-
-def recall_mode() -> None:
-    """ANN quality gate: recall@10 of IVF-Flat (seeded codebook and
-    k-means-refined codebook) vs exact brute-force cosine, averaged
-    over several query vectors at sf0.1. Appends BENCH/RECALL.md."""
-    from pdf_extractor_spark.operators.similarity import (
-        cosine_topk,
-        ivf_kmeans_centroids,
-        ivf_topk,
-    )
-    from pdf_extractor_spark.session import get_spark
-
-    sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    spark = get_spark("bench_recall")
-    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet").cache()
-    emb.count()
-    queries = [0, 7, 42, 123, 321, 1000, 2024, 3333]
-    cents = ivf_kmeans_centroids(emb, n_cells=16, iters=3, dims=64)
-    cents = spark.createDataFrame(cents.collect()).cache()  # freeze codebook
-
-    def _ids(df):
-        return {r.vec_id for r in df.collect()}
-
-    truths = {}
-    for q in queries:
-        t = _ids(cosine_topk(emb, query_vec_id=q, k=10))
-        if t:
-            truths[q] = t
-    nprobes = [2, 4, 8, 12]
-    curve = {}
-    for npb in nprobes:
-        rec_seed, rec_km = [], []
-        for q, truth in truths.items():
-            seeded = _ids(ivf_topk(emb, query_vec_id=q, k=10, nprobe=npb))
-            trained = _ids(
-                ivf_topk(emb, query_vec_id=q, k=10, nprobe=npb, centroids=cents)
-            )
-            rec_seed.append(len(seeded & truth) / len(truth))
-            rec_km.append(len(trained & truth) / len(truth))
-        curve[npb] = {
-            "seeded": round(sum(rec_seed) / len(rec_seed), 3),
-            "kmeans": round(sum(rec_km) / len(rec_km), 3),
-        }
-    best = max(curve.values(), key=lambda r: max(r["seeded"], r["kmeans"]))
-    out = {
-        "metric": "ivf_recall_at_10",
-        "sf_dir": sf_dir,
-        "n_queries": len(truths),
-        "n_cells": 16,
-        "kmeans_iters": 3,
-        "recall_curve": curve,
-        "best_recall": max(best["seeded"], best["kmeans"]),
-    }
-    print(json.dumps(out))
-    rows = "\n".join(
-        f"| {npb} | {npb}/16 = {npb / 16:.0%} of corpus scanned "
-        f"| {r['seeded']} | {r['kmeans']} |"
-        for npb, r in curve.items()
-    )
-    md = (
-        "# BENCH/RECALL — ANN quality (IVF-Flat vs brute force)\n\n"
-        f"recall@10 over {out['n_queries']} query vectors at {sf_dir}, "
-        f"n_cells={out['n_cells']} — the recall/cost trade the nprobe "
-        "knob buys. The synthetic embeddings are near-uniform on the "
-        "sphere (no real cluster structure), which is the WORST case "
-        "for any IVF index: neighbors spread evenly across cells, so "
-        "recall ≈ fraction of cells probed, and k-means refinement "
-        "cannot beat seeding. On real embedding corpora (which "
-        "cluster heavily) the same plan probes fewer cells for the "
-        "same recall — the operator shape, not this corpus's curve, "
-        "is what transfers to 10^12 vectors.\n\n"
-        f"| nprobe | scan cost | recall@10 (seeded) | recall@10 "
-        f"(k-means, {out['kmeans_iters']} iters) |\n|---|---|---|---|\n"
-        + rows
-        + "\n\nOperating point ≥ 0.9: nprobe=12 (75% scan) on this "
-        "structureless corpus; exactness baseline `ann_cosine_topk` "
-        "(oracle-gated) and the batched serving path `ann_batch_topk` "
-        "remain available where recall must be 1.0. Reproduce: "
-        "`python bench.py --recall`.\n"
-    )
-    (_REPO / "BENCH").mkdir(exist_ok=True)
-    (_REPO / "BENCH" / "RECALL.md").write_text(md)
-
-
-def xcheck_mode() -> None:
-    """Run ONLY the independent (non-repo) ceiling probes, fold the
-    readings into BENCH/scaling_state.json, and print the cross-epoch
-    summary — cheap corroboration runs without a full Spark protocol."""
-    state_path = _REPO / "BENCH" / "scaling_state.json"
-    state = json.loads(state_path.read_text()) if state_path.exists() else {}
-    summary = _xcheck_accumulate(state, independent_ceiling_xcheck())
-    state_path.parent.mkdir(exist_ok=True)
-    state_path.write_text(json.dumps(state, indent=2))
-    print(json.dumps({"independent_ceiling_xcheck": summary}))
-
-
 if __name__ == "__main__":
-    ap = argparse.ArgumentParser()
-    ap.add_argument("--scaling", action="store_true")
-    ap.add_argument("--recall", action="store_true")
-    ap.add_argument("--ceiling-xcheck", action="store_true")
-    args = ap.parse_args()
-    if args.scaling:
-        scaling_mode()
-    elif args.recall:
-        recall_mode()
-    elif args.ceiling_xcheck:
-        xcheck_mode()
-    else:
-        contract_mode()
+    argparse.ArgumentParser(
+        description="Time the headline query suite and print one JSON line "
+        "(data dir: $SPARK_GRAFT_SF_DIR). The extraction job's layered "
+        "benchmark is bench_extract/run.py."
+    ).parse_args()
+    contract_mode()

@@ -14,7 +14,8 @@
   - ivf_cells / ivf_topk / ivf_kmeans_centroids: IVF-Flat coarse
     quantizer — probe nprobe cells only; codebook seeded
     deterministically or refined with distributed Lloyd iterations
-    (recall/nprobe curve in BENCH/RECALL.md).
+    (recall@10 against brute force in
+    tests/test_round2_fixes.py::test_ivf_kmeans_improves_or_matches_recall).
 """
 
 from __future__ import annotations
@@ -303,7 +304,8 @@ def ivf_topk(
     also the partition key, so a probe touches nprobe partitions).
     Same output schema as cosine_topk; recall < 1.0 by construction.
     Pass ``centroids=ivf_kmeans_centroids(...)`` for the trained
-    codebook (higher recall; measured in bench.py --recall)."""
+    codebook (recall@10 against the seeded one checked in
+    tests/test_round2_fixes.py::test_ivf_kmeans_improves_or_matches_recall)."""
     cents = (
         centroids
         if centroids is not None

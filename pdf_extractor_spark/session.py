@@ -242,6 +242,12 @@ def driver_cds() -> tuple[str, dict[str, str]] | None:
     return flag, env
 
 
+def _launches_jvm() -> bool:
+    """True when building a session here starts the driver JVM: none is
+    live in this process and spark-submit handed no gateway down."""
+    return SparkContext._gateway is None and "PYSPARK_GATEWAY_PORT" not in os.environ
+
+
 def _builder(
     app_name: str,
     master: str | None = None,
@@ -272,16 +278,19 @@ def _builder(
             "spark.sql.files.maxPartitionBytes",
             os.environ.get("SPARK_GRAFT_MAX_PARTITION_BYTES", str(16 * 1024 * 1024)),
         )
-        .config(
-            "spark.driver.memory",
-            os.environ.get("SPARK_GRAFT_DRIVER_MEM") or _host_driver_mem(),
-        )
         .config("spark.ui.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
         # commit algorithm v2: task-side commit renames instead of a
         # serial driver-side pass — matters for many-bucket layouts
         .config("spark.hadoop.mapreduce.fileoutputcommitter.algorithm.version", "2")
     )
+    if _launches_jvm():
+        # under spark-submit the heap is sized before Python runs, and
+        # the conf would report a heap the JVM does not have
+        builder = builder.config(
+            "spark.driver.memory",
+            os.environ.get("SPARK_GRAFT_DRIVER_MEM") or _host_driver_mem(),
+        )
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)
     return builder
@@ -309,7 +318,7 @@ def get_spark(
     """
     builder = _builder(app_name, master, shuffle_partitions, arrow_batch_rows, extra_conf)
     launch_env: dict[str, str] = {}
-    if SparkContext._gateway is None and "PYSPARK_GATEWAY_PORT" not in os.environ:
+    if _launches_jvm():
         cds = driver_cds()
         if cds:
             flag, launch_env = cds

@@ -8,8 +8,6 @@
 3. pdfparse: the (id(resources), name) font-cache key must pin a
    strong reference to the keyed dict, or a GC'd dict's reused id()
    could resolve a later resources dict to the wrong Font.
-4. bench ceiling probe: fail with a clear message under a non-fork
-   multiprocessing start method (payloads are shared via fork COW).
 """
 
 from __future__ import annotations
@@ -19,8 +17,6 @@ import hashlib
 import struct
 import weakref
 import zlib
-
-import pytest
 
 from pdf_extractor_spark.sources import pdfparse
 from pdf_extractor_spark.sources.pdfcrypt import _PAD, rc4
@@ -194,16 +190,3 @@ def test_font_cache_pins_resources_dict():
     gc.collect()
     # the cache holds a strong reference, so the id() key stays valid
     assert wref() is not None
-
-
-# -- 4. ceiling probe start-method guard -------------------------------------
-
-
-def test_ceiling_probe_requires_fork(monkeypatch):
-    import multiprocessing
-
-    import bench
-
-    monkeypatch.setattr(multiprocessing, "get_start_method", lambda allow_none=False: "spawn")
-    with pytest.raises(RuntimeError, match="fork"):
-        bench._hardware_ceiling(2, 4)

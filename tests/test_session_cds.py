@@ -146,7 +146,9 @@ def test_publish_leaves_one_archive(host, monkeypatch):
     assert not any(p.exists() for p in [*old, dead_tmp])
 
 
-def test_caller_default_java_options_are_kept(monkeypatch):
+def _capture_builder(monkeypatch) -> dict:
+    """Stub getOrCreate; the returned dict gets the builder's options
+    and the SPARK_CONF_DIR seen at launch."""
     seen = {}
 
     class FakeSpark:
@@ -157,11 +159,16 @@ def test_caller_default_java_options_are_kept(monkeypatch):
         seen["conf_dir"] = os.environ.get("SPARK_CONF_DIR")
         return FakeSpark()
 
+    monkeypatch.setattr(SparkSession.Builder, "getOrCreate", get_or_create)
+    return seen
+
+
+def test_caller_default_java_options_are_kept(monkeypatch):
+    seen = _capture_builder(monkeypatch)
     monkeypatch.setattr(SparkContext, "_gateway", None)
     monkeypatch.delenv("PYSPARK_GATEWAY_PORT", raising=False)
     monkeypatch.setenv("SPARK_CONF_DIR", "/callers/conf")
     monkeypatch.setattr(session, "driver_cds", lambda: ("-XX:SharedArchiveFile=/c/k.jsa", {"SPARK_CONF_DIR": "/c/conf"}))
-    monkeypatch.setattr(SparkSession.Builder, "getOrCreate", get_or_create)
     session.get_spark(
         extra_conf={
             "spark.driver.defaultJavaOptions": "-Dcaller=1",
@@ -172,6 +179,22 @@ def test_caller_default_java_options_are_kept(monkeypatch):
     assert seen["options"]["spark.driver.extraJavaOptions"] == "-Dextra=1"
     assert seen["conf_dir"] == "/c/conf"  # for the launch only
     assert os.environ["SPARK_CONF_DIR"] == "/callers/conf"
+
+
+@pytest.mark.parametrize("jvm", ["launched-here", "spark-submit", "already-live"])
+def test_driver_memory_is_set_only_when_launching_the_jvm(monkeypatch, jvm):
+    """spark.driver.memory only sizes a JVM this process starts; under
+    spark-submit, or on a live gateway, the heap is already fixed."""
+    seen = _capture_builder(monkeypatch)
+    monkeypatch.setattr(session, "driver_cds", lambda: None)
+    monkeypatch.setattr(SparkContext, "_gateway", object() if jvm == "already-live" else None)
+    if jvm == "spark-submit":
+        monkeypatch.setenv("PYSPARK_GATEWAY_PORT", "40000")
+    else:
+        monkeypatch.delenv("PYSPARK_GATEWAY_PORT", raising=False)
+    monkeypatch.setenv("SPARK_GRAFT_DRIVER_MEM", "3g")
+    session.get_spark()
+    assert seen["options"].get("spark.driver.memory") == ("3g" if jvm == "launched-here" else None)
 
 
 CHILD = textwrap.dedent(
