@@ -2,47 +2,27 @@
 
 Usage:
   spark-submit [--master local[N]] cli_launcher.py \
-      --input  /path/to/pages_parquet   (or --synthesize N --seed S) \
+      --input  /path/to/pages_parquet \
+          (or --input-warc DIR, or --synthesize N --seed S) \
       --output /path/to/result_dir \
-      [--buckets 32] [--keep-failed]
+      [--buckets 32] [--resume] [--file-sink DIR]
 
 Reads a pages table (url, warc_ts, html, text, lang), runs the
 extraction pipeline, writes the result table + per-partition lineage
 manifests, prints a one-line JSON summary to stdout.
+
+The partitioning follows the input's shape; no flag selects it. A
+parquet input bucketed on url-hash is written without an exchange;
+any other parquet input is checked for a heavy tail and, if it has
+one, repartitioned by payload size (``io.repartition_if_heavy``).
 """
 
 from __future__ import annotations
 
 import argparse
 import json
-import shutil
 import sys
-import tempfile
 import time
-
-
-def warm_up(spark) -> None:
-    """Run a tiny copy of the full pipeline: synthesis, extraction and
-    a bucketed write with its lineage.
-
-    It pre-pays the per-JVM one-time costs a long-running production
-    executor amortizes to zero: Python worker spawn, whole-stage
-    codegen JIT, parquet/zstd writer class loading, committer set-up.
-    ``--warm-workers`` runs it before the timed section, and
-    session.py runs it to train the driver's class-data-sharing
-    archive on the classes the pipeline loads.
-    """
-    from pdf_extractor_spark import corpus, io as pio
-    from pdf_extractor_spark.operators.extract import extract_pages
-
-    n = spark.sparkContext.defaultParallelism
-    spark.range(0, 32 * n, 1, n).mapInPandas(lambda it: it, schema="id long").count()
-    warm_dir = tempfile.mkdtemp(prefix="pdfx_warm_")
-    try:
-        warm_pages = corpus.distributed_pages(spark, 256, seed=0)
-        pio.write_result(extract_pages(warm_pages, keep_failed=True), warm_dir, n_buckets=4)
-    finally:
-        shutil.rmtree(warm_dir, ignore_errors=True)
 
 
 def main(argv: list[str] | None = None) -> int:
@@ -59,53 +39,11 @@ def main(argv: list[str] | None = None) -> int:
     ap.add_argument("--output", required=True)
     ap.add_argument("--buckets", type=int, default=32, help="url-hash output buckets")
     ap.add_argument("--resume", action="store_true", help="skip urls already committed in --output")
-    size_grp = ap.add_mutually_exclusive_group()
-    size_grp.add_argument(
-        "--size-aware",
-        action="store_true",
-        help="force size-aware repartitioning with the explicit knobs "
-        "below: bound partition payload bytes and isolate oversized "
-        "documents (north rule OOM guard). Without the flag the job "
-        "AUTO-detects a heavy tail on unbucketed parquet inputs "
-        "(io.detect_heavy_tail) and engages itself with corpus-derived "
-        "knobs; --no-size-aware disables the detection",
-    )
-    size_grp.add_argument(
-        "--no-size-aware",
-        action="store_true",
-        help="disable automatic heavy-tail detection/repartitioning",
-    )
-    ap.add_argument(
-        "--size-aware-target-bytes",
-        type=int,
-        default=64 << 20,
-        help="payload bytes per task the size-aware split aims for",
-    )
-    ap.add_argument(
-        "--size-aware-big-threshold",
-        type=int,
-        default=4 << 20,
-        help="docs above this route to the isolated oversized pool",
-    )
-    ap.add_argument(
-        "--input-bucketed",
-        action="store_true",
-        help="input table is already partitioned by url-hash bucket "
-        "(Iceberg bucket(N,url) ingest shape): write without the "
-        "repartition exchange — the whole job is shuffle-free",
-    )
     ap.add_argument(
         "--file-sink",
         metavar="DIR",
         help="also write one <stem>.json per successful url (the "
         "reference's per-document file sink, extract_outline.py:134-144)",
-    )
-    ap.add_argument(
-        "--warm-workers",
-        action="store_true",
-        help="spin up Python workers before timing starts (benchmark "
-        "mode: worker cold-start is a fixed cost that amortizes to "
-        "zero on long-running production executors)",
     )
     args = ap.parse_args(argv)
 
@@ -114,8 +52,6 @@ def main(argv: list[str] | None = None) -> int:
     from pdf_extractor_spark.session import get_spark
 
     spark = get_spark("pdf_extractor_cli")
-    if args.warm_workers:
-        warm_up(spark)
     t0 = time.time()
     if args.synthesize:
         # synthesized on the executors (corpus.distributed_pages) — a
@@ -131,45 +67,16 @@ def main(argv: list[str] | None = None) -> int:
     else:
         ap.error("need --input, --input-warc, or --synthesize")
 
+    # materialize_bucketed_corpus and an Iceberg bucket(N, url) ingest
+    # both scan with a `bucket` partition column. WARC and synthesized
+    # payloads come out of a Python stage, where heavy-tail detection
+    # would re-run that stage instead of scanning a column.
+    input_bucketed = bool(args.input) and "bucket" in pages.columns
     if args.resume:
         pages = pio.filter_pending(pages, args.output)
     size_aware_stats = None
-    if args.size_aware:
-        pages, size_aware_stats = pio.size_aware_repartition(
-            pages,
-            target_partition_bytes=args.size_aware_target_bytes,
-            big_threshold=args.size_aware_big_threshold,
-            return_stats=True,
-        )
-    elif args.input and not args.input_bucketed and not args.no_size_aware:
-        # Auto OOM-guard (VERDICT r4 #6): on the unbucketed parquet
-        # shape — the one input whose partitioning nobody has shaped
-        # yet — detect a heavy tail and engage with corpus-derived
-        # knobs. Skipped for bucketed inputs (the ingest already
-        # shaped the layout; keeps the scaling protocol's plan
-        # byte-identical), and for warc/synthesize sources (their
-        # payloads are produced by a Python stage, so a detection
-        # pass would re-run that stage end-to-end rather than a cheap
-        # columnar length scan).
-        det = pio.detect_heavy_tail(pages)
-        if det["heavy"]:
-            # a "big" doc is one past the same multiple-of-mean that
-            # triggered detection. Target: total/(4*cores) gives >= 4
-            # task waves on SMALL corpora, clamped at the explicit
-            # path's 64 MB default so per-task payload never grows
-            # with corpus size (uncapped, a 1 TB input would build
-            # ~GB-payload tasks); never below one giant-threshold doc
-            big = pio.SIZE_AWARE_AUTO_FACTOR * max(det["mean_doc_bytes"], 1)
-            par = spark.sparkContext.defaultParallelism
-            quota = det["total_payload_bytes"] // (4 * par) or 1
-            target = max(big, min(64 << 20, quota))
-            pages, size_aware_stats = pio.size_aware_repartition(
-                pages,
-                target_partition_bytes=target,
-                big_threshold=big,
-                return_stats=True,
-            )
-            size_aware_stats["auto"] = det
+    if args.input and not input_bucketed:
+        pages, size_aware_stats = pio.repartition_if_heavy(pages)
 
     result = extract_pages(pages, keep_failed=True)
     stats = pio.write_result(
@@ -177,7 +84,7 @@ def main(argv: list[str] | None = None) -> int:
         args.output,
         n_buckets=args.buckets,
         mode="append" if args.resume else "overwrite",
-        input_bucketed=args.input_bucketed,
+        input_bucketed=input_bucketed,
     )
     if args.file_sink:
         n_files = pio.write_json_files(

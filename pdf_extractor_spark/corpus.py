@@ -22,8 +22,7 @@ import json
 import random
 import zlib
 
-SPANDOC_MAGIC = b"SPANDOC1"
-HTML_MAGIC = b"<!"  # plain HTML bytes start with <!doctype or tags
+from .sources.payload import SPANDOC_MAGIC, parse_spandoc
 
 _FONTS_BODY = ["Helvetica", "Times-Roman", "Garamond", "Courier", "Arial-Italic"]
 _FONTS_HEAD = [
@@ -183,7 +182,7 @@ def spandoc_to_payload(pages: list[dict]) -> bytes:
 def payload_to_spandoc(payload: bytes) -> list[dict]:
     if not payload.startswith(SPANDOC_MAGIC):
         raise ValueError("not a spandoc payload")
-    return json.loads(zlib.decompress(payload[len(SPANDOC_MAGIC):]).decode("utf-8"))
+    return parse_spandoc(payload)
 
 
 def random_html(rng: random.Random) -> bytes:

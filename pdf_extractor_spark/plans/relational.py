@@ -19,8 +19,6 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
-PAGE_WIDTH = 612.0
-
 
 # --------------------------------------------------------------------
 # Deterministic blocks derivation (shared Spark/DuckDB semantics)

@@ -15,6 +15,7 @@ import shlex
 import shutil
 import subprocess
 import sys
+import tempfile
 import time
 import zipimport
 from pathlib import Path
@@ -139,12 +140,28 @@ def _train_command(tmp: Path) -> list[str]:
     return [sys.executable, "-c", code, str(tmp)]
 
 
+def warm_up(spark) -> None:
+    """Run a tiny copy of the full pipeline: synthesis, extraction and
+    a bucketed write with its lineage, so the class-data-sharing
+    archive holds the classes the pipeline loads: Python worker spawn,
+    whole-stage codegen, the parquet/zstd writer and the committer."""
+    from . import corpus, io as pio
+    from .operators.extract import extract_pages
+
+    n = spark.sparkContext.defaultParallelism
+    spark.range(0, 32 * n, 1, n).mapInPandas(lambda it: it, schema="id long").count()
+    warm_dir = tempfile.mkdtemp(prefix="pdfx_warm_")
+    try:
+        warm_pages = corpus.distributed_pages(spark, 256, seed=0)
+        pio.write_result(extract_pages(warm_pages, keep_failed=True), warm_dir, n_buckets=4)
+    finally:
+        shutil.rmtree(warm_dir, ignore_errors=True)
+
+
 def _train(tmp: str) -> None:
     """Child process of a build: run the pipeline warm-up in a JVM that
     dumps the classes it loaded to ``tmp`` when it exits, and exit
     with that JVM's status."""
-    from .cli import warm_up
-
     spark = _builder("pdf_extractor_cds_train", extra_conf={_JAVA_OPTS: f"-XX:ArchiveClassesAtExit={tmp}"}).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     warm_up(spark)

@@ -3,7 +3,8 @@
  - sources/payload.py rejects the non-JSON ``NaN``/``Infinity``
    literals in a spandoc payload, so such a document becomes one S4
    failure row instead of reaching the analyzer (where a NaN size or
-   coordinate silently changed the outline)
+   coordinate silently changed the outline); corpus.payload_to_spandoc
+   decodes through the same parser
  - a spandoc or %PDF payload whose decode raises keeps its payload
    kind, so lineage can tell it from an unrecognised payload
  - plans/queries.py's html_stats logs a warning when it runs without
@@ -43,6 +44,8 @@ def test_non_finite_spandoc_is_a_failure_row(field, value, literal):
     bad = _poisoned_payload(707, field, value)
     with pytest.raises(ValueError, match=literal):
         payload.parse_spandoc(bad)
+    with pytest.raises(ValueError, match=literal):
+        corpus.payload_to_spandoc(bad)
 
     good = corpus.spandoc_to_payload(corpus.random_spandoc(random.Random(808)))
     out = extract._process_batch(pd.DataFrame({"url": ["bad", "good"], "html": [bad, good]}))

@@ -7,7 +7,8 @@ Each test pins a specific fix:
   - winnowing must select the min of EVERY window (Schleimer et al.),
     not only minima sitting at a window's end
   - IVF centroid seeding must survive sparse/offset vec_ids
-  - write_json_files emits one <stem>.json per successful url
+  - write_json_files emits one <stem>.json per successful url, and
+    takes a file:// URI as its local path
 """
 
 from __future__ import annotations
@@ -23,7 +24,7 @@ def test_size_aware_repartition_keeps_null_payloads(spark):
 
     rows = [("u1", b"x" * 100), ("u2", None), ("u3", b"y" * (5 << 20))]
     df = spark.createDataFrame(rows, "url string, html binary")
-    out = size_aware_repartition(df, big_threshold=4 << 20)
+    out, _ = size_aware_repartition(df, big_threshold=4 << 20)
     assert out.count() == 3
     assert {r.url for r in out.select("url").collect()} == {"u1", "u2", "u3"}
 
@@ -126,6 +127,22 @@ def test_file_sink_per_url_json(spark, tmp_path):
     sample = next(iter(out.glob("*.json")))
     parsed = json.loads(sample.read_text(encoding="utf-8"))
     assert set(parsed) == {"title", "outline"}
+
+
+def test_file_sink_file_uri_writes_the_local_path(spark, tmp_path):
+    """A file:// URI names the local directory; it must not become a
+    literal `file:` directory under the executors' working dir."""
+    from pdf_extractor_spark import corpus
+    from pdf_extractor_spark.io import write_json_files
+    from pdf_extractor_spark.operators.extract import extract_pages
+
+    result = extract_pages(corpus.distributed_pages(spark, 12, seed=3), keep_failed=True)
+    out = tmp_path / "json_uri"
+    n = write_json_files(result, out.as_uri())
+    assert n == len(list(out.glob("*.json"))) > 0
+    # other schemes fail before a job runs: executors write with open()
+    with pytest.raises(ValueError, match="hdfs://nn/x"):
+        write_json_files(result, "hdfs://nn/x")
 
 
 def test_batch_topk_matches_single_query(spark, sf_dir):

@@ -82,7 +82,6 @@ def test_size_aware_bounds_task_payload(spark, heavy_pages):
         heavy_pages,
         target_partition_bytes=target,
         big_threshold=threshold,
-        return_stats=True,
     )
     sized = partition_payload_stats(sized_df)
 
@@ -119,7 +118,7 @@ def test_size_aware_bounds_task_payload(spark, heavy_pages):
 
 
 def test_size_aware_is_result_identical_and_giants_extract(spark, heavy_pages):
-    sized = size_aware_repartition(
+    sized, _ = size_aware_repartition(
         heavy_pages, target_partition_bytes=256 << 10, big_threshold=32 << 10
     )
     a = {
@@ -174,13 +173,34 @@ def _run_cli(capsys, argv):
     return _json.loads(lines[-1])
 
 
-def test_cli_auto_engages_on_heavy_tail_parquet(spark, tmp_path, capsys):
+@pytest.fixture
+def cli_calls(monkeypatch):
+    """Record how the CLI calls io.write_result and io.detect_heavy_tail
+    (both still run for real)."""
+    from pdf_extractor_spark import io as pio
+
+    calls = {"write_result": [], "detect_heavy_tail": 0}
+    real_write, real_detect = pio.write_result, pio.detect_heavy_tail
+
+    def write_result(*args, **kwargs):
+        calls["write_result"].append(kwargs)
+        return real_write(*args, **kwargs)
+
+    def detect_heavy_tail(*args, **kwargs):
+        calls["detect_heavy_tail"] += 1
+        return real_detect(*args, **kwargs)
+
+    monkeypatch.setattr(pio, "write_result", write_result)
+    monkeypatch.setattr(pio, "detect_heavy_tail", detect_heavy_tail)
+    return calls
+
+
+def test_cli_auto_engages_on_heavy_tail_parquet(spark, tmp_path, capsys, cli_calls):
     """VERDICT r4 #6: the production job must flip size-aware
     repartitioning on BY ITSELF when an unbucketed parquet input shows
-    a heavy tail — no flag — while the default corpus path stays
-    unchanged and --no-size-aware disables the guard. Result identity
-    between the auto-engaged and disabled runs proves the repartition
-    is a physical property only."""
+    a heavy tail, while the default corpus path stays unchanged.
+    Result identity with an in-process extraction of the same input
+    proves the repartition is a physical property only."""
     heavy_in = str(tmp_path / "heavy_in")
     corpus.distributed_pages(
         spark, 600, seed=SEED, heavy_tail_every=HEAVY_EVERY
@@ -189,6 +209,8 @@ def test_cli_auto_engages_on_heavy_tail_parquet(spark, tmp_path, capsys):
     s_auto = _run_cli(
         capsys, ["--input", heavy_in, "--output", str(tmp_path / "out_auto")]
     )
+    assert cli_calls["detect_heavy_tail"] == 1
+    assert cli_calls["write_result"][-1]["input_bucketed"] is False
     assert s_auto["size_aware"]["auto"]["heavy"] is True
     assert s_auto["size_aware"]["n_big_partitions"] >= 1
     # corpus-derived knobs: a "big" doc is auto_factor x mean
@@ -197,19 +219,6 @@ def test_cli_auto_engages_on_heavy_tail_parquet(spark, tmp_path, capsys):
         == s_auto["size_aware"]["auto"]["auto_factor"]
         * s_auto["size_aware"]["auto"]["mean_doc_bytes"]
     )
-
-    # --no-size-aware: guard off, result identical
-    s_off = _run_cli(
-        capsys,
-        [
-            "--input", heavy_in,
-            "--output", str(tmp_path / "out_off"),
-            "--no-size-aware",
-        ],
-    )
-    assert "size_aware" not in s_off
-    assert s_off["rows_out"] == s_auto["rows_out"]
-    assert s_off["parse_failures"] == s_auto["parse_failures"]
     a = {
         (r["url"], r["outline_json"])
         for r in spark.read.parquet(str(tmp_path / "out_auto" / "result"))
@@ -218,10 +227,11 @@ def test_cli_auto_engages_on_heavy_tail_parquet(spark, tmp_path, capsys):
     }
     b = {
         (r["url"], r["outline_json"])
-        for r in spark.read.parquet(str(tmp_path / "out_off" / "result"))
+        for r in extract_pages(spark.read.parquet(heavy_in), keep_failed=True)
         .select("url", "outline_json")
         .collect()
     }
+    assert len(a) == 600
     assert a == b
 
     # default corpus: detection runs but does NOT engage
@@ -230,8 +240,43 @@ def test_cli_auto_engages_on_heavy_tail_parquet(spark, tmp_path, capsys):
     s_def = _run_cli(
         capsys, ["--input", default_in, "--output", str(tmp_path / "out_def")]
     )
+    assert cli_calls["detect_heavy_tail"] == 2
     assert "size_aware" not in s_def
 
-    # bucketed inputs skip detection entirely (the scaling protocol's
-    # plan must stay untouched): nothing to assert beyond no-engage —
-    # covered by the flag matrix in cli (--input-bucketed path)
+
+def test_cli_bucketed_input_skips_detection(spark, tmp_path, capsys, cli_calls):
+    """A scan with a `bucket` partition column is the bucketed-ingest
+    layout: the CLI writes it without the exchange and leaves its
+    partitioning alone, heavy tail or not."""
+    bucketed_in = str(tmp_path / "bucketed_in")
+    corpus.materialize_bucketed_corpus(
+        spark, 600, bucketed_in, seed=SEED, n_buckets=4,
+        files_per_bucket=1, heavy_tail_every=HEAVY_EVERY,
+    )
+    summary = _run_cli(
+        capsys,
+        ["--input", bucketed_in, "--output", str(tmp_path / "out"), "--buckets", "4"],
+    )
+    assert cli_calls["detect_heavy_tail"] == 0
+    assert cli_calls["write_result"][-1]["input_bucketed"] is True
+    assert "size_aware" not in summary
+    assert summary["rows_in"] == 600
+
+
+def test_cli_help_names_no_removed_flag(capsys):
+    from pdf_extractor_spark import cli
+
+    with pytest.raises(SystemExit) as exit_info:
+        cli.main(["--help"])
+    assert exit_info.value.code == 0
+    text = capsys.readouterr().out
+    assert "--input-warc" in text
+    for flag in (
+        "--warm-workers",
+        "--input-bucketed",
+        "--size-aware",
+        "--no-size-aware",
+        "--size-aware-target-bytes",
+        "--size-aware-big-threshold",
+    ):
+        assert flag not in text

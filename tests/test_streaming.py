@@ -168,7 +168,7 @@ def test_size_aware_repartition_bounds_partition_bytes(spark):
         F.expr("cast(repeat('y', 1048576) as binary)").alias("html"),
     )
     pages = normal.unionByName(giant)
-    out = pio.size_aware_repartition(
+    out, _ = pio.size_aware_repartition(
         pages, target_partition_bytes=1 << 20, big_threshold=64 << 10
     )
     sizes = (
