@@ -9,8 +9,8 @@ similarity search, text analysis) a 100 TB corpus pipeline needs.
 
 Architecture is Spark-first: declarative DataFrame plans wherever the
 semantics are relational (Catalyst handles pushdown / pruning / join
-strategy), Arrow-vectorized ``applyInPandas`` only for the per-document
-order-dependent folds that are genuinely non-relational.
+strategy), and one Arrow-batched ``mapInPandas`` stage only for the
+per-document order-dependent folds that are genuinely non-relational.
 """
 
 __version__ = "0.1.0"

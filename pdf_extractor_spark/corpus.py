@@ -243,28 +243,9 @@ def pdf_plan(rng: random.Random) -> list[list[tuple[int, float, str]]]:
     return pages
 
 
-def random_pdf(rng: random.Random) -> bytes:
-    """Deterministic minimal REAL ``%PDF`` document (classic xref,
-    FlateDecode content streams, Helvetica Type1): a title line plus a
-    few heading/body lines per page. Exercises sources/pdfparse.py —
-    the same payload path the reference's own fixtures take — without
-    any PDF library."""
-    plan = pdf_plan(rng)
-    n_pages = len(plan)
-    page_objs = []
-    content_objs = []
-    next_obj = 4  # 1=catalog 2=pages 3=font
-    for page_lines in plan:
-        lines = [
-            b"BT /F1 %d Tf 72 %d Td (%s) Tj ET"
-            % (int(size), y, _pdf_escape(text))
-            for (y, size, text) in page_lines
-        ]
-        content = zlib.compress(b"\n".join(lines))
-        content_objs.append(content)
-        page_objs.append(next_obj)
-        next_obj += 2  # page obj + content obj
-
+def pdf_of_pages(contents: list[bytes]) -> bytes:
+    """Minimal REAL ``%PDF`` document: classic xref, one FlateDecode
+    content stream per page, Helvetica Type1 as ``/F1``."""
     buf = bytearray(b"%PDF-1.4\n")
     offsets = {}
 
@@ -274,11 +255,14 @@ def random_pdf(rng: random.Random) -> bytes:
         buf.extend(body)
         buf.extend(b"\nendobj\n")
 
+    n_objs = 4 + 2 * len(contents)  # 1=catalog 2=pages 3=font, then page + content per page
+    page_objs = range(4, n_objs, 2)
     kids = " ".join(f"{o} 0 R" for o in page_objs)
     emit(1, b"<< /Type /Catalog /Pages 2 0 R >>")
-    emit(2, b"<< /Type /Pages /Kids [%s] /Count %d >>" % (kids.encode(), n_pages))
+    emit(2, b"<< /Type /Pages /Kids [%s] /Count %d >>" % (kids.encode(), len(contents)))
     emit(3, b"<< /Type /Font /Subtype /Type1 /BaseFont /Helvetica >>")
-    for p, obj in enumerate(page_objs):
+    for obj, content in zip(page_objs, contents):
+        data = zlib.compress(content)
         emit(
             obj,
             b"<< /Type /Page /Parent 2 0 R /MediaBox [0 0 612 792] "
@@ -286,10 +270,8 @@ def random_pdf(rng: random.Random) -> bytes:
         )
         emit(
             obj + 1,
-            b"<< /Length %d /Filter /FlateDecode >>\nstream\n%s\nendstream"
-            % (len(content_objs[p]), content_objs[p]),
+            b"<< /Length %d /Filter /FlateDecode >>\nstream\n%s\nendstream" % (len(data), data),
         )
-    n_objs = next_obj
     xref_off = len(buf)
     buf.extend(b"xref\n0 %d\n" % n_objs)
     buf.extend(b"0000000000 65535 f \n")
@@ -300,6 +282,22 @@ def random_pdf(rng: random.Random) -> bytes:
         % (n_objs, xref_off)
     )
     return bytes(buf)
+
+
+def random_pdf(rng: random.Random) -> bytes:
+    """Deterministic minimal REAL ``%PDF`` document (pdf_of_pages): a
+    title line plus a few heading/body lines per page. Exercises
+    sources/pdfparse.py — the same payload path the reference's own
+    fixtures take — without any PDF library."""
+    return pdf_of_pages(
+        [
+            b"\n".join(
+                b"BT /F1 %d Tf 72 %d Td (%s) Tj ET" % (int(size), y, _pdf_escape(text))
+                for (y, size, text) in page_lines
+            )
+            for page_lines in pdf_plan(rng)
+        ]
+    )
 
 
 def pdf_truth_stats(i: int, seed_base: int = 77_000) -> dict:

@@ -321,8 +321,11 @@ def size_aware_repartition(
         giant docs stays near target — a single hot partition can
         never accumulate many giants.
 
-    Arrow batch rows stay capped separately (session.py), so worker
-    memory is bounded by min(batch_rows · max_doc, partition bytes).
+    A worker receives one Arrow batch at a time, not the partition:
+    session.py closes a batch at 256 rows or right after the row that
+    takes it past 64 MiB, so a batch holds at most
+    min(256 · max_doc, 64 MiB + max_doc) payload bytes. Partition bytes
+    set how long a task runs, which is what this evens out.
     Returns the repartitioned frame and its sizing stats.
     """
     # NULL-safe: length(NULL) is NULL, which would satisfy NEITHER

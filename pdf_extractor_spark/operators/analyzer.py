@@ -4,10 +4,11 @@ heuristic (SURVEY.md §2.4-§2.9; reference: utils/analysis_new.py).
 Design: ``analyze_batch`` takes the merged-block rows of one Arrow
 batch and analyzes each document on its own, the reference's unit of
 work. Passes 1-2 (derived columns, lag window, font histogram,
-scoring) are plain Python over the document's block tuples. Pass 3
-(title reconstruction, poster grouping, level assignment) is
-order-/path-dependent greedy logic over numpy arrays of the same
-document. A document that raises becomes one error tuple; the other
+scoring) and pass 3 (title reconstruction, poster grouping, level
+assignment: order-/path-dependent greedy logic) are plain Python over
+the document's block columns, with the reference's own ``sorted``,
+``max`` and ``min``, so NaN and ±inf sizes order exactly as they do
+there. A document that raises becomes one error tuple; the other
 documents of the batch are unaffected (S4).
 
 Byte-identity notes (each rule cites the reference line):
@@ -17,8 +18,10 @@ Byte-identity notes (each rule cites the reference line):
   "I." tags as 'A.' while "IV." tags as 'I.' (analysis_new.py:35-40).
 - the modal baseline size tie-breaks by FIRST occurrence in body order,
   matching Counter.most_common's stable heap (analysis_new.py:69).
-  NaN sizes never enter the histogram; with no other size the
-  baseline is 0.0.
+  A NaN size fails the body gate (size >= 8), so it is counted only
+  when no block passes it; then it is a histogram key like any other
+  (dict identity, as in the reference's Counter) and can be the
+  baseline. It never has a content page, so it is never a tier.
 - space_above is 0.0 for a document's first block and across a page
   change (analysis_new.py:60-63).
 - cluster keys use Python round() = banker's rounding
@@ -35,8 +38,6 @@ from collections import defaultdict
 from itertools import groupby
 from operator import itemgetter
 from typing import Iterator
-
-import numpy as np
 
 _NUMBERING_PATTERNS = [
     (r"\d+\.\d+\.\d+", "x.y.z."),
@@ -58,7 +59,7 @@ _BOLD_RE = re.compile(r"bold|black|heavy|demi|semi")
 
 
 # ----------------------------------------------------------------------
-# Pass 3 — per-document classification over numpy arrays.
+# Pass 3 — per-document classification over the block columns.
 # ----------------------------------------------------------------------
 _VERSION_RX = re.compile(r"Version \d+\.\d+", re.I)
 _LETTER_RX = re.compile(r"[A-Za-z]")
@@ -71,35 +72,34 @@ _FIELD_LABELS = frozenset({"ADDRESS:", "RSVP:", "DATE:", "TIME:", "FOR:"})
 
 
 class _Doc:
-    """Column-array view of one document's blocks, in insertion order."""
+    """One document's block columns, in block order (passes 1-2's
+    sequences, not copied)."""
 
     __slots__ = (
         "text", "size", "page", "y", "x0", "x1", "y1",
-        "bold", "case", "numbering", "centered", "score", "n",
+        "bold", "case", "numbering", "centered", "score",
     )
 
     def __init__(self, text, size, page, y, x0, x1, y1, bold, case, numbering, centered, score):
-        self.text = np.array(text, dtype=object)
-        self.size = np.array(size, dtype=float)
-        self.page = np.array(page, dtype=int)
-        self.y = np.array(y, dtype=float)
-        self.x0 = np.array(x0, dtype=float)
-        self.x1 = np.array(x1, dtype=float)
-        self.y1 = np.array(y1, dtype=float)
-        self.bold = np.array(bold, dtype=bool)
-        self.case = np.array(case, dtype=object)
-        self.numbering = np.array(numbering, dtype=object)
-        self.centered = np.array(centered, dtype=bool)
-        self.score = np.array(score, dtype=float)
-        self.n = len(text)
+        self.text = text
+        self.size = size
+        self.page = page
+        self.y = y
+        self.x0 = x0
+        self.x1 = x1
+        self.y1 = y1
+        self.bold = bold
+        self.case = case
+        self.numbering = numbering
+        self.centered = centered
+        self.score = score
 
 
 def _candidate_indices(d: _Doc, baseline: float, poster_v1: bool) -> list[int]:
     """F1-F4 candidate gates (analysis_new.py:126-144)."""
     keep = []
     letter_rx = _LETTER_BANG_RX if poster_v1 else _LETTER_RX
-    for i in range(d.n):
-        t = d.text[i]
+    for i, t in enumerate(d.text):
         if d.score[i] < 20 or not letter_rx.search(t):
             continue
         if _VERSION_RX.match(t):
@@ -117,10 +117,9 @@ def _candidate_indices(d: _Doc, baseline: float, poster_v1: bool) -> list[int]:
     return keep
 
 
-def _multipage_title(d: _Doc, fp: np.ndarray, max_fs: float) -> tuple[str, set[str]]:
+def _multipage_title(d: _Doc, by_size: list[int], max_fs: float) -> tuple[str, set[str]]:
     """G2-G5: y-group, x-merge, join, cleanup (analysis_new.py:156-218)."""
-    order = fp[np.lexsort((d.y[fp], -d.size[fp]))]  # (-size, y) stable
-    big = [i for i in order if d.size[i] >= max_fs * 0.85]
+    big = [i for i in by_size if d.size[i] >= max_fs * 0.85]
     groups: dict[float, list[int]] = {}
     for i in big:
         for gy in groups:
@@ -164,10 +163,9 @@ def _multipage_title(d: _Doc, fp: np.ndarray, max_fs: float) -> tuple[str, set[s
     return " ".join(kept), {d.text[i] for i in title_idx}
 
 
-def _single_page_title(d: _Doc, fp: np.ndarray, max_fs: float) -> tuple[str, set[str]]:
+def _single_page_title(d: _Doc, by_size: list[int], max_fs: float) -> tuple[str, set[str]]:
     """G6 (analysis_new.py:219-234). The reference's :227 arm is dead code."""
-    order = fp[np.lexsort((d.y[fp], -d.size[fp]))]
-    cands = [i for i in order if d.size[i] >= max_fs * 0.8][:3]
+    cands = [i for i in by_size if d.size[i] >= max_fs * 0.8][:3]
     for i in cands:
         if (d.centered[i] or d.size[i] >= max_fs * 0.9) and len(d.text[i].strip()) > 3:
             return d.text[i].strip(), {d.text[i]}
@@ -231,11 +229,11 @@ def _assign_levels(d: _Doc, cand: list[int], tiers: list[float], title_texts: se
     for i in cand:
         if d.numbering[i] is not None:
             continue
-        key = (round(d.size[i]), bool(d.bold[i]))  # banker's rounding
+        key = (round(d.size[i]), d.bold[i])  # banker's rounding
         matched = False
         for ts in tiers:
             if abs(d.size[i] - ts) < 0.5:
-                level_map[key] = level_map.get((ts, bool(d.bold[i])), f"H{len(tiers)+1}")
+                level_map[key] = level_map.get((ts, d.bold[i]), f"H{len(tiers)+1}")
                 matched = True
                 break
         if not matched:
@@ -267,38 +265,36 @@ def _assign_levels(d: _Doc, cand: list[int], tiers: list[float], title_texts: se
                     level = f"H{k+1}"
                     break
             if not level:
-                level = level_map.get((round(d.size[i]), bool(d.bold[i])), "H4")
+                level = level_map.get((round(d.size[i]), d.bold[i]), "H4")
         text = t.strip()
         if not text.endswith(" "):
             text += " "
-        outline.append({"level": level, "text": text, "page": int(d.page[i])})
+        outline.append({"level": level, "text": text, "page": d.page[i]})
 
-    text_arr = d.text
-    y_arr = d.y
-
-    def sort_key(e: dict):
-        # literal replication of analysis_new.py:395 (never matches in
-        # practice — outline text has a trailing space)
-        hits = np.nonzero(text_arr == e["text"])[0]
-        return (e["page"], y_arr[hits[0]] if len(hits) else 0)
-
-    outline.sort(key=sort_key)
+    # literal replication of analysis_new.py:395 (never matches in
+    # practice — outline text has a trailing space)
+    outline.sort(
+        key=lambda e: (e["page"], next((y for t, y in zip(d.text, d.y) if t == e["text"]), 0))
+    )
     return outline
 
 
 def classify_doc(d: _Doc, baseline: float, tiers: list[float]) -> tuple[str, list[dict]]:
-    total_pages = len(set(d.page.tolist()))
+    total_pages = len(set(d.page))
     poster_v1 = total_pages == 1
     cand = _candidate_indices(d, baseline, poster_v1)
 
-    fp = np.nonzero(d.page == 0)[0]
+    fp = [i for i, p in enumerate(d.page) if p == 0]
     title, title_texts = "", set()
-    if len(fp):
-        max_fs = d.size[fp].max()
+    if fp:
+        # max_fs is the head of the (-size, y) order, as in the
+        # reference, NaN sizes included
+        by_size = sorted(fp, key=lambda i: (-d.size[i], d.y[i]))
+        max_fs = d.size[by_size[0]]
         if total_pages > 1:
-            title, title_texts = _multipage_title(d, fp, max_fs)
+            title, title_texts = _multipage_title(d, by_size, max_fs)
         else:
-            title, title_texts = _single_page_title(d, fp, max_fs)
+            title, title_texts = _single_page_title(d, by_size, max_fs)
 
     has_numbering = any(x is not None for x in d.numbering)
     if total_pages == 1:
@@ -307,8 +303,8 @@ def classify_doc(d: _Doc, baseline: float, tiers: list[float]) -> tuple[str, lis
         formish = sum(1 for k in _FORM_KEYS if k in joined) >= 3
         if (posterish or formish) and not has_numbering:
             return "", _poster_phrases(d, cand, baseline)
-        if not title and len(fp):
-            largest = fp[int(np.argmax(d.size[fp]))]
+        if not title and fp:
+            largest = max(fp, key=lambda i: d.size[i])
             title = d.text[largest].strip()
             title_texts.add(d.text[largest])
         heads = [
@@ -362,20 +358,17 @@ def analyze_doc(rows: list[tuple]) -> tuple[str, list[dict]]:
     content = set()  # sizes seen after the first page
     for i in body:
         s = size[i]
-        if s != s:
-            continue  # NaN
         counts[s] = counts.get(s, 0) + 1
-        if page[i] > 0:
+        if page[i] > 0 and s == s:  # the reference's `==` never finds NaN
             content.add(s)
     baseline = max(counts, key=counts.get) if counts else 0.0
-    tiers = sorted(
-        (
-            s
-            for s, c in counts.items()
-            if s >= baseline * 1.15 and (c >= 2 or s >= baseline * 1.5) and s in content
-        ),
-        reverse=True,
-    )
+    # sort before filtering: with a NaN key present, the order sorted()
+    # gives the other keys depends on the whole list
+    tiers = [
+        s
+        for s in sorted(counts, reverse=True)
+        if not s < baseline * 1.15 and (counts[s] >= 2 or s >= baseline * 1.5) and s in content
+    ]
     # outlier-top trim (analysis_new.py:83-86)
     tiers = tiers[1:5] if len(tiers) >= 2 and tiers[0] > tiers[1] * 1.3 else tiers[:4]
 
@@ -383,7 +376,7 @@ def analyze_doc(rows: list[tuple]) -> tuple[str, list[dict]]:
     score = []
     for i in range(n):
         s = size[i]
-        ratio = s / baseline if baseline > 0 else 0.0
+        ratio = s / baseline if baseline else 0.0
         k = tier_rank.get(s)
         if k is not None:
             v = 25 - k * 3

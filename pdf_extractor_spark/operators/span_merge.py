@@ -51,61 +51,37 @@ def merge_doc_spans(pages: list[dict]) -> tuple[list[tuple], float]:
                     if not txt.strip():
                         continue
                     bx = sp["bbox"]
-                    if text is None:
-                        font = sp["font"]
-                        size = sp["size"]
-                        text = txt
-                        x0 = bx[0]
-                        y0 = bx[1]
-                        x1 = bx[2]
-                        y1 = bx[3]
-                        italic = "italic" in font.lower()
-                        continue
-                    spf = sp["font"]
-                    sps = sp["size"]
-                    if not (
-                        spf == font
-                        and abs(sps - size) <= 1.0
+                    if (
+                        text is not None
+                        and sp["font"] == font
+                        and abs(sp["size"] - size) <= 1.0
                         and abs(bx[1] - y0) <= max(size * 0.2, 2)
                     ):
-                        if text.strip():
-                            append((pno, text, size, font, x0, y0, x1, y1, italic))
-                        font = spf
-                        size = sps
-                        text = txt
-                        x0 = bx[0]
-                        y0 = bx[1]
-                        x1 = bx[2]
-                        y1 = bx[3]
-                        italic = "italic" in font.lower()
-                        continue
-                    gap = bx[0] - x1
-                    if gap < 0 or gap <= size * 0.3:
-                        text = text + txt
-                    elif gap <= size * 1.5:
-                        text = text + " " + txt
-                    else:
-                        # flush + restart WITHOUT bbox union (:51-73)
-                        if text.strip():
-                            append((pno, text, size, font, x0, y0, x1, y1, italic))
-                        font = spf
-                        size = sps
-                        text = txt
-                        x0 = bx[0]
-                        y0 = bx[1]
-                        x1 = bx[2]
-                        y1 = bx[3]
-                        italic = "italic" in font.lower()
-                        continue
-                    if bx[0] < x0:
-                        x0 = bx[0]
-                    if bx[1] < y0:
-                        y0 = bx[1]
-                    if bx[2] > x1:
-                        x1 = bx[2]
-                    if bx[3] > y1:
-                        y1 = bx[3]
-                if text is not None and text.strip():
+                        gap = bx[0] - x1
+                        # the '' and ' ' arms of :51-73 (a gap ≥ 0 that is
+                        # ≤ 0.3·sz is also ≤ 1.5·sz)
+                        if gap < 0 or gap <= size * 1.5:
+                            text += txt if gap < 0 or gap <= size * 0.3 else " " + txt
+                            if bx[0] < x0:
+                                x0 = bx[0]
+                            if bx[1] < y0:
+                                y0 = bx[1]
+                            if bx[2] > x1:
+                                x1 = bx[2]
+                            if bx[3] > y1:
+                                y1 = bx[3]
+                            continue
+                    # first span, run mismatch, or a far gap: flush and
+                    # restart WITHOUT bbox union (:51-73). A run starts
+                    # on a non-blank span, so its text is never blank.
+                    if text is not None:
+                        append((pno, text, size, font, x0, y0, x1, y1, italic))
+                    font = sp["font"]
+                    size = sp["size"]
+                    text = txt
+                    x0, y0, x1, y1 = bx[0], bx[1], bx[2], bx[3]
+                    italic = "italic" in font.lower()
+                if text is not None:
                     append((pno, text, size, font, x0, y0, x1, y1, italic))
     return out, page_width
 

@@ -269,7 +269,6 @@ def _builder(
     app_name: str,
     master: str | None = None,
     shuffle_partitions: int | None = None,
-    arrow_batch_rows: int = 256,
     extra_conf: dict[str, str] | None = None,
 ) -> SparkSession.Builder:
     master = master or os.environ.get("SPARK_GRAFT_MASTER", f"local[{_host_cpus()}]")
@@ -283,7 +282,13 @@ def _builder(
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.sql.execution.arrow.maxRecordsPerBatch", str(arrow_batch_rows))
+        # An Arrow batch closes at 256 rows or right after the row that
+        # takes it past 64 MiB. The byte cap (Spark's default, named
+        # here) is what bounds a Python worker's batch: pages rows carry
+        # multi-MB payloads, so 4 MB docs arrive ~17 to a batch, and a
+        # doc over 64 MiB is a batch of its own.
+        .config("spark.sql.execution.arrow.maxRecordsPerBatch", "256")
+        .config("spark.sql.execution.arrow.maxBytesPerBatch", str(64 * 1024 * 1024))
         .config("spark.sql.parquet.compression.codec", "zstd")
         # fat-payload scan granularity: pages rows carry multi-KB..MB
         # binary payloads, so 128 MB splits (default) bin-pack many
@@ -317,15 +322,9 @@ def get_spark(
     app_name: str = "pdf_extractor_spark",
     master: str | None = None,
     shuffle_partitions: int | None = None,
-    arrow_batch_rows: int = 256,
     extra_conf: dict[str, str] | None = None,
 ) -> SparkSession:
     """Build (or fetch) a SparkSession.
-
-    arrow_batch_rows is deliberately small: a pages row can carry a
-    multi-MB binary payload, so the Arrow batch size — not the row
-    count — is what bounds Python-worker memory. 256 fat rows per
-    batch keeps a worker under ~1 GB even for 4 MB documents.
 
     When this call launches the driver JVM, it starts the JVM on the
     host's class-data-sharing archive (driver_cds), merged ahead of
@@ -333,7 +332,7 @@ def get_spark(
     spark-submit the JVM is already running: pass the options that
     ``python -m pdf_extractor_spark.session`` prints instead.
     """
-    builder = _builder(app_name, master, shuffle_partitions, arrow_batch_rows, extra_conf)
+    builder = _builder(app_name, master, shuffle_partitions, extra_conf)
     launch_env: dict[str, str] = {}
     if _launches_jvm():
         cds = driver_cds()

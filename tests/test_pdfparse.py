@@ -8,6 +8,8 @@ span-geometry parity is untestable; what IS testable and gated:
   - the pure-Python parser handles the full feature matrix the corpus
     exercises (classic xref + xref streams + ObjStm + Identity-H +
     WinAnsi/Differences), as probed per-file.
+Tests that read the fixtures skip without them (``needs_fixtures``);
+the rest build their own PDFs.
 """
 
 from __future__ import annotations
@@ -18,7 +20,7 @@ from pathlib import Path
 import pytest
 
 FIXTURES = Path("/root/reference/input")
-pytestmark = pytest.mark.skipif(
+needs_fixtures = pytest.mark.skipif(
     not FIXTURES.exists(), reason="reference fixture corpus not present"
 )
 
@@ -59,6 +61,7 @@ def _extract_one(name: str):
     return pages, (key, title, outline)
 
 
+@needs_fixtures
 @pytest.mark.parametrize("name", sorted(GOLDEN_TITLES))
 def test_fixture_parses_and_title_golden(name):
     pages, (_url, title, outline) = _extract_one(name)
@@ -72,6 +75,7 @@ def test_fixture_parses_and_title_golden(name):
     json.dumps({"title": title, "outline": outline}, indent=2, ensure_ascii=False)
 
 
+@needs_fixtures
 def test_fixture_outline_structure_golden():
     _, (_u, _t, outline02) = _extract_one("file02")
     texts = [o["text"].strip() for o in outline02]
@@ -82,12 +86,14 @@ def test_fixture_outline_structure_golden():
     assert [o["level"] for o in outline04] == ["H1"]
 
 
+@needs_fixtures
 def test_determinism_byte_stable():
     a = _extract_one("file03")[1]
     b = _extract_one("file03")[1]
     assert json.dumps(a[2]) == json.dumps(b[2]) and a[1] == b[1]
 
 
+@needs_fixtures
 def test_spark_end_to_end_binary_source(spark):
     """S1+S2 closed: directory scan → real-PDF parse → outline, all
     inside the mapInPandas stage, parse_ok=true for every fixture."""
@@ -114,6 +120,7 @@ def test_malformed_pdf_is_s4_failure(spark):
     assert all(r.error for r in rows)
 
 
+@needs_fixtures
 def test_generated_pdfs_byte_identical_to_reference(spark):
     """Full-loop differential on the real-%PDF path: generate minimal
     PDFs (corpus.random_pdf), parse with pdfparse, feed the SAME spans
@@ -255,6 +262,7 @@ def test_corrupt_mediabox_and_resources_repair():
     assert isinstance(bad_res, list)  # parses; text may be unstyled/absent
 
 
+@needs_fixtures
 def test_fuzzed_pdfs_never_hang(spark):
     """Robustness at corpus scale: random truncations, bit flips, and
     splices of real and generated PDFs must either parse or raise —
@@ -339,3 +347,37 @@ def test_fuzzed_pdfs_never_hang(spark):
     )
     rows = extract_pages(df).select("url", "parse_ok").collect()
     assert len(rows) == 40
+
+
+def test_nan_size_span_beside_title_matches_refimpl():
+    """A `1e999 Tf` span under a zero text matrix parses to size nan.
+    Beside a 24 pt title on page 0, the outline JSON must still be the
+    reference's, whose first-page order and max_fs come from Python's
+    sorted(), NaN included."""
+    import math
+
+    import pandas as pd
+    import refimpl
+
+    from pdf_extractor_spark import corpus
+    from pdf_extractor_spark.operators.extract import _process_batch
+    from pdf_extractor_spark.sources import pdfparse
+
+    pdf = corpus.pdf_of_pages(
+        [
+            b"BT /F1 24 Tf 72 700 Td (Big Title Here) Tj ET\n"
+            b"BT /F1 1e999 Tf 0 0 0 0 72 650 Tm (Hidden Span) Tj ET",
+            b"BT /F1 18 Tf 72 700 Td (Methods Overview) Tj ET\n"
+            b"BT /F1 11 Tf 72 670 Td (The body text of the second page is here.) Tj ET\n"
+            b"BT /F1 11 Tf 72 650 Td (Another line of body text on this page.) Tj ET",
+        ]
+    )
+    pages = pdfparse.extract_spans(pdf)
+    sizes = [sp["size"] for b in pages[0]["blocks"] for ln in b for sp in ln]
+    assert any(math.isnan(s) for s in sizes)
+
+    expected = refimpl.render_json(refimpl.extract_document(pages))
+    assert json.loads(expected)["title"] == "Big Title Here"
+    out = _process_batch(pd.DataFrame({"url": ["u"], "html": [pdf]}))
+    assert out["parse_ok"][0], out["error"][0]
+    assert out["outline_json"][0] == expected
