@@ -413,6 +413,21 @@ def build_pages_rows(n_docs: int, seed: int = 42, html_fraction: float = 0.25) -
     return rows
 
 
+def executor_rows(spark, n: int, n_slices: int, schema: str, rows_of):
+    """DataFrame of ``rows_of(i)`` for every id in ``range(n)``, built ON
+    THE EXECUTORS (mapInPandas over ``spark.range`` in ``n_slices``
+    even slices) — no driver-side row building, so generation scales
+    with cores exactly like a real scan would. ``rows_of`` returns an
+    iterable of row dicts matching ``schema``."""
+    import pandas as pd
+
+    def gen(batches):
+        for pdf in batches:
+            yield pd.DataFrame([row for i in pdf["id"] for row in rows_of(int(i))])
+
+    return spark.range(0, n, 1, n_slices).mapInPandas(gen, schema=schema)
+
+
 def distributed_pages(
     spark,
     n_docs: int,
@@ -420,24 +435,14 @@ def distributed_pages(
     html_fraction: float = 0.25,
     heavy_tail_every: int | None = None,
 ):
-    """pages DataFrame synthesized ON THE EXECUTORS (mapInPandas over
-    spark.range) — no driver-side row building, so corpus generation
-    scales with cores exactly like a real WARC scan would."""
-    import pandas as pd
-
-    def gen(batches):
-        for pdf in batches:
-            rows = [
-                build_pages_row(
-                    int(i), seed, html_fraction, heavy_tail_every=heavy_tail_every
-                )
-                for i in pdf["id"]
-            ]
-            yield pd.DataFrame(rows)
-
-    n_parts = spark.sparkContext.defaultParallelism * 4  # even slices
-    return spark.range(0, n_docs, 1, n_parts).mapInPandas(
-        gen, schema="url string, warc_ts timestamp, html binary, text string, lang string"
+    """pages DataFrame of ``build_pages_row(i, ...)`` for i < n_docs,
+    synthesized on the executors in 4 even slices per core."""
+    return executor_rows(
+        spark,
+        n_docs,
+        spark.sparkContext.defaultParallelism * 4,
+        "url string, warc_ts timestamp, html binary, text string, lang string",
+        lambda i: [build_pages_row(i, seed, html_fraction, heavy_tail_every=heavy_tail_every)],
     )
 
 

@@ -417,57 +417,3 @@ def repartition_if_heavy(pages: DataFrame) -> tuple[DataFrame, dict | None]:
     pages, stats = size_aware_repartition(pages, target_partition_bytes=target, big_threshold=big)
     return pages, {**stats, "auto": det}
 
-
-def partition_payload_stats(df: DataFrame, payload_col: str = "html") -> dict:
-    """Measure the ACTUAL per-task payload distribution of ``df``'s
-    current partitioning: one pass, two bytes-and-count aggregates
-    keyed by ``spark_partition_id()``.  This is the OOM-guard
-    evidence the north rule asks for — the bound a task's Arrow
-    stage must hold in memory is (payload bytes it was handed),
-    and this returns its max/mean alongside the largest single
-    document, so a test (or an audit run) can assert
-    ``max_partition_payload_bytes`` stays near the repartition
-    target instead of trusting the sizing arithmetic."""
-    plen = F.coalesce(F.length(payload_col).cast("long"), F.lit(0))
-    per = (
-        df.select(F.spark_partition_id().alias("pid"), plen.alias("b"))
-        .groupBy("pid")
-        .agg(F.sum("b").alias("bytes"), F.max("b").alias("max_doc"))
-    )
-    # second-level aggregate stays distributed: the driver receives ONE
-    # row even when the table has millions of partitions at 100 TB
-    summary = per.agg(
-        F.count("*").alias("n"),
-        F.max("bytes").alias("max_bytes"),
-        F.sum("bytes").alias("total"),
-        F.max("max_doc").alias("max_doc"),
-    ).first()
-    n = summary["n"] or 0
-    total = int(summary["total"] or 0)
-    return {
-        "n_partitions": n,
-        "max_partition_payload_bytes": int(summary["max_bytes"] or 0),
-        "mean_partition_payload_bytes": int(total / n) if n else 0,
-        "max_doc_bytes": int(summary["max_doc"] or 0),
-        "total_payload_bytes": total,
-    }
-
-
-def write_bucketed_table(
-    df: DataFrame, name: str, n_buckets: int = 32, key: str = "url", sort: bool = True
-) -> None:
-    """Persist as a Spark bucketed table (bucketBy on the join key).
-
-    This is the parquet-catalog twin of Iceberg's bucket(N, url)
-    transform: two tables bucketed the same way join WITHOUT any
-    exchange (the SortMergeJoin reads co-located buckets directly) —
-    at 10^12 documents the enrichment joins (result ⋈ labels,
-    result ⋈ crawl-metadata) would otherwise each reshuffle the whole
-    corpus. Requires a session with a warehouse dir (any Spark
-    default); `sort=True` also pre-sorts within buckets so the join
-    skips its sort.
-    """
-    w = df.write.mode("overwrite").format("parquet").bucketBy(n_buckets, key)
-    if sort:
-        w = w.sortBy(key)
-    w.saveAsTable(name)

@@ -1,4 +1,4 @@
-"""Page-layout operators: header/footer suppression and multi-column
+"""Page-layout operators: header/footer flags and multi-column
 reading-order reconstruction.
 
 The reference's analyzer treats the block list as already being in
@@ -26,7 +26,7 @@ def header_footer_flags(
     recurrence: float = 0.6,
     y_bin: float = 120.0,
 ) -> DataFrame:
-    """Flag page furniture: a block is suppressed when the same text at
+    """Flag page furniture: a block is flagged when the same text at
     the same vertical band (floor(y0 / y_bin)) recurs on at least
     ``recurrence`` of the document's pages, for documents with at
     least ``min_pages`` pages — the classic header/footer heuristic
@@ -62,25 +62,6 @@ def header_footer_flags(
         )
     )
     return flagged
-
-
-def suppress_headers_footers(
-    blocks: DataFrame,
-    min_pages: int = 3,
-    recurrence: float = 0.6,
-    y_bin: float = 120.0,
-) -> DataFrame:
-    """blocks minus the flagged furniture (the consuming form).
-
-    Left join + coalesce: a block absent from the flag table (e.g.
-    NULL block_text never matches the recurrence self-join) must be
-    KEPT, not silently dropped by an inner join."""
-    flags = header_footer_flags(blocks, min_pages, recurrence, y_bin)
-    return (
-        blocks.join(flags, ["doc_id", "block_idx"], "left")
-        .filter(~F.coalesce(F.col("is_furniture"), F.lit(False)))
-        .drop("is_furniture")
-    )
 
 
 def multicol_reading_order(

@@ -124,62 +124,6 @@ def media_from_documents(docs: DataFrame, kind: str = "image") -> DataFrame:
 
 
 # ------------------------------------------------------------- operators
-def image_features(media: DataFrame) -> DataFrame:
-    """Per-image channel stats + an 8x8 block-mean perceptual hash.
-    One vectorized Python stage; output is thin (stats only), so the
-    fat payload column dies at this stage boundary — at 100 TB that
-    column pruning is the difference between shuffling KB and TB."""
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for mid, payload in zip(pdf["media_id"], pdf["payload"]):
-                arr = decode_image_bytes(bytes(payload))
-                h, w, c = arr.shape
-                gray = arr.mean(axis=2)
-                # 8x8 block means -> bits vs median -> 64-bit phash
-                ys = np.linspace(0, h, 9, dtype=int)
-                xs = np.linspace(0, w, 9, dtype=int)
-                blocks = np.array(
-                    [gray[ys[i]:ys[i+1], xs[j]:xs[j+1]].mean() for i in range(8) for j in range(8)]
-                )
-                bits = (blocks > np.median(blocks)).astype(np.uint64)
-                phash = int((bits << np.arange(64, dtype=np.uint64)).sum())
-                rows.append({
-                    "media_id": int(mid), "width": w, "height": h,
-                    "mean_r": float(arr[:, :, 0].mean()), "mean_g": float(arr[:, :, 1].mean()),
-                    "mean_b": float(arr[:, :, 2].mean()), "std_gray": float(gray.std()),
-                    "phash64": phash - (1 << 64) if phash >= (1 << 63) else phash,
-                })
-            yield pd.DataFrame(rows)
-
-    schema = ("media_id long, width int, height int, mean_r double, mean_g double, "
-              "mean_b double, std_gray double, phash64 long")
-    return media.select("media_id", "payload").mapInPandas(run, schema=schema)
-
-
-def resize_images(media: DataFrame, out_w: int = 8, out_h: int = 8) -> DataFrame:
-    """Nearest-neighbour resize to (out_w, out_h), re-encoded as FIMG.
-    Payload-in/payload-out: the canonical thumbnailing stage shape."""
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for mid, payload in zip(pdf["media_id"], pdf["payload"]):
-                arr = decode_image_bytes(bytes(payload))
-                h, w, _ = arr.shape
-                yi = (np.arange(out_h) * h // out_h)
-                xi = (np.arange(out_w) * w // out_w)
-                small = arr[yi][:, xi]
-                rows.append({"media_id": int(mid), "payload": encode_image_bytes(small),
-                             "width": out_w, "height": out_h})
-            yield pd.DataFrame(rows)
-
-    return media.select("media_id", "payload").mapInPandas(
-        run, schema="media_id long, payload binary, width int, height int"
-    )
-
-
 def audio_features(media: DataFrame) -> DataFrame:
     """RMS energy / zero-crossing-rate / duration per clip."""
 

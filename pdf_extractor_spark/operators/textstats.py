@@ -42,8 +42,10 @@ def quality_features(docs: DataFrame, id_col: str = "doc_id", text_col: str = "t
     The repetition signals are explode → groupBy counts (codegen,
     map-side combinable: the shuffle carries one row per DISTINCT
     (doc, gram), not per occurrence) rather than per-row HOF counting,
-    which is O(words x distinct) interpreted — the measured law in
-    BENCH/TRADEOFFS.md: explode wins at word fan-out."""
+    which is O(words x distinct) interpreted. Spark interprets
+    higher-order array functions but runs explode + groupBy under
+    whole-stage codegen, so at word fan-out (~10^2 rows per doc, a
+    combinable aggregate after it) explode wins."""
     # Single tokenization pass: every signal — including the former
     # array-expression features — is derivable from the per-(doc, gram)
     # count relation, so the document is split exactly once, there is

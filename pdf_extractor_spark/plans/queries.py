@@ -1229,27 +1229,18 @@ def pdf_payload_extract(spark, sf_dir):
     seed); byte-level correctness of the analysis on PDF-derived
     spans is gated by tests/test_pdfparse.py +
     tests/test_refimpl_vs_reference.py."""
-    import pandas as pd
+    import random
 
     from .. import corpus as corpus_mod
     from ..operators.extract import extract_pages
 
-    n = 500
+    def rows_of(i):
+        return [
+            {"url": f"https://pdf.example.com/doc/{i:06d}",
+             "html": corpus_mod.random_pdf(random.Random(77_000 + i))}
+        ]
 
-    def gen(batches):
-        import random
-
-        for pdf in batches:
-            rows = []
-            for i in pdf["id"]:
-                r = random.Random(77_000 + int(i))
-                rows.append(
-                    {"url": f"https://pdf.example.com/doc/{int(i):06d}",
-                     "html": corpus_mod.random_pdf(r)}
-                )
-            yield pd.DataFrame(rows)
-
-    pages = spark.range(0, n, 1, 16).mapInPandas(gen, schema="url string, html binary")
+    pages = corpus_mod.executor_rows(spark, 500, 16, "url string, html binary", rows_of)
     return extract_pages(pages).select("url", "title", "outline_json", "parse_ok")
 
 
@@ -1281,42 +1272,32 @@ def pdf_parse_stats(spark, sf_dir):
     oracle is the generator's OWN line plan (corpus.pdf_truth_stats),
     so a value-hash match proves the parse reproduces exactly what the
     PDFs were constructed from — no parser-vs-itself circularity."""
-    import pandas as pd
+    import random
 
     from .. import corpus as corpus_mod
     from ..sources import payload as payload_mod
 
-    n = 300
+    def spans_of(i):
+        pages = payload_mod.parse_pdf(corpus_mod.random_pdf(random.Random(77_000 + i)))
+        url = f"https://pdf.example.com/doc/{i:06d}"
+        k = 0
+        for pnum, pg in enumerate(pages):
+            for blk in pg["blocks"]:
+                for line in blk:
+                    for sp in line:
+                        yield {
+                            "url": url,
+                            "span_idx": k,
+                            "page_num": pnum,
+                            "size": float(sp["size"]),
+                            "text": sp["text"],
+                        }
+                        k += 1
 
-    def gen(batches):
-        import random
-
-        for b in batches:
-            out = []
-            for i in b["id"]:
-                i = int(i)
-                pdf_bytes = corpus_mod.random_pdf(random.Random(77_000 + i))
-                pages = payload_mod.parse_pdf(pdf_bytes)
-                url = f"https://pdf.example.com/doc/{i:06d}"
-                k = 0
-                for pnum, pg in enumerate(pages):
-                    for blk in pg["blocks"]:
-                        for line in blk:
-                            for sp in line:
-                                out.append(
-                                    {
-                                        "url": url,
-                                        "span_idx": k,
-                                        "page_num": pnum,
-                                        "size": float(sp["size"]),
-                                        "text": sp["text"],
-                                    }
-                                )
-                                k += 1
-            yield pd.DataFrame(out)
-
-    spans = spark.range(0, n, 1, 16).mapInPandas(
-        gen, schema="url string, span_idx int, page_num int, size double, text string"
+    spans = corpus_mod.executor_rows(
+        spark, 300, 16,
+        "url string, span_idx int, page_num int, size double, text string",
+        spans_of,
     )
     line = F.concat(F.col("size").cast("int").cast("string"), F.lit(":"), F.col("text"))
     return (
@@ -1338,8 +1319,8 @@ def _outline_stats_oracle(n: int = 400, seed_base: int = 88_000) -> str | None:
     oracle that tests/test_refimpl_vs_reference.py pins byte-identical
     to the ACTUAL reference code (extract_outline.py + analysis_new.py).
     refimpl shares NO code with the distributed path under test
-    (operators/analyzer.py runs its passes over merged-block tuples and
-    numpy arrays; refimpl is stdlib loops over per-block dicts), so a
+    (operators/analyzer.py runs its passes over merged-block tuples;
+    refimpl is stdlib loops over per-block dicts), so a
     hash match is construction-vs-execution
     evidence for the flagship analyzer, same pattern as
     pdf_parse_stats. Returns None when tests/refimpl.py is not on disk
@@ -1410,31 +1391,29 @@ def outline_stats(spark, sf_dir):
     per url; title/outline digests and per-level counts localize any
     divergence. Reference: extract_outline.py:131-137,
     utils/analysis_new.py:396."""
-    import pandas as pd
+    import random
 
     from .. import corpus as corpus_mod
     from ..operators.extract import extract_pages
 
-    n = 400
+    def rows_of(i):
+        pages = corpus_mod.random_spandoc(random.Random(88_000 + i))
+        return [
+            {"url": f"https://span.example.com/doc/{i:06d}",
+             "html": corpus_mod.spandoc_to_payload(pages)}
+        ]
 
-    def gen(batches):
-        import random
-
-        for b in batches:
-            rows = []
-            for i in b["id"]:
-                i = int(i)
-                pages = corpus_mod.random_spandoc(random.Random(88_000 + i))
-                rows.append(
-                    {
-                        "url": f"https://span.example.com/doc/{i:06d}",
-                        "html": corpus_mod.spandoc_to_payload(pages),
-                    }
-                )
-            yield pd.DataFrame(rows)
-
-    pages = spark.range(0, n, 1, 16).mapInPandas(gen, schema="url string, html binary")
+    pages = corpus_mod.executor_rows(spark, 400, 16, "url string, html binary", rows_of)
     res = extract_pages(pages).filter(F.col("parse_ok"))
+    return res.select("url", *(c.alias(k) for k, c in _outline_digests().items()))
+
+
+def _outline_digests(with_text_md5: bool = False) -> dict:
+    """Per-url digest columns over an extraction result, computed
+    JVM-side (from_json + higher-order functions): outline length,
+    per-level counts, and md5s of the title, the ``level:text:page``
+    outline string and the outline_json bytes, in that column order.
+    ``with_text_md5`` adds the md5 of main_text after title_md5."""
     o = F.from_json(
         F.col("outline_json"),
         "struct<title:string, outline:array<struct<level:string,text:string,page:int>>>",
@@ -1442,7 +1421,11 @@ def outline_stats(spark, sf_dir):
     outline = o.getField("outline")
 
     def _lvl(level: str):
-        return F.size(F.filter(outline, lambda x: x.getField("level") == F.lit(level)))
+        n = F.size(F.filter(outline, lambda x: x.getField("level") == F.lit(level)))
+        return n.cast("bigint")
+
+    def _md5(c):
+        return F.md5(c.cast("binary"))
 
     entry_str = F.transform(
         outline,
@@ -1453,16 +1436,18 @@ def outline_stats(spark, sf_dir):
             x.getField("page").cast("string"),
         ),
     )
-    return res.select(
-        "url",
-        F.size(outline).cast("bigint").alias("n_outline"),
-        _lvl("H1").cast("bigint").alias("n_h1"),
-        _lvl("H2").cast("bigint").alias("n_h2"),
-        _lvl("H3").cast("bigint").alias("n_h3"),
-        F.md5(F.coalesce(o.getField("title"), F.lit("")).cast("binary")).alias("title_md5"),
-        F.md5(F.concat_ws("\n", entry_str).cast("binary")).alias("outline_md5"),
-        F.md5(F.col("outline_json").cast("binary")).alias("json_md5"),
-    )
+    cols = {
+        "n_outline": F.size(outline).cast("bigint"),
+        "n_h1": _lvl("H1"),
+        "n_h2": _lvl("H2"),
+        "n_h3": _lvl("H3"),
+        "title_md5": _md5(F.coalesce(o.getField("title"), F.lit(""))),
+    }
+    if with_text_md5:
+        cols["text_md5"] = _md5(F.coalesce(F.col("main_text"), F.lit("")))
+    cols["outline_md5"] = _md5(F.concat_ws("\n", entry_str))
+    cols["json_md5"] = _md5(F.col("outline_json"))
+    return cols
 
 
 _HTML_STATS_N_GEN = 151
@@ -1587,7 +1572,7 @@ def html_stats(spark, sf_dir):
     (the north rule's tier-extraction output); the degenerate fixtures
     stay as parse_ok=false rows committing to the S4 routing.
     Reference scope: SURVEY §2.11."""
-    import pandas as pd
+    import random
 
     from .. import corpus as corpus_mod
     from ..operators.extract import extract_pages
@@ -1617,72 +1602,21 @@ def html_stats(spark, sf_dir):
             fix,
         )
 
-    def gen(batches):
-        import random
+    def rows_of(i):
+        return [
+            {"url": f"gen/{i:06d}",
+             "html": corpus_mod.random_html(random.Random(_HTML_STATS_SEED + i))}
+        ]
 
-        for b in batches:
-            rows = []
-            for i in b["id"]:
-                i = int(i)
-                rows.append(
-                    {
-                        "url": f"gen/{i:06d}",
-                        "html": corpus_mod.random_html(
-                            random.Random(_HTML_STATS_SEED + i)
-                        ),
-                    }
-                )
-            yield pd.DataFrame(rows)
-
-    gen_pages = spark.range(0, _HTML_STATS_N_GEN, 1, 8).mapInPandas(
-        gen, schema="url string, html binary"
+    gen_pages = corpus_mod.executor_rows(
+        spark, _HTML_STATS_N_GEN, 8, "url string, html binary", rows_of
     )
     pages = gen_pages if fixtures is None else fixtures.unionByName(gen_pages)
-    res = extract_pages(pages)
-    o = F.from_json(
-        F.col("outline_json"),
-        "struct<title:string, outline:array<struct<level:string,text:string,page:int>>>",
-    )
-    outline = o.getField("outline")
-
-    def _lvl(level: str):
-        return F.size(F.filter(outline, lambda x: x.getField("level") == F.lit(level)))
-
     ok = F.col("parse_ok")
-
-    def _ifok(c):
-        return F.when(ok, c)
-
-    return res.select(
+    return extract_pages(pages).select(
         "url",
         "parse_ok",
-        _ifok(F.size(outline).cast("bigint")).alias("n_outline"),
-        _ifok(_lvl("H1").cast("bigint")).alias("n_h1"),
-        _ifok(_lvl("H2").cast("bigint")).alias("n_h2"),
-        _ifok(_lvl("H3").cast("bigint")).alias("n_h3"),
-        _ifok(
-            F.md5(F.coalesce(o.getField("title"), F.lit("")).cast("binary"))
-        ).alias("title_md5"),
-        _ifok(F.md5(F.coalesce(F.col("main_text"), F.lit("")).cast("binary"))).alias(
-            "text_md5"
-        ),
-        _ifok(
-            F.md5(
-                F.concat_ws(
-                    "\n",
-                    F.transform(
-                        outline,
-                        lambda x: F.concat_ws(
-                            ":",
-                            x.getField("level"),
-                            x.getField("text"),
-                            x.getField("page").cast("string"),
-                        ),
-                    ),
-                ).cast("binary")
-            )
-        ).alias("outline_md5"),
-        _ifok(F.md5(F.col("outline_json").cast("binary"))).alias("json_md5"),
+        *(F.when(ok, c).alias(k) for k, c in _outline_digests(with_text_md5=True).items()),
     )
 
 

@@ -195,72 +195,3 @@ def session_windows(
         )
     )
 
-
-def stateful_user_totals(events: DataFrame) -> DataFrame:
-    """Custom stateful streaming operator (applyInPandasWithState):
-    per-user running (n_events, total_value) maintained in explicit
-    group state across micro-batches, emitting the updated row per
-    user per batch. This is the escape hatch for operators Spark's
-    built-in aggregations can't express (per-key custom accumulators,
-    decaying counters, online sketches); the final emitted row per
-    user equals the batch groupBy aggregate — the test oracle.
-
-    On a BATCH frame (applyInPandasWithState is streaming-only) this
-    falls back to the equivalent groupBy aggregate, keeping the
-    module's works-on-both-frames contract.
-    """
-    import pandas as pd
-    from pyspark.sql.streaming.state import GroupStateTimeout
-
-    if not events.isStreaming:
-        return events.groupBy("user_id").agg(
-            F.count("*").alias("n_events"),
-            F.round(F.sum("value"), 6).alias("total_value"),
-        )
-
-    def update_fn(key, pdfs, state):
-        (user_id,) = key
-        n, total = state.get if state.exists else (0, 0.0)
-        for pdf in pdfs:
-            n += len(pdf)
-            total += float(pdf["value"].sum())
-        state.update((n, total))
-        yield pd.DataFrame(
-            {"user_id": [user_id], "n_events": [n], "total_value": [round(total, 6)]}
-        )
-
-    return (
-        events.withColumn("ts", F.col("ts").cast("timestamp"))
-        .groupBy("user_id")
-        .applyInPandasWithState(
-            update_fn,
-            outputStructType="user_id long, n_events long, total_value double",
-            stateStructType="n long, total double",
-            outputMode="update",
-            timeoutConf=GroupStateTimeout.NoTimeout,
-        )
-    )
-
-
-def streaming_dedup(
-    pages: DataFrame, watermark: str = "10 minutes", key: str = "url"
-) -> DataFrame:
-    """Streaming exact dedup: drop re-crawled/duplicate urls within the
-    watermark horizon — the incremental twin of exact_duplicates and a
-    core training-data ingestion stage (a crawl emits the same url
-    from multiple seeds/retries). State is bounded by the watermark:
-    keys older than the horizon are evicted, so this runs forever on
-    an unbounded crawl. Use dropDuplicates (no watermark bound) only
-    for bounded backfills.
-
-    Input must carry an event-time column ``warc_ts``.
-
-    On a BATCH frame (dropDuplicatesWithinWatermark is streaming-only)
-    this falls back to plain dropDuplicates — a bounded backfill has no
-    state-eviction concern.
-    """
-    if not pages.isStreaming:
-        return pages.dropDuplicates([key])
-    return pages.withWatermark("warc_ts", watermark).dropDuplicatesWithinWatermark(
-        [key]
-    )

@@ -39,34 +39,6 @@ def media_tables(spark, sf_dir):
     }
 
 
-def test_image_features_match_numpy(media_tables):
-    feats = {r["media_id"]: r for r in MM.image_features(media_tables["image"]).collect()}
-    assert len(feats) == 64
-    for mid in list(feats)[:8]:
-        rng = np.random.default_rng(mid)
-        w, h = 16 + mid % 48, 16 + (mid * 7) % 48
-        arr = rng.integers(0, 256, size=(h, w, 3), dtype=np.uint8)
-        row = feats[mid]
-        assert row["width"] == w and row["height"] == h
-        assert row["mean_r"] == pytest.approx(arr[:, :, 0].mean())
-        assert row["std_gray"] == pytest.approx(arr.mean(axis=2).std())
-
-
-def test_resize_shape_and_content(media_tables):
-    rows = MM.resize_images(media_tables["image"], out_w=8, out_h=8).collect()
-    assert len(rows) == 64
-    for r in rows[:8]:
-        arr = MM.decode_image_bytes(bytes(r["payload"]))
-        assert arr.shape == (8, 8, 3)
-        # nearest-neighbour: every output pixel exists in the source
-        rng = np.random.default_rng(r["media_id"])
-        w, h = 16 + r["media_id"] % 48, 16 + (r["media_id"] * 7) % 48
-        src = rng.integers(0, 256, size=(h, w, 3), dtype=np.uint8)
-        yi = np.arange(8) * h // 8
-        xi = np.arange(8) * w // 8
-        assert (arr == src[yi][:, xi]).all()
-
-
 def test_audio_features_match_numpy(media_tables):
     rows = {r["media_id"]: r for r in MM.audio_features(media_tables["audio"]).collect()}
     for mid in list(rows)[:8]:

@@ -111,42 +111,3 @@ def test_binary_file_source_s1_parity(spark, tmp_path):
     )
     for name, row in zip(direct["url"], direct["outline_json"]):
         assert got[name]["outline_json"] == row
-
-
-def test_bucketed_join_is_shuffle_free(spark, tmp_path):
-    """Two tables bucketed on url join with ZERO exchanges — the
-    co-located-join property the bucket layout exists for."""
-    import io as _io
-    from contextlib import redirect_stdout
-
-    import pyspark.sql.functions as F
-
-    from pdf_extractor_spark import io as pio
-
-    a = spark.range(2000).select(
-        F.concat(F.lit("https://h/"), F.col("id")).alias("url"),
-        (F.col("id") % 7).alias("score"),
-    )
-    b = spark.range(2000).select(
-        F.concat(F.lit("https://h/"), F.col("id")).alias("url"),
-        (F.col("id") % 3).alias("label"),
-    )
-    pio.write_bucketed_table(a, "bkt_a", n_buckets=8)
-    pio.write_bucketed_table(b, "bkt_b", n_buckets=8)
-    prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    try:
-        # disable broadcast so the planner actually uses the bucket
-        # layout (at 10^12 docs neither side is broadcastable anyway)
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-        joined = spark.table("bkt_a").join(spark.table("bkt_b"), "url")
-        assert joined.count() == 2000
-        buf = _io.StringIO()
-        with redirect_stdout(buf):
-            joined.explain("formatted")
-        plan = buf.getvalue().split("\n\n(1)")[0]
-        assert "SortMergeJoin" in plan, plan
-        assert "Exchange" not in plan, plan
-    finally:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
-        spark.sql("DROP TABLE IF EXISTS bkt_a")
-        spark.sql("DROP TABLE IF EXISTS bkt_b")

@@ -131,30 +131,3 @@ def test_stray_end_tags_and_void_tags_are_harmless():
     )
     res = extract_html(page.encode())
     assert "universally acknowledged" in res["main_text"]
-
-
-# -- streaming/pipeline.py batch fallbacks -------------------------------
-
-
-def test_stateful_user_totals_batch_fallback(spark):
-    from pdf_extractor_spark.streaming import pipeline
-
-    events = spark.createDataFrame(
-        [(f"u{i % 3}", float(i)) for i in range(30)], "user_id string, value double"
-    )
-    rows = {
-        r["user_id"]: r
-        for r in pipeline.stateful_user_totals(events).collect()
-    }
-    assert rows["u0"]["n_events"] == 10
-    assert rows["u1"]["total_value"] == pytest.approx(sum(range(1, 30, 3)))
-
-
-def test_streaming_dedup_batch_fallback(spark):
-    from pdf_extractor_spark.streaming import pipeline
-
-    pages = spark.createDataFrame(
-        [("a",), ("a",), ("b",)], "url string"
-    ).selectExpr("url", "timestamp('2024-01-01 00:00:00') as warc_ts")
-    out = pipeline.streaming_dedup(pages, key="url")
-    assert sorted(r["url"] for r in out.collect()) == ["a", "b"]

@@ -19,14 +19,43 @@ median page count); these tests prove, against the ACTUAL task layout
 from __future__ import annotations
 
 import pytest
+from pyspark.sql import functions as F
 
 from pdf_extractor_spark import corpus
-from pdf_extractor_spark.io import partition_payload_stats, size_aware_repartition
+from pdf_extractor_spark.io import size_aware_repartition
 from pdf_extractor_spark.operators.extract import extract_pages
 
 N_DOCS = 1500
 HEAVY_EVERY = 101  # ~15 giants in 1500 docs
 SEED = 7
+
+
+def partition_payload_stats(df):
+    """The ACTUAL per-task payload distribution of ``df``'s current
+    partitioning, keyed by ``spark_partition_id()``: the bytes a task's
+    Arrow stage is handed, so the tests assert against the task layout
+    instead of trusting the sizing arithmetic."""
+    plen = F.coalesce(F.length("html").cast("long"), F.lit(0))
+    per = (
+        df.select(F.spark_partition_id().alias("pid"), plen.alias("b"))
+        .groupBy("pid")
+        .agg(F.sum("b").alias("bytes"), F.max("b").alias("max_doc"))
+    )
+    summary = per.agg(
+        F.count("*").alias("n"),
+        F.max("bytes").alias("max_bytes"),
+        F.sum("bytes").alias("total"),
+        F.max("max_doc").alias("max_doc"),
+    ).first()
+    n = summary["n"] or 0
+    total = int(summary["total"] or 0)
+    return {
+        "n_partitions": n,
+        "max_partition_payload_bytes": int(summary["max_bytes"] or 0),
+        "mean_partition_payload_bytes": int(total / n) if n else 0,
+        "max_doc_bytes": int(summary["max_doc"] or 0),
+        "total_payload_bytes": total,
+    }
 
 
 def _giant_indices():
@@ -62,6 +91,33 @@ def test_dense_heavy_tail_still_plants_giants():
     ]
     sizes = sorted(len(r["html"]) for r in rows)
     assert sizes[-1] > 20 * sizes[0]  # giants present
+
+
+@pytest.mark.parametrize("seed, heavy_every", [(11, None), (SEED, HEAVY_EVERY)])
+def test_distributed_pages_is_build_pages_row(spark, seed, heavy_every):
+    """The executor-side corpus (session warm-up and bench input) is
+    exactly build_pages_row(i) for every i, in 4 slices per core."""
+    n, html_fraction = 400, 0.3
+    df = corpus.distributed_pages(
+        spark, n, seed=seed, html_fraction=html_fraction, heavy_tail_every=heavy_every
+    )
+    assert df.rdd.getNumPartitions() == 4 * spark.sparkContext.defaultParallelism
+    got = {
+        r["url"]: r.asDict()
+        for r in df.withColumn("warc_ts", F.col("warc_ts").cast("long")).collect()
+    }
+    assert len(got) == n
+    sizes = []
+    for i in range(n):
+        want = corpus.build_pages_row(i, seed, html_fraction, heavy_tail_every=heavy_every)
+        want["warc_ts"] = int(want["warc_ts"].timestamp())
+        g = got[want["url"]]
+        g["html"] = bytes(g["html"])
+        assert g == want, i
+        sizes.append(len(want["html"]))
+    sizes.sort()
+    # the heavy case really carries giants, the plain one does not
+    assert (sizes[-1] > 20 * sizes[n // 2]) == (heavy_every is not None)
 
 
 @pytest.fixture(scope="module")

@@ -184,77 +184,3 @@ def test_size_aware_repartition_bounds_partition_bytes(spark):
     # with the 400-doc small pool)
     giant_parts = [r for r in sizes if r["max_b"] > 64 << 10]
     assert giant_parts and all(r["rows"] <= 3 for r in giant_parts)
-
-
-def test_stateful_user_totals_matches_batch(spark, tmp_path):
-    """applyInPandasWithState: per-user state accumulated across
-    micro-batches; the last emitted row per user must equal the plain
-    batch aggregate."""
-    import pyspark.sql.functions as F
-
-    ev_dir = str(tmp_path / "events")
-    events = spark.read.parquet("/root/testdata/sf0.001/events.parquet")
-    events.repartition(5).write.mode("overwrite").parquet(ev_dir)
-
-    stream = (
-        spark.readStream.schema(events.schema).option("maxFilesPerTrigger", 2).parquet(ev_dir)
-    )
-    name = f"state_{uuid.uuid4().hex[:8]}"
-    q = (
-        STRM.stateful_user_totals(stream)
-        .writeStream.format("memory")
-        .queryName(name)
-        .outputMode("update")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(300)
-    # update mode appends one row per user per micro-batch that touched
-    # it; the LAST row per user is the final state
-    got = {
-        r["user_id"]: (r["n_events"], r["total_value"])
-        for r in spark.table(name).collect()  # memory sink preserves batch order
-    }
-    want = {
-        r["user_id"]: (r["n"], r["t"])
-        for r in events.groupBy("user_id")
-        .agg(F.count("*").alias("n"), F.round(F.sum("value"), 6).alias("t"))
-        .collect()
-    }
-    assert got == want
-
-
-def test_streaming_dedup_drops_recrawls(spark, tmp_path):
-    """dropDuplicatesWithinWatermark on url: a corpus written twice
-    (re-crawl) streams through to exactly one row per url."""
-    import pandas as pd
-
-    from pdf_extractor_spark import corpus
-
-    pages_dir = str(tmp_path / "pages")
-    rows = corpus.build_pages_rows(40, seed=21)
-    df = spark.createDataFrame(pd.DataFrame(rows))
-    df.write.mode("overwrite").parquet(pages_dir)
-    df.write.mode("append").parquet(pages_dir)  # duplicate crawl
-
-    stream = (
-        spark.readStream.schema(df.schema)
-        .option("maxFilesPerTrigger", 2)
-        .parquet(pages_dir)
-    )
-    # watermark must exceed the corpus' event-time span (40 docs × 37 s
-    # ≈ 25 min): files arrive in arbitrary order, so a short horizon
-    # would DROP late first-appearances as late data, not dedup them
-    name = f"dedup_{uuid.uuid4().hex[:8]}"
-    q = (
-        STRM.streaming_dedup(stream, watermark="2 hours")
-        .writeStream.format("memory")
-        .queryName(name)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(300)
-    got = spark.table(name).select("url").collect()
-    urls = [r.url for r in got]
-    assert len(urls) == len(set(urls)) == 40

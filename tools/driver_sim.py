@@ -8,7 +8,8 @@ names), and a canonical value hash (columns sorted by name, rows sorted
 by all columns, float values rounded). Rows-only entries just need a
 clean collect through the same pandas canonicalizer — which is exactly
 what broke round 1's outline_extract (array<struct> columns are
-unhashable in pandas sort).
+unhashable in pandas sort). Every line also carries ``spark_hash``,
+the Spark side's value hash, so two commits' runs can be diffed.
 
 Run: python tools/driver_sim.py [--only name1,name2] [--sf DIR]
 """
@@ -73,7 +74,10 @@ def main() -> int:
         try:
             sdf = fn(spark, args.sf)
             spdf = sdf.toPandas()
-            row = {"spark_rows": len(spdf), "err": None}
+            spark_hash = _canon(spdf.select_dtypes(exclude=["object"]).join(
+                spdf.select_dtypes(include=["object"]).astype(str)
+            ))[:16]
+            row = {"spark_rows": len(spdf), "spark_hash": spark_hash, "err": None}
             if name in oracles:
                 opdf = con.execute(oracles[name]).df()
                 row["oracle_rows"] = len(opdf)
@@ -83,9 +87,6 @@ def main() -> int:
                     row["schema_match"] and _canon(spdf) == _canon(opdf)
                 )
             else:
-                _canon(spdf.select_dtypes(exclude=["object"]).join(
-                    spdf.select_dtypes(include=["object"]).astype(str)
-                ))
                 row["rows_only"] = True
         except Exception as exc:  # driver records errors per query
             row = {"err": f"{type(exc).__name__}: {exc}"[:300]}
