@@ -22,6 +22,7 @@ import json
 import os
 import time
 
+from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -63,23 +64,15 @@ def write_result(
     the manifest write — heals itself on the next write. The price is
     a rescan that is O(committed table) per write rather than
     O(batch); it reads only the ``bucket`` partition value and three
-    thin columns. Measured on a 4 vCPU host, appending 1,536 rows
-    into committed tables of 10k, 100k, 1M and 4M rows took 0.9–1.4 s
-    per append (median of 3) with 0.37–0.59 s of lineage, not growing
-    with table size. The CollectMetrics observe path this replaced
-    took 1.3–1.8 s on the same appends: its per-row metric
-    expressions run outside whole-stage codegen, and it needed a
-    staleness count and a separate error-class job. Tables above 4M
-    rows are unmeasured.
+    thin columns. Measured on a 4 vCPU host, appending 1,536 thin rows
+    (median of 3 appends): into tables of 10k to 4M rows an append
+    took 0.9–1.4 s with 0.4–0.7 s of lineage, flat in table size; at
+    16M rows 1.3–1.5 s with 0.7–0.9 s of lineage; at 64M rows 2.4 s
+    with 1.7 s of lineage. The rescan starts to show at ~16M rows.
     """
     t_write0 = time.time()
     table_dir = os.path.join(out_dir, "result")
-    # `ok` is a PARTITION column (parse_ok stays in the data files for
-    # schema stability): failures land in their own ok=0 directories,
-    # so success-only consumers (read_result) never open a failure file.
-    bucketed = with_bucket(result, n_buckets).withColumn(
-        "ok", F.col("parse_ok").cast("int")
-    )
+    bucketed = with_bucket(result, n_buckets)
     # repartition on the bucket key before the write: each reduce task
     # then writes into exactly one bucket dir (one file per bucket,
     # not tasks×buckets tiny files — measured 13s vs 0s of overhead at
@@ -93,7 +86,7 @@ def write_result(
     to_write = (
         bucketed if input_bucketed else bucketed.repartition(n_buckets, "bucket")
     )
-    to_write.write.mode(mode).partitionBy("bucket", "ok").parquet(table_dir)
+    to_write.write.mode(mode).partitionBy("bucket").parquet(table_dir)
     return _finish_lineage(result.sparkSession, out_dir, table_dir, n_buckets, t_write0)
 
 
@@ -110,15 +103,12 @@ def _finish_lineage(
     # one small job. The collect is bounded by
     # n_buckets × (1 + number of error classes) rows.
     t_write1 = time.time()
-    try:
-        written = spark.read.parquet(table_dir)
-    except Exception:
-        # Nothing committed yet AND this write appended zero rows — a
-        # normal streaming state (a micro-batch whose archives salvage
-        # no records, or whose urls were all re-ships) leaves the table
-        # dir schemaless; found by the checkpoint-kill fuzz
-        # (tools/fuzz_sweep.py --stream-warc). The truthful manifest is
-        # all-zero totals, not a failed commit.
+    written = _committed(spark, table_dir)
+    if written is None:
+        # Nothing committed and this write appended zero rows: a normal
+        # streaming state (a micro-batch that salvages no records, or
+        # only re-ships; tools/fuzz_sweep.py --stream-warc). The
+        # truthful manifest is all-zero totals, not a failed commit.
         grouped = []
     else:
         err_class = F.when(
@@ -280,25 +270,33 @@ def write_json_files(result: DataFrame, out_dir: str) -> int:
     return int(n_written.value)
 
 
-def read_result(spark: SparkSession, out_dir: str, include_failed: bool = False) -> DataFrame:
-    df = spark.read.parquet(os.path.join(out_dir, "result"))
-    if include_failed:
-        return df.drop("ok")
-    # filter on the ok PARTITION column (not the parse_ok data column)
-    # so the success-only read never opens a failure file
-    return df.filter(F.col("ok") == 1).drop("ok")
+def read_result(spark: SparkSession, out_dir: str) -> DataFrame:
+    """The committed result table under ``out_dir``: every row, parse
+    failures included, with ``bucket`` as its partition column.
+    Success-only consumers filter ``parse_ok`` themselves."""
+    return spark.read.parquet(os.path.join(out_dir, "result"))
+
+
+def _committed(spark: SparkSession, table_dir: str) -> DataFrame | None:
+    """The committed table, or None if nothing is committed yet (no path,
+    or no data file under it). Any other read error raises: a table
+    Spark refuses, taken as empty, would re-queue every committed url
+    on resume and publish an all-zero manifest."""
+    try:
+        return spark.read.parquet(table_dir)
+    except AnalysisException as e:
+        if e.getCondition() in ("PATH_NOT_FOUND", "UNABLE_TO_INFER_SCHEMA"):
+            return None
+        raise
 
 
 def filter_pending(pages: DataFrame, out_dir: str) -> DataFrame:
     """Resume-from-checkpoint: keep only urls absent from the committed
     result table (left-anti join on the bucketed snapshot)."""
-    spark = pages.sparkSession
-    table_dir = os.path.join(out_dir, "result")
-    try:
-        done = spark.read.parquet(table_dir).select("url")
-    except Exception:
-        return pages  # nothing committed yet
-    return pages.join(done, "url", "left_anti")
+    done = _committed(pages.sparkSession, os.path.join(out_dir, "result"))
+    if done is None:
+        return pages
+    return pages.join(done.select("url"), "url", "left_anti")
 
 
 def size_aware_repartition(

@@ -14,6 +14,7 @@ Each test pins a specific fix:
 from __future__ import annotations
 
 import json
+from pathlib import Path
 
 import pytest
 from pyspark.sql import functions as F
@@ -217,7 +218,7 @@ def test_resume_is_idempotent_and_partial(spark, tmp_path):
     pending = pio.filter_pending(full, out)
     assert pending.count() == 120  # corpus(N) is a prefix of corpus(M)
     pio.write_result(extract_pages(pending), out, n_buckets=4, mode="append")
-    committed = pio.read_result(spark, out, include_failed=True)
+    committed = pio.read_result(spark, out)
     assert committed.count() == committed.select("url").distinct().count() == 240
     # idempotence: nothing pending after full commit
     assert pio.filter_pending(full, out).count() == 0
@@ -247,13 +248,21 @@ def test_input_bucketed_write_is_shuffle_free_and_equal(spark, tmp_path):
         assert stats_a[k] == stats_b[k]
     a = {
         (r.url, r.title, r.bucket)
-        for r in pio.read_result(spark, out_a, include_failed=True).collect()
+        for r in pio.read_result(spark, out_a).collect()
     }
     b = {
         (r.url, r.title, r.bucket)
-        for r in pio.read_result(spark, out_b, include_failed=True).collect()
+        for r in pio.read_result(spark, out_b).collect()
     }
     assert a == b and len(a) == 100
+    # the exchange leaves one data file per bucket dir; without it a
+    # bucket gets one file per scan task that held it, here at most its
+    # 2 corpus files
+    def files_per_bucket(out):
+        return [len(list(d.glob("*.parquet"))) for d in (Path(out) / "result").glob("bucket=*")]
+
+    assert files_per_bucket(out_b) == [1] * 4
+    assert len(files_per_bucket(out_a)) == 4 and max(files_per_bucket(out_a)) <= 2
 
 
 def test_ngram_jaccard_stop_shingle_cut(spark):

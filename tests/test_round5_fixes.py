@@ -11,6 +11,8 @@ from __future__ import annotations
 import json
 from pathlib import Path
 
+import pytest
+
 from pdf_extractor_spark import io as eio
 from pdf_extractor_spark.io import filter_pending, write_result
 
@@ -25,10 +27,10 @@ def _mk(spark, urls):
 # -- 1. resume-append vs kill debris ----------------------------------------
 
 
-def test_append_with_debris_keeps_ok_layout_and_table_readable(spark, tmp_path):
-    """End-to-end: resume-append into a bucket/ok table that carries an
-    empty debris bucket dir must keep the bucket/ok layout and leave
-    the combined table readable."""
+def test_append_with_debris_keeps_bucket_layout_and_table_readable(spark, tmp_path):
+    """End-to-end: resume-append into a bucketed table that carries an
+    empty debris bucket dir must keep the one-level bucket layout and
+    leave the combined table readable."""
     out = str(tmp_path / "out")
     write_result(_mk(spark, [f"u{i}" for i in range(8)]), out, n_buckets=4)
     (Path(out) / "result" / "bucket=999").mkdir()
@@ -36,11 +38,33 @@ def test_append_with_debris_keeps_ok_layout_and_table_readable(spark, tmp_path):
         _mk(spark, [f"v{i}" for i in range(8)]), out, n_buckets=4, mode="append"
     )
     table = Path(out) / "result"
-    # every data file sits under bucket=N/ok=M/, none directly under a
-    # bucket dir (mixed partition depths make Spark refuse the table)
-    assert not [p for p in table.glob("bucket=*/*") if p.is_file()]
-    assert list(table.glob("bucket=*/ok=*/*.parquet"))
+    # every data file sits directly under a bucket=N/ dir, and no bucket
+    # dir has a subdirectory (mixed partition depths make Spark refuse
+    # the table)
+    assert not [p for p in table.glob("bucket=*/*") if p.is_dir()]
+    files = list(table.rglob("*.parquet"))
+    assert files and all(
+        f.parent.parent == table and f.parent.name.startswith("bucket=") for f in files
+    )
     assert eio.read_result(spark, out).count() == 16
+
+
+def test_unreadable_table_is_not_taken_as_empty(spark, tmp_path):
+    """A table Spark refuses to read is not "nothing committed": here
+    one bucket holds files at two partition depths (bucket=N/ok=M/ from
+    an older layout beside bucket=N/). Resuming as if empty would
+    re-queue every committed url and publish an all-zero manifest, so
+    filter_pending and write_result must raise instead."""
+    out = str(tmp_path / "out")
+    table = str(Path(out) / "result")
+    old = eio.with_bucket(_mk(spark, [f"u{i}" for i in range(8)]), 4)
+    old.withColumn("ok", old.parse_ok.cast("int")).write.partitionBy("bucket", "ok").parquet(table)
+    old.write.mode("append").partitionBy("bucket").parquet(table)
+    pages = _mk(spark, [f"u{i}" for i in range(10)])
+    with pytest.raises(Exception, match="CONFLICTING_PARTITION_COLUMN_NAMES"):
+        filter_pending(pages, out)
+    with pytest.raises(Exception, match="CONFLICTING_PARTITION_COLUMN_NAMES"):
+        write_result(_mk(spark, ["v0"]), out, n_buckets=4, mode="append")
 
 
 # -- 2. atomic manifest ------------------------------------------------------

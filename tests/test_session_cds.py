@@ -210,7 +210,7 @@ CHILD = textwrap.dedent(
     pages = corpus.distributed_pages(spark, 82, seed=3)
     stats = pio.write_result(extract_pages(pages), out, n_buckets=4)
     stats["args"] = list(mx.getInputArguments())
-    stats["rows"] = pio.read_result(spark, out).count()
+    stats["rows"] = pio.read_result(spark, out).filter("parse_ok").count()
     print(json.dumps(stats))
     """
 )

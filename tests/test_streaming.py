@@ -42,7 +42,7 @@ def test_stream_extract_matches_batch(spark, tmpdirs):
     q = STRM.stream_extract(stream, tmpdirs["out"], tmpdirs["ckpt"], n_buckets=8)
     q.awaitTermination(300)
 
-    got = pio.read_result(spark, tmpdirs["out"], include_failed=True)
+    got = pio.read_result(spark, tmpdirs["out"])
     from pdf_extractor_spark.operators.extract import extract_pages
 
     batch = extract_pages(spark.read.parquet(tmpdirs["pages"]), keep_failed=True)
@@ -79,7 +79,7 @@ def test_stream_extract_is_restartable(spark, tmpdirs):
     stream2 = STRM.stream_pages(spark, tmpdirs["pages"])
     STRM.stream_extract(stream2, tmpdirs["out"], tmpdirs["ckpt"], n_buckets=8).awaitTermination(300)
 
-    got = pio.read_result(spark, tmpdirs["out"], include_failed=True).collect()
+    got = pio.read_result(spark, tmpdirs["out"]).collect()
     urls = [r["url"] for r in got]
     assert len(urls) == len(set(urls))
     # seed-7 corpora are prefixes of each other: 40-doc round ⊂ 80-doc round,
@@ -111,7 +111,7 @@ def test_stream_extract_resumes_after_first_offset_commit_crash(spark, tmpdirs):
     q.awaitTermination(300)
     assert not tmp.exists()  # debris removed, not worked around
 
-    got = pio.read_result(spark, tmpdirs["out"], include_failed=True).collect()
+    got = pio.read_result(spark, tmpdirs["out"]).collect()
     urls = [r["url"] for r in got]
     assert len(urls) == len(set(urls)) == 60  # drained, exactly once
 

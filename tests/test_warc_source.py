@@ -218,7 +218,7 @@ class TestSparkSource:
         q = stream_extract(stream_warc_pages(spark, str(land)), out, ckpt, n_buckets=4)
         q.awaitTermination()
         res = spark.read.parquet(out + "/result")
-        ok_urls = [r["url"] for r in res.filter("ok = 1").select("url").collect()]
+        ok_urls = [r["url"] for r in res.filter("parse_ok").select("url").collect()]
         assert len(ok_urls) == len(set(ok_urls))  # no re-extraction of s0/s1
         assert res.count() - first > 0
         # parity with the batch path over the full landing dir

@@ -474,7 +474,7 @@ def batch_kill_mode(trials: int, seed: int) -> int:
             if rng.random() < 0.4:
                 (table / "_temporary" / "0").mkdir(parents=True, exist_ok=True)
                 faults["temporary_debris"] += 1
-            committed = sorted(table.glob("bucket=*/ok=*")) if table.exists() else []
+            committed = sorted({f.parent for f in table.glob("bucket=*/*.parquet")})
             if rng.random() < 0.3 and committed:
                 shutil.rmtree(committed[rng.randrange(len(committed))])
                 faults["rm_committed_partition"] += 1
@@ -509,8 +509,7 @@ def batch_kill_mode(trials: int, seed: int) -> int:
                 )
                 return 1
             n_all = spark.read.parquet(str(table)).count()
-            n_urls = read_result(spark, kill_dir, include_failed=True
-                                 ).select("url").distinct().count()
+            n_urls = read_result(spark, kill_dir).select("url").distinct().count()
             if not (n_all == n_urls == n_docs):
                 print(
                     f"FAIL trial {t}: exactly-once violated "
