@@ -12,8 +12,8 @@ extraction pipeline, writes the result table + per-partition lineage
 manifests, prints a one-line JSON summary to stdout.
 
 The partitioning follows the input's shape; no flag selects it. A
-parquet input bucketed on url-hash is written without an exchange;
-any other parquet input is checked for a heavy tail and, if it has
+parquet input bucketed on url-hash is written without an exchange,
+one file per scan task and bucket; any other parquet input is checked for a heavy tail and, if it has
 one, repartitioned by payload size (``io.repartition_if_heavy``).
 """
 

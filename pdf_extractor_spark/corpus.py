@@ -300,7 +300,13 @@ def random_pdf(rng: random.Random) -> bytes:
     )
 
 
-def pdf_truth_stats(i: int, seed_base: int = 77_000) -> dict:
+# seed base of the generated-PDF evidence corpus: document i is
+# random_pdf(random.Random(PDF_CORPUS_SEED + i)) in the
+# pdf_parse_stats and pdf_payload_extract queries
+PDF_CORPUS_SEED = 77_000
+
+
+def pdf_truth_stats(i: int) -> dict:
     """Ground-truth per-document parse stats for the generated-PDF
     corpus, derived from pdf_plan (the generator's own line plan) —
     NOT from any parser. The pdf_parse_stats driver row compares the
@@ -308,7 +314,7 @@ def pdf_truth_stats(i: int, seed_base: int = 77_000) -> dict:
     the check is construction-vs-parse."""
     import hashlib
 
-    plan = pdf_plan(random.Random(seed_base + i))
+    plan = pdf_plan(random.Random(PDF_CORPUS_SEED + i))
     lines = [(int(s), t) for pl in plan for (_y, s, t) in pl]
     content = "\n".join(f"{s}:{t}" for s, t in lines)
     return {
@@ -320,6 +326,8 @@ def pdf_truth_stats(i: int, seed_base: int = 77_000) -> dict:
 
 
 _EPOCH = dt.datetime(2025, 1, 1, tzinfo=dt.timezone.utc)
+# a heavy-tail document is this many spandocs concatenated
+_HEAVY_TAIL_FACTOR = 60
 
 
 def build_pages_row(
@@ -327,19 +335,17 @@ def build_pages_row(
     seed: int = 42,
     html_fraction: float = 0.25,
     heavy_tail_every: int | None = None,
-    heavy_tail_factor: int = 60,
 ) -> dict:
     """One deterministic pages-table row. Depends ONLY on (i, seed) —
     order-free, so synthesis distributes across executors with no
     driver bottleneck and corpus(N) is always a prefix of corpus(M>N)
     (required for meaningful resume tests).
 
-    ``heavy_tail_every`` (OPT-IN — the default corpus is unchanged so
-    accumulated scaling minima stay comparable) plants a deterministic
-    oversized-document slice: every ``heavy_tail_every``-th doc is a
-    valid spandoc ~``heavy_tail_factor``× the median page count — the
-    north rule's size-aware-repartition scenario (one giant must never
-    blow up the task that drew it)."""
+    ``heavy_tail_every`` (opt-in; the default corpus has no giant)
+    plants a deterministic oversized-document slice: every
+    ``heavy_tail_every``-th doc is a valid spandoc ~_HEAVY_TAIL_FACTOR×
+    the median page count — the north rule's size-aware-repartition
+    scenario (one giant must never blow up the task that drew it)."""
     r = random.Random(seed * 1_000_003 + i)  # per-doc stream
     # host pool independent of n_docs; Zipf-ish skew: host0 is hot
     # (north rule's skewed-host scenario).
@@ -354,7 +360,7 @@ def build_pages_row(
         # giant but VALID document: K concatenated spandocs (page list
         # append composes cleanly — the analyzer is page-order driven)
         pages: list[dict] = []
-        for _ in range(heavy_tail_factor):
+        for _ in range(_HEAVY_TAIL_FACTOR):
             pages.extend(random_spandoc(r))
         payload = spandoc_to_payload(pages)
         lang = "en"

@@ -29,20 +29,25 @@ def _hash64(col) -> F.Column:
     return F.conv(F.substring(F.md5(col.cast("binary")), 1, 14), 16, 10).cast("bigint")
 
 
-def exact_duplicates(docs: DataFrame, id_col: str = "doc_id", text_col: str = "text") -> DataFrame:
+def exact_duplicates(docs: DataFrame) -> DataFrame:
     """Exact dedup: one row per distinct content hash with the group
     size and canonical (minimum) id."""
     return (
-        docs.groupBy(F.md5(F.col(text_col).cast("binary")).alias("text_hash"))
+        docs.groupBy(F.md5(F.col("text").cast("binary")).alias("text_hash"))
         .agg(
-            F.min(id_col).alias("canonical_id"),
+            F.min("doc_id").alias("canonical_id"),
             F.count("*").alias("n_docs"),
         )
     )
 
 
-def shingles(docs: DataFrame, id_col: str = "doc_id", text_col: str = "text", n: int = 3) -> DataFrame:
-    """Distinct word n-gram shingles per document (the substrate for
+# shingle width in words (queries._SHINGLE_CTE, the DuckDB oracle,
+# concatenates the same three words)
+SHINGLE_N = 3
+
+
+def shingles(docs: DataFrame) -> DataFrame:
+    """Distinct word ``SHINGLE_N``-gram shingles per document (the substrate for
     Jaccard / MinHash). Pure SQL expressions — stays in codegen.
 
     The word array is MATERIALIZED as its own projection before the
@@ -50,17 +55,17 @@ def shingles(docs: DataFrame, id_col: str = "doc_id", text_col: str = "text", n:
     an inlined ``split(text)`` inside the lambda body would re-split
     the whole document once per gram — O(words²) per document (same
     trap as fingerprint_winnow's round-2 fix)."""
-    words = docs.select(
-        F.col(id_col).alias("doc_id"), F.split(F.col(text_col), " ").alias("w")
-    )
+    words = docs.select("doc_id", F.split(F.col("text"), " ").alias("w"))
     w = F.col("w")
     # guard: Spark's sequence(0, -1) is DESCENDING [0,-1], not empty —
     # short docs must produce an empty gram array explicitly
     grams = F.when(
-        F.size(w) >= n,
+        F.size(w) >= SHINGLE_N,
         F.transform(
-            F.sequence(F.lit(0), F.size(w) - n),
-            lambda i: F.concat_ws(" ", *[F.element_at(w, (i + k + 1).cast("int")) for k in range(n)]),
+            F.sequence(F.lit(0), F.size(w) - SHINGLE_N),
+            lambda i: F.concat_ws(
+                " ", *[F.element_at(w, (i + k + 1).cast("int")) for k in range(SHINGLE_N)]
+            ),
         ),
     ).otherwise(F.array().cast("array<string>"))
     # per-doc dedup with array_distinct BEFORE the explode: a shingle
@@ -73,9 +78,7 @@ def shingles(docs: DataFrame, id_col: str = "doc_id", text_col: str = "text", n:
     )
 
 
-def ngram_jaccard_pairs(
-    docs: DataFrame, threshold: float = 0.2, id_col: str = "doc_id", text_col: str = "text", n: int = 3
-) -> DataFrame:
+def ngram_jaccard_pairs(docs: DataFrame, threshold: float = 0.2) -> DataFrame:
     """Exact n-gram Jaccard similarity for all pairs sharing ≥1 shingle.
 
     MapReduce formulation: |A∩B| from a self-equi-join on shingle,
@@ -84,7 +87,7 @@ def ngram_jaccard_pairs(
     quadratically; a standard stop-shingle cut) — here a 1000-doc cap
     per shingle guards the same blowup.
     """
-    sh = shingles(docs, id_col, text_col, n)
+    sh = shingles(docs)
     sizes = sh.groupBy("doc_id").agg(F.count("*").alias("sz"))
     # Broadcast the SMALL side only: the stop-shingle list (df > cap) is
     # tiny by construction — ultra-frequent shingles are few — whereas
@@ -139,15 +142,13 @@ MINHASH_B = [
 ]
 
 
-def minhash_signatures(
-    docs: DataFrame, k: int = 8, id_col: str = "doc_id", text_col: str = "text", n: int = 3
-) -> DataFrame:
+def minhash_signatures(docs: DataFrame, k: int) -> DataFrame:
     """Wide MinHash signature per document: columns mh0..mh{k-1},
     mh_j = min over shingles of (A_j·md5_32(shingle) + B_j) mod P.
     One md5 per shingle, one shuffle (the groupBy), no row explosion."""
     if k > len(MINHASH_A):
         raise ValueError(f"k={k} exceeds the fixed constant pool ({len(MINHASH_A)})")
-    sh = shingles(docs, id_col, text_col, n)
+    sh = shingles(docs)
     h32 = (
         F.conv(F.substring(F.md5(F.col("shingle").cast("binary")), 1, 8), 16, 10).cast("bigint")
         % MINHASH_PRIME
@@ -162,21 +163,14 @@ def minhash_signatures(
     return hashed.groupBy("doc_id").agg(*aggs)
 
 
-def minhash_band_pairs(
-    docs: DataFrame,
-    k: int = 8,
-    band_size: int = 4,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    n: int = 3,
-) -> DataFrame:
+def minhash_band_pairs(docs: DataFrame, k: int = 8, band_size: int = 4) -> DataFrame:
     """LSH banding: documents sharing any band of ``band_size``
     consecutive minhashes become candidate pairs. The only shuffle is
     the equality join on (band_id, band_key) — this is what makes
     near-dedup feasible at 10^12 documents."""
     if k % band_size:
         raise ValueError(f"k={k} must be a multiple of band_size={band_size}")
-    sig = minhash_signatures(docs, k, id_col, text_col, n)
+    sig = minhash_signatures(docs, k)
     nb = k // band_size
     stack_args = []
     for bi in range(nb):
@@ -195,14 +189,14 @@ def minhash_band_pairs(
     )
 
 
-def simhash32(docs: DataFrame, id_col: str = "doc_id", text_col: str = "text") -> DataFrame:
+def simhash32(docs: DataFrame) -> DataFrame:
     """32-bit SimHash: per bit position, words vote +1/−1 by their
     md5-hash bit; the sign of the vote sum sets the output bit.
     Bit extraction uses floor(h / 2^b) % 2 — portable to DuckDB
     (shift operators differ across dialects, power-of-two division
     does not)."""
     words = docs.select(
-        F.col(id_col).alias("doc_id"), F.explode(F.split(F.col(text_col), " ")).alias("word")
+        "doc_id", F.explode(F.split(F.col("text"), " ")).alias("word")
     ).filter(F.col("word") != "")
     h32 = F.conv(F.substring(F.md5(F.col("word").cast("binary")), 1, 8), 16, 10).cast("bigint")
     hashed = words.withColumn("h", h32)

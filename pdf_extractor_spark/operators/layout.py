@@ -19,18 +19,21 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window as W
 from pyspark.sql import functions as F
 
+# The DuckDB oracle of ``layout_reading_order`` (plans/queries.py)
+# spells out the same values.
+FURNITURE_MIN_PAGES = 3
+FURNITURE_RECURRENCE = 0.6
+FURNITURE_Y_BIN = 120.0  # pt
+PAGE_WIDTH = 612.0  # pt, US letter: the width of a block without one
+N_COLS = 2
 
-def header_footer_flags(
-    blocks: DataFrame,
-    min_pages: int = 3,
-    recurrence: float = 0.6,
-    y_bin: float = 120.0,
-) -> DataFrame:
+
+def header_footer_flags(blocks: DataFrame) -> DataFrame:
     """Flag page furniture: a block is flagged when the same text at
-    the same vertical band (floor(y0 / y_bin)) recurs on at least
-    ``recurrence`` of the document's pages, for documents with at
-    least ``min_pages`` pages — the classic header/footer heuristic
-    (same text, same position, most pages).
+    the same vertical band (floor(y0 / FURNITURE_Y_BIN)) recurs on at
+    least FURNITURE_RECURRENCE of the document's pages, for documents
+    with at least FURNITURE_MIN_PAGES pages — the classic header/footer
+    heuristic (same text, same position, most pages).
 
     Output: (doc_id, block_idx, is_furniture). Plan: one groupBy per
     (doc, band, text) with countDistinct(page), one per-doc page
@@ -41,7 +44,7 @@ def header_footer_flags(
         "block_idx",
         "page_num",
         "block_text",
-        F.floor(F.col("y0") / y_bin).cast("bigint").alias("y_band"),
+        F.floor(F.col("y0") / FURNITURE_Y_BIN).cast("bigint").alias("y_band"),
     )
     pages = b.groupBy("doc_id").agg(
         F.countDistinct("page_num").alias("n_pages")
@@ -56,17 +59,15 @@ def header_footer_flags(
             "doc_id",
             "block_idx",
             (
-                (F.col("n_pages") >= min_pages)
-                & (F.col("n_occ_pages") >= F.col("n_pages") * recurrence)
+                (F.col("n_pages") >= FURNITURE_MIN_PAGES)
+                & (F.col("n_occ_pages") >= F.col("n_pages") * FURNITURE_RECURRENCE)
             ).alias("is_furniture"),
         )
     )
     return flagged
 
 
-def multicol_reading_order(
-    blocks: DataFrame, page_width: float = 612.0, n_cols: int = 2
-) -> DataFrame:
+def multicol_reading_order(blocks: DataFrame) -> DataFrame:
     """Reconstruct reading order for multi-column pages: assign each
     block to a column by its x0 position (equal-width bands), then
     order column-major — left column top-to-bottom, then the next
@@ -78,16 +79,16 @@ def multicol_reading_order(
 
     The column boundary uses the blocks' own ``page_width`` column when
     the table carries one (A4 is 595 pt, landscape wider — a constant
-    612 would misassign boundary blocks); the scalar parameter is only
-    the fallback for width-less tables.
+    612 would misassign boundary blocks); PAGE_WIDTH is only the
+    fallback for width-less tables.
     """
     if "page_width" in blocks.columns:
-        col_w = F.coalesce(F.col("page_width"), F.lit(page_width)) / n_cols
+        col_w = F.coalesce(F.col("page_width"), F.lit(PAGE_WIDTH)) / N_COLS
     else:
-        col_w = F.lit(page_width / n_cols)
+        col_w = F.lit(PAGE_WIDTH / N_COLS)
     col_idx = F.least(
         F.greatest(F.floor(F.col("x0") / col_w).cast("int"), F.lit(0)),
-        F.lit(n_cols - 1),
+        F.lit(N_COLS - 1),
     )
     w = W.partitionBy("doc_id", "page_num").orderBy(
         F.asc("col_idx"), F.asc("y0"), F.asc("x0"), F.asc("block_idx")

@@ -11,11 +11,12 @@
     Candidate pairs come from an equality join on the bucket key; the
     exact cosine then filters. This is the 100 TB path: shuffle by
     16-bit bucket, never all-pairs.
-  - ivf_cells / ivf_topk / ivf_kmeans_centroids: IVF-Flat coarse
-    quantizer — probe nprobe cells only; codebook seeded
-    deterministically or refined with distributed Lloyd iterations
-    (recall@10 against brute force in
-    tests/test_round2_fixes.py::test_ivf_kmeans_improves_or_matches_recall).
+  - ivf_cells / ivf_topk: IVF-Flat coarse quantizer — probe nprobe
+    cells only; the codebook is the ``n_cells`` smallest vec_ids, so
+    the DuckDB oracle of ``ann_ivf_topk`` replays it exactly.
+
+Every operator reads the ``embeddings`` schema: ``vec_id`` and an
+``embedding`` array.
 """
 
 from __future__ import annotations
@@ -38,32 +39,32 @@ def _norm(a) -> F.Column:
     return F.sqrt(F.aggregate(a, F.lit(0.0), lambda acc, x: acc + x * x))
 
 
-def cosine_topk(
-    emb: DataFrame, query_vec_id: int, k: int = 10, id_col: str = "vec_id", vec_col: str = "embedding"
-) -> DataFrame:
+def _vectors(emb: DataFrame) -> DataFrame:
+    """(vec_id, v): the embedding as array<double>."""
+    return emb.select("vec_id", _as_double(F.col("embedding")).alias("v"))
+
+
+def _query(emb: DataFrame, query_vec_id: int) -> DataFrame:
+    """The one-row (qv) frame of the query vector."""
+    return emb.filter(F.col("vec_id") == query_vec_id).select(
+        _as_double(F.col("embedding")).alias("qv")
+    )
+
+
+def cosine_topk(emb: DataFrame, query_vec_id: int, k: int = 10) -> DataFrame:
     """Exact top-k by cosine against the embedding of ``query_vec_id``."""
-    q = emb.filter(F.col(id_col) == query_vec_id).select(
-        _as_double(F.col(vec_col)).alias("qv")
-    )
-    cand = emb.filter(F.col(id_col) != query_vec_id).select(
-        F.col(id_col), _as_double(F.col(vec_col)).alias("v")
-    )
+    q = _query(emb, query_vec_id)
+    cand = _vectors(emb).filter(F.col("vec_id") != query_vec_id)
     scored = cand.crossJoin(F.broadcast(q)).select(
-        id_col,
+        "vec_id",
         F.round(_dot(F.col("v"), F.col("qv")) / (_norm(F.col("v")) * _norm(F.col("qv"))), 6).alias(
             "cosine"
         ),
     )
-    return scored.orderBy(F.desc("cosine"), F.asc(id_col)).limit(k)
+    return scored.orderBy(F.desc("cosine"), F.asc("vec_id")).limit(k)
 
 
-def lsh_buckets(
-    emb: DataFrame,
-    n_bits: int = 16,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    dims: int | None = None,
-) -> DataFrame:
+def lsh_buckets(emb: DataFrame, n_bits: int = 16, *, dims: int) -> DataFrame:
     """Random-hyperplane signature: bit j = sign(Σ_i v[i]·s(j,i)) where
     s(j,i) ∈ {−1,+1} comes from md5(j||'_'||i) parity — deterministic,
     data-independent, identical in the SQL oracle.
@@ -71,63 +72,29 @@ def lsh_buckets(
     Pure per-row expression — no driver action at plan build, no
     explode, no join (round 1 materialized an n·d element table joined
     against a d·n_bits plane table and took a ``.first()`` during
-    planning). The sign matrix is data-independent, so when ``dims``
-    is known (production embedding columns have a fixed dimension) it
-    is folded into literal arrays; otherwise the parity is computed
-    inline per element — still map-only, just more md5 calls."""
-    v = _as_double(F.col(vec_col))
+    planning). The sign matrix is data-independent, so the ``dims``
+    signs of each bit are folded into a literal array."""
+    v = _as_double(F.col("embedding"))
 
     def proj(j: int) -> F.Column:
-        if dims is not None:
-            signs = F.array(
-                *[F.lit(1.0 if _md5_parity(j, i) else -1.0) for i in range(dims)]
-            )
-            prods = F.zip_with(v, signs, lambda x, s: x * s)
-        else:
-            idx = F.sequence(F.lit(0), F.size(v) - 1)
-            prods = F.zip_with(
-                v,
-                idx,
-                lambda x, i: x
-                * F.when(
-                    F.conv(
-                        F.substring(
-                            F.md5(
-                                F.concat(
-                                    F.lit(f"{j}_"), i.cast("string")
-                                ).cast("binary")
-                            ),
-                            1,
-                            8,
-                        ),
-                        16,
-                        10,
-                    ).cast("bigint")
-                    % 2
-                    == 1,
-                    F.lit(1.0),
-                ).otherwise(F.lit(-1.0)),
-            )
+        signs = F.array(*[F.lit(1.0 if _md5_parity(j, i) else -1.0) for i in range(dims)])
+        prods = F.zip_with(v, signs, lambda x, s: x * s)
         return F.aggregate(prods, F.lit(0.0), lambda acc, x: acc + x)
 
     bucket = None
     for j in range(n_bits):
         bit = F.when(proj(j) > 0, F.lit(2 ** j).cast("bigint")).otherwise(F.lit(0).cast("bigint"))
         bucket = bit if bucket is None else bucket + bit
-    if dims is not None:
-        # Guard the literal-sign fast path: zip_with null-pads a vector
-        # whose length != dims, the product aggregate goes NULL, and
-        # every bit silently falls to the otherwise(0) branch — fail
-        # loudly instead of corrupting buckets.
-        bucket = F.when(F.size(F.col(vec_col)) == dims, bucket).otherwise(
-            F.raise_error(
-                F.concat(
-                    F.lit(f"lsh_buckets: dims={dims} but size(vec)="),
-                    F.size(F.col(vec_col)).cast("string"),
-                )
-            )
+    # zip_with null-pads a vector whose length != dims, the product
+    # aggregate goes NULL, and every bit silently falls to the
+    # otherwise(0) branch — fail loudly instead of corrupting buckets.
+    size = F.size(F.col("embedding"))
+    bucket = F.when(size == dims, bucket).otherwise(
+        F.raise_error(
+            F.concat(F.lit(f"lsh_buckets: dims={dims} but size(vec)="), size.cast("string"))
         )
-    return emb.select(F.col(id_col), bucket.alias("bucket"))
+    )
+    return emb.select("vec_id", bucket.alias("bucket"))
 
 
 def _md5_parity(j: int, i: int) -> int:
@@ -136,22 +103,15 @@ def _md5_parity(j: int, i: int) -> int:
     return int(hashlib.md5(f"{j}_{i}".encode()).hexdigest()[:8], 16) % 2
 
 
-def neardup_lsh(
-    emb: DataFrame,
-    threshold: float = 0.9,
-    n_bits: int = 16,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    dims: int | None = None,
-) -> DataFrame:
+def neardup_lsh(emb: DataFrame, threshold: float = 0.9, n_bits: int = 16, *, dims: int) -> DataFrame:
     """Near-duplicate pairs: LSH-bucket equality join → exact cosine
     filter. Output (a, b, cosine) with a < b."""
-    b = lsh_buckets(emb, n_bits, id_col, vec_col, dims=dims)
-    withb = emb.join(b, id_col).select(
-        F.col(id_col), _as_double(F.col(vec_col)).alias("v"), "bucket"
+    b = lsh_buckets(emb, n_bits, dims=dims)
+    withb = emb.join(b, "vec_id").select(
+        "vec_id", _as_double(F.col("embedding")).alias("v"), "bucket"
     )
-    l = withb.select(F.col(id_col).alias("a"), F.col("v").alias("va"), "bucket")
-    r = withb.select(F.col(id_col).alias("b"), F.col("v").alias("vb"), "bucket")
+    l = withb.select(F.col("vec_id").alias("a"), F.col("v").alias("va"), "bucket")
+    r = withb.select(F.col("vec_id").alias("b"), F.col("v").alias("vb"), "bucket")
     pairs = l.join(r, "bucket").filter(F.col("a") < F.col("b"))
     return (
         pairs.select(
@@ -167,154 +127,60 @@ def neardup_lsh(
 
 
 # ------------------------------------------------------------- IVF-Flat
-def _seed_centroids(
-    emb: DataFrame, n_cells: int, id_col: str, vec_col: str
-) -> DataFrame:
+def _seed_centroids(emb: DataFrame, n_cells: int) -> DataFrame:
     """Deterministic, order-independent seeding: the ``n_cells``
     smallest vec_ids (NOT ``vec_id < n_cells`` — ids may be sparse or
     offset on a real corpus). cell_id is the rank, so cells are always
     0..n_cells−1 regardless of the id space. The orderBy().limit()
     compiles to TakeOrderedAndProject (distributed top-k, no global
     sort shuffle); the n_cells rows are then enumerated driver-side
-    (codebook-bounded collect — the same shape ivf_kmeans_centroids
-    uses), which avoids an unpartitioned rank window (WindowExec
-    single-partition WARN) for the same result."""
-    return _seed_df(emb.sparkSession, _seed_rows(emb, n_cells, id_col, vec_col))
-
-
-def _seed_rows(
-    emb: DataFrame, n_cells: int, id_col: str, vec_col: str
-) -> list[tuple[int, list[float]]]:
+    (a codebook-bounded collect), which avoids an unpartitioned rank
+    window (WindowExec single-partition WARN) for the same result."""
     rows = (
-        emb.filter(F.col(vec_col).isNotNull())  # a NULL embedding must not seed
-        .select(F.col(id_col), _as_double(F.col(vec_col)).alias("cv"))
-        .orderBy(F.asc(id_col))
+        _vectors(emb.filter(F.col("embedding").isNotNull()))  # a NULL embedding must not seed
+        .orderBy(F.asc("vec_id"))
         .limit(n_cells)
         .collect()
     )
     rows.sort(key=lambda r: r[0])
-    return [(i, [float(x) for x in r["cv"]]) for i, r in enumerate(rows)]
-
-
-def _seed_df(spark, seeds: list[tuple[int, list[float]]]) -> DataFrame:
-    return spark.createDataFrame(seeds, schema="cell_id int, cv array<double>")
-
-
-def ivf_kmeans_centroids(
-    emb: DataFrame,
-    n_cells: int = 16,
-    iters: int = 3,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    dims: int = 64,
-) -> DataFrame:
-    """Lloyd-iteration refinement of the seeded coarse codebook.
-
-    Each iteration: assign every vector to its nearest (cosine)
-    centroid, then recompute centroids as the element-wise mean of the
-    assigned vectors — ``dims`` JVM ``avg`` aggregates with map-side
-    partial aggregation, shuffling only n_cells keys. Centroids
-    (n_cells × dims floats) are collected per iteration — bounded by
-    the codebook size, never by the corpus; this is the standard
-    distributed-k-means shape (same as Spark MLlib's KMeans driver
-    loop). Returns (cell_id, cv) like _seed_centroids."""
-    spark = emb.sparkSession
-    cand = emb.select(F.col(id_col), _as_double(F.col(vec_col)).alias("v"))
-    seeds = _seed_rows(emb, n_cells, id_col, vec_col)
-    cents = _seed_df(spark, seeds)
-    # Driver-side codebook mirror: a cell that receives no vectors in a
-    # Lloyd iteration vanishes from the means aggregation — keep its
-    # previous centroid so the codebook never shrinks below n_cells
-    # (silent shrink would change ivf_topk's nprobe/n_cells accounting).
-    # Built from the already-collected seed rows — no second job.
-    codebook = {cid: cv for cid, cv in seeds}
-    for _ in range(max(0, iters)):
-        assigned = _assign_cells(cand, cents)
-        means = (
-            cand.join(assigned, id_col)
-            .groupBy("cell_id")
-            .agg(
-                F.array(
-                    *[F.avg(F.col("v")[i]) for i in range(dims)]
-                ).alias("cv")
-            )
-        )
-        rows = means.collect()  # n_cells rows — codebook-bounded
-        if not rows:
-            break
-        for r in rows:
-            codebook[int(r["cell_id"])] = [float(x) for x in r["cv"]]
-        cents = spark.createDataFrame(
-            sorted(codebook.items()),
-            schema="cell_id int, cv array<double>",
-        )
-    return cents
+    return emb.sparkSession.createDataFrame(
+        [(i, [float(x) for x in r["v"]]) for i, r in enumerate(rows)],
+        schema="cell_id int, cv array<double>",
+    )
 
 
 def _assign_cells(cand: DataFrame, cents: DataFrame) -> DataFrame:
     """(vec_id, v) × broadcast centroids → (vec_id, cell_id) argmax
     cosine; ties go to the smallest cell_id."""
-    id_col = cand.columns[0]
     scored = cand.join(F.broadcast(cents)).select(
-        id_col,
+        "vec_id",
         "cell_id",
         (_dot(F.col("v"), F.col("cv")) / (_norm(F.col("v")) * _norm(F.col("cv")))).alias("sim"),
     )
-    best = scored.groupBy(id_col).agg(
+    return scored.groupBy("vec_id").agg(
         F.max_by(F.col("cell_id"), F.struct(F.col("sim"), -F.col("cell_id"))).alias("cell_id")
     )
-    return best
 
 
-def ivf_cells(
-    emb: DataFrame,
-    n_cells: int = 16,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    centroids: DataFrame | None = None,
-) -> DataFrame:
+def ivf_cells(emb: DataFrame, n_cells: int = 16) -> DataFrame:
     """Coarse quantizer assignment (IVF): each vector goes to the cell
-    of its highest-cosine centroid. Default centroids are the seeded
-    codebook (oracle-reproducible); pass ``centroids=``
-    ivf_kmeans_centroids(...) for the trained codebook. Broadcast
+    of its highest-cosine centroid in the seeded codebook. Broadcast
     join + JVM array math: one narrow pass over the corpus; the only
     shuffle is the per-id argmax groupBy (map-side combinable)."""
-    cents = (
-        centroids
-        if centroids is not None
-        else _seed_centroids(emb, n_cells, id_col, vec_col)
-    )
-    cand = emb.select(F.col(id_col), _as_double(F.col(vec_col)).alias("v"))
-    return _assign_cells(cand, cents)
+    return _assign_cells(_vectors(emb), _seed_centroids(emb, n_cells))
 
 
 def ivf_topk(
-    emb: DataFrame,
-    query_vec_id: int,
-    k: int = 10,
-    n_cells: int = 16,
-    nprobe: int = 4,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    centroids: DataFrame | None = None,
+    emb: DataFrame, query_vec_id: int, k: int = 10, n_cells: int = 16, nprobe: int = 4
 ) -> DataFrame:
     """IVF-Flat search: probe the query's ``nprobe`` nearest cells and
     run exact cosine only inside them — the 10^12-vector scale path
     (search cost drops by ~n_cells/nprobe; at scale the cell id is
     also the partition key, so a probe touches nprobe partitions).
-    Same output schema as cosine_topk; recall < 1.0 by construction.
-    Pass ``centroids=ivf_kmeans_centroids(...)`` for the trained
-    codebook (recall@10 against the seeded one checked in
-    tests/test_round2_fixes.py::test_ivf_kmeans_improves_or_matches_recall)."""
-    cents = (
-        centroids
-        if centroids is not None
-        else _seed_centroids(emb, n_cells, id_col, vec_col)
-    )
-    cells = ivf_cells(emb, n_cells, id_col, vec_col, centroids=cents)
-    q = emb.filter(F.col(id_col) == query_vec_id).select(
-        _as_double(F.col(vec_col)).alias("qv")
-    )
+    Same output schema as cosine_topk; recall < 1.0 by construction."""
+    cents = _seed_centroids(emb, n_cells)
+    cells = _assign_cells(_vectors(emb), cents)
+    q = _query(emb, query_vec_id)
     qcells = (
         cents.crossJoin(F.broadcast(q))
         .select(
@@ -326,31 +192,25 @@ def ivf_topk(
         .select("cell_id")
     )
     cand = (
-        emb.join(cells, id_col)
+        emb.join(cells, "vec_id")
         .join(F.broadcast(qcells), "cell_id")
-        .filter(F.col(id_col) != query_vec_id)
-        .select(F.col(id_col), _as_double(F.col(vec_col)).alias("v"))
+        .filter(F.col("vec_id") != query_vec_id)
+        .select("vec_id", _as_double(F.col("embedding")).alias("v"))
     )
     return (
         cand.crossJoin(F.broadcast(q))
         .select(
-            id_col,
+            "vec_id",
             F.round(
                 _dot(F.col("v"), F.col("qv")) / (_norm(F.col("v")) * _norm(F.col("qv"))), 6
             ).alias("cosine"),
         )
-        .orderBy(F.desc("cosine"), F.asc(id_col))
+        .orderBy(F.desc("cosine"), F.asc("vec_id"))
         .limit(k)
     )
 
 
-def batch_cosine_topk(
-    emb: DataFrame,
-    query_vec_ids: list[int],
-    k: int = 10,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
+def batch_cosine_topk(emb: DataFrame, query_vec_ids: list[int], k: int = 10) -> DataFrame:
     """Batched exact top-k: one pass answers MANY queries at once.
 
     This is the pattern the per-query plan can't reach: a vectorized
@@ -372,8 +232,8 @@ def batch_cosine_topk(
     from pyspark.sql import Window as W
 
     qrows = (
-        emb.filter(F.col(id_col).isin([int(q) for q in query_vec_ids]))
-        .select(F.col(id_col).alias("qid"), _as_double(F.col(vec_col)).alias("qv"))
+        emb.filter(F.col("vec_id").isin([int(q) for q in query_vec_ids]))
+        .select(F.col("vec_id").alias("qid"), _as_double(F.col("embedding")).alias("qv"))
         .collect()
     )
     found = {int(r["qid"]) for r in qrows}
@@ -413,9 +273,7 @@ def batch_cosine_topk(
                 {"qid": out_q, "vec_id": out_id, "cosine": out_s}
             )
 
-    pruned = emb.select(
-        F.col(id_col).alias("vec_id"), _as_double(F.col(vec_col)).alias("v")
-    ).mapInPandas(topk_batches, schema="qid long, vec_id long, cosine double")
+    pruned = _vectors(emb).mapInPandas(topk_batches, schema="qid long, vec_id long, cosine double")
     w = W.partitionBy("qid").orderBy(F.desc("cosine"), F.asc("vec_id"))
     return (
         pruned.withColumn("rn", F.row_number().over(w))

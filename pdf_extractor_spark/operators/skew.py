@@ -8,8 +8,9 @@ hot key's rows spread over S tasks, then combine the S partial results
 in a second, tiny shuffle.
 
 These helpers are RESULT-IDENTICAL to their unsalted forms (that is
-what the DuckDB oracles check); the win is plan shape — bounded task
-size regardless of key skew:
+what the DuckDB oracles of the skew_salted_topk and skew_distinct_count
+queries check); the win is plan shape — bounded task size regardless
+of key skew:
 
   - salted_topk:  per-key top-k. Local top-k per (key, salt) prunes to
     ≤ S·k rows per key before the global rank — the classic pattern
@@ -18,8 +19,6 @@ size regardless of key skew:
     hash-aggregations; the first shuffles on (key, v) — high
     cardinality, so no hot task — the second on key over pre-shrunk
     rows.
-  - host_of_url / host_stats: the concrete per-host crawl-ops rollup
-    over a pages table.
 
 AQE's skewJoin handles JOIN-side skew automatically (enabled in
 session.py); aggregation-side skew needs these explicit rewrites.
@@ -71,31 +70,3 @@ def salted_distinct_count(df: DataFrame, key: str, val: str) -> DataFrame:
             F.sum(F.when(F.col(val).isNotNull(), 1).otherwise(0)).alias("n_distinct")
         )
     )
-
-
-def host_of_url(col) -> F.Column:
-    """https://host/path → host (pure column expr, codegen-friendly)."""
-    return F.regexp_extract(col, r"^[a-z]+://([^/]+)/", 1)
-
-
-def host_stats(pages: DataFrame, topk: int = 3, salt: int = 16) -> DataFrame:
-    """Per-host crawl-ops rollup over a pages table: url count, bytes,
-    and the top-k largest payloads' urls — all skew-guarded."""
-    with_host = pages.withColumn("host", host_of_url(F.col("url"))).withColumn(
-        "payload_bytes", F.length("html").cast("long")
-    )
-    agg = with_host.groupBy("host").agg(
-        F.count("*").alias("n_urls"),
-        F.sum("payload_bytes").alias("total_bytes"),
-        F.max("payload_bytes").alias("max_bytes"),
-    )
-    top = (
-        salted_topk(
-            with_host.select("host", "url", "payload_bytes"),
-            key="host", order_col="payload_bytes", tiebreak="url", k=topk, salt=salt,
-        )
-        .groupBy("host")
-        .agg(F.sort_array(F.collect_list(F.struct("rank", "url"))).alias("ranked"))
-        .select("host", F.expr("transform(ranked, x -> x.url)").alias("largest_urls"))
-    )
-    return agg.join(top, "host")

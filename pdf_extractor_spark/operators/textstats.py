@@ -1,5 +1,5 @@
 """Text-analysis operators for training-data curation: language ID,
-quality scoring, token counting, document fingerprinting.
+quality scoring, document fingerprinting.
 
 All pure column expressions / relational plans — each has a DuckDB
 oracle in plans/queries.py. At 100 TB these run inside the same scan
@@ -32,7 +32,7 @@ def _words(text_col) -> F.Column:
     return F.filter(F.split(text_col, " "), lambda w: w != "")
 
 
-def quality_features(docs: DataFrame, id_col: str = "doc_id", text_col: str = "text") -> DataFrame:
+def quality_features(docs: DataFrame) -> DataFrame:
     """Per-doc prose-quality signals: token count, mean word length,
     vocabulary richness, stopword density, repetition (Gopher-style
     most-frequent-n-gram share, Rae et al. 2021 §A1.1), composite
@@ -51,7 +51,7 @@ def quality_features(docs: DataFrame, id_col: str = "doc_id", text_col: str = "t
     # count relation, so the document is split exactly once, there is
     # no doc-grain join, and both groupBys partial-aggregate map-side
     # (the shuffle carries one row per DISTINCT gram, not occurrence).
-    w = _words(F.col(text_col))
+    w = _words(F.col("text"))
     n_w = F.size(w)
     tagged = F.concat(
         F.transform(w, lambda x: F.struct(F.lit("u").alias("k"), x.alias("g"))),
@@ -65,8 +65,8 @@ def quality_features(docs: DataFrame, id_col: str = "doc_id", text_col: str = "t
         ),
     )
     grams = docs.select(
-        F.col(id_col).alias("doc_id"),
-        F.length(text_col).alias("n_chars"),
+        "doc_id",
+        F.length("text").alias("n_chars"),
         # explode_outer: an empty document keeps its (null-gram) row
         F.explode_outer(tagged).alias("t"),
     ).select("doc_id", "n_chars", F.col("t.k").alias("k"), F.col("t.g").alias("g"))
@@ -101,12 +101,7 @@ def quality_features(docs: DataFrame, id_col: str = "doc_id", text_col: str = "t
     )
 
 
-def language_id(
-    docs: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    extra_cols: dict | None = None,
-) -> DataFrame:
+def language_id(docs: DataFrame, extra_cols: dict | None = None) -> DataFrame:
     """Stopword-hit language ID: explode words, join a broadcast
     lexicon, argmax hits per doc (tie → lexicographic lang), docs with
     zero hits → 'und'.
@@ -122,9 +117,7 @@ def language_id(
             schema="lang string, word string",
         )
     )
-    words = docs.select(
-        F.col(id_col).alias("doc_id"), F.explode(_words(F.col(text_col))).alias("word")
-    )
+    words = docs.select("doc_id", F.explode(_words(F.col("text"))).alias("word"))
     hits = words.join(lex, "word").groupBy("doc_id", "lang").agg(F.count("*").alias("hits"))
     # argmax via min_by on (-hits, lang): max hits, ties to the
     # lexicographically smallest lang — identical to the former
@@ -136,7 +129,7 @@ def language_id(
             F.struct((-F.col("hits")).alias("nh"), F.col("lang")),
         ).alias("b")
     ).select("doc_id", F.col("b.lang").alias("lang"), F.col("b.hits").alias("hits"))
-    base_cols = [F.col(id_col).alias("doc_id")] + [
+    base_cols = [F.col("doc_id")] + [
         expr.alias(name) for name, expr in (extra_cols or {}).items()
     ]
     return (
@@ -151,20 +144,7 @@ def language_id(
     )
 
 
-def token_counts(docs: DataFrame, id_col: str = "doc_id", text_col: str = "text") -> DataFrame:
-    """Whitespace token count + regex (BPE-ish pre-tokenizer) count."""
-    return docs.select(
-        F.col(id_col).alias("doc_id"),
-        F.size(_words(F.col(text_col))).cast("bigint").alias("ws_tokens"),
-        F.size(F.regexp_extract_all(F.col(text_col), F.lit(TOKEN_PATTERN), 0))
-        .cast("bigint")
-        .alias("re_tokens"),
-    )
-
-
-def fingerprint_kmin(
-    docs: DataFrame, k: int = 4, id_col: str = "doc_id", text_col: str = "text", n: int = 3
-) -> DataFrame:
+def fingerprint_kmin(docs: DataFrame, k: int = 4) -> DataFrame:
     """k-min-hash document fingerprint: the k smallest md5 shingle
     hashes joined into one string — a compact sketch whose equality
     implies near-duplication (bottom-k sketch).
@@ -179,7 +159,7 @@ def fingerprint_kmin(
     per-CHARACTER and the array form wins 30×.)"""
     from .dedup import _hash64, shingles
 
-    sh = shingles(docs, id_col, text_col, n).withColumn("h", _hash64(F.col("shingle")))
+    sh = shingles(docs).withColumn("h", _hash64(F.col("shingle")))
     w = W.partitionBy("doc_id").orderBy(F.asc("h"))
     topk = sh.withColumn("rn", F.row_number().over(w)).filter(F.col("rn") <= k)
     return topk.groupBy("doc_id").agg(
@@ -189,13 +169,7 @@ def fingerprint_kmin(
     )
 
 
-def fingerprint_winnow(
-    docs: DataFrame,
-    k: int = 8,
-    window: int = 4,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-) -> DataFrame:
+def fingerprint_winnow(docs: DataFrame, k: int = 8, window: int = 4) -> DataFrame:
     """Winnowing document fingerprint (Schleimer et al., SIGMOD 2003):
     rolling k-gram char hashes; from every ``window`` consecutive
     hashes keep the minimum (right-most on ties, via position in the
@@ -214,11 +188,11 @@ def fingerprint_winnow(
     a map-only stage; the round-1 formulation shuffled ~every
     character of the corpus through a doc_id window.
     """
-    n_grams = (F.length(F.col(text_col)) - k + 1).cast("int")
+    n_grams = (F.length(F.col("text")) - k + 1).cast("int")
     gram_hashes = F.transform(
         F.sequence(F.lit(1), n_grams),
         lambda i: F.conv(
-            F.substring(F.md5(F.substring(F.col(text_col), i, k).cast("binary")), 1, 8),
+            F.substring(F.md5(F.substring(F.col("text"), i, k).cast("binary")), 1, 8),
             16,
             10,
         ).cast("bigint"),
@@ -233,7 +207,7 @@ def fingerprint_winnow(
     # document (measured 37 s vs 1.5 s at sf0.1). Referencing the
     # computed column keeps it O(n); the multi-use reference also
     # stops CollapseProject from re-inlining it.
-    with_hashes = docs.select(F.col(id_col).alias("doc_id"), hs.alias("hs"))
+    with_hashes = docs.select("doc_id", hs.alias("hs"))
     hcol = F.col("hs")
     fps = F.array_distinct(
         F.when(

@@ -713,9 +713,8 @@ def lang_id(spark, sf_dir):
     columns are pure per-row expressions riding the same scan, so
     they are one registry entry now — freeing a slot under the 50-row
     driver artifact cap for the flagship `outline_stats` row
-    (VERDICT r3 next-round #1). Both operators remain independent
-    functions (textstats.language_id / token_counts) with their own
-    unit tests."""
+    (VERDICT r3 next-round #1). The token counts ride
+    textstats.language_id's ``extra_cols``."""
     docs = R.load(spark, sf_dir, "documents")
     return T.language_id(
         docs,
@@ -1237,21 +1236,24 @@ def pdf_payload_extract(spark, sf_dir):
     def rows_of(i):
         return [
             {"url": f"https://pdf.example.com/doc/{i:06d}",
-             "html": corpus_mod.random_pdf(random.Random(77_000 + i))}
+             "html": corpus_mod.random_pdf(random.Random(corpus_mod.PDF_CORPUS_SEED + i))}
         ]
 
     pages = corpus_mod.executor_rows(spark, 500, 16, "url string, html binary", rows_of)
     return extract_pages(pages).select("url", "title", "outline_json", "parse_ok")
 
 
-def _pdf_stats_oracle(n: int = 300) -> str:
+_PDF_STATS_N = 300
+
+
+def _pdf_stats_oracle() -> str:
     """DuckDB twin of pdf_parse_stats: an inline VALUES table of the
     generator's ground truth (corpus.pdf_truth_stats — the line plan
     the PDFs were CONSTRUCTED from, independent of the parser). Inline
     so the oracle needs no filesystem access in the driver's DuckDB."""
     from .. import corpus as corpus_mod
 
-    rows = [corpus_mod.pdf_truth_stats(i) for i in range(n)]
+    rows = [corpus_mod.pdf_truth_stats(i) for i in range(_PDF_STATS_N)]
     vals = ",\n".join(
         "('%s', %d, %d, '%s')" % (r["url"], r["n_pages"], r["n_spans"], r["content_md5"])
         for r in rows
@@ -1278,7 +1280,8 @@ def pdf_parse_stats(spark, sf_dir):
     from ..sources import payload as payload_mod
 
     def spans_of(i):
-        pages = payload_mod.parse_pdf(corpus_mod.random_pdf(random.Random(77_000 + i)))
+        pdf = corpus_mod.random_pdf(random.Random(corpus_mod.PDF_CORPUS_SEED + i))
+        pages = payload_mod.parse_pdf(pdf)
         url = f"https://pdf.example.com/doc/{i:06d}"
         k = 0
         for pnum, pg in enumerate(pages):
@@ -1295,7 +1298,7 @@ def pdf_parse_stats(spark, sf_dir):
                         k += 1
 
     spans = corpus_mod.executor_rows(
-        spark, 300, 16,
+        spark, _PDF_STATS_N, 16,
         "url string, span_idx int, page_num int, size double, text string",
         spans_of,
     )
@@ -1313,7 +1316,11 @@ def pdf_parse_stats(spark, sf_dir):
     )
 
 
-def _outline_stats_oracle(n: int = 400, seed_base: int = 88_000) -> str | None:
+_OUTLINE_STATS_N = 400
+_OUTLINE_STATS_SEED = 88_000
+
+
+def _outline_stats_oracle() -> str | None:
     """DuckDB twin of outline_stats: an inline VALUES table of per-url
     digests computed by tests/refimpl.py — the clean-room row-at-a-time
     oracle that tests/test_refimpl_vs_reference.py pins byte-identical
@@ -1347,8 +1354,8 @@ def _outline_stats_oracle(n: int = 400, seed_base: int = 88_000) -> str | None:
         return hashlib.md5(s.encode("utf-8")).hexdigest()
 
     rows = []
-    for i in range(n):
-        pages = corpus_mod.random_spandoc(random.Random(seed_base + i))
+    for i in range(_OUTLINE_STATS_N):
+        pages = corpus_mod.random_spandoc(random.Random(_OUTLINE_STATS_SEED + i))
         res = refimpl.extract_document(pages)
         if res is None:
             continue  # failed docs produce NO output (S4) on both sides
@@ -1397,13 +1404,15 @@ def outline_stats(spark, sf_dir):
     from ..operators.extract import extract_pages
 
     def rows_of(i):
-        pages = corpus_mod.random_spandoc(random.Random(88_000 + i))
+        pages = corpus_mod.random_spandoc(random.Random(_OUTLINE_STATS_SEED + i))
         return [
             {"url": f"https://span.example.com/doc/{i:06d}",
              "html": corpus_mod.spandoc_to_payload(pages)}
         ]
 
-    pages = corpus_mod.executor_rows(spark, 400, 16, "url string, html binary", rows_of)
+    pages = corpus_mod.executor_rows(
+        spark, _OUTLINE_STATS_N, 16, "url string, html binary", rows_of
+    )
     res = extract_pages(pages).filter(F.col("parse_ok"))
     return res.select("url", *(c.alias(k) for k, c in _outline_digests().items()))
 

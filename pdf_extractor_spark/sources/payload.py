@@ -67,7 +67,7 @@ def parse_payload(payload: Optional[bytes]) -> tuple[str, Optional[list[dict]]]:
     return kind, None
 
 
-def pages_from_binary_files(spark, input_dir: str, glob: str = "*.[pP][dD][fF]"):
+def pages_from_binary_files(spark, input_dir: str):
     """S1 parity (extract_outline.py:149-155): directory scan of raw
     payload files via Spark's binaryFile source — the local-files twin
     of the Iceberg pages scan. Case-insensitive ``*.pdf`` matching
@@ -79,7 +79,7 @@ def pages_from_binary_files(spark, input_dir: str, glob: str = "*.[pP][dD][fF]")
 
     raw = (
         spark.read.format("binaryFile")
-        .option("pathGlobFilter", glob)
+        .option("pathGlobFilter", "*.[pP][dD][fF]")
         .option("recursiveFileLookup", "true")
         .load(input_dir)
     )

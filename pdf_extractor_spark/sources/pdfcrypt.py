@@ -188,12 +188,13 @@ _PAD = bytes(
 )
 
 
-def hash_2b(password: bytes, salt: bytes, udata: bytes = b"") -> bytes:
-    """ISO 32000-2 algorithm 2.B — the R6 iterated password hash."""
-    k = hashlib.sha256(password + salt + udata).digest()
+def hash_2b(password: bytes, salt: bytes) -> bytes:
+    """ISO 32000-2 algorithm 2.B — the R6 iterated password hash of a
+    user password (the owner-password form also mixes in /U)."""
+    k = hashlib.sha256(password + salt).digest()
     i = 0
     while True:
-        k1 = (password + k + udata) * 64
+        k1 = (password + k) * 64
         e = aes_cbc_encrypt(k[:16], k[16:32], k1)
         mod = sum(e[:16]) % 3
         if mod == 0:
@@ -213,7 +214,7 @@ class StandardSecurityHandler:
     Raises PdfCryptError when the file genuinely needs a password or
     uses an unsupported scheme — the caller maps that to an S4 row."""
 
-    def __init__(self, enc: dict, id0: bytes, password: bytes = b""):
+    def __init__(self, enc: dict, id0: bytes):
         filt = enc.get("Filter")
         if filt is not None and str(filt) != "Standard":
             raise PdfCryptError(f"unsupported security handler {filt!r}")
@@ -232,16 +233,16 @@ class StandardSecurityHandler:
         if self.v in (1, 2):
             length = self._as_int(enc.get("Length"), 40)
             self.key_bytes = max(5, min(16, length // 8 if length >= 40 else length))
-            self.key = self._legacy_key(password)
-            self._check_user_password_legacy(password)
+            self.key = self._legacy_key()
+            self._check_user_password_legacy()
         elif self.v == 4:
             self.stm_cfm, self.str_cfm, self.key_bytes = self._crypt_filters(enc)
-            self.key = self._legacy_key(password)
-            self._check_user_password_legacy(password)
+            self.key = self._legacy_key()
+            self._check_user_password_legacy()
         elif self.v == 5:
             self.stm_cfm = self.str_cfm = "AESV3"
             self.key_bytes = 32
-            self.key = self._aes256_key(enc, password)
+            self.key = self._aes256_key(enc)
         else:
             raise PdfCryptError(f"unsupported encryption V={self.v}")
 
@@ -299,10 +300,9 @@ class StandardSecurityHandler:
         return names["stm"][0], names["str"][0], kb
 
     # -- legacy (R2-R4) ---------------------------------------------
-    def _legacy_key(self, password: bytes) -> bytes:
-        pwp = (password + _PAD)[:32]
+    def _legacy_key(self) -> bytes:
         h = hashlib.md5()
-        h.update(pwp)
+        h.update(_PAD)  # the empty user password, padded to 32 bytes
         h.update(self.o_entry[:32])
         h.update(struct.pack("<i", self.p))
         h.update(self.id0)
@@ -315,7 +315,7 @@ class StandardSecurityHandler:
                 key = hashlib.md5(key[:n]).digest()
         return key[:n]
 
-    def _check_user_password_legacy(self, password: bytes) -> None:
+    def _check_user_password_legacy(self) -> None:
         if self.r == 2:
             expect = rc4(self.key, _PAD)
             ok = expect == self.u_entry[:32]
@@ -330,12 +330,12 @@ class StandardSecurityHandler:
             raise PdfCryptError("encrypted PDF requires a password")
 
     # -- AES-256 (R5/R6) ----------------------------------------------
-    def _aes256_key(self, enc: dict, password: bytes) -> bytes:
+    def _aes256_key(self, enc: dict) -> bytes:
         u = self.u_entry
         ue = self._as_bytes(enc.get("UE"))
         if len(u) < 48 or len(ue) < 32:
             raise PdfCryptError("malformed AES-256 /U or /UE")
-        pw = password[:127]
+        pw = b""  # the empty user password
         vsalt, ksalt = u[32:40], u[40:48]
         if self.r == 5:
             valid = hashlib.sha256(pw + vsalt).digest()

@@ -94,6 +94,30 @@ class Stream:
         return self._data
 
 
+# ISO 32000-1 §7.3.3: an optional sign, then digits with at most one
+# leading, embedded or trailing period. There is no exponent form.
+_NUMBER_RX = re.compile(rb"[+-]?(?:\d+\.?\d*|\.\d+)")
+# ISO 32000-1 Annex C: the largest magnitude of a real
+_REAL_MAX = 3.403e38
+
+
+def _real(v: Any) -> float:
+    """A number object as a float clamped to ±_REAL_MAX. Anything else
+    raises TypeError, which drops the operator or entry it fed.
+
+    Integers are unbounded, so float() alone overflows on a long one,
+    and a long real lexes to ±inf. Every value that feeds a span's
+    size or position goes through here, so those stay finite."""
+    if isinstance(v, (int, float)):
+        if -_REAL_MAX <= v <= _REAL_MAX:
+            return float(v)
+        if v > 0:
+            return _REAL_MAX
+        if v < 0:
+            return -_REAL_MAX
+    raise TypeError(f"not a PDF number: {v!r}")
+
+
 _WS = b"\x00\t\n\x0c\r "
 _DELIM = b"()<>[]{}/%"
 _REGULAR_END = _WS + _DELIM
@@ -123,10 +147,6 @@ class Lexer:
                 self.pos = n if e < 0 else e + 1
             else:
                 return
-
-    def peek_byte(self) -> int:
-        self._skip_ws()
-        return self.buf[self.pos] if self.pos < len(self.buf) else -1
 
     def _read_regular(self) -> bytes:
         start = self.pos
@@ -260,11 +280,13 @@ class Lexer:
         if tok == b"null":
             return None
         # number — possibly "num gen R" reference
+        if not _NUMBER_RX.fullmatch(tok):
+            return Name(tok.decode("latin-1", "replace"))
+        if b"." in tok:
+            return float(tok)
         try:
-            if b"." in tok or b"e" in tok or b"E" in tok:
-                return float(tok)
             num = int(tok)
-        except ValueError:
+        except ValueError:  # more digits than int() converts
             return Name(tok.decode("latin-1", "replace"))
         save = self.pos
         self._skip_ws()
@@ -789,7 +811,8 @@ class PdfDocument:
             self._objstm_cache[stm_num] = tbl
         return tbl.get(want)
 
-    def resolve(self, obj: Any, depth: int = 0) -> Any:
+    def resolve(self, obj: Any) -> Any:
+        depth = 0  # bounds a chain of references to references
         while isinstance(obj, Ref) and depth < 32:
             obj = self.get_object(obj.num)
             depth += 1
@@ -1095,11 +1118,11 @@ class Font:
             de = self.doc.resolve(desc.get("Descent"))
             mw = self.doc.resolve(desc.get("MissingWidth"))
             if isinstance(a, (int, float)) and a:
-                self.ascent = float(a) / 1000.0
+                self.ascent = _real(a) / 1000.0
             if isinstance(de, (int, float)) and de:
-                self.descent = float(de) / 1000.0
+                self.descent = _real(de) / 1000.0
             if isinstance(mw, (int, float)):
-                self.default_width = float(mw)
+                self.default_width = _real(mw)
 
     def _init_simple(self) -> None:
         doc = self.doc
@@ -1110,7 +1133,7 @@ class Font:
             for i, w in enumerate(ws):
                 w = doc.resolve(w)
                 if isinstance(w, (int, float)):
-                    self.widths[fc + i] = float(w)
+                    self.widths[fc + i] = _real(w)
         # encoding map code -> unicode
         self.enc: dict[int, str] = {}
         enc = doc.resolve(self.d.get("Encoding"))
@@ -1155,7 +1178,7 @@ class Font:
         self.name = str(nm) if isinstance(nm, (Name, str)) and str(nm) else "Unnamed-T3"
         fm = doc.resolve(self.d.get("FontMatrix"))
         try:
-            m = [float(doc.resolve(v)) for v in fm]
+            m = [_real(doc.resolve(v)) for v in fm]
             if len(m) != 6:
                 raise ValueError
         except (TypeError, ValueError):
@@ -1166,7 +1189,7 @@ class Font:
             self.default_width *= sx
         bbox = doc.resolve(self.d.get("FontBBox"))
         try:
-            b = [float(doc.resolve(v)) for v in bbox]
+            b = [_real(doc.resolve(v)) for v in bbox]
             y0, y1 = b[1] * m[3], b[3] * m[3]
             if y1 > y0:  # degenerate/zero bbox: keep simple-font defaults
                 self.ascent = y1 if y1 > 0 else self.ascent
@@ -1239,7 +1262,7 @@ class Font:
                 self._init_descriptor(df.get("FontDescriptor"))
                 dw = doc.resolve(df.get("DW"))
                 if isinstance(dw, (int, float)):
-                    self.default_width = float(dw)
+                    self.default_width = _real(dw)
                 else:
                     self.default_width = 1000.0
                 warr = doc.resolve(df.get("W"))
@@ -1254,14 +1277,14 @@ class Font:
                             for j, w in enumerate(lst):
                                 w = doc.resolve(w)
                                 if isinstance(w, (int, float)):
-                                    self.widths[int(c) + j] = float(w)
+                                    self.widths[int(c) + j] = _real(w)
                             i += 2
                         elif i + 2 < len(warr):
                             c2 = doc.resolve(warr[i + 1])
                             w = doc.resolve(warr[i + 2])
                             if isinstance(w, (int, float)):
                                 for cc in range(int(c), int(c2) + 1):
-                                    self.widths[cc] = float(w)
+                                    self.widths[cc] = _real(w)
                             i += 3
                         else:
                             break
@@ -1483,7 +1506,7 @@ class ContentInterpreter:
             xcur = 0.0  # advance along baseline in unscaled text space
             for item in items:
                 if isinstance(item, (int, float)):
-                    xcur -= item / 1000.0 * tfs * (tz / 100.0)
+                    xcur -= _real(item) / 1000.0 * tfs * (tz / 100.0)
                     continue
                 if not isinstance(item, bytes):
                     continue
@@ -1548,39 +1571,40 @@ class ContentInterpreter:
                     if gs_stack:
                         ctm = gs_stack.pop()
                 elif op == b"cm" and len(stack) >= 6:
-                    m = tuple(float(v) for v in stack[-6:])
-                    ctm = _mat_mul(m, ctm)
+                    m = tuple(_real(v) for v in stack[-6:])
+                    # clamped, so nested cm products cannot overflow
+                    ctm = tuple(map(_real, _mat_mul(m, ctm)))
                 elif op == b"BT":
                     tm = tlm = _IDENT
                 elif op == b"ET":
                     pass
                 elif op == b"Tf" and len(stack) >= 2:
-                    tfs = float(stack[-1])
+                    tfs = _real(stack[-1])
                     fname = stack[-2]
                     if isinstance(fname, str):
                         font = self._font_for(res, fname)
                 elif op == b"Td" and len(stack) >= 2:
-                    tlm = _mat_mul((1, 0, 0, 1, float(stack[-2]), float(stack[-1])), tlm)
+                    tlm = _mat_mul((1, 0, 0, 1, _real(stack[-2]), _real(stack[-1])), tlm)
                     tm = tlm
                 elif op == b"TD" and len(stack) >= 2:
-                    tl = -float(stack[-1])
-                    tlm = _mat_mul((1, 0, 0, 1, float(stack[-2]), float(stack[-1])), tlm)
+                    tl = -_real(stack[-1])
+                    tlm = _mat_mul((1, 0, 0, 1, _real(stack[-2]), _real(stack[-1])), tlm)
                     tm = tlm
                 elif op == b"Tm" and len(stack) >= 6:
-                    tlm = tm = tuple(float(v) for v in stack[-6:])
+                    tlm = tm = tuple(_real(v) for v in stack[-6:])
                 elif op == b"T*":
                     tlm = _mat_mul((1, 0, 0, 1, 0.0, -tl), tlm)
                     tm = tlm
                 elif op == b"TL" and stack:
-                    tl = float(stack[-1])
+                    tl = _real(stack[-1])
                 elif op == b"Tc" and stack:
-                    tc = float(stack[-1])
+                    tc = _real(stack[-1])
                 elif op == b"Tw" and stack:
-                    tw = float(stack[-1])
+                    tw = _real(stack[-1])
                 elif op == b"Tz" and stack:
-                    tz = float(stack[-1])
+                    tz = _real(stack[-1])
                 elif op == b"Ts" and stack:
-                    ts = float(stack[-1])
+                    ts = _real(stack[-1])
                 elif op == b"Tj" and stack:
                     show(stack[-1])
                 elif op == b"TJ" and stack:
@@ -1590,8 +1614,8 @@ class ContentInterpreter:
                     tm = tlm
                     show(stack[-1])
                 elif op == b'"' and len(stack) >= 3:
-                    tw = float(stack[-3])
-                    tc = float(stack[-2])
+                    tw = _real(stack[-3])
+                    tc = _real(stack[-2])
                     tlm = _mat_mul((1, 0, 0, 1, 0.0, -tl), tlm)
                     tm = tlm
                     show(stack[-1])
@@ -1628,7 +1652,7 @@ class ContentInterpreter:
         inner_ctm = ctm
         if isinstance(mtx, list) and len(mtx) == 6:
             try:
-                inner_ctm = _mat_mul(tuple(float(v) for v in mtx), ctm)
+                inner_ctm = tuple(map(_real, _mat_mul(tuple(_real(v) for v in mtx), ctm)))
             except (TypeError, ValueError):
                 pass
         inner_res = self.doc.resolve(xo.dict.get("Resources"))
@@ -1688,7 +1712,7 @@ def extract_spans(payload: bytes) -> list[dict]:
     for page in doc.pages():
         media = doc.resolve(page.get("MediaBox")) or [0, 0, 612, 792]
         try:
-            mb = [float(doc.resolve(v)) for v in media]
+            mb = [_real(doc.resolve(v)) for v in media]
         except (TypeError, ValueError):
             mb = [0, 0, 612, 792]
         if len(mb) < 4:  # corrupt /MediaBox: repair like MuPDF, don't fail the doc

@@ -35,6 +35,13 @@ from ..schemas import PAGES_SCHEMA
 # i.e. never committed.
 _METADATA_TMP_RE = re.compile(r"^\.\d+\.[0-9a-fA-F-]+\.tmp$")
 
+# Event-time aggregation constants; the DuckDB oracles of
+# stream_windowed_counts and stream_session_windows (plans/queries.py)
+# spell out the same window and gap.
+WINDOW = "1 hour"
+SESSION_GAP = "30 minutes"
+WATERMARK = "2 hours"  # late-data bound; a no-op on batch frames
+
 
 def sanitize_checkpoint(spark: SparkSession, checkpoint_dir: str) -> int:
     """Remove uncommitted metadata-log temp files left by a crash.
@@ -111,16 +118,14 @@ def stream_warc_pages(
 
 
 def stream_extract(
-    pages_stream: DataFrame,
-    out_dir: str,
-    checkpoint_dir: str,
-    n_buckets: int = 32,
-    available_now: bool = True,
+    pages_stream: DataFrame, out_dir: str, checkpoint_dir: str, n_buckets: int = 32
 ):
-    """Run the extraction pipeline incrementally; every micro-batch is
-    committed through the batch writer (bucketed layout + cumulative
-    lineage manifest), so downstream consumers cannot tell whether a
-    snapshot was produced by the batch or the streaming job."""
+    """Run the extraction pipeline incrementally under an availableNow
+    trigger: the query drains what has landed, then stops. Every
+    micro-batch is committed through the batch writer (bucketed layout
+    + cumulative lineage manifest), so downstream consumers cannot tell
+    whether a snapshot was produced by the batch or the streaming
+    job."""
     from .. import io as pio
 
     # crash-recovery: clear uncommitted metadata-log temps so a kill
@@ -142,26 +147,23 @@ def stream_extract(
         result = extract_pages(pending, keep_failed=True)
         pio.write_result(result, out_dir, n_buckets=n_buckets, mode="append")
 
-    writer = (
+    return (
         pages_stream.writeStream.foreachBatch(commit)
         .option("checkpointLocation", checkpoint_dir)
         .outputMode("append")
+        .trigger(availableNow=True)
+        .start()
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
 
 
-def windowed_event_counts(
-    events: DataFrame, window: str = "1 hour", watermark: str = "2 hours"
-) -> DataFrame:
+def windowed_event_counts(events: DataFrame) -> DataFrame:
     """Tumbling-window per-type counts; the watermark bounds state for
     late events (required for streaming, a no-op on batch frames)."""
     # watermarks require tz-aware TIMESTAMP; parquet events arrive NTZ
     src = events.withColumn("ts", F.col("ts").cast("timestamp"))
-    src = src.withWatermark("ts", watermark) if src.isStreaming else src
+    src = src.withWatermark("ts", WATERMARK) if src.isStreaming else src
     return (
-        src.groupBy(F.window("ts", window).alias("w"), "event_type")
+        src.groupBy(F.window("ts", WINDOW).alias("w"), "event_type")
         .agg(
             F.count("*").alias("n_events"),
             F.round(F.sum("value"), 6).alias("sum_value"),
@@ -175,17 +177,15 @@ def windowed_event_counts(
     )
 
 
-def session_windows(
-    events: DataFrame, gap: str = "30 minutes", watermark: str = "2 hours"
-) -> DataFrame:
+def session_windows(events: DataFrame) -> DataFrame:
     """Gap-based session windows per user (session closes after
-    ``gap`` of inactivity) — F.session_window keeps state per key and
-    is the idiomatic streaming form of the batch lag+cumsum
+    SESSION_GAP of inactivity) — F.session_window keeps state per key
+    and is the idiomatic streaming form of the batch lag+cumsum
     sessionization."""
     src = events.withColumn("ts", F.col("ts").cast("timestamp"))
-    src = src.withWatermark("ts", watermark) if src.isStreaming else src
+    src = src.withWatermark("ts", WATERMARK) if src.isStreaming else src
     return (
-        src.groupBy(F.session_window("ts", gap).alias("w"), "user_id")
+        src.groupBy(F.session_window("ts", SESSION_GAP).alias("w"), "user_id")
         .agg(F.count("*").alias("n_events"))
         .select(
             F.col("w.start").alias("session_start"),

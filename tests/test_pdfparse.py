@@ -350,10 +350,10 @@ def test_fuzzed_pdfs_never_hang(spark):
 
 
 def test_nan_size_span_beside_title_matches_refimpl():
-    """A `1e999 Tf` span under a zero text matrix parses to size nan.
-    Beside a 24 pt title on page 0, the outline JSON must still be the
-    reference's, whose first-page order and max_fs come from Python's
-    sorted(), NaN included."""
+    """A `1e999 Tf` span under a zero text matrix, beside a 24 pt title
+    on page 0: every size is finite (PDF numbers have no exponent form,
+    so the Tf is dropped), and the outline JSON must still be the
+    reference's."""
     import math
 
     import pandas as pd
@@ -374,10 +374,52 @@ def test_nan_size_span_beside_title_matches_refimpl():
     )
     pages = pdfparse.extract_spans(pdf)
     sizes = [sp["size"] for b in pages[0]["blocks"] for ln in b for sp in ln]
-    assert any(math.isnan(s) for s in sizes)
+    assert sizes and all(math.isfinite(s) for s in sizes)
 
     expected = refimpl.render_json(refimpl.extract_document(pages))
     assert json.loads(expected)["title"] == "Big Title Here"
+    out = _process_batch(pd.DataFrame({"url": ["u"], "html": [pdf]}))
+    assert out["parse_ok"][0], out["error"][0]
+    assert out["outline_json"][0] == expected
+
+
+@pytest.mark.parametrize(
+    "line",
+    [
+        b"BT /F1 1e999 Tf 72 650 Td (Odd Sized Span) Tj ET",
+        b"BT /F1 " + b"9" * 400 + b" Tf 72 650 Td (Odd Sized Span) Tj ET",
+        b"BT /F1 " + b"9" * 400 + b".5 Tf 72 650 Td (Odd Sized Span) Tj ET",
+        b"BT /F1 12 Tf 72 650 Td [(Odd) " + b"9" * 400 + b" (Span)] TJ ET",
+    ],
+    ids=["exponent", "int400", "real400", "tj_int400"],
+)
+def test_out_of_range_operand_gives_finite_sizes_and_matches_refimpl(line):
+    """An exponent-form or 400-digit operand must not cost the document:
+    the lexer follows ISO 32000-1 §7.3.3 (no exponent form) and operands
+    clamp to Annex C's real range, so the row is parse_ok with finite
+    sizes, and its outline JSON is refimpl's over the same spans."""
+    import math
+
+    import pandas as pd
+    import refimpl
+
+    from pdf_extractor_spark import corpus
+    from pdf_extractor_spark.operators.extract import _process_batch
+    from pdf_extractor_spark.sources import pdfparse
+
+    pdf = corpus.pdf_of_pages(
+        [
+            b"BT /F1 24 Tf 72 700 Td (Big Title Here) Tj ET\n" + line,
+            b"BT /F1 18 Tf 72 700 Td (Methods Overview) Tj ET\n"
+            b"BT /F1 11 Tf 72 670 Td (The body text of the second page is here.) Tj ET",
+        ]
+    )
+    pages = pdfparse.extract_spans(pdf)
+    spans = [sp for pg in pages for b in pg["blocks"] for ln in b for sp in ln]
+    assert len(pages) == 2 and any("Odd" in sp["text"] for sp in spans)
+    assert all(math.isfinite(sp["size"]) for sp in spans)
+
+    expected = refimpl.render_json(refimpl.extract_document(pages))
     out = _process_batch(pd.DataFrame({"url": ["u"], "html": [pdf]}))
     assert out["parse_ok"][0], out["error"][0]
     assert out["outline_json"][0] == expected

@@ -7,8 +7,6 @@ Each test pins a specific fix:
     length mismatches (round 2 silently corrupted buckets to all-zero)
   - batch_cosine_topk must name missing query ids instead of silently
     dropping them (or raising an opaque matmul shape error)
-  - ivf_kmeans_centroids must keep the codebook at n_cells even when a
-    cell receives no vectors in a Lloyd iteration
   - multicol_reading_order must honor a per-document page_width column
     (A4 vs letter) rather than a constant 612
   - pdf_parse_stats ground truth: the generator's line plan equals the
@@ -80,24 +78,6 @@ def test_batch_topk_missing_query_ids_raise(spark, sf_dir):
     emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
     with pytest.raises(ValueError, match="999999"):
         batch_cosine_topk(emb, query_vec_ids=[0, 999999], k=5)
-
-
-def test_ivf_kmeans_codebook_never_shrinks(spark):
-    from pdf_extractor_spark.operators.similarity import ivf_kmeans_centroids
-
-    # 10 vectors in 2 tight clusters + 8 requested cells: most seeded
-    # cells lose every vector after the first assignment.
-    rng = random.Random(7)
-    rows = []
-    for i in range(10):
-        center = 10.0 if i % 2 else -10.0
-        rows.append((i, [center + rng.uniform(-0.1, 0.1) for _ in range(4)]))
-    emb = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
-    cents = ivf_kmeans_centroids(emb, n_cells=8, iters=3, dims=4)
-    got = cents.collect()
-    assert len(got) == 8, "empty Lloyd cells must keep their previous centroid"
-    assert sorted(r["cell_id"] for r in got) == list(range(8))
-    assert all(len(r["cv"]) == 4 and all(x is not None for x in r["cv"]) for r in got)
 
 
 def test_multicol_reading_order_uses_page_width_column(spark):
