@@ -47,8 +47,9 @@ SHINGLE_N = 3
 
 
 def shingles(docs: DataFrame) -> DataFrame:
-    """Distinct word ``SHINGLE_N``-gram shingles per document (the substrate for
-    Jaccard / MinHash). Pure SQL expressions — stays in codegen.
+    """Distinct word ``SHINGLE_N``-gram shingles per document (the
+    substrate for Jaccard / MinHash). Pure SQL expressions — stays in
+    codegen.
 
     The word array is MATERIALIZED as its own projection before the
     gram transform: higher-order-function lambdas are interpreted, so
