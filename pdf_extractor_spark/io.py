@@ -25,6 +25,9 @@ import time
 from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
+
+from .schemas import RESULT_SCHEMA
 
 
 def with_bucket(df: DataFrame, n_buckets: int) -> DataFrame:
@@ -88,12 +91,10 @@ def write_result(
         bucketed if input_bucketed else bucketed.repartition(n_buckets, "bucket")
     )
     to_write.write.mode(mode).partitionBy("bucket").parquet(table_dir)
-    return _finish_lineage(result.sparkSession, out_dir, table_dir, n_buckets, t_write0)
+    return _finish_lineage(result.sparkSession, out_dir, n_buckets, t_write0)
 
 
-def _finish_lineage(
-    spark: SparkSession, out_dir: str, table_dir: str, n_buckets: int, t_write0: float
-) -> dict:
+def _finish_lineage(spark: SparkSession, out_dir: str, n_buckets: int, t_write0: float) -> dict:
     # Per-bucket lineage from the committed snapshot with ONE
     # column-pruned aggregation job (bucket is a partition column —
     # free; parse_ok/error/payload_bytes are the only data columns
@@ -104,7 +105,7 @@ def _finish_lineage(
     # one small job. The collect is bounded by
     # n_buckets × (1 + number of error classes) rows.
     t_write1 = time.time()
-    written = _committed(spark, table_dir)
+    written = _committed(spark, out_dir)
     if written is None:
         # Nothing committed and this write appended zero rows: a normal
         # streaming state (a micro-batch that salvages no records, or
@@ -271,30 +272,43 @@ def write_json_files(result: DataFrame, out_dir: str) -> int:
     return int(n_written.value)
 
 
+# The result table as written: RESULT_SCHEMA's columns in the data
+# files, ``bucket`` from the partition directories.
+_TABLE_SCHEMA = T.StructType(
+    [*RESULT_SCHEMA.fields, T.StructField("bucket", T.IntegerType(), True)]
+)
+
+
 def read_result(spark: SparkSession, out_dir: str) -> DataFrame:
     """The committed result table under ``out_dir``: every row, parse
     failures included, with ``bucket`` as its partition column.
-    Success-only consumers filter ``parse_ok`` themselves."""
-    return spark.read.parquet(os.path.join(out_dir, "result"))
+    Success-only consumers filter ``parse_ok`` themselves.
+
+    The read passes the table's known schema: inferring it would cost
+    every read a one-task Spark job that reads a parquet footer (~0.1 s
+    of a warm job with the driver gaps around it)."""
+    return spark.read.schema(_TABLE_SCHEMA).parquet(os.path.join(out_dir, "result"))
 
 
-def _committed(spark: SparkSession, table_dir: str) -> DataFrame | None:
+def _committed(spark: SparkSession, out_dir: str) -> DataFrame | None:
     """The committed table, or None if nothing is committed yet (no path,
     or no data file under it). Any other read error raises: a table
     Spark refuses, taken as empty, would re-queue every committed url
     on resume and publish an all-zero manifest."""
     try:
-        return spark.read.parquet(table_dir)
+        table = read_result(spark, out_dir)
     except AnalysisException as e:
-        if e.getCondition() in ("PATH_NOT_FOUND", "UNABLE_TO_INFER_SCHEMA"):
+        if e.getCondition() == "PATH_NOT_FOUND":
             return None
         raise
+    # the read has already listed the files: no Spark job here
+    return table if table.inputFiles() else None
 
 
 def filter_pending(pages: DataFrame, out_dir: str) -> DataFrame:
     """Resume-from-checkpoint: keep only urls absent from the committed
     result table (left-anti join on the bucketed snapshot)."""
-    done = _committed(pages.sparkSession, os.path.join(out_dir, "result"))
+    done = _committed(pages.sparkSession, out_dir)
     if done is None:
         return pages
     return pages.join(done.select("url"), "url", "left_anti")

@@ -26,7 +26,7 @@ import pandas as pd
 from pyspark.sql import DataFrame
 
 from ..schemas import RESULT_SCHEMA
-from ..session import release_zip_importers
+from ..session import trim_per_task_costs
 from ..sources import payload as payload_codec
 from . import analyzer, html_extract, span_merge
 
@@ -115,7 +115,7 @@ def _run_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
             if len(pdf):
                 yield _process_batch(pdf)
     finally:
-        release_zip_importers()
+        trim_per_task_costs()
 
 
 def extract_pages(pages_df: DataFrame, keep_failed: bool = True) -> DataFrame:

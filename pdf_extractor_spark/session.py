@@ -8,6 +8,7 @@ sized to cores, small Arrow batches because payload rows are fat).
 
 from __future__ import annotations
 
+import gc
 import hashlib
 import logging
 import os
@@ -20,7 +21,7 @@ import time
 import zipimport
 from pathlib import Path
 
-from pyspark import SparkContext
+from pyspark import SparkContext, TaskContext
 from pyspark.sql import SparkSession
 
 log = logging.getLogger(__name__)
@@ -40,26 +41,41 @@ def _host_driver_mem() -> str:
 DEFAULT_SHUFFLE_PARTITIONS = int(_host_cpus())
 
 
-def release_zip_importers() -> None:
-    """Drop every ``zipimporter`` from ``sys.path_importer_cache``
-    together with its archive's cached directory.
+def trim_per_task_costs() -> None:
+    """Remove two fixed costs a reused Spark Python worker pays on every
+    task. Stage generators call this when they end.
 
-    PySpark calls ``importlib.invalidate_caches()`` at the start of
-    every task (``pyspark/worker_util.py``). On CPython 3.11 that makes
-    each cached zipimporter re-read its whole archive directory at
-    once: a reused Spark 4.1 worker holds 16 of them (pyspark.zip and
-    the spark-core jar), about 0.23 s of CPU per task on a 4 vCPU x86
-    host. Calling this at the end of a stage generator leaves the next
-    task's ``invalidate_caches()`` nothing to re-read. An import that
-    does need an archive later builds a fresh importer, which reads
-    the directory then, so a rewritten archive is still seen. CPython
-    3.12 defers the re-read itself (gh-103200): delete this helper
-    once workers run Python >= 3.12.
+    Zip importers: PySpark calls ``importlib.invalidate_caches()`` at
+    the start of every task (``pyspark/worker_util.py``). On CPython
+    3.11 that makes each cached zipimporter re-read its whole archive
+    directory at once: a reused Spark 4.1 worker holds 16 of them
+    (pyspark.zip and the spark-core jar), about 0.23 s of CPU per task
+    on a 4 vCPU x86 host. Every call drops each ``zipimporter`` from
+    ``sys.path_importer_cache`` together with its archive's cached
+    directory, so the next task's ``invalidate_caches()`` has nothing
+    to re-read. An import that does need an archive later builds a
+    fresh importer, which reads the directory then, so a rewritten
+    archive is still seen. CPython 3.12 defers the re-read itself
+    (gh-103200): drop this part once workers run Python >= 3.12.
+
+    Daemon GC: after each task of a reused worker, PySpark's daemon
+    runs a full ``gc.collect()`` (``pyspark/daemon.py:244``). A worker
+    holding the pipeline's imports tracks ~73.6k objects: in a job of
+    4 workers on a 4 vCPU host that collection took 17-113 ms per task
+    (median 43). The first call in a Spark Python worker collects once
+    and then ``gc.freeze()``s what survives, so every later collection
+    scans only what tasks allocate (~200 objects, under 0.2 ms). It
+    freezes once per process: objects frozen after every task could
+    leak as cyclic garbage. Outside a Spark task (the driver, tests)
+    the heap is left alone.
     """
     for path, finder in list(sys.path_importer_cache.items()):
         if isinstance(finder, zipimport.zipimporter):
             del sys.path_importer_cache[path]
             zipimport._zip_directory_cache.pop(finder.archive, None)
+    if gc.get_freeze_count() == 0 and TaskContext.get() is not None:
+        gc.collect()
+        gc.freeze()
 
 
 # The driver JVM's option the class-data-sharing flag rides on. Callers

@@ -1068,6 +1068,39 @@ def _base_enc_table(codec: str) -> dict[int, str]:
     return t
 
 
+def _cid_width_table(
+    runs: list[tuple[int, int, float]], default: float
+) -> tuple[list[int], list[float]]:
+    """/W runs ``(first, last, width)`` in file order → ``(starts,
+    widths)``: CID c has width ``widths[bisect_right(starts, c)]``, and
+    ``default`` (/DW) where no run covers it. A later run wins over an
+    earlier one it overlaps. The table grows with the number of runs,
+    not with the CIDs a range covers: ``/W [0 100000000 500]`` is one
+    interval, not 10^8 dict slots.
+
+    Runs are painted latest first onto the elementary intervals
+    between their boundaries; ``nxt`` (union-find) skips the intervals
+    already painted, so each is painted once."""
+    starts = sorted({b for lo, hi, _ in runs for b in (lo, hi + 1)})
+    widths: list[float | None] = [None] * len(starts)
+    nxt = list(range(len(starts)))
+
+    def unpainted(k: int) -> int:
+        while nxt[k] != k:
+            nxt[k] = nxt[nxt[k]]
+            k = nxt[k]
+        return k
+
+    for lo, hi, w in reversed(runs):
+        end = bisect.bisect_left(starts, hi + 1)
+        k = unpainted(bisect.bisect_left(starts, lo))
+        while k < end:
+            widths[k] = w
+            nxt[k] = k + 1
+            k = unpainted(k + 1)
+    return starts, [default] + [default if w is None else w for w in widths]
+
+
 class Font:
     """Unified simple/composite font: decode(bytes) -> [(unicode, width_1000, code)]."""
 
@@ -1256,6 +1289,7 @@ class Font:
                 pass  # malformed CMap → identity fallback
         desc_fonts = doc.resolve(self.d.get("DescendantFonts"))
         self.default_width = 1000.0
+        runs = []  # (first CID, last CID, width) in /W order
         if isinstance(desc_fonts, list) and desc_fonts:
             df = doc.resolve(desc_fonts[0])
             if isinstance(df, dict):
@@ -1277,17 +1311,22 @@ class Font:
                             for j, w in enumerate(lst):
                                 w = doc.resolve(w)
                                 if isinstance(w, (int, float)):
-                                    self.widths[int(c) + j] = _real(w)
+                                    runs.append((int(c) + j, int(c) + j, _real(w)))
                             i += 2
                         elif i + 2 < len(warr):
                             c2 = doc.resolve(warr[i + 1])
                             w = doc.resolve(warr[i + 2])
                             if isinstance(w, (int, float)):
-                                for cc in range(int(c), int(c2) + 1):
-                                    self.widths[cc] = _real(w)
+                                runs.append((int(c), int(c2), _real(w)))
                             i += 3
                         else:
                             break
+        # /W as disjoint CID intervals, for _cid_width
+        self._cid_w_starts, self._cid_w_vals = _cid_width_table(runs, self.default_width)
+
+    def _cid_width(self, cid: int) -> float:
+        """A Type0 glyph's /W width, else /DW."""
+        return self._cid_w_vals[bisect.bisect_right(self._cid_w_starts, cid)]
 
     def _cid_for(self, code: int) -> int:
         """Type0 code→CID: cidchar, then cidrange bisect, else identity."""
@@ -1347,8 +1386,7 @@ class Font:
                             txt = self._unicode_code_txt(code, nbytes)
                         else:
                             txt = "�" if code else ""
-                    cid = self._cid_for(code)
-                    out.append((txt, self.widths.get(cid, self.default_width), code))
+                    out.append((txt, self._cid_width(self._cid_for(code)), code))
                 return out
             for i in range(0, len(s) - 1, 2):
                 code = (s[i] << 8) | s[i + 1]
@@ -1358,7 +1396,7 @@ class Font:
                         txt = self._unicode_code_txt(code, 2)
                     else:
                         txt = "�" if code else ""
-                out.append((txt, self.widths.get(code, self.default_width), code))
+                out.append((txt, self._cid_width(code), code))
             if len(s) % 2:  # trailing odd byte
                 code = s[-1]
                 out.append((self.tounicode.get(code, ""), self.default_width, code))

@@ -204,7 +204,7 @@ def parse_content_batches(batches):
     edges parse records identically."""
     import pandas as pd
 
-    from ..session import release_zip_importers
+    from ..session import trim_per_task_costs
 
     try:
         for pdf in batches:
@@ -229,7 +229,7 @@ def parse_content_batches(batches):
             ]
             yield pd.DataFrame(rows, columns=["url", "warc_ts", "html", "text", "lang"])
     finally:
-        release_zip_importers()
+        trim_per_task_costs()
 
 
 def pages_from_warc(spark, input_dir: str, glob: str = "*.warc*"):

@@ -11,11 +11,18 @@ MuPDF names Type3 fonts from /Name else 'Unnamed-T3' and transforms
 
 from __future__ import annotations
 
+import random
 import zlib
 
 import pytest
 
-from pdf_extractor_spark.sources.pdfparse import _parse_cid_cmap, extract_spans
+from pdf_extractor_spark.sources.pdfparse import (
+    Font,
+    PdfDocument,
+    Ref,
+    _parse_cid_cmap,
+    extract_spans,
+)
 
 
 def _build(font_objs: list[tuple[int, bytes]], content: bytes, page_obj: int) -> bytes:
@@ -421,3 +428,70 @@ class TestPredefinedUnicodeCmaps:
             )
         )
         assert ln["text"] == "あA"
+
+
+def _identity_type0(w: bytes) -> Font:
+    """The Type0 font (Identity-H, /DW 700, the given /W) of a one-page
+    PDF, as the parser builds it."""
+    pdf = _build(
+        [
+            (
+                3,
+                b"<< /Type /Font /Subtype /Type0 /BaseFont /Cid "
+                b"/Encoding /Identity-H /DescendantFonts [4 0 R] >>",
+            ),
+            (4, b"<< /Type /Font /Subtype /CIDFontType2 /BaseFont /Cid /DW 700 /W " + w + b" >>"),
+        ],
+        b"BT /F1 24 Tf 72 700 Td <0000> Tj ET",
+        5,
+    )
+    doc = PdfDocument(pdf)
+    return Font(doc, doc.resolve(Ref(3, 0)))
+
+
+def _expanded_widths(w_array: list) -> dict[int, float]:
+    """/W expanded one dict slot per CID, later entries overwriting."""
+    out: dict[int, float] = {}
+    i = 0
+    while i < len(w_array):
+        if isinstance(w_array[i + 1], list):
+            for j, w in enumerate(w_array[i + 1]):
+                out[w_array[i] + j] = float(w)
+            i += 2
+        else:
+            for c in range(w_array[i], w_array[i + 1] + 1):
+                out[c] = float(w_array[i + 2])
+            i += 3
+    return out
+
+
+class TestCidWidths:
+    def test_range_entry_stays_one_interval(self):
+        """A 15-byte /W range over a million CIDs is kept as a range,
+        not expanded to a slot per CID (10^8 CIDs would take ~10 GB)."""
+        font = _identity_type0(b"[0 1000000 500]")
+        assert not font.widths and len(font._cid_w_starts) <= 2
+        for cid in (0, 500000, 1000000):
+            assert font._cid_width(cid) == 500.0
+        assert font._cid_width(1000001) == 700.0
+        assert [w for _t, w, _c in font.decode(b"\x00\x00\xff\xff")] == [500.0, 500.0]
+
+    def test_later_entry_wins_like_expanded_table(self):
+        rng = random.Random(5)
+        for _ in range(300):
+            w_array: list = []
+            for _e in range(rng.randint(1, 6)):
+                lo = rng.randint(0, 30)
+                if rng.random() < 0.5:
+                    w_array += [lo, [rng.choice((100, 250, 1000)) for _ in range(rng.randint(1, 5))]]
+                else:
+                    w_array += [lo, lo + rng.randint(-1, 12), rng.choice((300, 600))]
+            expanded = _expanded_widths(w_array)
+            font = _identity_type0(_pdf_array(w_array))
+            assert [font._cid_width(c) for c in range(-1, 50)] == [
+                expanded.get(c, 700.0) for c in range(-1, 50)
+            ], w_array
+
+
+def _pdf_array(items: list) -> bytes:
+    return b"[" + b" ".join(_pdf_array(v) if isinstance(v, list) else b"%d" % v for v in items) + b"]"

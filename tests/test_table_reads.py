@@ -1,0 +1,87 @@
+"""The package reads its result table with the table's known schema.
+
+Reading parquet without a schema makes Spark infer one first: a
+one-task job that reads a parquet footer, ~0.1 s of a warm job with
+the driver gaps around it, paid by every ``filter_pending`` and every
+lineage rescan. These tests count the Spark jobs each read starts (by
+job group), and pin that the schema'd read still takes a table
+directory with no data file as "nothing committed". A table Spark
+refuses is covered in test_round5_fixes.
+"""
+
+from __future__ import annotations
+
+import json
+from pathlib import Path
+
+from pdf_extractor_spark import io as eio
+from pdf_extractor_spark.io import filter_pending, write_result
+
+
+def _mk(spark, urls):
+    return spark.createDataFrame(
+        [(u, True, 100, None, '{"title": "t"}') for u in urls],
+        "url string, parse_ok boolean, payload_bytes long, error string, outline_json string",
+    )
+
+
+def _jobs(spark, group: str, fn):
+    """``fn()`` and the number of Spark jobs it started."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_filter_pending_on_committed_table_starts_no_job(spark, tmp_path):
+    out = str(tmp_path / "out")
+    write_result(_mk(spark, [f"u{i}" for i in range(8)]), out, n_buckets=4)
+    pages = _mk(spark, [f"u{i}" for i in range(12)])
+    pending, n_jobs = _jobs(spark, "reads-filter-pending", lambda: filter_pending(pages, out))
+    assert n_jobs == 0
+    assert sorted(r.url for r in pending.select("url").collect()) == ["u10", "u11", "u8", "u9"]
+
+
+def test_append_starts_only_write_and_lineage_jobs(spark, tmp_path):
+    out = str(tmp_path / "out")
+    write_result(_mk(spark, [f"u{i}" for i in range(8)]), out, n_buckets=4)
+    totals, n_jobs = _jobs(
+        spark,
+        "reads-append",
+        lambda: write_result(_mk(spark, [f"v{i}" for i in range(8)]), out, n_buckets=4, mode="append"),
+    )
+    # the bucket exchange and its write, then the lineage aggregation's
+    # exchange and collect: no job reads a footer to infer the schema
+    assert n_jobs == 4
+    assert totals["rows_in"] == 16
+    assert eio.read_result(spark, out).count() == 16
+
+
+def test_table_dir_with_only_empty_bucket_dirs_is_nothing_committed(spark, tmp_path):
+    out = tmp_path / "out"
+    for b in range(4):
+        (out / "result" / f"bucket={b}").mkdir(parents=True)
+    pages = _mk(spark, [f"u{i}" for i in range(6)])
+    assert filter_pending(pages, str(out)).count() == 6
+    totals = eio._finish_lineage(spark, str(out), 4, 0.0)
+    assert {k: totals[k] for k in ("rows_in", "rows_out", "parse_failures", "payload_bytes")} == {
+        "rows_in": 0,
+        "rows_out": 0,
+        "parse_failures": 0,
+        "payload_bytes": 0,
+    }
+    manifest = json.loads((Path(out) / "_lineage" / "manifest.json").read_text())
+    assert manifest["partitions"] == [] and manifest["totals"]["rows_in"] == 0
+
+
+def test_read_result_has_bucket_as_int_partition_column(spark, tmp_path):
+    out = str(tmp_path / "out")
+    write_result(_mk(spark, ["a", "b", "c"]), out, n_buckets=4)
+    table = eio.read_result(spark, out)
+    assert table.schema["bucket"].dataType.simpleString() == "int"
+    got = {r.url: r.bucket for r in table.select("url", "bucket").collect()}
+    want = {r.url: r.bucket for r in eio.with_bucket(_mk(spark, ["a", "b", "c"]), 4).collect()}
+    assert got == want

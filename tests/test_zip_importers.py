@@ -3,7 +3,7 @@
 PySpark calls ``importlib.invalidate_caches()`` at the start of every
 task; on CPython 3.11 each ``zipimporter`` cached in
 ``sys.path_importer_cache`` then re-reads its whole archive directory
-(pyspark.zip, the spark-core jar). ``session.release_zip_importers``
+(pyspark.zip, the spark-core jar). ``session.trim_per_task_costs``
 runs at the end of the job path's stage generators so a reused worker
 starts its next task with nothing to re-read. These tests pin that the
 cache is empty after a stage ends or raises, that a rewritten archive
@@ -23,7 +23,7 @@ import pytest
 
 from pdf_extractor_spark import corpus
 from pdf_extractor_spark.operators.extract import _run_batches
-from pdf_extractor_spark.session import release_zip_importers
+from pdf_extractor_spark.session import trim_per_task_costs
 from pdf_extractor_spark.sources.warc import parse_content_batches
 
 _HTML = b"<html><head><title>t</title></head><body><p>hello zip world</p></body></html>"
@@ -54,7 +54,7 @@ def zip_on_path(tmp_path):
         sys.path.remove(str(archive))
         for name in ("graft_zip_a", "graft_zip_b"):
             sys.modules.pop(name, None)
-        release_zip_importers()
+        trim_per_task_costs()
 
 
 def _extract_input():
