@@ -26,37 +26,31 @@ if str(_REPO) not in sys.path:
     sys.path.insert(0, str(_REPO))
 
 
-def _flagship(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """documents → deterministic span payloads → full extraction
-    pipeline (parse → merge fold → 3-pass analyzer → JSON render)."""
-    from pdf_extractor_spark.operators.extract import extract_pages
-    from pdf_extractor_spark.sources.testdata import pages_from_documents
+def _testdata_extract(kind: str, *columns: str) -> Callable[[SparkSession, str], DataFrame]:
+    """Query of documents → deterministic ``kind`` payloads → full
+    extraction pipeline (parse → merge fold → 3-pass analyzer → JSON
+    render). Driver-facing shape: scalar ``columns`` only. The
+    hierarchical outline rides as its byte-exact JSON string
+    (outline_json) — the driver's canonicalizer sorts values per column
+    and cannot hash array<struct>."""
 
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    pages = pages_from_documents(docs, kind="spandoc")
-    # Driver-facing shape: scalar columns only. The hierarchical outline
-    # rides as its byte-exact JSON string (outline_json) — the driver's
-    # canonicalizer sorts values per column and cannot hash array<struct>.
-    return extract_pages(pages).select(
-        "url", "title", "outline_json", "parse_ok", "payload_kind"
-    )
+    def query(spark: SparkSession, sf_dir: str) -> DataFrame:
+        from pdf_extractor_spark.operators.extract import extract_pages
+        from pdf_extractor_spark.sources.testdata import pages_from_documents
+
+        docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+        return extract_pages(pages_from_documents(docs, kind=kind)).select(*columns)
+
+    return query
+
+
+_flagship = _testdata_extract("spandoc", "url", "title", "outline_json", "parse_ok", "payload_kind")
+_html_query = _testdata_extract("html", "url", "title", "main_text", "outline_json", "parse_ok")
 
 
 def entry(spark: SparkSession) -> DataFrame:
     """Flagship query on /root/testdata/sf0.001; driver checks rows>0."""
     return _flagship(spark, "/root/testdata/sf0.001")
-
-
-def _html_query(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pdf_extractor_spark.operators.extract import extract_pages
-    from pdf_extractor_spark.sources.testdata import pages_from_documents
-
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    pages = pages_from_documents(docs, kind="html")
-    # Scalar-only shape for the driver canonicalizer (see _flagship).
-    return extract_pages(pages).select(
-        "url", "title", "main_text", "outline_json", "parse_ok"
-    )
 
 
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:

@@ -419,12 +419,13 @@ def build_pages_rows(n_docs: int, seed: int = 42, html_fraction: float = 0.25) -
     return rows
 
 
-def executor_rows(spark, n: int, n_slices: int, schema: str, rows_of):
+def executor_rows(spark, n: int, n_slices: int, schema, rows_of):
     """DataFrame of ``rows_of(i)`` for every id in ``range(n)``, built ON
     THE EXECUTORS (mapInPandas over ``spark.range`` in ``n_slices``
     even slices) — no driver-side row building, so generation scales
     with cores exactly like a real scan would. ``rows_of`` returns an
-    iterable of row dicts matching ``schema``."""
+    iterable of row dicts matching ``schema`` (a DDL string or a
+    StructType)."""
     import pandas as pd
 
     def gen(batches):
@@ -443,11 +444,13 @@ def distributed_pages(
 ):
     """pages DataFrame of ``build_pages_row(i, ...)`` for i < n_docs,
     synthesized on the executors in 4 even slices per core."""
+    from .schemas import PAGES_SCHEMA
+
     return executor_rows(
         spark,
         n_docs,
         spark.sparkContext.defaultParallelism * 4,
-        "url string, warc_ts timestamp, html binary, text string, lang string",
+        PAGES_SCHEMA,
         lambda i: [build_pages_row(i, seed, html_fraction, heavy_tail_every=heavy_tail_every)],
     )
 

@@ -287,11 +287,9 @@ def _builder(
     shuffle_partitions: int | None = None,
     extra_conf: dict[str, str] | None = None,
 ) -> SparkSession.Builder:
-    master = master or os.environ.get("SPARK_GRAFT_MASTER", f"local[{_host_cpus()}]")
     nshuffle = shuffle_partitions or DEFAULT_SHUFFLE_PARTITIONS
     builder = (
-        SparkSession.builder.master(master)
-        .appName(app_name)
+        SparkSession.builder.appName(app_name)
         .config("spark.sql.shuffle.partitions", str(nshuffle))
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
@@ -323,12 +321,16 @@ def _builder(
         .config("spark.hadoop.mapreduce.fileoutputcommitter.algorithm.version", "2")
     )
     if _launches_jvm():
-        # under spark-submit the heap is sized before Python runs, and
+        # under spark-submit the master and the heap are set before
+        # Python runs: a default here would override its --master, and
         # the conf would report a heap the JVM does not have
+        master = master or f"local[{_host_cpus()}]"
         builder = builder.config(
             "spark.driver.memory",
             os.environ.get("SPARK_GRAFT_DRIVER_MEM") or _host_driver_mem(),
         )
+    if master:
+        builder = builder.master(master)
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)
     return builder

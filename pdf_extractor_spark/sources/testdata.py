@@ -15,37 +15,38 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from .. import corpus
+from ..schemas import PAGES_SCHEMA
+
+# every testdata page carries the same crawl time (session-local, which
+# get_spark sets to UTC)
+_WARC_TS = pd.Timestamp("2025-01-01 00:00:00")
 
 
-def _spandoc_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    for pdf in batches:
-        payloads = [
-            corpus.spandoc_to_payload(corpus.spandoc_from_doc_row(int(d), t or ""))
-            for d, t in zip(pdf["doc_id"], pdf["text"])
-        ]
-        yield pd.DataFrame(
-            {
-                "url": [f"https://testdata.local/doc/{int(d):08d}" for d in pdf["doc_id"]],
-                "html": payloads,
-                "text": pdf["text"],
-                "lang": pdf["lang"],
-            }
-        )
+def _spandoc_payload(doc_id: int, text: str) -> bytes:
+    return corpus.spandoc_to_payload(corpus.spandoc_from_doc_row(doc_id, text))
 
 
-def _html_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    for pdf in batches:
-        payloads = [
-            html_from_doc_row(int(d), t or "") for d, t in zip(pdf["doc_id"], pdf["text"])
-        ]
-        yield pd.DataFrame(
-            {
-                "url": [f"https://testdata.local/page/{int(d):08d}" for d in pdf["doc_id"]],
-                "html": payloads,
-                "text": pdf["text"],
-                "lang": pdf["lang"],
-            }
-        )
+def _pages_batches(kind: str):
+    """mapInPandas closure: documents batches → pages rows whose payload
+    is a spandoc (``kind="spandoc"``) or an HTML page (``"html"``)."""
+    prefix, payload_of = (
+        ("doc", _spandoc_payload) if kind == "spandoc" else ("page", html_from_doc_row)
+    )
+
+    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for pdf in batches:
+            ids = [int(d) for d in pdf["doc_id"]]
+            yield pd.DataFrame(
+                {
+                    "url": [f"https://testdata.local/{prefix}/{d:08d}" for d in ids],
+                    "warc_ts": _WARC_TS,
+                    "html": [payload_of(d, t or "") for d, t in zip(ids, pdf["text"])],
+                    "text": pdf["text"],
+                    "lang": pdf["lang"],
+                }
+            )
+
+    return gen
 
 
 def html_from_doc_row(doc_id: int, text: str) -> bytes:
@@ -71,9 +72,6 @@ def html_from_doc_row(doc_id: int, text: str) -> bytes:
     return html.encode("utf-8")
 
 
-_PAGES_OUT = "url string, html binary, text string, lang string"
-
-
 def pages_from_documents(docs: DataFrame, kind: str = "spandoc") -> DataFrame:
     """documents(doc_id, text, lang, ...) → pages rows with payloads.
 
@@ -84,14 +82,9 @@ def pages_from_documents(docs: DataFrame, kind: str = "spandoc") -> DataFrame:
     cluster parallelism), so this costs nothing at scale while making
     local scaling honest.  north_rule: explicit url-hash partitioning.
     """
-    fn = _spandoc_batches if kind == "spandoc" else _html_batches
     slim = docs.select("doc_id", "text", "lang")
     sc = docs.sparkSession.sparkContext
     target = sc.defaultParallelism
     if slim.rdd.getNumPartitions() < target:
         slim = slim.repartition(target, F.xxhash64("doc_id"))
-    return (
-        slim.mapInPandas(fn, schema=_PAGES_OUT)
-        .withColumn("warc_ts", F.lit("2025-01-01 00:00:00").cast("timestamp"))
-        .select("url", "warc_ts", "html", "text", "lang")
-    )
+    return slim.mapInPandas(_pages_batches(kind), schema=PAGES_SCHEMA)

@@ -33,6 +33,8 @@ import gzip
 import zlib
 from typing import Iterator, Optional
 
+from ..schemas import PAGES_SCHEMA
+
 __all__ = ["iter_warc_records", "pages_from_warc", "http_response_body"]
 
 
@@ -174,9 +176,6 @@ def http_response_body(block: bytes) -> Optional[bytes]:
     return body
 
 
-_PAGES_SCHEMA = "url string, warc_ts timestamp, html binary, text string, lang string"
-
-
 def _warc_timestamps(raw: list) -> list:
     """WARC-Date header values → naive UTC Timestamps, None where the
     header is missing or unparseable. One ISO 8601 parse covers the
@@ -227,7 +226,7 @@ def parse_content_batches(batches):
                 {"url": u, "warc_ts": ts, "html": p, "text": None, "lang": None}
                 for u, ts, p in zip(urls, _warc_timestamps(dates), payloads)
             ]
-            yield pd.DataFrame(rows, columns=["url", "warc_ts", "html", "text", "lang"])
+            yield pd.DataFrame(rows, columns=PAGES_SCHEMA.names)
     finally:
         trim_per_task_costs()
 
@@ -246,4 +245,4 @@ def pages_from_warc(spark, input_dir: str, glob: str = "*.warc*"):
         .load(input_dir)
         .select("content")
     )
-    return raw.mapInPandas(parse_content_batches, schema=_PAGES_SCHEMA)
+    return raw.mapInPandas(parse_content_batches, schema=PAGES_SCHEMA)

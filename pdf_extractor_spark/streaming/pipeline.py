@@ -99,7 +99,7 @@ def stream_warc_pages(
     stream_extract for checkpointed, resumable ingest-as-it-arrives:
     the file source's checkpoint dedups archives across restarts, and
     stream_extract's url anti-join dedups re-shipped urls."""
-    from ..sources.warc import _PAGES_SCHEMA, parse_content_batches
+    from ..sources.warc import parse_content_batches
 
     raw = (
         spark.readStream.format("binaryFile")
@@ -114,7 +114,7 @@ def stream_warc_pages(
         .load(input_dir)
         .select("content")
     )
-    return raw.mapInPandas(parse_content_batches, schema=_PAGES_SCHEMA)
+    return raw.mapInPandas(parse_content_batches, schema=PAGES_SCHEMA)
 
 
 def stream_extract(

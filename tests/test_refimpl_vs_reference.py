@@ -61,8 +61,11 @@ def _fake_fitz_open(path: str) -> _FakeDoc:
     return _FakeDoc(_FakePage(p) for p in _DOC_REGISTRY[path])
 
 
-@pytest.fixture(scope="module")
-def reference_extractor():
+def load_reference():
+    """The actual reference's ``PDFOutlineExtractor``, imported from
+    ``REF`` under a fake ``fitz`` whose ``open()`` serves the pages that
+    ``_run_reference`` registers. Also used by tools/diff_soak.py and
+    tools/verify_drive.py."""
     fake = types.ModuleType("fitz")
     fake.open = _fake_fitz_open
     sys.modules.setdefault("fitz", fake)
@@ -73,6 +76,11 @@ def reference_extractor():
     mod = importlib.util.module_from_spec(spec)
     spec.loader.exec_module(mod)
     return mod.PDFOutlineExtractor()
+
+
+@pytest.fixture(scope="module")
+def reference_extractor():
+    return load_reference()
 
 
 def _run_reference(extractor, pages: list[dict]):

@@ -193,8 +193,11 @@ def test_driver_memory_is_set_only_when_launching_the_jvm(monkeypatch, jvm):
     else:
         monkeypatch.delenv("PYSPARK_GATEWAY_PORT", raising=False)
     monkeypatch.setenv("SPARK_GRAFT_DRIVER_MEM", "3g")
+    monkeypatch.setenv("SPARK_GRAFT_CPUS", "3")
     session.get_spark()
     assert seen["options"].get("spark.driver.memory") == ("3g" if jvm == "launched-here" else None)
+    # likewise the default master: spark-submit's --master must stand
+    assert seen["options"].get("spark.master") == ("local[3]" if jvm == "launched-here" else None)
 
 
 CHILD = textwrap.dedent(

@@ -13,11 +13,16 @@ counts as a call of ``f``), so the scan over-approximates what is set:
 it can miss a dead parameter, never invent one. A call sets a parameter
 by keyword or by position; a ``*args`` or ``**kwargs`` call sets all of
 them.
+
+Environment knobs get the same check: every ``SPARK_GRAFT_*`` variable
+the package reads must be set outside it, by the benchmark harnesses,
+``tests/conftest.py`` or a test's ``setenv``.
 """
 
 from __future__ import annotations
 
 import ast
+import re
 from pathlib import Path
 
 REPO = Path(__file__).resolve().parent.parent
@@ -136,3 +141,73 @@ def test_scan_sees_keyword_positional_and_unset(tmp_path):
         "pdf_extractor_spark/m.py::K(q)",
         "pdf_extractor_spark/m.py::m(s)",
     ]
+
+
+_KNOB = re.compile(r"SPARK_GRAFT_\w+")
+
+
+def _knob(node: ast.AST | None) -> str | None:
+    if isinstance(node, ast.Constant) and isinstance(node.value, str):
+        return node.value if _KNOB.fullmatch(node.value) else None
+    return None
+
+
+def _knobs_set(tree: ast.AST) -> set[str]:
+    """Knob names a file sets: a key of a dict literal (an environment
+    being built), ``environ[K] = ...``, or the first argument of a
+    ``setenv``/``setdefault`` call. A ``pop`` or ``delenv`` sets
+    nothing."""
+    out: set[str] = set()
+    for node in ast.walk(tree):
+        if isinstance(node, ast.Dict):
+            out.update(filter(None, map(_knob, node.keys)))
+        elif isinstance(node, ast.Assign):
+            out.update(_knob(t.slice) for t in node.targets if isinstance(t, ast.Subscript))
+        elif isinstance(node, ast.Call) and node.args:
+            if _callee(node.func) in ("setenv", "setdefault"):
+                out.add(_knob(node.args[0]))
+    out.discard(None)
+    return out
+
+
+def unset_env_knobs(repo: Path = REPO) -> list[str]:
+    """``SPARK_GRAFT_*`` names the package reads that nothing outside
+    it sets."""
+    read = {
+        k
+        for f in _py_files(repo, "pdf_extractor_spark")
+        for node in ast.walk(ast.parse(f.read_text()))
+        if (k := _knob(node))
+    }
+    set_ = set()
+    for root in CALL_ROOTS:
+        if root != "pdf_extractor_spark":
+            for f in _py_files(repo, root):
+                set_ |= _knobs_set(ast.parse(f.read_text()))
+    return sorted(read - set_)
+
+
+def test_every_env_knob_is_set_outside_the_package():
+    found = unset_env_knobs()
+    assert not found, "variables nothing sets; make each a constant: " + ", ".join(found)
+
+
+def test_env_knob_scan_counts_sets_not_pops(tmp_path):
+    pkg = tmp_path / "pdf_extractor_spark"
+    pkg.mkdir()
+    (pkg / "m.py").write_text(
+        "import os\n"
+        "a = os.environ.get('SPARK_GRAFT_A')\n"
+        "b = os.environ['SPARK_GRAFT_B']\n"
+        "c, d, e = (os.getenv(k) for k in ('SPARK_GRAFT_C', 'SPARK_GRAFT_D', 'SPARK_GRAFT_E'))\n"
+    )
+    (tmp_path / "tests").mkdir()
+    (tmp_path / "tests" / "t.py").write_text(
+        "import os\n"
+        "monkeypatch.setenv('SPARK_GRAFT_A', '1')\n"
+        "os.environ['SPARK_GRAFT_B'] = '1'\n"
+        "os.environ.update({'SPARK_GRAFT_C': '1'})\n"
+        "os.environ.pop('SPARK_GRAFT_D', None)\n"
+        "monkeypatch.delenv('SPARK_GRAFT_E')\n"
+    )
+    assert unset_env_knobs(tmp_path) == ["SPARK_GRAFT_D", "SPARK_GRAFT_E"]

@@ -19,6 +19,9 @@ Exit 0 = byte-identical on every doc; nonzero = first divergence printed.
 from __future__ import annotations
 
 import argparse
+import contextlib
+import functools
+import io
 import json
 import random
 import sys
@@ -30,84 +33,41 @@ _REPO = Path(__file__).resolve().parent.parent
 sys.path.insert(0, str(_REPO))
 sys.path.insert(0, str(_REPO / "tests"))
 
-REF = Path("/root/reference")
+import refimpl  # noqa: E402
+import test_refimpl_vs_reference as ref_harness  # noqa: E402
 
-_EXTRACTOR = None  # per-worker singleton (reference module import is slow)
-
-
-def _get_extractor():
-    global _EXTRACTOR
-    if _EXTRACTOR is None:
-        import test_refimpl_vs_reference as t
-
-        fake_cls = t.types.ModuleType("fitz")
-        fake_cls.open = t._fake_fitz_open
-        sys.modules["fitz"] = fake_cls
-        if str(REF) not in sys.path:
-            sys.path.insert(0, str(REF))
-        import importlib.util
-
-        spec = importlib.util.spec_from_file_location(
-            "ref_extract_outline", REF / "extract_outline.py"
-        )
-        mod = importlib.util.module_from_spec(spec)
-        spec.loader.exec_module(mod)
-        _EXTRACTOR = (mod.PDFOutlineExtractor(), t)
-    return _EXTRACTOR
+from pdf_extractor_spark import corpus  # noqa: E402
 
 
-def _one(seed: int) -> dict:
-    import contextlib
-    import io
+@functools.cache
+def _extractor():
+    """Per-worker reference extractor (its import is slow)."""
+    return ref_harness.load_reference()
 
-    import refimpl
-    from pdf_extractor_spark import corpus
 
-    extractor, t = _get_extractor()
-    rng = random.Random(seed)
-    pages = corpus.random_spandoc(rng)
+def _compare(key: int, pages: list[dict]) -> dict:
     with contextlib.redirect_stdout(io.StringIO()):  # reference prints per doc
-        expected = t._run_reference(extractor, pages)
+        expected = ref_harness._run_reference(_extractor(), pages)
     actual = refimpl.extract_document(pages)
     if expected is None or actual is None:
         ok = expected is None and actual is None
-        return {"seed": seed, "ok": ok, "empty": True}
+        return {"seed": key, "ok": ok, "empty": True}
     exp_json = json.dumps(expected, indent=2, ensure_ascii=False)
     act_json = refimpl.render_json(actual)
     if exp_json != act_json:
-        return {
-            "seed": seed,
-            "ok": False,
-            "empty": False,
-            "ref": exp_json[:600],
-            "ours": act_json[:600],
-        }
-    return {"seed": seed, "ok": True, "empty": False, "nbytes": len(exp_json)}
+        return {"seed": key, "ok": False, "empty": False, "ref": exp_json[:600], "ours": act_json[:600]}
+    return {"seed": key, "ok": True, "empty": False, "nbytes": len(exp_json)}
+
+
+def _one(seed: int) -> dict:
+    return _compare(seed, corpus.random_spandoc(random.Random(seed)))
 
 
 def _one_testdata(row: tuple[int, str]) -> dict:
     """Same comparison over the documents→spandoc adapter used by
     __spark_entry__.entry (realistic corpus text, not random spans)."""
-    import contextlib
-    import io
-
-    import refimpl
-    from pdf_extractor_spark import corpus
-
-    extractor, t = _get_extractor()
     doc_id, text = row
-    pages = corpus.spandoc_from_doc_row(doc_id, text)
-    with contextlib.redirect_stdout(io.StringIO()):
-        expected = t._run_reference(extractor, pages)
-    actual = refimpl.extract_document(pages)
-    if expected is None or actual is None:
-        ok = expected is None and actual is None
-        return {"seed": doc_id, "ok": ok, "empty": True}
-    exp_json = json.dumps(expected, indent=2, ensure_ascii=False)
-    act_json = refimpl.render_json(actual)
-    if exp_json != act_json:
-        return {"seed": doc_id, "ok": False, "empty": False, "ref": exp_json[:600], "ours": act_json[:600]}
-    return {"seed": doc_id, "ok": True, "empty": False, "nbytes": len(exp_json)}
+    return _compare(doc_id, corpus.spandoc_from_doc_row(doc_id, text))
 
 
 def main() -> int:
@@ -122,7 +82,7 @@ def main() -> int:
         "SF_DIR/documents.parquet via the spandoc_from_doc_row adapter",
     )
     args = ap.parse_args()
-    if not REF.exists():
+    if not ref_harness.REF.exists():
         print(json.dumps({"skipped": "reference repo not available"}))
         return 0
 

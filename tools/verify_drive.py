@@ -15,19 +15,21 @@ absent). Prints one JSON line.
 from __future__ import annotations
 
 import argparse
-import importlib.util
+import contextlib
+import io
 import json
 import shutil
 import subprocess
 import sys
 import tempfile
-import types
 from pathlib import Path
 
 _REPO = Path(__file__).resolve().parent.parent
 sys.path.insert(0, str(_REPO))
+sys.path.insert(0, str(_REPO / "tests"))
 
-REF = Path("/root/reference")
+import test_refimpl_vs_reference as ref_harness  # noqa: E402
+
 # the table's only partition level is bucket=N/; its data files sit
 # directly under it, failed docs included as parse_ok=false rows
 DATA_GLOB = "result/bucket=*/*.parquet"
@@ -62,52 +64,13 @@ def _build_and_drive(n: int, seed: int, cores: int, out_dir: str) -> dict:
     return json.loads(line)
 
 
-def _reference_extractor():
-    """Import the ACTUAL reference code with a fake fitz whose open()
-    serves spandoc pages (shape adapter: spandoc block=[line=[span]]
-    → fitz {'lines': [{'spans': line}]})."""
-    registry: dict[str, list[dict]] = {}
-
-    class _FakeRect:
-        def __init__(self, w):
-            self.width = w
-
-    class _FakePage:
-        def __init__(self, page):
-            self.rect = _FakeRect(page.get("width", 0.0))
-            self._blocks = [
-                {"lines": [{"spans": line} for line in block]}
-                for block in page.get("blocks", [])
-            ]
-
-        def get_text(self, kind):
-            assert kind == "dict"
-            return {"blocks": self._blocks}
-
-    class _FakeDoc(list):
-        def close(self):
-            pass
-
-    fake = types.ModuleType("fitz")
-    fake.open = lambda path: _FakeDoc(_FakePage(p) for p in registry[path])
-    sys.modules["fitz"] = fake
-    if str(REF) not in sys.path:
-        sys.path.insert(0, str(REF))
-    spec = importlib.util.spec_from_file_location(
-        "ref_extract_outline", REF / "extract_outline.py"
-    )
-    mod = importlib.util.module_from_spec(spec)
-    spec.loader.exec_module(mod)
-    return mod.PDFOutlineExtractor(), registry
-
-
 def _byte_compare(out_dir: str, n: int, seed: int) -> dict:
     import duckdb
 
     from pdf_extractor_spark import corpus
     from pdf_extractor_spark.sources import payload as payload_codec
 
-    extractor, registry = _reference_extractor()
+    extractor = ref_harness.load_reference()
     rows = duckdb.sql(
         f"SELECT url, outline_json FROM read_parquet('{out_dir}/{DATA_GLOB}',"
         " hive_partitioning=1) WHERE parse_ok"
@@ -123,8 +86,8 @@ def _byte_compare(out_dir: str, n: int, seed: int) -> dict:
         if kind != "spandoc":
             continue
         n_span += 1
-        registry["doc"] = pages
-        ref = extractor.process_single_pdf("doc")
+        with contextlib.redirect_stdout(io.StringIO()):  # reference prints per doc
+            ref = ref_harness._run_reference(extractor, pages)
         expect = (
             None if ref is None else json.dumps(ref, indent=2, ensure_ascii=False)
         )
@@ -164,12 +127,12 @@ def main() -> int:
         n_files = len(list(Path(out_dir).glob(DATA_GLOB)))
         ok = ok and n_files > 0
         result = {"drive": summary, "data_files": n_files, "drive_totals_ok": ok}
-        if REF.exists():
+        if ref_harness.REF.exists():
             cmp = _byte_compare(out_dir, args.n, args.seed)
             result["reference_compare"] = cmp
             ok = ok and cmp["mismatch"] == 0 and cmp["byte_identical"] > 0
         else:
-            result["reference_compare"] = "skipped: /root/reference absent"
+            result["reference_compare"] = f"skipped: {ref_harness.REF} absent"
         result["ok"] = ok
         print(json.dumps(result))
         return 0 if ok else 1
