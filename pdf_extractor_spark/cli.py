@@ -11,10 +11,11 @@ Reads a pages table (url, warc_ts, html, text, lang), runs the
 extraction pipeline, writes the result table + per-partition lineage
 manifests, prints a one-line JSON summary to stdout.
 
-The partitioning follows the input's shape; no flag selects it. A
-parquet input bucketed on url-hash is written without an exchange,
-one file per scan task and bucket; any other parquet input is checked for a heavy tail and, if it has
-one, repartitioned by payload size (``io.repartition_if_heavy``).
+``main`` parses the flags and ``run_job`` runs the job, which the CDS
+warm-up and the kill fuzzer run too. ``--input`` is read with
+``PAGES_SCHEMA`` (``io.read_pages``): a missing or non-BINARY ``url`` or
+``html`` column, or no data file, raises ``ValueError`` before any job.
+The input's shape, not a flag, picks the partitioning (see ``run_job``).
 """
 
 from __future__ import annotations
@@ -23,6 +24,59 @@ import argparse
 import json
 import sys
 import time
+
+
+class SourceError(ValueError):
+    """Not exactly one pages source."""
+
+
+def run_job(spark, *, output: str, input: str | None = None, input_warc: str | None = None, synthesize: int = 0,
+            seed: int = 42, buckets: int = 32, resume: bool = False, file_sink: str | None = None) -> dict:
+    """The batch job, one keyword per flag: one pages source → (on
+    ``resume``) the urls not yet committed in ``output`` → extraction →
+    the bucketed result table and its lineage → (with ``file_sink``) one
+    JSON file per successful url. Returns the summary ``main`` prints."""
+    if sum(map(bool, (input, input_warc, synthesize))) != 1:
+        raise SourceError("need exactly one of --input, --input-warc, or --synthesize")
+    from pdf_extractor_spark import corpus, io as pio
+    from pdf_extractor_spark.operators.extract import extract_pages
+    from pdf_extractor_spark.sources.warc import pages_from_warc
+
+    t0 = time.time()
+    if synthesize:
+        # synthesized on the executors (corpus.distributed_pages) — a
+        # driver-side row build would serialize the scan stand-in and
+        # poison any scaling measurement
+        pages = corpus.distributed_pages(spark, synthesize, seed=seed)
+    elif input:
+        pages = pio.read_pages(spark, input)
+    else:
+        pages = pages_from_warc(spark, input_warc)
+
+    # materialize_bucketed_corpus and an Iceberg bucket(N, url) ingest
+    # both scan with a `bucket` partition column: written without an
+    # exchange, one file per scan task and bucket.
+    input_bucketed = "bucket" in pages.columns
+    # Before any repartition: once the committed urls pass the broadcast
+    # threshold, a sort-merge anti-join would undo it.
+    if resume:
+        pages = pio.filter_pending(pages, output)
+    size_aware_stats = None
+    # Any other parquet input is repartitioned by payload size if it has
+    # a heavy tail. WARC and synthesized payloads come out of a Python
+    # stage, where heavy-tail detection would re-run that stage.
+    if input and not input_bucketed:
+        pages, size_aware_stats = pio.repartition_if_heavy(pages)
+    result = extract_pages(pages, keep_failed=True)
+    mode = "append" if resume else "overwrite"
+    stats = pio.write_result(result, output, n_buckets=buckets, mode=mode, input_bucketed=input_bucketed)
+    if file_sink:
+        n_files = pio.write_json_files(pio.read_result(spark, output), file_sink)
+        stats = {**stats, "json_files": n_files}
+    summary = {"output": output, "elapsed_sec": round(time.time() - t0, 2), **stats}
+    if size_aware_stats:
+        summary["size_aware"] = size_aware_stats
+    return summary
 
 
 def main(argv: list[str] | None = None) -> int:
@@ -47,58 +101,12 @@ def main(argv: list[str] | None = None) -> int:
     )
     args = ap.parse_args(argv)
 
-    from pdf_extractor_spark import corpus, io as pio
-    from pdf_extractor_spark.operators.extract import extract_pages
     from pdf_extractor_spark.session import get_spark
 
-    spark = get_spark("pdf_extractor_cli")
-    t0 = time.time()
-    if args.synthesize:
-        # synthesized on the executors (corpus.distributed_pages) — a
-        # driver-side row build would serialize the scan stand-in and
-        # poison any scaling measurement
-        pages = corpus.distributed_pages(spark, args.synthesize, seed=args.seed)
-    elif args.input:
-        pages = spark.read.parquet(args.input)
-    elif args.input_warc:
-        from pdf_extractor_spark.sources.warc import pages_from_warc
-
-        pages = pages_from_warc(spark, args.input_warc)
-    else:
-        ap.error("need --input, --input-warc, or --synthesize")
-
-    # materialize_bucketed_corpus and an Iceberg bucket(N, url) ingest
-    # both scan with a `bucket` partition column. WARC and synthesized
-    # payloads come out of a Python stage, where heavy-tail detection
-    # would re-run that stage instead of scanning a column.
-    input_bucketed = bool(args.input) and "bucket" in pages.columns
-    if args.resume:
-        pages = pio.filter_pending(pages, args.output)
-    size_aware_stats = None
-    if args.input and not input_bucketed:
-        pages, size_aware_stats = pio.repartition_if_heavy(pages)
-
-    result = extract_pages(pages, keep_failed=True)
-    stats = pio.write_result(
-        result,
-        args.output,
-        n_buckets=args.buckets,
-        mode="append" if args.resume else "overwrite",
-        input_bucketed=input_bucketed,
-    )
-    if args.file_sink:
-        n_files = pio.write_json_files(
-            pio.read_result(spark, args.output), args.file_sink
-        )
-        stats = {**stats, "json_files": n_files}
-    elapsed = time.time() - t0
-    summary = {
-        "output": args.output,
-        "elapsed_sec": round(elapsed, 2),
-        **stats,
-    }
-    if size_aware_stats:
-        summary["size_aware"] = size_aware_stats
+    try:
+        summary = run_job(get_spark("pdf_extractor_cli"), **vars(args))
+    except SourceError as e:
+        ap.error(str(e))
     print(json.dumps(summary))
     return 0
 

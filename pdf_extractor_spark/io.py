@@ -18,6 +18,7 @@ is format-agnostic behind ``write_result``.
 
 from __future__ import annotations
 
+import contextlib
 import json
 import os
 import time
@@ -27,7 +28,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from .schemas import RESULT_SCHEMA
+from .schemas import PAGES_SCHEMA, RESULT_SCHEMA
 
 
 def with_bucket(df: DataFrame, n_buckets: int) -> DataFrame:
@@ -288,6 +289,30 @@ def read_result(spark: SparkSession, out_dir: str) -> DataFrame:
     every read a one-task Spark job that reads a parquet footer (~0.1 s
     of a warm job with the driver gaps around it)."""
     return spark.read.schema(_TABLE_SCHEMA).parquet(os.path.join(out_dir, "result"))
+
+
+def read_pages(spark: SparkSession, path: str) -> DataFrame:
+    """The pages parquet table at ``path`` with ``PAGES_SCHEMA`` (plus a
+    ``bucket`` partition column if it has one). Raises ``ValueError``
+    before any Spark job unless the first data file's footer, read
+    through the Hadoop FileSystem, has BINARY ``url`` and ``html``."""
+    pages = spark.read.schema(PAGES_SCHEMA).parquet(path)
+    files = pages.inputFiles()
+    if not files:
+        raise ValueError(f"pages table {path}: no data file")
+    jvm = spark._jvm
+    conf = spark.sparkContext._jsc.hadoopConfiguration()
+    src = jvm.org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
+        jvm.org.apache.hadoop.fs.Path(files[0]), conf
+    )
+    with contextlib.closing(jvm.org.apache.parquet.hadoop.ParquetFileReader.open(src)) as reader:
+        footer = reader.getFooter().getFileMetaData().getSchema()
+    for name in ("url", "html"):
+        col = footer.getType(name) if footer.containsField(name) else None
+        if not (col and col.isPrimitive() and col.asPrimitiveType().getPrimitiveTypeName().name() == "BINARY"):
+            found = str(col).strip() if col else "no such column"
+            raise ValueError(f"pages table {path}: column {name!r} must be BINARY, {files[0]} has {found}")
+    return pages
 
 
 def _committed(spark: SparkSession, out_dir: str) -> DataFrame | None:

@@ -157,19 +157,19 @@ def _train_command(tmp: Path) -> list[str]:
 
 
 def warm_up(spark) -> None:
-    """Run a tiny copy of the full pipeline: synthesis, extraction and
-    a bucketed write with its lineage, so the class-data-sharing
-    archive holds the classes the pipeline loads: Python worker spawn,
-    whole-stage codegen, the parquet/zstd writer and the committer."""
-    from . import corpus, io as pio
-    from .operators.extract import extract_pages
+    """Spawn the Python workers with an identity ``mapInPandas``, then
+    run the CLI's job (``cli.run_job``) on 256 synthesized pages:
+    extraction and a bucketed write with its lineage. So the
+    class-data-sharing archive holds the classes the job loads: Python
+    worker spawn, whole-stage codegen, the parquet/zstd writer and the
+    committer."""
+    from .cli import run_job
 
     n = spark.sparkContext.defaultParallelism
     spark.range(0, 32 * n, 1, n).mapInPandas(lambda it: it, schema="id long").count()
     warm_dir = tempfile.mkdtemp(prefix="pdfx_warm_")
     try:
-        warm_pages = corpus.distributed_pages(spark, 256, seed=0)
-        pio.write_result(extract_pages(warm_pages, keep_failed=True), warm_dir, n_buckets=4)
+        run_job(spark, synthesize=256, seed=0, output=warm_dir, buckets=4)
     finally:
         shutil.rmtree(warm_dir, ignore_errors=True)
 

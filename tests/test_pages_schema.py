@@ -7,7 +7,11 @@ from __future__ import annotations
 
 import gzip
 
-from pdf_extractor_spark import corpus
+import pytest
+from pyspark.sql import functions as F
+
+from pdf_extractor_spark import cli, corpus
+from pdf_extractor_spark.io import read_pages, read_result
 from pdf_extractor_spark.schemas import PAGES_SCHEMA
 from pdf_extractor_spark.sources.payload import pages_from_binary_files
 from pdf_extractor_spark.sources.testdata import pages_from_documents
@@ -61,3 +65,49 @@ def test_response_without_target_uri_is_dropped(spark, tmp_path):
     archive = corpus.rows_to_warc(rows[:1]) + gzip.compress(orphan, mtime=0)
     got = pages_from_warc(spark, _warc_dir(tmp_path, rows[2:], archive)).collect()
     assert sorted(r.url for r in got) == sorted([rows[0]["url"], rows[2]["url"]])
+
+
+def test_cli_input_without_html_raises_before_any_spark_job(spark, tmp_path):
+    bad = str(tmp_path / "bad")
+    spark.createDataFrame([("u1", "t")], "url string, text string").write.parquet(bad)
+    sc = spark.sparkContext
+    sc.setJobGroup("pages-no-html", "pages-no-html")
+    try:
+        with pytest.raises(ValueError, match=f"{bad}: column 'html' must be BINARY"):
+            cli.main(["--input", bad, "--output", str(tmp_path / "out")])
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert list(sc.statusTracker().getJobIdsForGroup("pages-no-html")) == []
+
+
+def test_input_with_extra_column_yields_the_same_rows(spark, tmp_path):
+    pages = corpus.distributed_pages(spark, 24, seed=3)
+    tables = []
+    for name, df in (("plain", pages), ("extra", pages.withColumn("crawl_id", F.lit(7)))):
+        df.write.parquet(str(tmp_path / name))
+        assert read_pages(spark, str(tmp_path / name)).columns == PAGES_SCHEMA.names
+        out = str(tmp_path / f"out_{name}")
+        cli.run_job(spark, input=str(tmp_path / name), output=out, buckets=4)
+        tables.append(sorted(read_result(spark, out).collect()))
+    assert len(tables[0]) == 24
+    assert tables[0] == tables[1]
+
+
+def test_input_dir_without_data_file_raises(spark, tmp_path):
+    (tmp_path / "empty").mkdir()
+    with pytest.raises(ValueError, match="no data file"):
+        cli.run_job(spark, input=str(tmp_path / "empty"), output=str(tmp_path / "out"))
+
+
+def test_cli_takes_exactly_one_pages_source(spark, tmp_path, capsys):
+    """A second source was ignored: --input won over --input-warc, and
+    --synthesize over --input."""
+    pages = str(tmp_path / "pages")
+    corpus.distributed_pages(spark, 8).write.parquet(pages)
+    warc = _warc_dir(tmp_path, corpus.build_pages_rows(3, 1))
+    out = ["--output", str(tmp_path / "out")]
+    for sources in (["--input", pages, "--input-warc", warc], ["--input", pages, "--synthesize", "8"], []):
+        with pytest.raises(SystemExit) as exit_info:
+            cli.main(sources + out)
+        assert exit_info.value.code == 2
+        assert "need exactly one of --input, --input-warc, or --synthesize" in capsys.readouterr().err

@@ -127,66 +127,22 @@ def test_generated_pdfs_byte_identical_to_reference(spark):
     to the ACTUAL reference implementation (fake-fitz harness, see
     test_refimpl_vs_reference.py), and assert the Spark pipeline's
     outline_json is byte-identical per url."""
-    import importlib.util
     import random
-    import sys
-    import types
 
-    ref_dir = Path("/root/reference")
+    import test_refimpl_vs_reference as ref_harness
     from pdf_extractor_spark import corpus
     from pdf_extractor_spark.operators.extract import extract_pages
     from pdf_extractor_spark.sources import pdfparse
 
-    docs = {}
+    extractor = ref_harness.load_reference()
+    expected = {}
     rows = []
     for i in range(60):
-        r = random.Random(55_000 + i)
-        pdf = corpus.random_pdf(r)
+        pdf = corpus.random_pdf(random.Random(55_000 + i))
         url = f"u{i:03d}"
-        docs[url] = pdfparse.extract_spans(pdf)
+        res = ref_harness._run_reference(extractor, pdfparse.extract_spans(pdf))
+        expected[url] = None if res is None else json.dumps(res, indent=2, ensure_ascii=False)
         rows.append((url, pdf))
-
-    class _Rect:
-        def __init__(self, w):
-            self.width = w
-
-    class _Page:
-        def __init__(self, page):
-            self.rect = _Rect(page.get("width", 0.0))
-            self._blocks = [
-                {"lines": [{"spans": line} for line in block]}
-                for block in page.get("blocks", [])
-            ]
-
-        def get_text(self, kind):
-            return {"blocks": self._blocks}
-
-    class _Doc(list):
-        def close(self):
-            pass
-
-    fake = types.ModuleType("fitz")
-    fake.open = lambda path: _Doc(_Page(p) for p in docs[path])
-    sys.modules["fitz"] = fake
-    if str(ref_dir) not in sys.path:
-        sys.path.insert(0, str(ref_dir))
-    try:
-        spec = importlib.util.spec_from_file_location(
-            "ref_extract_outline_pdft", ref_dir / "extract_outline.py"
-        )
-        mod = importlib.util.module_from_spec(spec)
-        spec.loader.exec_module(mod)
-        extractor = mod.PDFOutlineExtractor()
-        expected = {}
-        for url in docs:
-            res = extractor.process_single_pdf(url)
-            expected[url] = (
-                None
-                if res is None
-                else json.dumps(res, indent=2, ensure_ascii=False)
-            )
-    finally:
-        del sys.modules["fitz"]
 
     df = spark.createDataFrame(rows, "url string, html binary")
     got = {r.url: r for r in extract_pages(df).collect()}

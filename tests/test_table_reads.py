@@ -1,20 +1,23 @@
-"""The package reads its result table with the table's known schema.
+"""The package reads its result table, and ``--input`` pages, with
+known schemas.
 
 Reading parquet without a schema makes Spark infer one first: a
 one-task job that reads a parquet footer, ~0.1 s of a warm job with
-the driver gaps around it, paid by every ``filter_pending`` and every
-lineage rescan. These tests count the Spark jobs each read starts (by
-job group), and pin that the schema'd read still takes a table
-directory with no data file as "nothing committed". A table Spark
-refuses is covered in test_round5_fixes.
+the driver gaps around it, paid by every ``filter_pending``, every
+lineage rescan and every CLI ``--input`` scan. These tests count the
+Spark jobs each read starts (by job group), and pin that the schema'd
+read still takes a table directory with no data file as "nothing
+committed". A table Spark refuses is covered in test_round5_fixes.
 """
 
 from __future__ import annotations
 
 import json
+from functools import partial
 from pathlib import Path
 
-from pdf_extractor_spark import io as eio
+from pdf_extractor_spark import corpus, io as eio
+from pdf_extractor_spark.cli import run_job
 from pdf_extractor_spark.io import filter_pending, write_result
 
 
@@ -85,3 +88,21 @@ def test_read_result_has_bucket_as_int_partition_column(spark, tmp_path):
     got = {r.url: r.bucket for r in table.select("url", "bucket").collect()}
     want = {r.url: r.bucket for r in eio.with_bucket(_mk(spark, ["a", "b", "c"]), 4).collect()}
     assert got == want
+
+
+def test_cli_input_runs_start_no_schema_inference_job(spark, tmp_path):
+    """``--input`` is read with PAGES_SCHEMA: each run starts only the
+    jobs of its plan. Bucketed: the write and its lineage's exchange
+    and collect; resume adds the broadcast of the committed urls;
+    unbucketed adds the heavy-tail scan and the bucket exchange."""
+    bucketed, flat = str(tmp_path / "bucketed"), str(tmp_path / "flat")
+    corpus.materialize_bucketed_corpus(spark, 64, bucketed, n_buckets=4, files_per_bucket=1)
+    corpus.distributed_pages(spark, 64).write.parquet(flat)
+    out = str(tmp_path / "out")
+    for group, job, want in (
+        ("cli-bucketed", {"input": bucketed}, 3),
+        ("cli-bucketed-resume", {"input": bucketed, "resume": True}, 4),
+        ("cli-flat", {"input": flat, "output": str(tmp_path / "out_flat")}, 6),
+    ):
+        summary, n_jobs = _jobs(spark, group, partial(run_job, spark, **{"output": out, "buckets": 4, **job}))
+        assert (group, summary["rows_in"], n_jobs) == (group, 64, want)

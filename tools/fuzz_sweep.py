@@ -186,6 +186,12 @@ def _one(task: tuple[int, int]) -> dict:
     return {"kind": kind, "outcome": outcome, "err": err, "sec": elapsed}
 
 
+def _fail(t: int, base: Path, why: str) -> int:
+    """Report a broken contract; the trial's state dir is kept."""
+    print(f"FAIL trial {t}: {why} — state kept at {base}", file=sys.stderr)
+    return 1
+
+
 def stream_warc_mode(trials: int, seed: int) -> int:
     """Checkpoint-kill fuzz of the WARC STREAMING edge (VERDICT r4 #8):
     per trial, land a random subset of deterministic archives (some
@@ -207,6 +213,7 @@ def stream_warc_mode(trials: int, seed: int) -> int:
     import shutil
     import tempfile
 
+    from pdf_extractor_spark.io import read_result
     from pdf_extractor_spark.session import get_spark
     from pdf_extractor_spark.sources.warc import http_response_body, iter_warc_records
     from pdf_extractor_spark.streaming.pipeline import (
@@ -293,13 +300,7 @@ def stream_warc_mode(trials: int, seed: int) -> int:
                 )
                 q.awaitTermination()
             except Exception as exc:
-                print(
-                    f"FAIL trial {t}: resume query failed "
-                    f"({type(exc).__name__}: {str(exc).splitlines()[0][:160]}) "
-                    f"— state kept at {base}",
-                    file=sys.stderr,
-                )
-                return 1
+                return _fail(t, base, f"resume query failed ({type(exc).__name__}: {str(exc).splitlines()[0][:160]})")
             want = set()
             for _name, data in archives:  # the re-ship adds no new urls
                 for hdr, block in iter_warc_records(data):
@@ -318,24 +319,15 @@ def stream_warc_mode(trials: int, seed: int) -> int:
                     want.add(u)
             got = [
                 r["url"]
-                for r in spark.read.parquet(out + "/result").select("url").collect()
+                for r in read_result(spark, out).select("url").collect()
             ]
             if len(got) != len(set(got)):
-                print(
-                    f"FAIL trial {t}: duplicate urls after kill-resume "
-                    f"— state kept at {base}",
-                    file=sys.stderr,
-                )
-                return 1
+                return _fail(t, base, "duplicate urls after kill-resume")
             if set(got) != want:
-                print(
-                    f"FAIL trial {t}: url set diverges from batch truth "
-                    f"(missing {sorted(want - set(got))[:3]}, "
-                    f"extra {sorted(set(got) - want)[:3]}) "
-                    f"— state kept at {base}",
-                    file=sys.stderr,
+                return _fail(
+                    t, base, f"url set diverges from batch truth "
+                    f"(missing {sorted(want - set(got))[:3]}, extra {sorted(set(got) - want)[:3]})",
                 )
-                return 1
             shutil.rmtree(base, ignore_errors=True)
         except Exception:
             print(f"FAIL trial {t}: state kept at {base}", file=sys.stderr)
@@ -368,8 +360,9 @@ def batch_kill_mode(trials: int, seed: int) -> int:
     Then layer on deterministic disk faults a real crash also produces
     (truncated manifest.json, deleted _lineage, planted empty bucket
     dirs, a deleted committed bucket, _temporary droppings), optionally
-    kill the FIRST resume attempt too, and finally resume to completion
-    via filter_pending + append — the exact CLI --resume path.
+    kill the FIRST resume attempt too, and finally resume to completion.
+    Every write is one cli.run_job call, the CLI's own job: the cut
+    runs and the final resume are its --resume path.
 
     Contract:
       - the final resume never raises;
@@ -383,8 +376,8 @@ def batch_kill_mode(trials: int, seed: int) -> int:
     import tempfile
     import threading
 
-    from pdf_extractor_spark.io import filter_pending, read_result, write_result
-    from pdf_extractor_spark.operators.extract import extract_pages
+    from pdf_extractor_spark.cli import run_job
+    from pdf_extractor_spark.io import read_result
     from pdf_extractor_spark.session import get_spark
 
     spark = get_spark("fuzz_batch_kill", shuffle_partitions=8)
@@ -395,8 +388,8 @@ def batch_kill_mode(trials: int, seed: int) -> int:
     resume_kills = 0
     faults = Counter()
 
-    def _rows(table_dir: str) -> list[str]:
-        df = spark.read.parquet(table_dir)
+    def _rows(out_dir: str) -> list[str]:
+        df = read_result(spark, out_dir)
         return sorted(df.select(sorted(df.columns)).toJSON().collect())
 
     def _manifest(out_dir: str) -> dict:
@@ -419,14 +412,11 @@ def batch_kill_mode(trials: int, seed: int) -> int:
                     spark, n_docs, str(base / "pages"), seed=900 + t,
                     n_buckets=n_buckets, files_per_bucket=2,
                 )
-                pages = spark.read.parquet(str(base / "pages"))
+                job = {"input": str(base / "pages"), "buckets": n_buckets}
             else:
-                pages = corpus.distributed_pages(spark, n_docs, seed=900 + t)
+                job = {"synthesize": n_docs, "seed": 900 + t, "buckets": n_buckets}
             tw0 = time.monotonic()
-            write_result(
-                extract_pages(pages), truth_dir, n_buckets=n_buckets,
-                input_bucketed=bucketed_input,
-            )
+            run_job(spark, output=truth_dir, **job)
             truth_t = time.monotonic() - tw0
 
             def _killed_run(out_dir: str) -> bool:
@@ -436,11 +426,7 @@ def batch_kill_mode(trials: int, seed: int) -> int:
                 timer = threading.Timer(delay, sc.cancelAllJobs)
                 timer.start()
                 try:
-                    write_result(
-                        extract_pages(filter_pending(pages, out_dir)),
-                        out_dir, n_buckets=n_buckets,
-                        input_bucketed=bucketed_input, mode="append",
-                    )
+                    run_job(spark, output=out_dir, resume=True, **job)
                     return False
                 except Exception:
                     return True
@@ -485,39 +471,19 @@ def batch_kill_mode(trials: int, seed: int) -> int:
                     resume_kills += 1
 
             # the final resume MUST converge from whatever state is left
-            write_result(
-                extract_pages(filter_pending(pages, kill_dir)),
-                kill_dir, n_buckets=n_buckets,
-                input_bucketed=bucketed_input, mode="append",
-            )
+            run_job(spark, output=kill_dir, resume=True, **job)
 
-            got, want = _rows(str(table)), _rows(str(Path(truth_dir, "result")))
+            got, want = _rows(kill_dir), _rows(truth_dir)
             if got != want:
-                print(
-                    f"FAIL trial {t}: resumed table diverges from truth "
-                    f"({len(got)} vs {len(want)} rows; buckets={n_buckets} "
-                    f"bucketed={bucketed_input}) "
-                    f"— state kept at {base}",
-                    file=sys.stderr,
+                return _fail(
+                    t, base, f"resumed table diverges from truth "
+                    f"({len(got)} vs {len(want)} rows; buckets={n_buckets} bucketed={bucketed_input})",
                 )
-                return 1
             if _manifest(kill_dir) != _manifest(truth_dir):
-                print(
-                    f"FAIL trial {t}: manifest diverges from truth "
-                    f"— state kept at {base}",
-                    file=sys.stderr,
-                )
-                return 1
-            n_all = spark.read.parquet(str(table)).count()
-            n_urls = read_result(spark, kill_dir).select("url").distinct().count()
-            if not (n_all == n_urls == n_docs):
-                print(
-                    f"FAIL trial {t}: exactly-once violated "
-                    f"(rows={n_all} urls={n_urls} expect={n_docs}) "
-                    f"— state kept at {base}",
-                    file=sys.stderr,
-                )
-                return 1
+                return _fail(t, base, "manifest diverges from truth")
+            n_urls = len({json.loads(r)["url"] for r in got})
+            if not (len(got) == n_urls == n_docs):
+                return _fail(t, base, f"exactly-once violated (rows={len(got)} urls={n_urls} expect={n_docs})")
             shutil.rmtree(base, ignore_errors=True)
         except Exception:
             print(f"FAIL trial {t}: state kept at {base}", file=sys.stderr)
