@@ -30,14 +30,19 @@ class SourceError(ValueError):
     """Not exactly one pages source."""
 
 
+def _check_source(input: str | None, input_warc: str | None, synthesize: int) -> None:
+    """Raise `SourceError` unless exactly one pages source is given."""
+    if sum(map(bool, (input, input_warc, synthesize))) != 1:
+        raise SourceError("need exactly one of --input, --input-warc, or --synthesize")
+
+
 def run_job(spark, *, output: str, input: str | None = None, input_warc: str | None = None, synthesize: int = 0,
             seed: int = 42, buckets: int = 32, resume: bool = False, file_sink: str | None = None) -> dict:
     """The batch job, one keyword per flag: one pages source → (on
     ``resume``) the urls not yet committed in ``output`` → extraction →
     the bucketed result table and its lineage → (with ``file_sink``) one
     JSON file per successful url. Returns the summary ``main`` prints."""
-    if sum(map(bool, (input, input_warc, synthesize))) != 1:
-        raise SourceError("need exactly one of --input, --input-warc, or --synthesize")
+    _check_source(input, input_warc, synthesize)
     from pdf_extractor_spark import corpus, io as pio
     from pdf_extractor_spark.operators.extract import extract_pages
     from pdf_extractor_spark.sources.warc import pages_from_warc
@@ -100,14 +105,14 @@ def main(argv: list[str] | None = None) -> int:
         "reference's per-document file sink, extract_outline.py:134-144)",
     )
     args = ap.parse_args(argv)
+    try:
+        _check_source(args.input, args.input_warc, args.synthesize)
+    except SourceError as e:
+        ap.error(str(e))  # before the JVM starts
 
     from pdf_extractor_spark.session import get_spark
 
-    try:
-        summary = run_job(get_spark("pdf_extractor_cli"), **vars(args))
-    except SourceError as e:
-        ap.error(str(e))
-    print(json.dumps(summary))
+    print(json.dumps(run_job(get_spark("pdf_extractor_cli"), **vars(args))))
     return 0
 
 

@@ -953,74 +953,71 @@ def _glyph_to_unicode(name: str) -> str:
     return ""
 
 
-def _parse_tounicode(data: bytes) -> dict[int, str]:
-    """bfchar/bfrange sections of a ToUnicode CMap → code→str map."""
-    out: dict[int, str] = {}
-    txt = data
+def _hex2str(h: bytes) -> str:
+    """ToUnicode hex string → text: UTF-16BE, a lone odd byte padded
+    with a leading zero, latin-1 where UTF-16 does not decode."""
+    b = bytes.fromhex(h.decode("ascii"))
+    if len(b) % 2:
+        b = b"\x00" + b
+    try:
+        return b.decode("utf-16-be")
+    except UnicodeDecodeError:
+        return b.decode("latin-1", "replace")
 
-    def _hex2int(h: bytes) -> int:
-        return int(h, 16)
 
-    def _hex2str(h: bytes) -> str:
-        b = bytes.fromhex(h.decode("ascii"))
-        if len(b) % 2:
-            b = b"\x00" + b
-        try:
-            s = b.decode("utf-16-be")
-        except UnicodeDecodeError:
-            s = b.decode("latin-1", "replace")
-        return s
+def _text_run(lo: int, hi: int, h: bytes) -> tuple[int, int, tuple[str, int]]:
+    """`_RangeMap` run for codes lo..hi whose text starts at the text of
+    hex string ``h`` and counts up in its last character: the value
+    ``(prefix, delta)`` gives code c the text ``prefix + chr(c + delta)``.
+    Raises ValueError where that would pass U+10FFFF."""
+    s = _hex2str(h)
+    delta = ord(s[-1]) - lo
+    if lo <= hi and hi + delta > 0x10FFFF:
+        raise ValueError("bfrange passes U+10FFFF")
+    return lo, hi, (s[:-1], delta)
 
-    for m in re.finditer(rb"beginbfchar(.*?)endbfchar", txt, re.S):
+
+def _parse_tounicode(data: bytes) -> list[tuple[int, int, tuple[str, int]]]:
+    """bfchar/bfrange sections of a ToUnicode CMap → `_text_run` runs in
+    the order they take effect: every bfchar, then every bfrange, each
+    in file order. A scalar bfrange covers at most 65,536 codes; the
+    array form maps lo + i only while lo + i <= hi."""
+    runs = []
+    for m in re.finditer(rb"beginbfchar(.*?)endbfchar", data, re.S):
         for cm in re.finditer(rb"<([0-9A-Fa-f]+)>\s*<([0-9A-Fa-f]+)>", m.group(1)):
-            out[_hex2int(cm.group(1))] = _hex2str(cm.group(2))
-    for m in re.finditer(rb"beginbfrange(.*?)endbfrange", txt, re.S):
-        body = m.group(1)
-        # <lo> <hi> <dst>  |  <lo> <hi> [<d1> <d2> ...]
-        pos = 0
-        pat = re.compile(
-            rb"<([0-9A-Fa-f]+)>\s*<([0-9A-Fa-f]+)>\s*(\[[^\]]*\]|<[0-9A-Fa-f]+>)"
-        )
-        for cm in pat.finditer(body):
-            lo, hi = _hex2int(cm.group(1)), _hex2int(cm.group(2))
-            dst = cm.group(3)
-            if dst.startswith(b"["):
-                vals = re.findall(rb"<([0-9A-Fa-f]+)>", dst)
-                for i, v in enumerate(vals):
-                    if lo + i <= hi:
-                        out[lo + i] = _hex2str(v)
-            else:
-                base = dst.strip(b"<>")
-                s = _hex2str(base)
-                if len(s) == 1:
-                    b0 = ord(s)
-                    for c in range(lo, min(hi, lo + 65535) + 1):
-                        out[c] = chr(b0 + (c - lo))
-                else:
-                    # multi-char base: increment last code unit
-                    b0 = ord(s[-1])
-                    for c in range(lo, min(hi, lo + 65535) + 1):
-                        out[c] = s[:-1] + chr(b0 + (c - lo))
-    return out
+            code = int(cm.group(1), 16)
+            runs.append(_text_run(code, code, cm.group(2)))
+    for m in re.finditer(rb"beginbfrange(.*?)endbfrange", data, re.S):
+        for cm in re.finditer(
+            rb"<([0-9A-Fa-f]+)>\s*<([0-9A-Fa-f]+)>\s*(\[[^\]]*\]|<[0-9A-Fa-f]+>)", m.group(1)
+        ):
+            lo, hi, dst = int(cm.group(1), 16), int(cm.group(2), 16), cm.group(3)
+            if dst.startswith(b"<"):
+                runs.append(_text_run(lo, min(hi, lo + 65535), dst[1:-1]))
+                continue
+            for i, v in enumerate(re.findall(rb"<([0-9A-Fa-f]+)>", dst)):
+                if lo + i > hi:
+                    break
+                runs.append(_text_run(lo + i, lo + i, v))
+    return runs
 
 
 def _parse_cid_cmap(
     data: bytes,
-) -> tuple[
-    list[tuple[int, bytes, bytes]], dict[int, int], list[tuple[int, int, int]]
-]:
-    """Embedded CID CMap stream (ISO 32000-1 §9.7.5.3) →
-    (codespace, cidchar map, cidrange list).
+) -> tuple[list[tuple[int, bytes, bytes]], list[tuple[int, int, int]]]:
+    """Embedded CID CMap stream (ISO 32000-1 §9.7.5.3) → (codespace,
+    code→CID runs).
 
     codespace: [(nbytes, lo_bytes, hi_bytes)] sorted by nbytes — the
     byte-length buckets that segment a show-string into codes. Range
     membership is BYTE-WISE per §9.7.6.2 (each byte of the code must
     lie within the corresponding byte of lo/hi — <8140><FEFE> excludes
     0x81FF because 0xFF > 0xFE in the second byte), which is why the
-    bounds stay as bytes. cidchar: code→CID. cidrange: [(lo, hi,
-    cid_base)] sorted by lo, CID = base + (code-lo). usecmap chains are
-    not followed (they reference predefined CMaps we don't ship); the
-    caller treats unmapped codes as identity."""
+    bounds stay as bytes. runs: `_RangeMap` runs ``(lo, hi, CID - code)``,
+    every cidrange then every cidchar, each in file order, so a cidchar
+    wins over a cidrange and a later cidrange over an earlier one.
+    usecmap chains are not followed (they reference predefined CMaps we
+    don't ship); the caller treats unmapped codes as identity."""
     codespace: list[tuple[int, bytes, bytes]] = []
     for m in re.finditer(rb"begincodespacerange(.*?)endcodespacerange", data, re.S):
         for cm in re.finditer(rb"<([0-9A-Fa-f]+)>\s*<([0-9A-Fa-f]+)>", m.group(1)):
@@ -1032,20 +1029,18 @@ def _parse_cid_cmap(
                 continue  # malformed: lo/hi of different byte lengths
             codespace.append((nbytes, lo, hi))
     codespace.sort()
-    chars: dict[int, int] = {}
-    for m in re.finditer(rb"begincidchar(.*?)endcidchar", data, re.S):
-        for cm in re.finditer(rb"<([0-9A-Fa-f]+)>\s+(\d+)", m.group(1)):
-            chars[int(cm.group(1), 16)] = int(cm.group(2))
-    ranges: list[tuple[int, int, int]] = []
+    runs: list[tuple[int, int, int]] = []
     for m in re.finditer(rb"begincidrange(.*?)endcidrange", data, re.S):
         for cm in re.finditer(
             rb"<([0-9A-Fa-f]+)>\s*<([0-9A-Fa-f]+)>\s+(\d+)", m.group(1)
         ):
-            ranges.append(
-                (int(cm.group(1), 16), int(cm.group(2), 16), int(cm.group(3)))
-            )
-    ranges.sort()
-    return codespace, chars, ranges
+            lo = int(cm.group(1), 16)
+            runs.append((lo, int(cm.group(2), 16), int(cm.group(3)) - lo))
+    for m in re.finditer(rb"begincidchar(.*?)endcidchar", data, re.S):
+        for cm in re.finditer(rb"<([0-9A-Fa-f]+)>\s+(\d+)", m.group(1)):
+            code = int(cm.group(1), 16)
+            runs.append((code, code, int(cm.group(2)) - code))
+    return codespace, runs
 
 
 _BASE_ENC_CACHE: dict[str, dict[int, str]] = {}
@@ -1068,37 +1063,43 @@ def _base_enc_table(codec: str) -> dict[int, str]:
     return t
 
 
-def _cid_width_table(
-    runs: list[tuple[int, int, float]], default: float
-) -> tuple[list[int], list[float]]:
-    """/W runs ``(first, last, width)`` in file order → ``(starts,
-    widths)``: CID c has width ``widths[bisect_right(starts, c)]``, and
-    ``default`` (/DW) where no run covers it. A later run wins over an
-    earlier one it overlaps. The table grows with the number of runs,
-    not with the CIDs a range covers: ``/W [0 100000000 500]`` is one
-    interval, not 10^8 dict slots.
+class _RangeMap:
+    """Code-range map: runs ``(lo, hi, value)`` in the order they take
+    effect → ``m[c]`` is the value of the last run covering c, else
+    ``default``. /W, the embedded CID CMap and ToUnicode all declare
+    ranges, and this is the one table for them: it grows with the
+    number of runs, not with the codes a range covers (``/W [0
+    100000000 500]`` is one interval, not 10^8 dict slots).
 
-    Runs are painted latest first onto the elementary intervals
-    between their boundaries; ``nxt`` (union-find) skips the intervals
-    already painted, so each is painted once."""
-    starts = sorted({b for lo, hi, _ in runs for b in (lo, hi + 1)})
-    widths: list[float | None] = [None] * len(starts)
-    nxt = list(range(len(starts)))
+    Runs are painted latest first onto the elementary intervals between
+    their boundaries; ``nxt`` (union-find) skips the intervals already
+    painted, so each is painted once. A run value is never None."""
 
-    def unpainted(k: int) -> int:
-        while nxt[k] != k:
-            nxt[k] = nxt[nxt[k]]
-            k = nxt[k]
-        return k
+    __slots__ = ("starts", "vals")
 
-    for lo, hi, w in reversed(runs):
-        end = bisect.bisect_left(starts, hi + 1)
-        k = unpainted(bisect.bisect_left(starts, lo))
-        while k < end:
-            widths[k] = w
-            nxt[k] = k + 1
-            k = unpainted(k + 1)
-    return starts, [default] + [default if w is None else w for w in widths]
+    def __init__(self, runs: list[tuple[int, int, Any]], default: Any = None):
+        starts = sorted({b for lo, hi, _ in runs for b in (lo, hi + 1)})
+        vals: list = [None] * len(starts)
+        nxt = list(range(len(starts)))
+
+        def unpainted(k: int) -> int:
+            while nxt[k] != k:
+                nxt[k] = nxt[nxt[k]]
+                k = nxt[k]
+            return k
+
+        for lo, hi, v in reversed(runs):
+            end = bisect.bisect_left(starts, hi + 1)
+            k = unpainted(bisect.bisect_left(starts, lo))
+            while k < end:
+                vals[k] = v
+                nxt[k] = k + 1
+                k = unpainted(k + 1)
+        self.starts = starts
+        self.vals = [default] + [default if v is None else v for v in vals]
+
+    def __getitem__(self, code: int) -> Any:
+        return self.vals[bisect.bisect_right(self.starts, code)]
 
 
 class Font:
@@ -1115,21 +1116,20 @@ class Font:
             name = name[7:]
         self.name = name
         self.two_byte = False
-        self.tounicode: dict[int, str] = {}
+        self.tounicode = _RangeMap([])
         tu = doc.resolve(fdict.get("ToUnicode"))
         if isinstance(tu, Stream):
             try:
-                self.tounicode = _parse_tounicode(tu.data())
+                self.tounicode = _RangeMap(_parse_tounicode(tu.data()))
             except Exception:
-                self.tounicode = {}
+                pass  # malformed ToUnicode → no text map
         self.default_width = 500.0
         self.widths: dict[int, float] = {}
         self._dec_table: list | None = None
         self.ascent = 0.8
         self.descent = -0.2
-        # Type0 code→CID map (embedded CMap streams); None = Identity
-        self._cid_chars: dict[int, int] | None = None
-        self._cid_ranges: list[tuple[int, int, int]] | None = None
+        # Type0 code→CID as CID - code (embedded CMap streams); 0 = Identity
+        self._cid_delta = _RangeMap([], 0)
         # codespace byte-lengths present in the encoding CMap, ascending;
         # None = fixed 2-byte (Identity-H/V and predefined CMaps)
         self._code_lens: list[tuple[int, bytes, bytes]] | None = None
@@ -1275,16 +1275,15 @@ class Font:
                 ]
         elif isinstance(enc, Stream):
             try:
-                cs, chars, ranges = _parse_cid_cmap(enc.data())
-                if not cs and (chars or ranges):
+                cs, cid_runs = _parse_cid_cmap(enc.data())
+                if not cs and cid_runs:
                     # CID mappings without a codespacerange (seen in
                     # sloppy writers): assume the default 2-byte space
                     # so the parsed code→CID data still keys widths
                     cs = [(2, b"\x00\x00", b"\xff\xff")]
                 if cs:
                     self._code_lens = cs
-                self._cid_chars = chars or None
-                self._cid_ranges = ranges or None
+                self._cid_delta = _RangeMap(cid_runs, 0)
             except Exception:
                 pass  # malformed CMap → identity fallback
         desc_fonts = doc.resolve(self.d.get("DescendantFonts"))
@@ -1321,27 +1320,20 @@ class Font:
                             i += 3
                         else:
                             break
-        # /W as disjoint CID intervals, for _cid_width
-        self._cid_w_starts, self._cid_w_vals = _cid_width_table(runs, self.default_width)
+        self._cid_w = _RangeMap(runs, self.default_width)
 
     def _cid_width(self, cid: int) -> float:
         """A Type0 glyph's /W width, else /DW."""
-        return self._cid_w_vals[bisect.bisect_right(self._cid_w_starts, cid)]
+        return self._cid_w[cid]
 
     def _cid_for(self, code: int) -> int:
-        """Type0 code→CID: cidchar, then cidrange bisect, else identity."""
-        if self._cid_chars is not None:
-            cid = self._cid_chars.get(code)
-            if cid is not None:
-                return cid
-        rngs = self._cid_ranges
-        if rngs:
-            i = bisect.bisect_right(rngs, (code, 0x7FFFFFFF, 0x7FFFFFFF)) - 1
-            if i >= 0:
-                lo, hi, base = rngs[i]
-                if lo <= code <= hi:
-                    return base + (code - lo)
-        return code
+        """Type0 code→CID: the embedded CMap's mapping, else identity."""
+        return code + self._cid_delta[code]
+
+    def _text(self, code: int) -> str | None:
+        """A code's ToUnicode text, None where it maps none."""
+        v = self.tounicode[code]
+        return None if v is None else v[0] + chr(code + v[1])
 
     def _next_code(self, s: bytes, i: int) -> tuple[int, int]:
         """Variable-length code segmentation per the encoding CMap's
@@ -1380,7 +1372,7 @@ class Font:
                 while i < len(s):
                     code, nbytes = self._next_code(s, i)
                     i += nbytes
-                    txt = self.tounicode.get(code)
+                    txt = self._text(code)
                     if txt is None:
                         if self._unicode_codes:
                             txt = self._unicode_code_txt(code, nbytes)
@@ -1390,7 +1382,7 @@ class Font:
                 return out
             for i in range(0, len(s) - 1, 2):
                 code = (s[i] << 8) | s[i + 1]
-                txt = self.tounicode.get(code)
+                txt = self._text(code)
                 if txt is None:
                     if self._unicode_codes:
                         txt = self._unicode_code_txt(code, 2)
@@ -1399,7 +1391,7 @@ class Font:
                 out.append((txt, self._cid_width(code), code))
             if len(s) % 2:  # trailing odd byte
                 code = s[-1]
-                out.append((self.tounicode.get(code, ""), self.default_width, code))
+                out.append((self._text(code) or "", self.default_width, code))
         else:
             # hot path: one precomputed (text, width, code) per byte —
             # built lazily on first show op for this font. The common
@@ -1411,7 +1403,7 @@ class Font:
             if table is None:
                 ck = None
                 if (
-                    not self.tounicode
+                    not self.tounicode.starts
                     and not self.widths
                     and not getattr(self, "_enc_diffs", True)
                 ):
@@ -1420,9 +1412,7 @@ class Font:
                 if table is None:
                     table = [
                         (
-                            self.tounicode.get(c, self.enc.get(c, ""))
-                            if self.tounicode.get(c) is None
-                            else self.tounicode[c],
+                            self._text(c) or self.enc.get(c, ""),
                             self.widths.get(c, self.default_width),
                             c,
                         )

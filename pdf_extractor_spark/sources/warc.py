@@ -163,7 +163,7 @@ def http_response_body(block: bytes) -> Optional[bytes]:
     if b"gzip" in enc or b"x-gzip" in enc:
         try:
             body = gzip.decompress(body)
-        except OSError:
+        except (OSError, EOFError, zlib.error):  # bad header, truncated, corrupt deflate
             return None
     elif b"deflate" in enc:
         try:

@@ -10,7 +10,7 @@ import gzip
 import pytest
 from pyspark.sql import functions as F
 
-from pdf_extractor_spark import cli, corpus
+from pdf_extractor_spark import cli, corpus, session
 from pdf_extractor_spark.io import read_pages, read_result
 from pdf_extractor_spark.schemas import PAGES_SCHEMA
 from pdf_extractor_spark.sources.payload import pages_from_binary_files
@@ -111,3 +111,14 @@ def test_cli_takes_exactly_one_pages_source(spark, tmp_path, capsys):
             cli.main(sources + out)
         assert exit_info.value.code == 2
         assert "need exactly one of --input, --input-warc, or --synthesize" in capsys.readouterr().err
+
+
+def test_cli_rejects_two_sources_before_starting_spark(monkeypatch, tmp_path, capsys):
+    def no_spark(*_args, **_kwargs):
+        raise AssertionError("get_spark called for a usage error")
+
+    monkeypatch.setattr(session, "get_spark", no_spark)
+    with pytest.raises(SystemExit) as exit_info:
+        cli.main(["--input", str(tmp_path / "pages"), "--synthesize", "5", "--output", str(tmp_path / "out")])
+    assert exit_info.value.code == 2
+    assert "need exactly one of --input, --input-warc, or --synthesize" in capsys.readouterr().err

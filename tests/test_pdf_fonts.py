@@ -20,6 +20,7 @@ from pdf_extractor_spark.sources.pdfparse import (
     Font,
     PdfDocument,
     Ref,
+    _base_enc_table,
     _parse_cid_cmap,
     extract_spans,
 )
@@ -273,17 +274,17 @@ class TestInlineImageSkip:
 
 class TestCidCmapParser:
     def test_parse_shapes(self):
-        cs, chars, ranges = _parse_cid_cmap(
+        cs, runs = _parse_cid_cmap(
             b"2 begincodespacerange <00> <80> <8140> <FEFE> endcodespacerange\n"
             b"1 begincidchar <20> 1 endcidchar\n"
             b"2 begincidrange <41> <5A> 100 <61> <7A> 200 endcidrange"
         )
         assert cs == [(1, b"\x00", b"\x80"), (2, b"\x81\x40", b"\xfe\xfe")]
-        assert chars == {0x20: 1}
-        assert ranges == [(0x41, 0x5A, 100), (0x61, 0x7A, 200)]
+        # (lo, hi, CID - code): every cidrange, then every cidchar
+        assert runs == [(0x41, 0x5A, 100 - 0x41), (0x61, 0x7A, 200 - 0x61), (0x20, 0x20, 1 - 0x20)]
 
     def test_empty_input(self):
-        assert _parse_cid_cmap(b"") == ([], {}, [])
+        assert _parse_cid_cmap(b"") == ([], [])
 
     def test_bytewise_codespace_membership(self):
         """ISO 32000-1 §9.7.6.2: range membership is per-byte, not an
@@ -470,7 +471,7 @@ class TestCidWidths:
         """A 15-byte /W range over a million CIDs is kept as a range,
         not expanded to a slot per CID (10^8 CIDs would take ~10 GB)."""
         font = _identity_type0(b"[0 1000000 500]")
-        assert not font.widths and len(font._cid_w_starts) <= 2
+        assert not font.widths and len(font._cid_w.starts) <= 2
         for cid in (0, 500000, 1000000):
             assert font._cid_width(cid) == 500.0
         assert font._cid_width(1000001) == 700.0
@@ -495,3 +496,213 @@ class TestCidWidths:
 
 def _pdf_array(items: list) -> bytes:
     return b"[" + b" ".join(_pdf_array(v) if isinstance(v, list) else b"%d" % v for v in items) + b"]"
+
+
+_TYPE0_IDENTITY = (
+    b"<< /Type /Font /Subtype /Type0 /BaseFont /U /Encoding /Identity-H "
+    b"/DescendantFonts [4 0 R] /ToUnicode 5 0 R >>"
+)
+_TYPE1 = b"<< /Type /Font /Subtype /Type1 /BaseFont /Helvetica /ToUnicode 5 0 R >>"
+
+
+def _with_tounicode(font: bytes, tounicode: bytes) -> list:
+    """Font objects 3-5 for `_build` (page object 6): ``font`` as /F1, a
+    CIDFont for a Type0 to descend to, and the ToUnicode Flate stream."""
+    data = zlib.compress(tounicode)
+    return [
+        (3, font),
+        (4, b"<< /Type /Font /Subtype /CIDFontType2 /BaseFont /U /DW 1000 >>"),
+        (5, b"<< /Length %d /Filter /FlateDecode >>\nstream\n%s\nendstream" % (len(data), data)),
+    ]
+
+
+def _parsed_font(objs: list, page_obj: int = 6) -> Font:
+    """The /F1 font of a one-page PDF, as the parser builds it."""
+    doc = PdfDocument(_build(objs, b"BT /F1 24 Tf 72 700 Td <00> Tj ET", page_obj))
+    return Font(doc, doc.resolve(Ref(3, 0)))
+
+
+def _tounicode_bomb(n_ranges: int = 200) -> bytes:
+    """A ~1.7 KB PDF whose Type0 font declares ``n_ranges`` disjoint
+    ToUnicode bfranges of 65,536 codes each (~860 bytes deflated); its
+    page shows codes 0, 1, 2, which map to "ABC"."""
+    tu = (
+        b"begincmap\n%d beginbfrange\n" % n_ranges
+        + b"".join(b"<%08X> <%08X> <0041>\n" % (k << 16, (k << 16) + 0xFFFF) for k in range(n_ranges))
+        + b"endbfrange\nendcmap"
+    )
+    return _build(_with_tounicode(_TYPE0_IDENTITY, tu), b"BT /F1 24 Tf 72 700 Td <000000010002> Tj ET", 6)
+
+
+def _utf16_text(h: str) -> str:
+    """A ToUnicode hex string's text: UTF-16BE, an odd byte count padded
+    with a leading zero byte, latin-1 where UTF-16 does not decode."""
+    b = bytes.fromhex(h)
+    if len(b) % 2:
+        b = b"\x00" + b
+    try:
+        return b.decode("utf-16-be")
+    except UnicodeDecodeError:
+        return b.decode("latin-1", "replace")
+
+
+def _expanded_tounicode(sections: list) -> dict[int, str]:
+    """ToUnicode sections expanded one dict slot per code: every bfchar
+    entry, then every bfrange entry, later entries overwriting. A scalar
+    bfrange covers at most 65,536 codes, counting up the last character
+    of its base. A ValueError (odd hex digits, a text past U+10FFFF)
+    drops the whole map."""
+    out: dict[int, str] = {}
+    try:
+        for kind, entries in sorted(sections, key=lambda sec: sec[0] == "range"):
+            for e in entries:
+                if kind == "char":
+                    out[e[0]] = _utf16_text(e[1])
+                elif isinstance(e[2], list):
+                    for i, h in enumerate(e[2]):
+                        if e[0] + i <= e[1]:
+                            out[e[0] + i] = _utf16_text(h)
+                else:
+                    s = _utf16_text(e[2])
+                    for c in range(e[0], min(e[1], e[0] + 65535) + 1):
+                        out[c] = s[:-1] + chr(ord(s[-1]) + c - e[0])
+    except ValueError:
+        return {}
+    return out
+
+
+def _cmap(sections: list, prefix: bytes, head: bytes = b"") -> bytes:
+    """CMap text of ``(kind, entries)`` sections, kind "char" or "range",
+    as ``begin<prefix><kind>`` blocks. An entry's codes are written as
+    4-digit hex and its value as hex text (a str), an array of them (a
+    list) or a CID (an int)."""
+
+    def value(v) -> bytes:
+        if isinstance(v, int):
+            return b"%d" % v
+        if isinstance(v, list):
+            return b"[" + b" ".join(map(value, v)) + b"]"
+        return b"<%s>" % v.encode()
+
+    out = b"begincmap\n" + head
+    for kind, entries in sections:
+        tag = prefix + kind.encode()
+        out += b"%d begin%s\n" % (len(entries), tag)
+        for e in entries:
+            out += b" ".join([b"<%04X>" % c for c in e[:-1]] + [value(e[-1])]) + b"\n"
+        out += b"end%s\n" % tag
+    return out + b"endcmap"
+
+
+def _random_tounicode(rng: random.Random) -> list:
+    """Small random ToUnicode sections: bfchar, scalar and array
+    bfranges, overlaps, reversed ranges, multi-character bases (a lone
+    surrogate falls back to two latin-1 characters), odd byte counts,
+    a base near U+10FFFF, odd hex digits, and ranges past the cap."""
+
+    def text() -> str:
+        return rng.choice(
+            ["%04X" % rng.choice((0x41, 0x61, 0xE9, 0x3042)), "%02X" % rng.randint(0x30, 0x7A),
+             "0066%04X" % rng.randint(0x61, 0x7A), "D800", "DBFFDFF8"]
+            + ["041"] * (rng.random() < 0.05)
+        )
+
+    sections = []
+    for _s in range(rng.randint(1, 4)):
+        entries: list = []
+        if rng.random() < 0.4:
+            for _e in range(rng.randint(1, 4)):
+                entries.append((rng.randint(0, 40), text()))
+            sections.append(("char", entries))
+            continue
+        for _e in range(rng.randint(1, 4)):
+            lo = rng.randint(2, 40)
+            r = rng.random()
+            if r < 0.3:
+                entries.append((lo, lo + rng.randint(-2, 6), [text() for _ in range(rng.randint(1, 6))]))
+            elif r < 0.97:
+                entries.append((lo, lo + rng.randint(-2, 12), text()))
+            else:
+                entries.append((lo, lo + 65535 + rng.randint(1, 3), rng.choice(("0041", "0066%04X" % 0x61))))
+        sections.append(("range", entries))
+    return sections
+
+
+class TestToUnicodeRanges:
+    def test_matches_expanded_table(self):
+        """Random small CMaps decode as the per-code expansion does,
+        through a Type0 Identity-H font and a simple Type1 font."""
+        rng = random.Random(11)
+        cp1252 = _base_enc_table("cp1252")
+        for _ in range(300):
+            sections = _random_tounicode(rng)
+            want = _expanded_tounicode(sections)
+            cmap = _cmap(sections, b"bf")
+            codes = list(range(-1, 60)) + [
+                e[0] + d for _k, es in sections for e in es
+                if len(e) == 3 and e[1] - e[0] > 65535 for d in (65534, 65535, 65536)
+            ]
+            t0 = _parsed_font(_with_tounicode(_TYPE0_IDENTITY, cmap))
+            assert [t0._text(c) for c in codes] == [want.get(c) for c in codes], sections
+            show = b"".join(c.to_bytes(2, "big") for c in range(60))
+            assert [t for t, _w, _c in t0.decode(show)] == [want.get(c, "�" if c else "") for c in range(60)]
+            t1 = _parsed_font(_with_tounicode(_TYPE1, cmap))
+            assert [t for t, _w, _c in t1.decode(bytes(range(256)))] == [
+                want.get(c, cp1252[c]) for c in range(256)
+            ], sections
+
+    def test_bfrange_wins_over_later_bfchar(self):
+        sections = [("range", [(0x41, 0x43, "0058")]), ("char", [(0x42, "0051")])]
+        font = _parsed_font(_with_tounicode(_TYPE0_IDENTITY, _cmap(sections, b"bf")))
+        assert [font._text(c) for c in (0x41, 0x42, 0x43)] == ["X", "Y", "Z"]
+
+    def test_base_past_last_code_point_drops_the_map(self):
+        sections = [("char", [(0x41, "0051")]), ("range", [(0, 20, "DBFFDFF0")])]
+        assert _expanded_tounicode(sections) == {}
+        font = _parsed_font(_with_tounicode(_TYPE0_IDENTITY, _cmap(sections, b"bf")))
+        assert not font.tounicode.starts and font._text(0x41) is None
+
+    def test_bomb_stays_one_interval_per_range(self):
+        """200 bfranges of 65,536 codes each: a table of at most
+        2·runs + 1 intervals, not 13.1M per-code entries."""
+        pdf = _tounicode_bomb(200)
+        doc = PdfDocument(pdf)
+        font = Font(doc, doc.resolve(Ref(3, 0)))
+        assert len(font.tounicode.vals) <= 2 * 200 + 1
+        assert font._text(199 * 65536 + 65535) == chr(0x41 + 65535)
+        assert _only_line(pdf)["text"] == "ABC"
+
+
+def _cid_cmap(sections: list) -> bytes:
+    return _cmap(sections, b"cid", b"1 begincodespacerange <0000> <FFFF> endcodespacerange\n")
+
+
+class TestCidCmapRanges:
+    def test_overlapping_cidranges_later_entry_wins(self):
+        first = ("range", [(0, 100, 1000)])
+        inner = ("range", [(10, 20, 5000)])
+        font = _parsed_font(_type0(_cid_cmap([first, inner]), b"", b"[]"), 8)
+        assert [font._cid_for(c) for c in (5, 15, 50, 101)] == [1005, 5005, 1050, 101]
+        font = _parsed_font(_type0(_cid_cmap([inner, first]), b"", b"[]"), 8)
+        assert [font._cid_for(c) for c in (5, 15, 50, 101)] == [1005, 1015, 1050, 101]
+
+    def test_matches_expanded_cid_map(self):
+        """cidchar beats cidrange wherever it sits in the file, a later
+        cidrange beats an earlier one, unmapped codes stay identity."""
+        rng = random.Random(3)
+        for _ in range(200):
+            sections = []
+            for _s in range(rng.randint(1, 4)):
+                if rng.random() < 0.4:
+                    chars = [(rng.randint(0, 40), rng.randint(0, 900)) for _ in range(rng.randint(1, 3))]
+                    sections.append(("char", chars))
+                else:
+                    lows = [rng.randint(2, 40) for _ in range(rng.randint(1, 3))]
+                    sections.append(("range", [(lo, lo + rng.randint(-2, 12), rng.randint(0, 900)) for lo in lows]))
+            want: dict[int, int] = {}
+            for kind, entries in sorted(sections, key=lambda sec: sec[0] == "char"):
+                for e in entries:
+                    for c in range(e[0], e[-2] + 1):
+                        want[c] = e[-1] + c - e[0]
+            font = _parsed_font(_type0(_cid_cmap(sections), b"", b"[]"), 8)
+            assert [font._cid_for(c) for c in range(-1, 60)] == [want.get(c, c) for c in range(-1, 60)], sections

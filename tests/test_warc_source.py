@@ -20,6 +20,7 @@ from pdf_extractor_spark.sources.warc import (
     http_response_body,
     iter_warc_records,
     pages_from_warc,
+    parse_content_batches,
 )
 
 
@@ -32,6 +33,20 @@ def spark():
 
 def _rows(n=40, seed=5):
     return corpus.build_pages_rows(n, seed)
+
+
+def _gzip_body_warc(bodies: list[bytes]) -> bytes:
+    """A plain ``.warc`` with one response record per body, url
+    ``https://gz.example.com/<i>``, each body sent as given under
+    ``Content-Encoding: gzip``."""
+    out = b""
+    for i, body in enumerate(bodies):
+        http = b"HTTP/1.1 200 OK\r\nContent-Encoding: gzip\r\nContent-Length: %d\r\n\r\n" % len(body) + body
+        out += (
+            b"WARC/1.0\r\nWARC-Type: response\r\nWARC-Target-URI: https://gz.example.com/%d\r\n"
+            b"WARC-Date: 2020-01-01T00:00:00Z\r\nContent-Length: %d\r\n\r\n" % (i, len(http))
+        ) + http + b"\r\n\r\n"
+    return out
 
 
 class TestRecordIteration:
@@ -154,6 +169,22 @@ class TestHttpBody:
     def test_undecodable_gzip_returns_none(self):
         block = b"HTTP/1.1 200 OK\r\nContent-Encoding: gzip\r\n\r\nnot gzip"
         assert http_response_body(block) is None
+
+    def test_truncated_or_corrupt_gzip_body_returns_none(self):
+        """gzip raises EOFError on a truncated member and zlib.error on
+        corrupt deflate data; neither is an OSError."""
+        gz = gzip.compress(b"<html>" + bytes(range(256)) * 8 + b"</html>", mtime=0)
+        corrupt = gz[:10] + b"\xff" * 16 + gz[26:]
+        for body in (gz[: len(gz) // 2], corrupt):
+            (_hdr, block), = iter_warc_records(_gzip_body_warc([body]))
+            assert http_response_body(block) is None
+
+    def test_corrupt_gzip_body_drops_only_its_record(self):
+        gz = gzip.compress(b"<html>ok</html>", mtime=0)
+        archive = _gzip_body_warc([gz, gz[: len(gz) // 2], gz])
+        (frame,) = parse_content_batches(iter([pd.DataFrame({"content": [archive]})]))
+        assert list(frame["url"]) == ["https://gz.example.com/0", "https://gz.example.com/2"]
+        assert list(frame["html"]) == [b"<html>ok</html>"] * 2
 
     def test_encoding_tokens_outside_their_headers_ignored(self):
         """'gzip'/'chunked' appearing in OTHER headers (Content-Type:

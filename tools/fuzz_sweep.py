@@ -10,6 +10,8 @@ robustness soak. Web-crawled corpora at 100 TB hit every corruption class
 daily; one interpreter-level crash or pathological loop inside an executor
 poisons a whole task retry budget, so the bar is: every byte string either
 parses to a well-formed result or raises an orderly Exception promptly.
+A WARC archive may not raise at all: its records are read where no
+handler turns an exception into a row.
 
 Run: python tools/fuzz_sweep.py [--iters 20000] [--seed 0] [--workers 16]
 Exit 0 = contract held on every mutant; nonzero = violation (printed).
@@ -18,6 +20,7 @@ Exit 0 = contract held on every mutant; nonzero = violation (printed).
 from __future__ import annotations
 
 import argparse
+import gzip
 import json
 import random
 import sys
@@ -87,6 +90,7 @@ def _build_seeds() -> dict[str, list[bytes]]:
             named, b"BT /F1 24 Tf 72 700 Td (\xd8\x42\xdf\xb7\x30\x42\x4e\x2d) Tj ET", 8
         )
     )
+    pdfs.append(tpf._tounicode_bomb())  # 200 ToUnicode ranges of 65,536 codes
     import test_pdfcrypt_fuzz as tcf  # rc4/aes encrypted fixtures
 
     crypt = [tcf._FIXTURES["rc4"], tcf._FIXTURES["aes"]]
@@ -99,6 +103,10 @@ def _build_seeds() -> dict[str, list[bytes]]:
     for s, gz in ((0, False), (1, True)):
         rows = corpus.build_pages_rows(8, seed=100 + s)
         warcs.append(corpus.rows_to_warc(rows, member_gzip=gz))
+    import test_warc_source as tws  # Content-Encoding: gzip response bodies
+
+    rows = corpus.build_pages_rows(8, seed=102)
+    warcs.append(tws._gzip_body_warc([gzip.compress(r["html"] or b"", mtime=0) for r in rows]))
     return {
         "pdf": pdfs,
         "crypt": crypt,
@@ -161,7 +169,9 @@ def _one(task: tuple[int, int]) -> dict:
             _assert_html(extract_html(doc))
         elif kind == "warc":
             # bounded iteration: the record generator must terminate on
-            # ANY byte string (a backward scan = infinite loop = hang)
+            # ANY byte string (a backward scan = infinite loop = hang).
+            # parse_content_batches catches nothing, so a raise here
+            # would fail the Spark task of the whole archive: a breach
             n_rec = 0
             for headers, block in warc_mod.iter_warc_records(doc):
                 assert isinstance(headers, dict)
@@ -176,7 +186,7 @@ def _one(task: tuple[int, int]) -> dict:
             _assert_pages(pdfparse.extract_spans(doc))
         outcome = "parsed"
     except Exception as exc:
-        if isinstance(exc, _DISORDERLY) or isinstance(exc, AssertionError):
+        if kind == "warc" or isinstance(exc, (_DISORDERLY, AssertionError)):
             raise  # contract breach — surface with the failing (i, seed)
         outcome = "raised"
         err = type(exc).__name__
@@ -206,16 +216,16 @@ def stream_warc_mode(trials: int, seed: int) -> int:
         phase are the point of the kill and are swallowed);
       - the committed table holds every url exactly ONCE (file-source
         checkpoint + url anti-join survive a mid-batch kill);
-      - the url set equals BATCH truth: what iter_warc_records +
-        http_response_body extract from the landed bytes directly —
-        streaming twin parity under kill, corruption, and re-ship.
+      - the url set equals BATCH truth: the urls pages_from_warc reads
+        from the landing dir — streaming twin parity under kill,
+        corruption, and re-ship.
     """
     import shutil
     import tempfile
 
     from pdf_extractor_spark.io import read_result
     from pdf_extractor_spark.session import get_spark
-    from pdf_extractor_spark.sources.warc import http_response_body, iter_warc_records
+    from pdf_extractor_spark.sources.warc import pages_from_warc
     from pdf_extractor_spark.streaming.pipeline import (
         stream_extract,
         stream_warc_pages,
@@ -301,22 +311,7 @@ def stream_warc_mode(trials: int, seed: int) -> int:
                 q.awaitTermination()
             except Exception as exc:
                 return _fail(t, base, f"resume query failed ({type(exc).__name__}: {str(exc).splitlines()[0][:160]})")
-            want = set()
-            for _name, data in archives:  # the re-ship adds no new urls
-                for hdr, block in iter_warc_records(data):
-                    if hdr.get("warc-type") not in ("response", "resource"):
-                        continue
-                    u = hdr.get("warc-target-uri")
-                    if not u:
-                        continue
-                    payload = (
-                        http_response_body(block)
-                        if hdr.get("warc-type") == "response"
-                        else block
-                    )
-                    if payload is None:
-                        continue
-                    want.add(u)
+            want = {r["url"] for r in pages_from_warc(spark, str(land)).select("url").collect()}
             got = [
                 r["url"]
                 for r in read_result(spark, out).select("url").collect()
