@@ -8,7 +8,10 @@ Arrow batch, so at cluster scale this is embarrassingly parallel —
 zero shuffle, zero driver involvement, linear scaling with executors
 (the property the north rule's ≥0.8 scaling-efficiency gate measures).
 The batch's merged blocks go to the analyzer in one call, which
-analyzes each document on its own.
+analyzes each document on its own. WARC input keeps the one stage: the
+frame ``sources.warc.pages_from_warc`` returns is extracted from its
+archive scan, with the record loop in front of the same per-batch code
+(``_run_warc_batches``).
 
 Failed documents follow S4 semantics (extract_outline.py:116-124,
 145-147): the reference writes NO output for them; here they become
@@ -20,6 +23,7 @@ with the exception in ``error``; its neighbours are unaffected.
 from __future__ import annotations
 
 import json
+from functools import partial
 from typing import Iterator
 
 import pandas as pd
@@ -27,7 +31,7 @@ from pyspark.sql import DataFrame
 
 from ..schemas import RESULT_SCHEMA
 from ..session import trim_per_task_costs
-from ..sources import payload as payload_codec
+from ..sources import payload as payload_codec, warc
 from . import analyzer, html_extract, span_merge
 
 
@@ -118,14 +122,54 @@ def _run_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         trim_per_task_costs()
 
 
+def _run_warc_batches(
+    batches: Iterator[pd.DataFrame], max_rows: int, max_bytes: int
+) -> Iterator[pd.DataFrame]:
+    """binaryFile ``content`` batches → RESULT_SCHEMA batches: the WARC
+    record loop and ``_process_batch`` in one Python stage. A batch of
+    pages closes at ``max_rows`` rows or after the payload that takes it
+    to ``max_bytes``, the limits the session's Arrow batches of pages
+    rows have, so a worker holds one archive batch and one pages batch."""
+    try:
+        urls, payloads, size = [], [], 0
+        for pdf in batches:
+            for url, _date, payload in warc.iter_page_records(pdf["content"]):
+                urls.append(url)
+                payloads.append(payload)
+                size += len(payload)
+                if len(urls) >= max_rows or size >= max_bytes:
+                    yield _process_batch(pd.DataFrame({"url": urls, "html": payloads}))
+                    urls, payloads, size = [], [], 0
+        if urls:
+            yield _process_batch(pd.DataFrame({"url": urls, "html": payloads}))
+    finally:
+        trim_per_task_costs()
+
+
 def extract_pages(pages_df: DataFrame, keep_failed: bool = True) -> DataFrame:
     """pages(url, warc_ts, html, text, lang) → RESULT_SCHEMA rows.
+
+    The frame ``sources.warc.pages_from_warc`` returns, as it is and not
+    cached, is extracted straight from its archive scan: one Python
+    stage parses the records and extracts them. Any other frame is
+    extracted from its ``url`` and ``html`` columns.
 
     ``keep_failed=False`` reproduces the reference's sink behavior
     (failed docs produce no output row); keep them when writing with
     io.write_result so lineage can count failures.
     """
-    out = pages_df.select("url", "html").mapInPandas(_run_batches, schema=RESULT_SCHEMA)
+    # vars(), not getattr: DataFrame.__getattr__ resolves column names
+    content = vars(pages_df).get("_warc_content")
+    if content is not None and not pages_df.is_cached:
+        conf = content.sparkSession.conf
+        run = partial(
+            _run_warc_batches,
+            max_rows=int(conf.get("spark.sql.execution.arrow.maxRecordsPerBatch")),
+            max_bytes=int(conf.get("spark.sql.execution.arrow.maxBytesPerBatch")),
+        )
+        out = content.mapInPandas(run, schema=RESULT_SCHEMA)
+    else:
+        out = pages_df.select("url", "html").mapInPandas(_run_batches, schema=RESULT_SCHEMA)
     if not keep_failed:
         out = out.filter(out.parse_ok)
     return out

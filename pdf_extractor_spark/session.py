@@ -8,12 +8,14 @@ sized to cores, small Arrow batches because payload rows are fat).
 
 from __future__ import annotations
 
+import contextlib
 import gc
 import hashlib
 import logging
 import os
 import shlex
 import shutil
+import socket
 import subprocess
 import sys
 import tempfile
@@ -41,9 +43,35 @@ def _host_driver_mem() -> str:
 DEFAULT_SHUFFLE_PARTITIONS = int(_host_cpus())
 
 
+_worker_tuned = False  # set once per Spark Python worker process
+
+
+def _set_tcp_nodelay() -> None:
+    """Turn Nagle's algorithm off on every TCP socket this process
+    holds; in a Spark Python worker that is its connection to the
+    executor. Without procfs nothing changes."""
+    try:
+        fds = [int(fd) for fd in os.listdir("/proc/self/fd")]
+    except OSError:
+        return
+    for fd in fds:
+        try:
+            dup = os.dup(fd)
+        except OSError:  # the listing's own descriptor, already closed
+            continue
+        try:
+            sock = socket.socket(fileno=dup)
+        except OSError:  # not a socket
+            os.close(dup)
+            continue
+        with sock, contextlib.suppress(OSError):  # a latency option: never fail the task
+            if sock.family in (socket.AF_INET, socket.AF_INET6) and sock.type == socket.SOCK_STREAM:
+                sock.setsockopt(socket.IPPROTO_TCP, socket.TCP_NODELAY, 1)
+
+
 def trim_per_task_costs() -> None:
-    """Remove two fixed costs a reused Spark Python worker pays on every
-    task. Stage generators call this when they end.
+    """Remove three fixed costs a reused Spark Python worker pays on
+    every task. Stage generators call this when they end.
 
     Zip importers: PySpark calls ``importlib.invalidate_caches()`` at
     the start of every task (``pyspark/worker_util.py``). On CPython
@@ -66,16 +94,32 @@ def trim_per_task_costs() -> None:
     and then ``gc.freeze()``s what survives, so every later collection
     scans only what tasks allocate (~200 objects, under 0.2 ms). It
     freezes once per process: objects frozen after every task could
-    leak as cyclic garbage. Outside a Spark task (the driver, tests)
-    the heap is left alone.
+    leak as cyclic garbage.
+
+    Nagle's algorithm: PySpark's daemon leaves ``TCP_NODELAY`` unset on
+    the socket a worker shares with its executor, so a task's small
+    trailing writes can wait for the executor's delayed ACK. With 4
+    workers on 4 vCPUs a 16-task WARC extraction stage took 0.36-0.41 s
+    against 0.24-0.27 s with the option set, and its host CPUs sat half
+    idle. The first call in a Spark Python worker sets it. A Unix
+    domain socket (``spark.python.unix.domain.socket.enabled``) has no
+    such delay and is left alone.
+
+    Outside a Spark task (the driver, tests) neither the heap nor any
+    socket is touched. Whether a worker is set up is a flag, not
+    ``gc.get_freeze_count()``: that walks the frozen objects, ~4 ms of
+    every task on a frozen import heap.
     """
+    global _worker_tuned
     for path, finder in list(sys.path_importer_cache.items()):
         if isinstance(finder, zipimport.zipimporter):
             del sys.path_importer_cache[path]
             zipimport._zip_directory_cache.pop(finder.archive, None)
-    if gc.get_freeze_count() == 0 and TaskContext.get() is not None:
+    if not _worker_tuned and TaskContext.get() is not None:
+        _set_tcp_nodelay()
         gc.collect()
         gc.freeze()
+        _worker_tuned = True
 
 
 # The driver JVM's option the class-data-sharing flag rides on. Callers

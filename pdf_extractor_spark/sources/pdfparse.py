@@ -1044,7 +1044,11 @@ def _parse_cid_cmap(
 
 
 _BASE_ENC_CACHE: dict[str, dict[int, str]] = {}
+# (codec, default width) → decode table. Each document's /MissingWidth
+# sets the width, so a reused worker would keep one table per distinct
+# value it ever saw: the memo keeps the latest few keys only.
 _DEC_TABLE_CACHE: dict[tuple, list] = {}
+_DEC_TABLE_CACHE_MAX = 8
 
 
 def _base_enc_table(codec: str) -> dict[int, str]:
@@ -1419,6 +1423,8 @@ class Font:
                         for c in range(256)
                     ]
                     if ck is not None:
+                        if len(_DEC_TABLE_CACHE) >= _DEC_TABLE_CACHE_MAX:
+                            del _DEC_TABLE_CACHE[next(iter(_DEC_TABLE_CACHE))]
                         _DEC_TABLE_CACHE[ck] = table
                 self._dec_table = table
             for code in s:

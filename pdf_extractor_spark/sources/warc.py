@@ -25,6 +25,11 @@ records degrade per-record (skipped), not per-file, and truncated
 archives yield their parseable prefix — error accounting then happens
 per-DOCUMENT in the extraction stage (S4 lineage), which is where a
 corrupt payload should land, not at ingest.
+
+Stages: ``iter_page_records`` is the one record loop. ``pages_from_warc``
+runs it in its own ``mapInPandas`` (``parse_content_batches``);
+``operators.extract.extract_pages``, given that exact frame, runs it in
+the extraction stage instead, so an archive task has one Python stage.
 """
 
 from __future__ import annotations
@@ -35,7 +40,7 @@ from typing import Iterator, Optional
 
 from ..schemas import PAGES_SCHEMA
 
-__all__ = ["iter_warc_records", "pages_from_warc", "http_response_body"]
+__all__ = ["iter_warc_records", "iter_page_records", "pages_from_warc", "http_response_body"]
 
 
 def _gunzip_members(data: bytes) -> bytes:
@@ -197,34 +202,39 @@ def _warc_timestamps(raw: list) -> list:
     return out
 
 
+def iter_page_records(contents) -> Iterator[tuple[str, Optional[str], bytes]]:
+    """The record loop over archive bytes: (url, WARC-Date, payload) per
+    ``response`` or ``resource`` record with a WARC-Target-URI, in
+    archive order. warcinfo / request / metadata records are skipped,
+    and so is a response whose HTTP body cannot be decoded."""
+    for content in contents:
+        for headers, block in iter_warc_records(bytes(content)):
+            rtype = headers.get("warc-type")
+            if rtype not in ("response", "resource"):
+                continue
+            url = headers.get("warc-target-uri")
+            if not url:
+                continue
+            payload = http_response_body(block) if rtype == "response" else block
+            if payload is not None:
+                yield url, headers.get("warc-date"), payload
+
+
 def parse_content_batches(batches):
-    """mapInPandas closure over binaryFile ``content`` batches — shared
-    by the batch source below and streaming.stream_warc_pages so both
-    edges parse records identically."""
+    """mapInPandas closure over binaryFile ``content`` batches → pages
+    rows, one output batch per input batch. Shared by the batch source
+    below and streaming.stream_warc_pages."""
     import pandas as pd
 
     from ..session import trim_per_task_costs
 
     try:
         for pdf in batches:
-            urls, dates, payloads = [], [], []
-            for content in pdf["content"]:
-                for headers, block in iter_warc_records(bytes(content)):
-                    rtype = headers.get("warc-type")
-                    if rtype not in ("response", "resource"):
-                        continue
-                    url = headers.get("warc-target-uri")
-                    if not url:
-                        continue
-                    payload = http_response_body(block) if rtype == "response" else block
-                    if payload is None:
-                        continue
-                    urls.append(url)
-                    dates.append(headers.get("warc-date"))
-                    payloads.append(payload)
+            records = list(iter_page_records(pdf["content"]))
+            dates = _warc_timestamps([date for _url, date, _payload in records])
             rows = [
-                {"url": u, "warc_ts": ts, "html": p, "text": None, "lang": None}
-                for u, ts, p in zip(urls, _warc_timestamps(dates), payloads)
+                {"url": url, "warc_ts": ts, "html": payload, "text": None, "lang": None}
+                for (url, _date, payload), ts in zip(records, dates)
             ]
             yield pd.DataFrame(rows, columns=PAGES_SCHEMA.names)
     finally:
@@ -237,7 +247,9 @@ def pages_from_warc(spark, input_dir: str, glob: str = "*.warc*"):
     rows (url = WARC-Target-URI, warc_ts = WARC-Date); warcinfo /
     request / metadata records are skipped. One Arrow batch per
     archive file; per-record failures drop the record, never the
-    task."""
+    task. The frame keeps its ``content`` scan as ``_warc_content``
+    for ``operators.extract.extract_pages``; frames derived from it do
+    not."""
     raw = (
         spark.read.format("binaryFile")
         .option("pathGlobFilter", glob)
@@ -245,4 +257,6 @@ def pages_from_warc(spark, input_dir: str, glob: str = "*.warc*"):
         .load(input_dir)
         .select("content")
     )
-    return raw.mapInPandas(parse_content_batches, schema=PAGES_SCHEMA)
+    pages = raw.mapInPandas(parse_content_batches, schema=PAGES_SCHEMA)
+    pages._warc_content = raw
+    return pages

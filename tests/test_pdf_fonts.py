@@ -706,3 +706,34 @@ class TestCidCmapRanges:
                         want[c] = e[-1] + c - e[0]
             font = _parsed_font(_type0(_cid_cmap(sections), b"", b"[]"), 8)
             assert [font._cid_for(c) for c in range(-1, 60)] == [want.get(c, c) for c in range(-1, 60)], sections
+
+
+def _missing_width_pdf(mw: int) -> bytes:
+    """One page, one simple font with no /Widths, no ToUnicode and no
+    /Differences, whose descriptor sets /MissingWidth ``mw``."""
+    font = [
+        (3, b"<< /Type /Font /Subtype /Type1 /BaseFont /Plain /FontDescriptor 4 0 R >>"),
+        (4, b"<< /Type /FontDescriptor /MissingWidth %d >>" % mw),
+    ]
+    return _build(font, b"BT /F1 10 Tf 72 700 Td (ABC) Tj ET", 5)
+
+
+class TestDecodeTableMemo:
+    def test_distinct_missing_widths_keep_the_memo_small(self):
+        """The simple-font decode table is memoized on (codec, default
+        width), and /MissingWidth sets the width: 2,000 documents with
+        distinct values must not leave 2,000 tables in a reused worker.
+        Every document decodes as it does with an empty memo, and its
+        advance is three glyphs at its own /MissingWidth."""
+        from pdf_extractor_spark.sources import pdfparse
+
+        pdfparse._DEC_TABLE_CACHE.clear()
+        for mw in range(100, 2100):
+            pdf = _missing_width_pdf(mw)
+            span = _only_line(pdf)
+            assert span["text"] == "ABC"
+            assert span["bbox"][2] - span["bbox"][0] == pytest.approx(3 * mw / 1000 * 10)
+            assert len(pdfparse._DEC_TABLE_CACHE) <= 8
+            if mw % 97 == 0:
+                pdfparse._DEC_TABLE_CACHE.clear()
+                assert _only_line(pdf) == span

@@ -106,3 +106,37 @@ def test_cli_input_runs_start_no_schema_inference_job(spark, tmp_path):
     ):
         summary, n_jobs = _jobs(spark, group, partial(run_job, spark, **{"output": out, "buckets": 4, **job}))
         assert (group, summary["rows_in"], n_jobs) == (group, 64, want)
+
+
+def _map_in_pandas(df) -> int:
+    return df._jdf.queryExecution().analyzed().toString().count("MapInPandas")
+
+
+def test_cli_input_warc_plans_one_python_stage_unless_resumed(spark, tmp_path, monkeypatch):
+    """``--input-warc`` parses and extracts each archive in one Python
+    stage. ``--resume`` on a committed output filters the pages first,
+    so it extracts in a second stage. The jobs are those of the parent
+    commit's two-stage plan: the bucket exchange and its write, the
+    lineage exchange and collect, plus the committed-url broadcast on
+    resume."""
+    from pdf_extractor_spark.operators import extract
+
+    rows = corpus.build_pages_rows(64, seed=8)
+    archives = tmp_path / "warc"
+    archives.mkdir()
+    (archives / "a.warc.gz").write_bytes(corpus.rows_to_warc(rows[:32]))
+    planned = []
+
+    def recording(pages, **kwargs):
+        planned.append(real(pages, **kwargs))
+        return planned[-1]
+
+    real = extract.extract_pages
+    monkeypatch.setattr(extract, "extract_pages", recording)
+    run = partial(run_job, spark, output=str(tmp_path / "out"), input_warc=str(archives), buckets=4)
+    first, first_jobs = _jobs(spark, "cli-warc", run)
+    (archives / "b.warc.gz").write_bytes(corpus.rows_to_warc(rows[32:]))
+    resumed, resumed_jobs = _jobs(spark, "cli-warc-resume", partial(run, resume=True))
+    assert [_map_in_pandas(df) for df in planned] == [1, 2]
+    assert (first["rows_in"], first_jobs) == (32, 4)
+    assert (resumed["rows_in"], resumed_jobs) == (64, 5)

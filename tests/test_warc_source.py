@@ -288,6 +288,135 @@ class TestSparkSource:
         assert via_warc == direct and len(via_warc) > 20
 
 
+def _map_in_pandas(df) -> int:
+    """The number of MapInPandas nodes in ``df``'s analyzed plan."""
+    return df._jdf.queryExecution().analyzed().toString().count("MapInPandas")
+
+
+def _result_rows(df) -> list:
+    return sorted(df.collect(), key=repr)
+
+
+def _resource_warc(rows) -> bytes:
+    """A plain ``.warc`` of ``resource`` records: the block is the
+    payload itself, with no HTTP envelope."""
+    out = b""
+    for row in rows:
+        payload = row["html"] or b""
+        out += (
+            b"WARC/1.0\r\nWARC-Type: resource\r\nWARC-Target-URI: %s\r\n"
+            b"WARC-Date: 2021-06-01T12:00:00Z\r\nContent-Length: %d\r\n\r\n" % (row["url"].encode(), len(payload))
+        ) + payload + b"\r\n\r\n"
+    return out
+
+
+def _corrupt_gzip_body_warc(rows) -> tuple[bytes, dict]:
+    """Every third response outside the corrupt slice carries half of
+    its gzip body: those records drop, the others decode. Returns the
+    archive and the payload of each kept url."""
+    cut = set([i for i, r in enumerate(rows) if not r["html"].startswith(b"GARBAGE")][::3])
+    bodies = [gzip.compress(r["html"], mtime=0) for r in rows]
+    archive = _gzip_body_warc([b[: len(b) // 2] if i in cut else b for i, b in enumerate(bodies)])
+    return archive, {f"https://gz.example.com/{i}": r["html"] for i, r in enumerate(rows) if i not in cut}
+
+
+def _all(rows) -> dict:
+    return {r["url"]: r["html"] for r in rows}
+
+
+# name → (file name, archive bytes, payload per url the archive yields)
+# over construction-truth rows; the default corpus mixes spandoc, %PDF
+# and HTML payloads with the corrupt slice (every 41st doc from the 8th)
+_ARCHIVES = {
+    "member_gzip": lambda rows: ("a.warc.gz", corpus.rows_to_warc(rows), _all(rows)),
+    "whole_file_gzip": lambda rows: (
+        "a.warc.gz",
+        gzip.compress(corpus.rows_to_warc(rows, member_gzip=False), mtime=0),
+        _all(rows),
+    ),
+    "plain": lambda rows: ("a.warc", corpus.rows_to_warc(rows, member_gzip=False), _all(rows)),
+    "resource": lambda rows: ("a.warc", _resource_warc(rows), _all(rows)),
+    "corrupt_gzip_body": lambda rows: ("a.warc", *_corrupt_gzip_body_warc(rows)),
+}
+
+
+class TestOneStageExtraction:
+    """``extract_pages(pages_from_warc(d))`` parses and extracts in one
+    Python stage; every other frame takes the pages columns through a
+    second one. Both must give the same rows."""
+
+    @pytest.mark.parametrize("kind", sorted(_ARCHIVES))
+    def test_one_stage_equals_two_stage(self, spark, tmp_path, kind):
+        from pdf_extractor_spark.operators.extract import extract_pages
+
+        rows = corpus.build_pages_rows(90, seed=17)  # three corrupt docs
+        name, data, kept = _ARCHIVES[kind](rows)
+        (tmp_path / name).write_bytes(data)
+        d = str(tmp_path)
+        fused = extract_pages(pages_from_warc(spark, d))
+        staged = extract_pages(pages_from_warc(spark, d).select("*"))
+        assert (_map_in_pandas(fused), _map_in_pandas(staged)) == (1, 2)
+        got = _result_rows(fused)
+        assert got == _result_rows(staged)
+        assert sorted(r.url for r in got) == sorted(kept)
+        corrupt = {url for url, payload in kept.items() if payload.startswith(b"GARBAGE")}
+        assert corrupt and corrupt <= {r.url for r in got if not r.parse_ok}
+
+    def test_cached_frame_takes_two_stages(self, spark, tmp_path):
+        from pdf_extractor_spark.operators.extract import extract_pages
+
+        (tmp_path / "a.warc.gz").write_bytes(corpus.rows_to_warc(_rows(30, seed=4)))
+        pages = pages_from_warc(spark, str(tmp_path))
+        fused = _result_rows(extract_pages(pages))
+        pages.cache()
+        try:
+            staged = extract_pages(pages)
+            assert _map_in_pandas(staged) == 2
+            assert _result_rows(staged) == fused
+        finally:
+            pages.unpersist()
+
+    def test_batches_close_at_the_sessions_arrow_limits(self, spark, tmp_path):
+        """An archive of 600 records leaves the one stage in batches of
+        at most the session's 256 rows; a smaller byte limit closes a
+        batch after the payload that reaches it."""
+        from pdf_extractor_spark.operators.extract import extract_pages
+
+        rows = corpus.build_pages_rows(600, seed=23)
+        archive = corpus.rows_to_warc(rows)
+        (tmp_path / "a.warc.gz").write_bytes(archive)
+
+        class Capture:
+            fn = None
+            sparkSession = spark
+
+            def mapInPandas(self, fn, schema):
+                self.fn = fn
+                return self
+
+        class Pages:
+            is_cached = False
+
+            def __init__(self):
+                self._warc_content = Capture()
+
+        pages = Pages()
+        extract_pages(pages)
+        run = pages._warc_content.fn
+        assert spark.conf.get("spark.sql.execution.arrow.maxRecordsPerBatch") == "256"
+        sizes = [len(b) for b in run(iter([pd.DataFrame({"content": [archive]})]))]
+        assert sizes == [256, 256, 88]
+        small = run.func(iter([pd.DataFrame({"content": [archive]})]), max_rows=256, max_bytes=50_000)
+        left = [len(r["html"]) for r in rows]
+        for batch in small:
+            n = len(batch)
+            assert sum(left[: n - 1]) < 50_000
+            assert sum(left[:n]) >= 50_000 or n in (256, len(left))
+            left = left[n:]
+        assert left == []
+        assert extract_pages(pages_from_warc(spark, str(tmp_path))).count() == 600
+
+
 class TestMissingHeaders:
     def test_record_without_warc_date_yields_null_ts(self, spark, tmp_path):
         """A response record missing WARC-Date must become a row with a

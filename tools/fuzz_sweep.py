@@ -11,7 +11,8 @@ daily; one interpreter-level crash or pathological loop inside an executor
 poisons a whole task retry budget, so the bar is: every byte string either
 parses to a well-formed result or raises an orderly Exception promptly.
 A WARC archive may not raise at all: its records are read where no
-handler turns an exception into a row.
+handler turns an exception into a row. Its one-stage extraction must
+also give the rows of the record parse followed by extraction.
 
 Run: python tools/fuzz_sweep.py [--iters 20000] [--seed 0] [--workers 16]
 Exit 0 = contract held on every mutant; nonzero = violation (printed).
@@ -33,7 +34,10 @@ _REPO = Path(__file__).resolve().parent.parent
 sys.path.insert(0, str(_REPO))
 sys.path.insert(0, str(_REPO / "tests"))
 
+import pandas as pd  # noqa: E402
+
 from pdf_extractor_spark import corpus  # noqa: E402
+from pdf_extractor_spark.operators import extract  # noqa: E402
 from pdf_extractor_spark.operators.html_extract import extract_html  # noqa: E402
 from pdf_extractor_spark.sources import payload as payload_mod  # noqa: E402
 from pdf_extractor_spark.sources import pdfparse  # noqa: E402
@@ -153,6 +157,20 @@ def _assert_html(res) -> None:
         assert e["level"] in {"H1", "H2", "H3", "H4", "H5", "H6"}
 
 
+def _assert_one_stage(archive: bytes) -> None:
+    """The one-stage WARC extraction yields the rows of the two stages
+    it replaces: the record parse, then extraction of (url, html)."""
+    content = [pd.DataFrame({"content": [archive]})]
+    fused = extract._run_warc_batches(iter(content), max_rows=256, max_bytes=64 << 20)
+    pages = warc_mod.parse_content_batches(iter(content))
+    staged = extract._run_batches(p[["url", "html"]] for p in pages)
+
+    def rows(frames):
+        return [r for f in frames for r in f.to_dict("records")]
+
+    assert rows(fused) == rows(staged), "one-stage rows differ from two-stage rows"
+
+
 def _one(task: tuple[int, int]) -> dict:
     """One mutant: returns outcome metadata; raises on contract breach."""
     global _SEEDS
@@ -170,7 +188,7 @@ def _one(task: tuple[int, int]) -> dict:
         elif kind == "warc":
             # bounded iteration: the record generator must terminate on
             # ANY byte string (a backward scan = infinite loop = hang).
-            # parse_content_batches catches nothing, so a raise here
+            # neither WARC stage catches anything, so a raise here
             # would fail the Spark task of the whole archive: a breach
             n_rec = 0
             for headers, block in warc_mod.iter_warc_records(doc):
@@ -178,6 +196,7 @@ def _one(task: tuple[int, int]) -> dict:
                 warc_mod.http_response_body(block)
                 n_rec += 1
                 assert n_rec <= 10_000, "runaway record generator"
+            _assert_one_stage(doc)
         elif kind == "spandoc":
             k, pages = payload_mod.parse_payload(doc)
             if pages is not None:
