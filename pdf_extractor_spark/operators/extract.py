@@ -30,7 +30,7 @@ import pandas as pd
 from pyspark.sql import DataFrame
 
 from ..schemas import RESULT_SCHEMA
-from ..session import trim_per_task_costs
+from ..session import arrow_batch_limits, trim_per_task_costs
 from ..sources import payload as payload_codec, warc
 from . import analyzer, html_extract, span_merge
 
@@ -126,24 +126,12 @@ def _run_warc_batches(
     batches: Iterator[pd.DataFrame], max_rows: int, max_bytes: int
 ) -> Iterator[pd.DataFrame]:
     """binaryFile ``content`` batches → RESULT_SCHEMA batches: the WARC
-    record loop and ``_process_batch`` in one Python stage. A batch of
-    pages closes at ``max_rows`` rows or after the payload that takes it
-    to ``max_bytes``, the limits the session's Arrow batches of pages
-    rows have, so a worker holds one archive batch and one pages batch."""
-    try:
-        urls, payloads, size = [], [], 0
-        for pdf in batches:
-            for url, _date, payload in warc.iter_page_records(pdf["content"]):
-                urls.append(url)
-                payloads.append(payload)
-                size += len(payload)
-                if len(urls) >= max_rows or size >= max_bytes:
-                    yield _process_batch(pd.DataFrame({"url": urls, "html": payloads}))
-                    urls, payloads, size = [], [], 0
-        if urls:
-            yield _process_batch(pd.DataFrame({"url": urls, "html": payloads}))
-    finally:
-        trim_per_task_costs()
+    record loop and ``_process_batch`` in one Python stage, over the
+    record lists of ``warc.iter_page_records``."""
+    return _run_batches(
+        pd.DataFrame({"url": [r[0] for r in records], "html": [r[2] for r in records]})
+        for records in warc.iter_page_records(batches, max_rows, max_bytes)
+    )
 
 
 def extract_pages(pages_df: DataFrame, keep_failed: bool = True) -> DataFrame:
@@ -152,7 +140,9 @@ def extract_pages(pages_df: DataFrame, keep_failed: bool = True) -> DataFrame:
     The frame ``sources.warc.pages_from_warc`` returns, as it is and not
     cached, is extracted straight from its archive scan: one Python
     stage parses the records and extracts them. Any other frame is
-    extracted from its ``url`` and ``html`` columns.
+    extracted from its ``url`` and ``html`` columns. WARC records are
+    batched by ``warc.iter_page_records`` on either path, at the
+    session's Arrow limits.
 
     ``keep_failed=False`` reproduces the reference's sink behavior
     (failed docs produce no output row); keep them when writing with
@@ -161,12 +151,8 @@ def extract_pages(pages_df: DataFrame, keep_failed: bool = True) -> DataFrame:
     # vars(), not getattr: DataFrame.__getattr__ resolves column names
     content = vars(pages_df).get("_warc_content")
     if content is not None and not pages_df.is_cached:
-        conf = content.sparkSession.conf
-        run = partial(
-            _run_warc_batches,
-            max_rows=int(conf.get("spark.sql.execution.arrow.maxRecordsPerBatch")),
-            max_bytes=int(conf.get("spark.sql.execution.arrow.maxBytesPerBatch")),
-        )
+        max_rows, max_bytes = arrow_batch_limits(content.sparkSession)
+        run = partial(_run_warc_batches, max_rows=max_rows, max_bytes=max_bytes)
         out = content.mapInPandas(run, schema=RESULT_SCHEMA)
     else:
         out = pages_df.select("url", "html").mapInPandas(_run_batches, schema=RESULT_SCHEMA)

@@ -1277,11 +1277,11 @@ def pdf_parse_stats(spark, sf_dir):
     import random
 
     from .. import corpus as corpus_mod
-    from ..sources import payload as payload_mod
+    from ..sources import pdfparse
 
     def spans_of(i):
         pdf = corpus_mod.random_pdf(random.Random(corpus_mod.PDF_CORPUS_SEED + i))
-        pages = payload_mod.parse_pdf(pdf)
+        pages = pdfparse.extract_spans(pdf)
         url = f"https://pdf.example.com/doc/{i:06d}"
         k = 0
         for pnum, pg in enumerate(pages):

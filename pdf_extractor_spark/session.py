@@ -319,6 +319,16 @@ def driver_cds() -> tuple[str, dict[str, str]] | None:
     return flag, env
 
 
+_ARROW_ROWS = "spark.sql.execution.arrow.maxRecordsPerBatch"
+_ARROW_BYTES = "spark.sql.execution.arrow.maxBytesPerBatch"
+
+
+def arrow_batch_limits(spark) -> tuple[int, int]:
+    """The session's Arrow batch limits: (rows, bytes). The WARC record
+    loop closes its pages batches at the same two."""
+    return int(spark.conf.get(_ARROW_ROWS)), int(spark.conf.get(_ARROW_BYTES))
+
+
 def _launches_jvm() -> bool:
     """True when building a session here starts the driver JVM: none is
     live in this process and spark-submit handed no gateway down."""
@@ -345,8 +355,8 @@ def _builder(
         # here) is what bounds a Python worker's batch: pages rows carry
         # multi-MB payloads, so 4 MB docs arrive ~17 to a batch, and a
         # doc over 64 MiB is a batch of its own.
-        .config("spark.sql.execution.arrow.maxRecordsPerBatch", "256")
-        .config("spark.sql.execution.arrow.maxBytesPerBatch", str(64 * 1024 * 1024))
+        .config(_ARROW_ROWS, "256")
+        .config(_ARROW_BYTES, str(64 * 1024 * 1024))
         .config("spark.sql.parquet.compression.codec", "zstd")
         # fat-payload scan granularity: pages rows carry multi-KB..MB
         # binary payloads, so 128 MB splits (default) bin-pack many

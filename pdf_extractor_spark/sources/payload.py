@@ -47,15 +47,6 @@ def parse_spandoc(payload: bytes) -> list[dict]:
     )
 
 
-def parse_pdf(payload: bytes) -> list[dict]:
-    """Real-PDF branch: the pure-Python parser (pdfparse.py) emits the
-    same span-table shape as parse_spandoc, so everything downstream
-    is identical."""
-    from . import pdfparse
-
-    return pdfparse.extract_spans(payload)
-
-
 def parse_payload(payload: Optional[bytes]) -> tuple[str, Optional[list[dict]]]:
     """Returns (kind, pages-or-None). Raises on malformed payloads of a
     known kind — the caller converts exceptions to S4 failure rows."""
@@ -63,7 +54,10 @@ def parse_payload(payload: Optional[bytes]) -> tuple[str, Optional[list[dict]]]:
     if kind == "spandoc":
         return kind, parse_spandoc(payload)
     if kind == "pdf":
-        return kind, parse_pdf(payload)
+        # the pure-Python parser emits parse_spandoc's span-table shape
+        from . import pdfparse
+
+        return kind, pdfparse.extract_spans(payload)
     return kind, None
 
 

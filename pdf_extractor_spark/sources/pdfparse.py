@@ -461,13 +461,11 @@ def _decode_stream(d: dict, raw: bytes, doc: Optional["PdfDocument"]) -> bytes:
                     data = zlib.decompressobj().decompress(data)
                 except zlib.error:
                     data = zlib.decompressobj(-15).decompress(data)
-            data = _apply_predictor(data, p)
         elif f in ("ASCIIHexDecode", "AHx"):
             hx = re.sub(rb"[^0-9A-Fa-f]", b"", data.split(b">")[0])
             if len(hx) % 2:
                 hx += b"0"
             data = bytes.fromhex(hx.decode("ascii"))
-            data = _apply_predictor(data, p)
         elif f in ("ASCII85Decode", "A85"):
             import base64
 
@@ -476,10 +474,8 @@ def _decode_stream(d: dict, raw: bytes, doc: Optional["PdfDocument"]) -> bytes:
             if body.startswith(b"<~"):
                 body = body[2:]
             data = base64.a85decode(body)
-            data = _apply_predictor(data, p)
         elif f in ("LZWDecode", "LZW"):
             data = _lzw_decode(data, early=int(p.get("EarlyChange", 1) or 0))
-            data = _apply_predictor(data, p)
         elif f in ("RunLengthDecode", "RL"):
             # ISO 32000-1 §7.4.5: length byte L<128 -> copy L+1 literal
             # bytes; L>128 -> repeat next byte 257-L times; 128 -> EOD
@@ -500,12 +496,12 @@ def _decode_stream(d: dict, raw: bytes, doc: Optional["PdfDocument"]) -> bytes:
                     out += data[i + 1 : i + 2] * (257 - ln)
                     i += 2
             data = bytes(out)
-            data = _apply_predictor(data, p)
         elif f in _IMAGE_FILTERS:
             # image payload — never needed for text; return raw
             return data
         else:
             raise PdfError(f"unsupported filter {f}")
+        data = _apply_predictor(data, p)
     return data
 
 

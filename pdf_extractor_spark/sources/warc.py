@@ -26,16 +26,19 @@ archives yield their parseable prefix — error accounting then happens
 per-DOCUMENT in the extraction stage (S4 lineage), which is where a
 corrupt payload should land, not at ingest.
 
-Stages: ``iter_page_records`` is the one record loop. ``pages_from_warc``
-runs it in its own ``mapInPandas`` (``parse_content_batches``);
-``operators.extract.extract_pages``, given that exact frame, runs it in
-the extraction stage instead, so an archive task has one Python stage.
+Stages: ``iter_page_records`` is the one record loop, and it closes
+each pages batch at the session's Arrow limits. ``parse_stage`` builds
+the parse stage of ``pages_from_warc`` and ``stream_warc_pages``;
+``operators.extract.extract_pages``, given the exact frame
+``pages_from_warc`` returns, runs the loop in its extraction stage
+instead, so an archive task has one Python stage.
 """
 
 from __future__ import annotations
 
 import gzip
 import zlib
+from functools import partial
 from typing import Iterator, Optional
 
 from ..schemas import PAGES_SCHEMA
@@ -202,35 +205,40 @@ def _warc_timestamps(raw: list) -> list:
     return out
 
 
-def iter_page_records(contents) -> Iterator[tuple[str, Optional[str], bytes]]:
-    """The record loop over archive bytes: (url, WARC-Date, payload) per
-    ``response`` or ``resource`` record with a WARC-Target-URI, in
-    archive order. warcinfo / request / metadata records are skipped,
-    and so is a response whose HTTP body cannot be decoded."""
-    for content in contents:
+def iter_page_records(batches, max_rows: int, max_bytes: int) -> Iterator[list[tuple]]:
+    """The record loop over binaryFile ``content`` batches: (url,
+    WARC-Date, payload) per ``response`` or ``resource`` record with a
+    WARC-Target-URI, in archive order, in lists. warcinfo / request /
+    metadata records are skipped, and so is a response whose HTTP body
+    cannot be decoded. A list closes at ``max_rows`` records or after
+    the payload that takes it to ``max_bytes``."""
+    records, size = [], 0
+    for content in (c for pdf in batches for c in pdf["content"]):
         for headers, block in iter_warc_records(bytes(content)):
-            rtype = headers.get("warc-type")
-            if rtype not in ("response", "resource"):
-                continue
-            url = headers.get("warc-target-uri")
-            if not url:
+            rtype, url = headers.get("warc-type"), headers.get("warc-target-uri")
+            if rtype not in ("response", "resource") or not url:
                 continue
             payload = http_response_body(block) if rtype == "response" else block
-            if payload is not None:
-                yield url, headers.get("warc-date"), payload
+            if payload is None:
+                continue
+            records.append((url, headers.get("warc-date"), payload))
+            size += len(payload)
+            if len(records) >= max_rows or size >= max_bytes:
+                yield records
+                records, size = [], 0
+    if records:
+        yield records
 
 
-def parse_content_batches(batches):
-    """mapInPandas closure over binaryFile ``content`` batches → pages
-    rows, one output batch per input batch. Shared by the batch source
-    below and streaming.stream_warc_pages."""
+def parse_content_batches(batches, max_rows: int, max_bytes: int):
+    """mapInPandas closure over binaryFile ``content`` batches → one
+    pages frame per record list of ``iter_page_records``."""
     import pandas as pd
 
     from ..session import trim_per_task_costs
 
     try:
-        for pdf in batches:
-            records = list(iter_page_records(pdf["content"]))
+        for records in iter_page_records(batches, max_rows, max_bytes):
             dates = _warc_timestamps([date for _url, date, _payload in records])
             rows = [
                 {"url": url, "warc_ts": ts, "html": payload, "text": None, "lang": None}
@@ -241,22 +249,33 @@ def parse_content_batches(batches):
         trim_per_task_costs()
 
 
-def pages_from_warc(spark, input_dir: str, glob: str = "*.warc*"):
-    """Directory of WARC archives → pages DataFrame in the canonical
-    input-table schema. ``response`` and ``resource`` records become
-    rows (url = WARC-Target-URI, warc_ts = WARC-Date); warcinfo /
-    request / metadata records are skipped. One Arrow batch per
-    archive file; per-record failures drop the record, never the
-    task. The frame keeps its ``content`` scan as ``_warc_content``
-    for ``operators.extract.extract_pages``; frames derived from it do
-    not."""
-    raw = (
-        spark.read.format("binaryFile")
+def parse_stage(reader, input_dir: str, glob: str = "*.warc*"):
+    """binaryFile read of the archives under ``input_dir`` through
+    ``reader`` (``spark.read`` or a set-up ``spark.readStream``) →
+    pages frame. The frame keeps its ``content`` scan as
+    ``_warc_content`` for ``operators.extract.extract_pages``; frames
+    derived from it do not."""
+    from ..session import arrow_batch_limits
+
+    content = (
+        reader.format("binaryFile")
         .option("pathGlobFilter", glob)
         .option("recursiveFileLookup", "true")
         .load(input_dir)
         .select("content")
     )
-    pages = raw.mapInPandas(parse_content_batches, schema=PAGES_SCHEMA)
-    pages._warc_content = raw
+    max_rows, max_bytes = arrow_batch_limits(content.sparkSession)
+    parse = partial(parse_content_batches, max_rows=max_rows, max_bytes=max_bytes)
+    pages = content.mapInPandas(parse, schema=PAGES_SCHEMA)
+    pages._warc_content = content
     return pages
+
+
+def pages_from_warc(spark, input_dir: str, glob: str = "*.warc*"):
+    """Directory of WARC archives → pages DataFrame in the canonical
+    input-table schema. ``response`` and ``resource`` records become
+    rows (url = WARC-Target-URI, warc_ts = WARC-Date); warcinfo /
+    request / metadata records are skipped. Batches close at the
+    session's Arrow limits; per-record failures drop the record, never
+    the task."""
+    return parse_stage(spark.read, input_dir, glob)

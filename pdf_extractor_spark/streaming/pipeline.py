@@ -29,6 +29,7 @@ from pyspark.sql import functions as F
 
 from ..operators.extract import extract_pages
 from ..schemas import PAGES_SCHEMA
+from ..sources.warc import parse_stage
 
 # HDFSMetadataLog write-temp: ".<batchId>.<uuid>.tmp", renamed to
 # "<batchId>" on commit. One that still exists was never renamed,
@@ -93,28 +94,20 @@ def stream_warc_pages(
     """Streaming twin of sources.warc.pages_from_warc: a binaryFile
     stream over a crawl landing directory — each newly-arrived
     ``*.warc``/``*.warc.gz`` archive becomes one micro-batch unit and
-    parses into pages rows with the SAME record iterator the batch
-    ingest uses. maxFilesPerTrigger bounds micro-batch payload volume
-    (archives are ~1 GB each in a real crawl). Compose with
-    stream_extract for checkpointed, resumable ingest-as-it-arrives:
+    parses into pages rows through the batch ingest's parse stage
+    (``warc.parse_stage``). maxFilesPerTrigger bounds micro-batch
+    payload volume (archives are ~1 GB each in a real crawl). Compose
+    with stream_extract for checkpointed, resumable ingest-as-it-arrives:
     the file source's checkpoint dedups archives across restarts, and
     stream_extract's url anti-join dedups re-shipped urls."""
-    from ..sources.warc import parse_content_batches
-
-    raw = (
-        spark.readStream.format("binaryFile")
+    reader = (
+        spark.readStream
         # binaryFile's schema is fixed but the streaming source still
         # demands it explicitly (no inference on streams)
-        .schema(
-            "path string, modificationTime timestamp, length long, content binary"
-        )
-        .option("pathGlobFilter", "*.warc*")
-        .option("recursiveFileLookup", "true")
+        .schema("path string, modificationTime timestamp, length long, content binary")
         .option("maxFilesPerTrigger", max_files)
-        .load(input_dir)
-        .select("content")
     )
-    return raw.mapInPandas(parse_content_batches, schema=PAGES_SCHEMA)
+    return parse_stage(reader, input_dir)
 
 
 def stream_extract(

@@ -115,7 +115,8 @@ def test_stage_outside_spark_task_leaves_heap_unfrozen():
     before = gc.get_freeze_count()
     list(_run_batches(iter([pd.DataFrame({"url": ["u0"], "html": [_HTML]})])))
     rows = corpus.build_pages_rows(2, seed=3, html_fraction=1.0)
-    list(parse_content_batches(iter([pd.DataFrame({"content": [corpus.rows_to_warc(rows)]})])))
+    archives = iter([pd.DataFrame({"content": [corpus.rows_to_warc(rows)]})])
+    list(parse_content_batches(archives, max_rows=256, max_bytes=64 << 20))
     assert gc.get_freeze_count() == before
 
 

@@ -8,6 +8,7 @@ from __future__ import annotations
 import gzip
 import warnings
 from datetime import datetime
+from functools import partial
 
 import pandas as pd
 import pytest
@@ -182,7 +183,9 @@ class TestHttpBody:
     def test_corrupt_gzip_body_drops_only_its_record(self):
         gz = gzip.compress(b"<html>ok</html>", mtime=0)
         archive = _gzip_body_warc([gz, gz[: len(gz) // 2], gz])
-        (frame,) = parse_content_batches(iter([pd.DataFrame({"content": [archive]})]))
+        (frame,) = parse_content_batches(
+            iter([pd.DataFrame({"content": [archive]})]), max_rows=256, max_bytes=64 << 20
+        )
         assert list(frame["url"]) == ["https://gz.example.com/0", "https://gz.example.com/2"]
         assert list(frame["html"]) == [b"<html>ok</html>"] * 2
 
@@ -376,45 +379,51 @@ class TestOneStageExtraction:
         finally:
             pages.unpersist()
 
-    def test_batches_close_at_the_sessions_arrow_limits(self, spark, tmp_path):
-        """An archive of 600 records leaves the one stage in batches of
-        at most the session's 256 rows; a smaller byte limit closes a
-        batch after the payload that reaches it."""
+    def test_batches_close_at_the_sessions_arrow_limits(self, spark, tmp_path, monkeypatch):
+        """An archive of 600 records leaves the one stage, the parse
+        stage of the two-stage frame and ``parse_content_batches`` in
+        batches of at most the session's 256 rows; a smaller byte limit
+        closes a batch after the payload that reaches it."""
         from pdf_extractor_spark.operators.extract import extract_pages
+        from pdf_extractor_spark.session import arrow_batch_limits
 
         rows = corpus.build_pages_rows(600, seed=23)
         archive = corpus.rows_to_warc(rows)
         (tmp_path / "a.warc.gz").write_bytes(archive)
 
-        class Capture:
-            fn = None
-            sparkSession = spark
+        def content():
+            return iter([pd.DataFrame({"content": [archive]})])
 
-            def mapInPandas(self, fn, schema):
-                self.fn = fn
-                return self
+        stages = []
+        frame = type(spark.range(0))
+        map_in_pandas = frame.mapInPandas
 
-        class Pages:
-            is_cached = False
+        def capture(self, fn, schema, *args, **kwargs):
+            stages.append(fn)
+            return map_in_pandas(self, fn, schema, *args, **kwargs)
 
-            def __init__(self):
-                self._warc_content = Capture()
+        monkeypatch.setattr(frame, "mapInPandas", capture)
+        pages = pages_from_warc(spark, str(tmp_path))
+        (parse,) = stages
+        fused = extract_pages(pages)
+        staged = extract_pages(pages.select("*"))
+        run = stages[1]
+        assert (_map_in_pandas(fused), _map_in_pandas(staged)) == (1, 2)
 
-        pages = Pages()
-        extract_pages(pages)
-        run = pages._warc_content.fn
-        assert spark.conf.get("spark.sql.execution.arrow.maxRecordsPerBatch") == "256"
-        sizes = [len(b) for b in run(iter([pd.DataFrame({"content": [archive]})]))]
-        assert sizes == [256, 256, 88]
-        small = run.func(iter([pd.DataFrame({"content": [archive]})]), max_rows=256, max_bytes=50_000)
-        left = [len(r["html"]) for r in rows]
-        for batch in small:
-            n = len(batch)
-            assert sum(left[: n - 1]) < 50_000
-            assert sum(left[:n]) >= 50_000 or n in (256, len(left))
-            left = left[n:]
-        assert left == []
-        assert extract_pages(pages_from_warc(spark, str(tmp_path))).count() == 600
+        max_rows, max_bytes = arrow_batch_limits(spark)
+        assert (max_rows, max_bytes) == (256, 64 << 20)
+        direct = partial(parse_content_batches, max_rows=max_rows, max_bytes=max_bytes)
+        for stage in (run, parse, direct):
+            assert [len(b) for b in stage(content())] == [256, 256, 88]
+        for stage in (run, parse, direct):
+            left = [len(r["html"]) for r in rows]
+            for batch in stage.func(content(), max_rows=256, max_bytes=50_000):
+                n = len(batch)
+                assert sum(left[: n - 1]) < 50_000
+                assert sum(left[:n]) >= 50_000 or n in (256, len(left))
+                left = left[n:]
+            assert left == []
+        assert fused.count() == staged.count() == 600
 
 
 class TestMissingHeaders:

@@ -17,6 +17,7 @@ import importlib
 import sys
 import zipfile
 import zipimport
+from functools import partial
 
 import pandas as pd
 import pytest
@@ -68,7 +69,11 @@ def _warc_input():
 
 STAGES = [
     pytest.param(_run_batches, _extract_input, id="extract._run_batches"),
-    pytest.param(parse_content_batches, _warc_input, id="warc.parse_content_batches"),
+    pytest.param(
+        partial(parse_content_batches, max_rows=256, max_bytes=64 << 20),
+        _warc_input,
+        id="warc.parse_content_batches",
+    ),
 ]
 
 

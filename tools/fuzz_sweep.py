@@ -158,17 +158,18 @@ def _assert_html(res) -> None:
 
 
 def _assert_one_stage(archive: bytes) -> None:
-    """The one-stage WARC extraction yields the rows of the two stages
-    it replaces: the record parse, then extraction of (url, html)."""
+    """The one-stage WARC extraction yields the batches of the two
+    stages it replaces: the record parse, then extraction of (url,
+    html). Checked at the session's limits and at limits small enough
+    to close batches inside the archive."""
     content = [pd.DataFrame({"content": [archive]})]
-    fused = extract._run_warc_batches(iter(content), max_rows=256, max_bytes=64 << 20)
-    pages = warc_mod.parse_content_batches(iter(content))
-    staged = extract._run_batches(p[["url", "html"]] for p in pages)
-
-    def rows(frames):
-        return [r for f in frames for r in f.to_dict("records")]
-
-    assert rows(fused) == rows(staged), "one-stage rows differ from two-stage rows"
+    for max_rows, max_bytes in ((256, 64 << 20), (3, 4096)):
+        fused = extract._run_warc_batches(iter(content), max_rows, max_bytes)
+        pages = warc_mod.parse_content_batches(iter(content), max_rows, max_bytes)
+        staged = extract._run_batches(p[["url", "html"]] for p in pages)
+        assert [f.to_dict("records") for f in fused] == [
+            f.to_dict("records") for f in staged
+        ], f"one-stage batches differ from two-stage batches at {max_rows} rows / {max_bytes} B"
 
 
 def _one(task: tuple[int, int]) -> dict:
