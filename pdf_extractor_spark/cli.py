@@ -110,9 +110,17 @@ def main(argv: list[str] | None = None) -> int:
     except SourceError as e:
         ap.error(str(e))  # before the JVM starts
 
+    from pyspark import SparkContext
+
     from pdf_extractor_spark.session import get_spark
 
-    print(json.dumps(run_job(get_spark("pdf_extractor_cli"), **vars(args))))
+    started_here = SparkContext._active_spark_context is None  # a caller's live session stays up
+    spark = get_spark("pdf_extractor_cli")
+    try:
+        print(json.dumps(run_job(spark, **vars(args))))
+    finally:
+        if started_here:
+            spark.stop()  # removes the session's socket files
     return 0
 
 

@@ -4,18 +4,25 @@ Local mode is a stand-in for a multi-executor cluster: every setting
 here is chosen so the same job scales to 1000 executors reading 100 TB
 (AQE on, Arrow transport for the pandas stages, shuffle partitions
 sized to cores, small Arrow batches because payload rows are fat).
+
+Python workers talk to their executor over a Unix domain socket
+(``spark.python.unix.domain.socket.enabled``), and so do the driver's
+accumulator server and the ``collect``/``toPandas``/``createDataFrame``
+transfers. Spark names each socket ``<dir>/.<uuid>.sock``, the dir plus
+43 bytes, and Linux caps a socket path at 107 bytes: a socket dir
+longer than 64 bytes fails the session at start. Spark's default dir
+is ``java.io.tmpdir``, which callers may point anywhere (bench_extract
+points it into its checkout), so the dir is pinned to ``/tmp``.
 """
 
 from __future__ import annotations
 
-import contextlib
 import gc
 import hashlib
 import logging
 import os
 import shlex
 import shutil
-import socket
 import subprocess
 import sys
 import tempfile
@@ -46,31 +53,8 @@ DEFAULT_SHUFFLE_PARTITIONS = int(_host_cpus())
 _worker_tuned = False  # set once per Spark Python worker process
 
 
-def _set_tcp_nodelay() -> None:
-    """Turn Nagle's algorithm off on every TCP socket this process
-    holds; in a Spark Python worker that is its connection to the
-    executor. Without procfs nothing changes."""
-    try:
-        fds = [int(fd) for fd in os.listdir("/proc/self/fd")]
-    except OSError:
-        return
-    for fd in fds:
-        try:
-            dup = os.dup(fd)
-        except OSError:  # the listing's own descriptor, already closed
-            continue
-        try:
-            sock = socket.socket(fileno=dup)
-        except OSError:  # not a socket
-            os.close(dup)
-            continue
-        with sock, contextlib.suppress(OSError):  # a latency option: never fail the task
-            if sock.family in (socket.AF_INET, socket.AF_INET6) and sock.type == socket.SOCK_STREAM:
-                sock.setsockopt(socket.IPPROTO_TCP, socket.TCP_NODELAY, 1)
-
-
 def trim_per_task_costs() -> None:
-    """Remove three fixed costs a reused Spark Python worker pays on
+    """Remove two fixed costs a reused Spark Python worker pays on
     every task. Stage generators call this when they end.
 
     Zip importers: PySpark calls ``importlib.invalidate_caches()`` at
@@ -96,19 +80,10 @@ def trim_per_task_costs() -> None:
     freezes once per process: objects frozen after every task could
     leak as cyclic garbage.
 
-    Nagle's algorithm: PySpark's daemon leaves ``TCP_NODELAY`` unset on
-    the socket a worker shares with its executor, so a task's small
-    trailing writes can wait for the executor's delayed ACK. With 4
-    workers on 4 vCPUs a 16-task WARC extraction stage took 0.36-0.41 s
-    against 0.24-0.27 s with the option set, and its host CPUs sat half
-    idle. The first call in a Spark Python worker sets it. A Unix
-    domain socket (``spark.python.unix.domain.socket.enabled``) has no
-    such delay and is left alone.
-
-    Outside a Spark task (the driver, tests) neither the heap nor any
-    socket is touched. Whether a worker is set up is a flag, not
-    ``gc.get_freeze_count()``: that walks the frozen objects, ~4 ms of
-    every task on a frozen import heap.
+    Outside a Spark task (the driver, tests) the heap is not touched.
+    Whether a worker is set up is a flag, not ``gc.get_freeze_count()``:
+    that walks the frozen objects, ~4 ms of every task on a frozen
+    import heap.
     """
     global _worker_tuned
     for path, finder in list(sys.path_importer_cache.items()):
@@ -116,7 +91,6 @@ def trim_per_task_costs() -> None:
             del sys.path_importer_cache[path]
             zipimport._zip_directory_cache.pop(finder.archive, None)
     if not _worker_tuned and TaskContext.get() is not None:
-        _set_tcp_nodelay()
         gc.collect()
         gc.freeze()
         _worker_tuned = True
@@ -373,6 +347,9 @@ def _builder(
         # commit algorithm v2: task-side commit renames instead of a
         # serial driver-side pass — matters for many-bucket layouts
         .config("spark.hadoop.mapreduce.fileoutputcommitter.algorithm.version", "2")
+        # the worker transport and its pinned dir (module docstring)
+        .config("spark.python.unix.domain.socket.enabled", "true")
+        .config("spark.python.unix.domain.socket.dir", "/tmp")
     )
     if _launches_jvm():
         # under spark-submit the master and the heap are set before

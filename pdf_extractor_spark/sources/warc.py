@@ -46,20 +46,30 @@ from ..schemas import PAGES_SCHEMA
 __all__ = ["iter_warc_records", "iter_page_records", "pages_from_warc", "http_response_body"]
 
 
+_GZIP_SLICE = 64 * 1024  # bounds the copy a member's unused_data makes
+
+
 def _gunzip_members(data: bytes) -> bytes:
     """Decompress ALL gzip members of a buffer (CC writes one member
-    per record; plain single-member files decompress identically)."""
+    per record; plain single-member files decompress identically).
+    Members read bounded slices: the time is linear in their count."""
     out = bytearray()
-    while data[:2] == b"\x1f\x8b":
+    view = memoryview(data)
+    pos = 0
+    while view[pos : pos + 2] == b"\x1f\x8b":
         d = zlib.decompressobj(wbits=31)
+        mark = len(out)
         try:
-            out += d.decompress(data)
+            while not d.eof and pos < len(view):
+                chunk = view[pos : pos + _GZIP_SLICE]
+                out += d.decompress(chunk)
+                pos += len(chunk) - len(d.unused_data)
             out += d.flush()
         except zlib.error:
-            break  # truncated trailing member: keep what decoded
-        if not d.eof:
+            del out[mark:]  # a corrupt member ends the output before it
             break
-        data = d.unused_data
+        if not d.eof:
+            break  # truncated trailing member: keep what decoded
     return bytes(out)
 
 

@@ -17,6 +17,7 @@ def spark():
 
     s = get_spark("pdf_extractor_spark_tests", shuffle_partitions=8)
     yield s
+    s.stop()  # removes the session's socket files
 
 
 @pytest.fixture(scope="session")

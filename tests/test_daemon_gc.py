@@ -8,9 +8,10 @@ generators; its first call inside a Spark worker collects once and
 freezes what survives, so later collections scan only what tasks
 allocate. These tests pin that later tasks run on a frozen heap, that
 garbage a task leaves is still collected before the worker's next
-task (nothing is frozen per task), that a reused worker's socket to
-its executor has Nagle's algorithm off, and that a call outside a
-Spark task leaves the calling process's heap and sockets alone.
+task (nothing is frozen per task), and that a call outside a Spark
+task leaves the calling process's heap and sockets alone. One more
+pins the worker transport the session sets: a reused worker talks to
+its executor over a Unix domain socket and holds no TCP socket.
 """
 
 from __future__ import annotations
@@ -74,41 +75,49 @@ def test_reused_worker_freezes_once_and_still_collects_task_garbage(spark):
     assert checked["prev_dead"].tolist() == [1] * len(checked)
 
 
-def test_reused_worker_socket_has_nagle_off(spark):
-    """After its first task a worker's TCP connection to the executor
-    has TCP_NODELAY set, so a task's last small writes are not held
-    for the executor's delayed ACK."""
+def test_reused_worker_talks_to_its_executor_over_a_unix_socket(spark):
+    """A reused worker's connection to its executor is a Unix domain
+    socket bound under the session's socket dir, and the worker holds
+    no TCP socket. Each descriptor is classified by its socket inode in
+    procfs: dup'ing a live worker descriptor can break the daemon's
+    pipe to that worker."""
+    sock_dir = spark.sparkContext.getConf().get("spark.python.unix.domain.socket.dir")
 
     def probe(batches):
         import os
-        import socket
 
-        flags = []
-        for fd in map(int, os.listdir("/proc/self/fd")):
+        inodes = set()
+        for fd in os.listdir("/proc/self/fd"):
             try:
-                dup = os.dup(fd)
-            except OSError:
+                target = os.readlink(f"/proc/self/fd/{fd}")
+            except OSError:  # the listing's own descriptor, already closed
                 continue
+            if target.startswith("socket:["):
+                inodes.add(target[len("socket:[") : -1])
+
+        def held(table, inode_col):
             try:
-                sock = socket.socket(fileno=dup)
-            except OSError:
-                os.close(dup)
-                continue
-            with sock:
-                if sock.family in (socket.AF_INET, socket.AF_INET6) and sock.type == socket.SOCK_STREAM:
-                    flags.append(sock.getsockopt(socket.IPPROTO_TCP, socket.TCP_NODELAY))
+                with open(f"/proc/self/net/{table}") as f:
+                    return [row for row in map(str.split, list(f)[1:]) if row[inode_col] in inodes]
+            except FileNotFoundError:  # no IPv6
+                return []
+
+        unix = [row[7] for row in held("unix", 6) if len(row) > 7]
+        tcp = len(held("tcp", 9)) + len(held("tcp6", 9))
         docs = sum(len(out) for out in _run_batches(batches))
-        yield pd.DataFrame({"pid": [os.getpid()], "tcp": [len(flags)], "nodelay": [int(all(flags))], "docs": [docs]})
+        yield pd.DataFrame({"pid": [os.getpid()], "unix": [" ".join(unix)], "tcp": [tcp], "docs": [docs]})
 
     n_tasks = 16
     pages = spark.range(0, n_tasks, 1, n_tasks).selectExpr(
         "concat('u', id) AS url", f"CAST('{_HTML.decode()}' AS BINARY) AS html"
     )
-    tasks = pages.mapInPandas(probe, "pid long, tcp long, nodelay long, docs long").toPandas()
+    tasks = pages.mapInPandas(probe, "pid long, unix string, tcp long, docs long").toPandas()
     assert tasks["docs"].sum() == n_tasks
     later = tasks[tasks.duplicated("pid")]
     assert len(later) > 0, "no Python worker was reused"
-    assert (later["tcp"] > 0).all() and (later["nodelay"] == 1).all(), later
+    for paths in later["unix"]:
+        assert any(p.startswith(f"{sock_dir}/.") and p.endswith(".sock") for p in paths.split()), later
+    assert (later["tcp"] == 0).all(), later
 
 
 def test_stage_outside_spark_task_leaves_heap_unfrozen():

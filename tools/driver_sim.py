@@ -50,12 +50,17 @@ def main() -> int:
     ap.add_argument("--only", default=None)
     args = ap.parse_args()
 
+    from pdf_extractor_spark.session import get_spark
+
+    with get_spark("driver_sim", shuffle_partitions=16) as spark:  # stopped on exit
+        return _simulate(spark, args)
+
+
+def _simulate(spark, args) -> int:
     import duckdb
 
     import __spark_entry__ as entrymod
-    from pdf_extractor_spark.session import get_spark
 
-    spark = get_spark("driver_sim", shuffle_partitions=16)
     qs = entrymod.queries()
     oracles = entrymod.oracle_sql()
     only = set(args.only.split(",")) if args.only else None

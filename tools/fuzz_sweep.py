@@ -222,7 +222,7 @@ def _fail(t: int, base: Path, why: str) -> int:
     return 1
 
 
-def stream_warc_mode(trials: int, seed: int) -> int:
+def stream_warc_mode(spark, trials: int, seed: int) -> int:
     """Checkpoint-kill fuzz of the WARC STREAMING edge (VERDICT r4 #8):
     per trial, land a random subset of deterministic archives (some
     mutated — the reader is record-tolerant, proven never to raise on
@@ -244,14 +244,12 @@ def stream_warc_mode(trials: int, seed: int) -> int:
     import tempfile
 
     from pdf_extractor_spark.io import read_result
-    from pdf_extractor_spark.session import get_spark
     from pdf_extractor_spark.sources.warc import pages_from_warc
     from pdf_extractor_spark.streaming.pipeline import (
         stream_extract,
         stream_warc_pages,
     )
 
-    spark = get_spark("fuzz_stream_warc", shuffle_partitions=8)
     t0 = time.monotonic()
     kills_mid = 0
     replays = 0
@@ -364,7 +362,7 @@ def stream_warc_mode(trials: int, seed: int) -> int:
     return 0
 
 
-def batch_kill_mode(trials: int, seed: int) -> int:
+def batch_kill_mode(spark, trials: int, seed: int) -> int:
     """Kill-and-resume fuzz of the BATCH write path — the twin of
     stream_warc_mode for the production `spark-submit` job. Per trial:
     run the identical corpus uninterrupted into a truth table, then run
@@ -393,9 +391,7 @@ def batch_kill_mode(trials: int, seed: int) -> int:
 
     from pdf_extractor_spark.cli import run_job
     from pdf_extractor_spark.io import read_result
-    from pdf_extractor_spark.session import get_spark
 
-    spark = get_spark("fuzz_batch_kill", shuffle_partitions=8)
     sc = spark.sparkContext
     n_docs = 400
     t0 = time.monotonic()
@@ -542,10 +538,14 @@ def main() -> int:
         "crash-state disk faults, then resume and compare to truth)",
     )
     args = ap.parse_args()
-    if args.stream_warc:
-        return stream_warc_mode(args.stream_warc, args.seed)
-    if args.batch_kill:
-        return batch_kill_mode(args.batch_kill, args.seed)
+    if args.stream_warc or args.batch_kill:
+        from pdf_extractor_spark.session import get_spark
+
+        app = "fuzz_stream_warc" if args.stream_warc else "fuzz_batch_kill"
+        with get_spark(app, shuffle_partitions=8) as spark:  # stopped on exit
+            if args.stream_warc:
+                return stream_warc_mode(spark, args.stream_warc, args.seed)
+            return batch_kill_mode(spark, args.batch_kill, args.seed)
 
     tasks = [(i, args.seed) for i in range(args.iters)]
     t0 = time.monotonic()

@@ -212,9 +212,13 @@ def _tree(p: str) -> str:
 def main() -> int:
     from pdf_extractor_spark.session import get_spark
 
+    with get_spark("plan_audit") as spark:  # stopped on exit
+        return _audit(spark)
+
+
+def _audit(spark) -> int:
     import __spark_entry__ as entry
 
-    spark = get_spark("plan_audit")
     # AQE re-plans at runtime and hides codegen markers behind
     # isFinalPlan=false — disable it for static plan inspection only
     # (production sessions keep it on; see session.py)
