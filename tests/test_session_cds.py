@@ -214,6 +214,7 @@ CHILD = textwrap.dedent(
     stats = pio.write_result(extract_pages(pages), out, n_buckets=4)
     stats["args"] = list(mx.getInputArguments())
     stats["rows"] = pio.read_result(spark, out).filter("parse_ok").count()
+    spark.stop()
     print(json.dumps(stats))
     """
 )
