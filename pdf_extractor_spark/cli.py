@@ -61,27 +61,19 @@ def run_job(spark, *, output: str, input: str | None = None, input_warc: str | N
     # materialize_bucketed_corpus and an Iceberg bucket(N, url) ingest
     # both scan with a `bucket` partition column: written without an
     # exchange, one file per scan task and bucket.
+    # Any other input keeps its scan's tasks (a parquet scan is split by
+    # bytes, at session.py's maxPartitionBytes) and is bucketed by
+    # write_result's one exchange.
     input_bucketed = "bucket" in pages.columns
-    # Before any repartition: once the committed urls pass the broadcast
-    # threshold, a sort-merge anti-join would undo it.
     if resume:
         pages = pio.filter_pending(pages, output)
-    size_aware_stats = None
-    # Any other parquet input is repartitioned by payload size if it has
-    # a heavy tail. WARC and synthesized payloads come out of a Python
-    # stage, where heavy-tail detection would re-run that stage.
-    if input and not input_bucketed:
-        pages, size_aware_stats = pio.repartition_if_heavy(pages)
     result = extract_pages(pages, keep_failed=True)
     mode = "append" if resume else "overwrite"
     stats = pio.write_result(result, output, n_buckets=buckets, mode=mode, input_bucketed=input_bucketed)
     if file_sink:
         n_files = pio.write_json_files(pio.read_result(spark, output), file_sink)
         stats = {**stats, "json_files": n_files}
-    summary = {"output": output, "elapsed_sec": round(time.time() - t0, 2), **stats}
-    if size_aware_stats:
-        summary["size_aware"] = size_aware_stats
-    return summary
+    return {"output": output, "elapsed_sec": round(time.time() - t0, 2), **stats}
 
 
 def main(argv: list[str] | None = None) -> int:

@@ -344,7 +344,7 @@ def build_pages_row(
     ``heavy_tail_every`` (opt-in; the default corpus has no giant)
     plants a deterministic oversized-document slice: every
     ``heavy_tail_every``-th doc is a valid spandoc ~_HEAVY_TAIL_FACTOR×
-    the median page count — the north rule's size-aware-repartition
+    the median page count — the north rule's oversized-document
     scenario (one giant must never blow up the task that drew it)."""
     r = random.Random(seed * 1_000_003 + i)  # per-doc stream
     # host pool independent of n_docs; Zipf-ish skew: host0 is hot

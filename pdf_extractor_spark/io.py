@@ -337,121 +337,3 @@ def filter_pending(pages: DataFrame, out_dir: str) -> DataFrame:
     if done is None:
         return pages
     return pages.join(done.select("url"), "url", "left_anti")
-
-
-def size_aware_repartition(
-    df: DataFrame,
-    target_partition_bytes: int = 64 << 20,
-    big_threshold: int = 4 << 20,
-) -> tuple[DataFrame, dict]:
-    """Size-aware repartitioning (north rule: no executor OOMs from
-    oversized documents at 10^12-doc scale).
-
-    Row-count-based repartitioning puts a partition's worth of 100 MB
-    scans next to a partition of 2 KB pages; this sizes partitions by
-    PAYLOAD BYTES instead:
-
-      - one cheap aggregate (column-pruned length scan; on Iceberg use
-        file/row-group metadata and skip the pass) sizes the small-doc
-        pool to ~target_partition_bytes per partition;
-      - oversized docs (> big_threshold) are split into their own
-        hash-spread partition pool sized so even a partition of ONLY
-        giant docs stays near target — a single hot partition can
-        never accumulate many giants.
-
-    A worker receives one Arrow batch at a time, not the partition:
-    session.py closes a batch at 256 rows or right after the row that
-    takes it past 64 MiB, so a batch holds at most
-    min(256 · max_doc, 64 MiB + max_doc) payload bytes. Partition bytes
-    set how long a task runs, which is what this evens out.
-    Returns the repartitioned frame and its sizing stats.
-    """
-    # NULL-safe: length(NULL) is NULL, which would satisfy NEITHER
-    # filter and silently drop the row — route NULL payloads to the
-    # small pool instead (they are parse failures, not data loss).
-    plen = F.coalesce(F.length("html").cast("long"), F.lit(0))
-    stats = df.select(
-        F.sum(F.when(plen <= big_threshold, plen).otherwise(0)).alias("small_bytes"),
-        F.sum(F.when(plen > big_threshold, plen).otherwise(0)).alias("big_bytes"),
-    ).first()
-    small_bytes = stats["small_bytes"] or 0
-    big_bytes = stats["big_bytes"] or 0
-    n_small = max(1, int(small_bytes // target_partition_bytes) + 1)
-    n_big = max(1, int(big_bytes // target_partition_bytes) + 1)
-    small = df.filter(plen <= big_threshold).repartition(n_small, F.xxhash64("url"))
-    big = df.filter(plen > big_threshold).repartition(n_big, F.xxhash64("url"))
-    return small.unionByName(big), {
-        "small_bytes": int(small_bytes),
-        "big_bytes": int(big_bytes),
-        "n_small_partitions": n_small,
-        "n_big_partitions": n_big,
-        "target_partition_bytes": target_partition_bytes,
-        "big_threshold": big_threshold,
-    }
-
-
-# Auto-engage threshold for the heavy-tail detector: a corpus whose
-# largest document exceeds this multiple of the MEAN document is
-# heavy-tailed enough that row-count partitioning can hand one task a
-# payload far above the median task (the OOM shape). The default
-# synthetic corpus measures max/mean ~3x (no trigger); the planted
-# heavy-tail slice measures ~40x (trigger) — the factor sits between
-# with a wide margin on both sides.
-SIZE_AWARE_AUTO_FACTOR = 16
-
-
-def detect_heavy_tail(df: DataFrame) -> dict:
-    """One column-pruned aggregate over payload lengths → the
-    heavy-tail verdict that decides whether ``repartition_if_heavy``
-    engages size-aware repartitioning (VERDICT r4 #6: the OOM guard
-    must not depend on an operator remembering a flag).
-
-    Cost model: one length scan of the payload column. Worth it on an
-    unbucketed parquet input (the ad-hoc production shape this guard
-    targets); on an Iceberg table the same numbers come free from
-    file/row-group metadata, and a bucketed ingest already shaped its
-    partitions, so the CLI skips detection there."""
-    plen = F.coalesce(F.length("html").cast("long"), F.lit(0))
-    s = df.select(
-        F.count("*").alias("n"),
-        F.avg(plen).alias("mean"),
-        F.max(plen).alias("max"),
-        F.sum(plen).alias("total"),
-    ).first()
-    n = int(s["n"] or 0)
-    mean = float(s["mean"] or 0.0)
-    mx = int(s["max"] or 0)
-    return {
-        "n_docs": n,
-        "mean_doc_bytes": int(mean),
-        "max_doc_bytes": mx,
-        "total_payload_bytes": int(s["total"] or 0),
-        "auto_factor": SIZE_AWARE_AUTO_FACTOR,
-        "heavy": bool(n and mean and mx > SIZE_AWARE_AUTO_FACTOR * mean),
-    }
-
-
-def repartition_if_heavy(pages: DataFrame) -> tuple[DataFrame, dict | None]:
-    """The OOM guard for a pages table whose partitioning nobody has
-    shaped: detect a heavy tail and, only when there is one, run
-    ``size_aware_repartition`` with sizing derived from the corpus.
-
-    A "big" doc is one past the same multiple of the mean that
-    triggered detection. The target, total/(4·cores), gives at least
-    4 task waves on small corpora; it is capped at 64 MiB so per-task
-    payload never grows with corpus size (uncapped, a 1 TB input would
-    build ~GB-payload tasks), and never falls below one big doc.
-
-    Returns ``(pages, None)`` on a corpus without a heavy tail, else
-    the repartitioned frame and the sizing stats with the detector's
-    verdict under ``auto``."""
-    det = detect_heavy_tail(pages)
-    if not det["heavy"]:
-        return pages, None
-    big = SIZE_AWARE_AUTO_FACTOR * max(det["mean_doc_bytes"], 1)
-    par = pages.sparkSession.sparkContext.defaultParallelism
-    quota = det["total_payload_bytes"] // (4 * par) or 1
-    target = max(big, min(64 << 20, quota))
-    pages, stats = size_aware_repartition(pages, target_partition_bytes=target, big_threshold=big)
-    return pages, {**stats, "auto": det}
-

@@ -336,8 +336,11 @@ def _builder(
         # binary payloads, so 128 MB splits (default) bin-pack many
         # files into few tasks — starving cores and breaking the
         # bucket-per-task alignment of pre-bucketed input. 16 MB keeps
-        # splits ≈ files for bucketed layouts and bounds the payload
-        # bytes a single Python stage instance holds.
+        # splits ≈ files for bucketed layouts. It alone sizes the tasks
+        # of an unbucketed parquet --input: a split is
+        # min(16 MB, max(openCostInBytes, input bytes / cores)) of file
+        # bytes, and a task reads the whole row groups whose midpoints
+        # fall in its split, so a row group is the finest task size.
         .config(
             "spark.sql.files.maxPartitionBytes",
             os.environ.get("SPARK_GRAFT_MAX_PARTITION_BYTES", str(16 * 1024 * 1024)),

@@ -79,8 +79,7 @@ def sanitize_checkpoint(spark: SparkSession, checkpoint_dir: str) -> int:
 
 def stream_pages(spark: SparkSession, input_dir: str, max_files: int = 16) -> DataFrame:
     """File-source stream of pages parquet (one micro-batch per file
-    group). maxFilesPerTrigger bounds micro-batch payload volume — the
-    streaming analogue of size-aware repartitioning."""
+    group). maxFilesPerTrigger bounds micro-batch payload volume."""
     return (
         spark.readStream.schema(PAGES_SCHEMA)
         .option("maxFilesPerTrigger", max_files)

@@ -1,7 +1,6 @@
 """Round-2 hardening tests: ADVICE.md findings + new surfaces.
 
 Each test pins a specific fix:
-  - size_aware_repartition must not drop NULL-payload rows
   - salted_distinct_count must exclude NULLs (SQL COUNT(DISTINCT))
   - minhash_band_pairs must reject non-divisible band sizes
   - winnowing must select the min of EVERY window (Schleimer et al.),
@@ -18,16 +17,6 @@ from pathlib import Path
 
 import pytest
 from pyspark.sql import functions as F
-
-
-def test_size_aware_repartition_keeps_null_payloads(spark):
-    from pdf_extractor_spark.io import size_aware_repartition
-
-    rows = [("u1", b"x" * 100), ("u2", None), ("u3", b"y" * (5 << 20))]
-    df = spark.createDataFrame(rows, "url string, html binary")
-    out, _ = size_aware_repartition(df, big_threshold=4 << 20)
-    assert out.count() == 3
-    assert {r.url for r in out.select("url").collect()} == {"u1", "u2", "u3"}
 
 
 def test_salted_distinct_count_excludes_nulls(spark):

@@ -152,35 +152,3 @@ def test_streaming_aggregations_run_with_watermark(spark, tmp_path):
         got = {tuple(r) for r in spark.table(name).collect()}
         want = {tuple(r) for r in fn(events).collect()}
         assert got == want
-
-
-def test_size_aware_repartition_bounds_partition_bytes(spark):
-    """A few giant payloads must not co-locate with a full partition
-    of normal docs (north rule: size-aware repartitioning)."""
-    import pyspark.sql.functions as F
-
-    normal = spark.range(400).select(
-        F.concat(F.lit("https://h/n"), F.col("id")).alias("url"),
-        F.expr("cast(repeat('x', 2048) as binary)").alias("html"),
-    )
-    giant = spark.range(3).select(
-        F.concat(F.lit("https://h/g"), F.col("id")).alias("url"),
-        F.expr("cast(repeat('y', 1048576) as binary)").alias("html"),
-    )
-    pages = normal.unionByName(giant)
-    out, _ = pio.size_aware_repartition(
-        pages, target_partition_bytes=1 << 20, big_threshold=64 << 10
-    )
-    sizes = (
-        out.select(F.spark_partition_id().alias("p"), F.length("html").alias("b"))
-        .groupBy("p")
-        .agg(F.sum("b").alias("bytes"), F.count("*").alias("rows"), F.max("b").alias("max_b"))
-        .collect()
-    )
-    # no partition exceeds target + one max doc...
-    for r in sizes:
-        assert r["bytes"] <= (1 << 20) + (1 << 20), r
-    # ...and partitions holding giants hold ONLY giants (no mixing
-    # with the 400-doc small pool)
-    giant_parts = [r for r in sizes if r["max_b"] > 64 << 10]
-    assert giant_parts and all(r["rows"] <= 3 for r in giant_parts)

@@ -94,15 +94,18 @@ def test_cli_input_runs_start_no_schema_inference_job(spark, tmp_path):
     """``--input`` is read with PAGES_SCHEMA: each run starts only the
     jobs of its plan. Bucketed: the write and its lineage's exchange
     and collect; resume adds the broadcast of the committed urls;
-    unbucketed adds the heavy-tail scan and the bucket exchange."""
-    bucketed, flat = str(tmp_path / "bucketed"), str(tmp_path / "flat")
+    unbucketed adds the bucket exchange, with a heavy tail (one giant
+    at 32x the mean document) or without."""
+    bucketed, flat, heavy = (str(tmp_path / d) for d in ("bucketed", "flat", "heavy"))
     corpus.materialize_bucketed_corpus(spark, 64, bucketed, n_buckets=4, files_per_bucket=1)
     corpus.distributed_pages(spark, 64).write.parquet(flat)
+    corpus.distributed_pages(spark, 64, heavy_tail_every=101).write.parquet(heavy)
     out = str(tmp_path / "out")
     for group, job, want in (
         ("cli-bucketed", {"input": bucketed}, 3),
         ("cli-bucketed-resume", {"input": bucketed, "resume": True}, 4),
-        ("cli-flat", {"input": flat, "output": str(tmp_path / "out_flat")}, 6),
+        ("cli-flat", {"input": flat, "output": str(tmp_path / "out_flat")}, 4),
+        ("cli-flat-heavy", {"input": heavy, "output": str(tmp_path / "out_heavy")}, 4),
     ):
         summary, n_jobs = _jobs(spark, group, partial(run_job, spark, **{"output": out, "buckets": 4, **job}))
         assert (group, summary["rows_in"], n_jobs) == (group, 64, want)
